@@ -14,7 +14,7 @@ idiomatic Spark DataFrame pipeline:
       → θ/φ posteriors → top-k entity summaries       [operators.summary]
 
 plus the large-scale training-data operators (dedup, similarity search,
-text analysis, multimodal plumbing) under operators/.
+text analysis) under operators/.
 """
 
 __version__ = "0.1.0"

@@ -666,16 +666,7 @@ class DistributedEntLda2(CheckpointedStateLifecycle):
             .sortWithinPartitions("doc_id")
             .mapInPandas(sweep_fn, SWEEP_SCHEMA)
         )
-        # lazy local checkpoint — materialized by the delta aggregation
-        # (one job per sweep; see gibbs.sweep for the full rationale)
-        self.state = self._local_checkpoint(
-            swept, reliable=cfg.reliable_checkpoint, eager=False,
-        )
-        self.sweeps_done += 1
-        self._apply_count_deltas()
-        self._finalize_lazy_checkpoint()
-        self._release_old_state(old)
-        self._retire_broadcast(bc)
+        self._commit_sweep(old, swept, bc)
 
     def run(self, n_sweeps: int) -> None:
         """n_sweeps iterations of the reference schedule (:116-134)."""

@@ -18,27 +18,26 @@ matrices. Distributed, that becomes the AD-LDA scheme (Newman et al. 2009,
 
 Scale: only P×W counts ever reach the driver (bounded by the F10
 vocabulary prune); token state is never collected. Per sweep: one
-mapInPandas pass (no shuffle — partitioning by doc_id is established once
-and reused) + one aggregation to refresh global counts. Each sweep's
+mapInArrow pass through the shared block runner (models/chain.py; no
+shuffle — partitioning by doc_id is established once and reused) + one
+aggregation of the changed tokens to refresh global counts. Each sweep's
 state is localCheckpoint-ed (lineage truncation: O(1) plan size and the
 per-sweep count broadcast becomes destroyable — at 1000 sweeps an
 undestroyed broadcast per sweep is an unbounded leak; the soak test in
 test_gibbs_kernels.py runs 100+ sweeps asserting both stay flat).
 Checkpoint/resume per north_rule: plans/checkpoint.py.
 
-Four doc-sweep kernels, bit-identical by construction (same seeded-RNG
-contract, same IEEE op order): _sweep_doc_reference is the per-token
-NumPy transcription the oracle parity tests arbitrate against;
-_sweep_doc_fast replaces the per-token tiny-array NumPy dispatches with
-cached-per-word scalar arithmetic for ~5× sweep throughput; "native"
-(the default where a C compiler exists — models/native_kernel.py) and
-"numba" (models/numba_kernel.py, jitted only where numba is installed)
-compile the same loop to machine code, called once per Arrow batch.
-GibbsConfig.kernel selects; unavailable kernels degrade explicitly
-(native→fast, numba→interpreted twin), and because every kernel is
-bit-identical a heterogeneous-cluster mix of fallbacks still produces
-the same chain. tests/test_gibbs_kernels.py arbitrates all of them
-against the reference kernel on z-chain AND count-matrix equality.
+Kernels: GibbsConfig.kernel is "native" (default) or "reference". Native
+runs the runtime-compiled C kernel (models/native_kernel.py) once per
+Arrow batch; an executor without a C compiler runs its interpreted twin,
+_sweep_doc_fast, per doc over the same flat slices. "reference" runs
+_sweep_doc_reference, the per-token NumPy transcription the oracle
+parity tests arbitrate against. All three are bit-identical by
+construction (same seeded-RNG contract, same IEEE op order), so a
+cluster mixing compiled and interpreted executors still produces one
+chain. tests/test_gibbs_kernels.py holds native to the reference on
+z-chain AND count-matrix equality; the runner-level tests in
+test_gibbs_fused.py hold the twin to native.
 
 Broadcast discipline: sweep-CONSTANT inputs (candidate CSR, λ·β, Σλβ)
 ship once per sampler in ``_const_bc``; the per-sweep broadcast carries
@@ -59,7 +58,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import native_kernel, numba_kernel
+from . import native_kernel
+from .chain import run_sweeps
 from .oracle import alpha_from_neighbors, reseed
 from .state_lifecycle import CheckpointedStateLifecycle
 
@@ -70,13 +70,15 @@ STATE_SCHEMA = "doc_id long, words array<long>, zs array<long>"
 SWEEP_SCHEMA = (
     STATE_SCHEMA + ", dw array<long>, dp_old array<long>, dp_new array<long>"
 )
+STATE_COLS = ("zs",)
+DELTA_COLS = ("dw", "dp_old", "dp_new")
 
 
 def _sweep_doc_reference(
     ws, zs, nd, nwp, np_, cand, lam, slb, beta, alpha, av, a_sum, rng
 ):
-    """Per-token NumPy kernel — the arbiter both the NumPy oracle and the
-    fast kernel are held bit-identical to (EntSumModel.java:133-192
+    """Per-token NumPy kernel — the arbiter the NumPy oracle, the C
+    kernel and its twin are held bit-identical to (EntSumModel.java:133-192
     semantics). One rng.rand() per token, CDF over the word's candidate
     predicates, in-place count updates. Mutates zs/nd/nwp/np_; returns the
     changed-token lists (word, old pred, new pred) for the delta-based
@@ -118,8 +120,9 @@ def _sweep_doc_fast(
     ws_l, zs_l, nd, nwp_flat, np_l, W, word_cache, cand, lam, slb, beta,
     alpha, av, a_sum, rng
 ):
-    """Scalar-Python twin of _sweep_doc_reference, BIT-IDENTICAL by
-    construction (test_gibbs_kernels.py asserts it):
+    """Scalar-Python twin of _sweep_doc_reference and of the C kernel,
+    BIT-IDENTICAL by construction (test_gibbs_fused.py asserts it against
+    native inside the runner):
 
       - rng.rand(ndoc) pre-draws the token uniforms — MT19937 emits the
         same double sequence batched or one-at-a-time;
@@ -203,16 +206,14 @@ def _sweep_doc_fast(
     return ch_w, ch_old, ch_new
 
 
-def _m3_alpha_rows(nbr_col, P: float, alpha: float, eps: float):
+def _m3_alpha_rows(nbr_col, P: int, alpha: float, eps: float):
     """Rebuild each doc's SR-smoothed α vector from the joined neighbor
-    payload — identical input order to the oracle (see sweep())."""
+    payload (``nbrs.to_pylist()``; None where the doc has no neighbors)
+    — identical input order to the oracle (see _with_nbr_payload)."""
     for nbrs in nbr_col:
         tup = []
-        entries = nbrs if isinstance(nbrs, (list, np.ndarray)) else []
-        for e in entries:
-            pn = e["pn"]
-            if pn is None or len(pn) == 0:
-                pn = []
+        for e in nbrs or []:
+            pn = e["pn"] or []
             tup.append((
                 int(e["nbr"]),
                 int(e["nd"]),
@@ -222,304 +223,98 @@ def _m3_alpha_rows(nbr_col, P: float, alpha: float, eps: float):
         yield alpha_from_neighbors(tup, P, alpha, eps)
 
 
-def _run_arrow_batches(
-    batches, lib, const, nwp, np_, P, alpha, seed, sweep_idx,
-):
-    """mapInArrow loop for the native kernel (M1/M2/M5 path): Arrow list
-    columns already hold a FLAT values buffer + offsets, which is
-    exactly the kernel's input layout — so tokens go Arrow→C with
-    zero-copy reads and no per-doc Python at all (the pandas path pays
-    O(docs) concatenate/split; at ~10-token docs that rivaled the
-    kernel itself). Output reuses the input words column unchanged and
-    wraps the kernel's flat outputs back into ListArrays by offset."""
-    import pyarrow as pa
-
-    W = nwp.shape[1]
-    nwp_flat = nwp.ravel().copy()
-    np_arr = np_.copy()
-    csr_indptr = const["csr_indptr"]
-    csr_data = const["csr_data"]
-    lam_beta = const["lam_beta"]
-    slb = np.ascontiguousarray(const["slb"])
-    nd_scratch = np.zeros(P, dtype=np.int64)
-    cdf_scratch = np.empty(max(int(const["max_cand"]), 1), dtype=np.float64)
-    for rb in batches:
-        n = rb.num_rows
-        if n == 0:
-            continue
-        doc_ids = rb.column(0).to_numpy(zero_copy_only=False)
-        words_col = rb.column(1)
-        offsets32 = words_col.offsets.to_numpy(zero_copy_only=False)
-        doc_indptr = (offsets32 - offsets32[0]).astype(np.int64)
-        ws_flat = np.ascontiguousarray(
-            words_col.flatten().to_numpy(zero_copy_only=False),
-            dtype=np.int64,
-        )
-        zs_flat = np.array(
-            rb.column(2).flatten().to_numpy(zero_copy_only=False),
-            dtype=np.int64,
-        )  # writable copy — the kernel mutates in place
-        seeds = (
-            (seed * 1_000_003 + sweep_idx * 10_007
-             + doc_ids.astype(np.int64) * 131) % (2**32 - 1)
-        ).astype(np.uint32)
-        ch_w, ch_old, ch_new, ch_counts = native_kernel.sweep_batch_native(
-            lib, doc_indptr, ws_flat, zs_flat, seeds, P, W, nwp_flat,
-            np_arr, csr_indptr, csr_data, lam_beta, slb, alpha,
-            None, None, nd_scratch, cdf_scratch,
-        )
-        ch_off = np.zeros(n + 1, dtype=np.int32)
-        np.cumsum(ch_counts, out=ch_off[1:], dtype=np.int32)
-
-        def lst(off, vals):
-            return pa.ListArray.from_arrays(pa.array(off), pa.array(vals))
-
-        yield pa.RecordBatch.from_arrays(
-            [rb.column(0), words_col,
-             lst(doc_indptr.astype(np.int32), zs_flat),
-             lst(ch_off, ch_w), lst(ch_off, ch_old), lst(ch_off, ch_new)],
-            names=["doc_id", "words", "zs", "dw", "dp_old", "dp_new"],
-        )
+def _m3_alphas(blk, P: int, alpha: float, eps: float):
+    """Per-doc α matrix and sums for one batch (M3), read from its
+    joined ``nbrs`` column. α is frozen within a sweep."""
+    n = len(blk.doc_ids)
+    av_mat = np.empty((n, P), dtype=np.float64)
+    a_sums = np.empty(n, dtype=np.float64)
+    nbr_col = blk.rb.column("nbrs").to_pylist()
+    for j, av in enumerate(_m3_alpha_rows(nbr_col, P, alpha, eps)):
+        av_mat[j] = av
+        # float(row.sum()) — the same reduction for every kernel
+        a_sums[j] = float(av.sum())
+    return av_mat, a_sums
 
 
-def _interleave_doc_delta_cols(n_docs, per_sweep):
-    """Regroup per-sweep changed-token columns by doc.
+def _m1_step(lib, kernel, const, nwp, np_, alpha, beta, eps, use_m3):
+    """The M1 batch-sweep callable for ``chain.run_sweeps``.
 
-    ``per_sweep`` is a list of (cols, counts) — one entry per fused
-    sweep, ``cols`` a tuple of that sweep's flat changed-token arrays
-    (any number of parallel columns) and ``counts`` the per-doc change
-    counts. Returns (out_cols, offsets) where offsets (int64[n_docs+1])
-    delimits each doc's deltas from ALL sweeps, sweep-ordered within a
-    doc. Pure index arithmetic, O(total changes)."""
-    n_cols = len(per_sweep[0][0]) if per_sweep else 0
-    total_counts = np.zeros(n_docs, dtype=np.int64)
-    for _, cc in per_sweep:
-        total_counts += cc
-    offsets = np.zeros(n_docs + 1, dtype=np.int64)
-    np.cumsum(total_counts, out=offsets[1:])
-    total = int(offsets[-1])
-    out_cols = tuple(np.empty(total, dtype=np.int64) for _ in range(n_cols))
-    acc = np.zeros(n_docs, dtype=np.int64)
-    for cols, cc in per_sweep:
-        m = int(cc.sum())
-        if m == 0:
-            continue
-        starts = offsets[:-1] + acc
-        seg0 = np.zeros(n_docs, dtype=np.int64)
-        np.cumsum(cc[:-1], out=seg0[1:])
-        pos = np.repeat(starts - seg0, cc) + np.arange(m, dtype=np.int64)
-        for out, col in zip(out_cols, cols):
-            out[pos] = col
-        acc += cc
-    return out_cols, offsets
+    ``kernel="reference"`` runs the per-token NumPy arbiter. Otherwise
+    the C kernel runs where ``lib`` loaded, and its interpreted twin
+    ``_sweep_doc_fast`` where it did not. Each variant keeps its own
+    partition-local working copies of (nwp, np_) for the whole pass
+    (AD-LDA); the per-doc variants walk the batch's flat slices."""
+    P, W = nwp.shape
 
+    def alphas(blk):
+        return _m3_alphas(blk, P, alpha, eps) if use_m3 else (None, None)
 
-def _interleave_doc_deltas(n_docs, per_sweep):
-    """M1 3-column shape of ``_interleave_doc_delta_cols``: per_sweep
-    entries are (ch_w, ch_old, ch_new, ch_counts) → (dw, dp_old,
-    dp_new, offsets)."""
-    cols, offsets = _interleave_doc_delta_cols(
-        n_docs, [((cw, co, cn), cc) for cw, co, cn, cc in per_sweep]
-    )
-    if not cols:
-        z = np.zeros(0, dtype=np.int64)
-        return z, z, z, offsets
-    return (*cols, offsets)
+    if kernel == "native" and lib is not None:
+        nwp_flat = nwp.ravel().copy()
+        np_arr = np_.copy()
+        slb = np.ascontiguousarray(const["slb"])
+        nd = np.zeros(P, dtype=np.int64)
+        cdf = np.empty(max(int(const["max_cand"]), 1), dtype=np.float64)
 
-
-def _run_fused_arrow_batches(
-    batches, lib, const, nwp, np_, P, alpha, seed, sweep0, k,
-):
-    """K sweeps fused into ONE mapInArrow pass (M1/M2/M5 native path).
-
-    Rationale: at late chain the per-sweep cost is dominated by the
-    fixed per-job term (job launch + Arrow state transfer + eager
-    checkpoint, ~0.6 s measured) rather than the kernel; fusing K
-    sweeps amortizes that term K×. Semantics: AD-LDA already lets each
-    partition sweep against counts that are stale ACROSS partitions
-    within a sweep; fusion extends the same staleness across the K
-    fused sweeps (each partition carries its own locally-updated counts
-    from sweep s to s+1 instead of receiving the cross-partition
-    refresh). Two exactness anchors remain:
-
-      - with n_partitions=1 the local counts ARE the global counts, so
-        a fused block is BIT-IDENTICAL to K unfused sweeps (test-gated
-        in test_gibbs_fused.py);
-      - every sweep's integer deltas are emitted (regrouped per doc,
-        sweep-ordered), so the driver's delta refresh reconstructs the
-        EXACT global counts at the block boundary — fusion never
-        degrades the count matrices, only the intermediate broadcast
-        freshness (gated multi-partition by the NDCG floor in
-        test_gibbs_fused.py).
-
-    Per-doc RNG streams are reseeded per (base_seed, sweep, doc)
-    exactly as the unfused path, so fusion changes WHICH counts a
-    sample sees, never the random numbers.
-
-    The partition's batches are buffered (the same data the local
-    checkpoint already holds as executor blocks, so memory is ~2× state
-    for the duration of the pass). ``lib`` None (executor without a C
-    compiler) degrades to the interpreted numba-twin kernel —
-    bit-identical per sweep, so heterogeneous clusters still agree."""
-    import pyarrow as pa
-
-    W = nwp.shape[1]
-    nwp_flat = nwp.ravel().copy()
-    np_arr = np_.copy()
-    csr_indptr = const["csr_indptr"]
-    csr_data = const["csr_data"]
-    lam_beta = const["lam_beta"]
-    slb = np.ascontiguousarray(const["slb"])
-    nd_scratch = np.zeros(P, dtype=np.int64)
-    cdf_scratch = np.empty(max(int(const["max_cand"]), 1), dtype=np.float64)
-
-    buf = []  # (rb_doc_col, words_col, doc_ids_i64, doc_indptr, ws, zs)
-    for rb in batches:
-        if rb.num_rows == 0:
-            continue
-        words_col = rb.column(1)
-        offsets32 = words_col.offsets.to_numpy(zero_copy_only=False)
-        buf.append((
-            rb.column(0),
-            words_col,
-            rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64),
-            (offsets32 - offsets32[0]).astype(np.int64),
-            np.ascontiguousarray(
-                words_col.flatten().to_numpy(zero_copy_only=False),
-                dtype=np.int64,
-            ),
-            np.array(
-                rb.column(2).flatten().to_numpy(zero_copy_only=False),
-                dtype=np.int64,
-            ),
-        ))
-
-    deltas = [[] for _ in buf]  # per batch: per-sweep change tuples
-    for s in range(k):
-        sweep_idx = sweep0 + s
-        for j, (_, _, doc_ids, doc_indptr, ws_flat, zs_flat) in enumerate(buf):
-            seeds = (
-                (seed * 1_000_003 + sweep_idx * 10_007 + doc_ids * 131)
-                % (2**32 - 1)
+        def native_step(blk, seeds):
+            av_mat, a_sums = alphas(blk)
+            *ch, counts = native_kernel.sweep_batch_native(
+                lib, blk.indptr, blk.ws, blk.state[0], seeds, P, W,
+                nwp_flat, np_arr, const["csr_indptr"], const["csr_data"],
+                const["lam_beta"], slb, alpha, av_mat, a_sums, nd, cdf,
             )
-            if lib is not None:
-                ch = native_kernel.sweep_batch_native(
-                    lib, doc_indptr, ws_flat, zs_flat,
-                    seeds.astype(np.uint32), P, W, nwp_flat, np_arr,
-                    csr_indptr, csr_data, lam_beta, slb, alpha,
-                    None, None, nd_scratch, cdf_scratch,
+            return tuple(ch), counts
+
+        return native_step
+
+    cand, lam, slb = const["cand"], const["lam"], const["slb"]
+    reference = kernel == "reference"
+    # the reference kernel keeps the 2-D arrays, the twin a flat int64
+    # array + python int list — the same update sequence either way
+    if reference:
+        nwp, np_ = nwp.copy(), np_.copy()
+    else:
+        nwp_flat = nwp.ravel().copy()
+        np_l = [int(x) for x in np_]
+        word_cache: dict = {}
+    rng = np.random.RandomState(0)
+
+    def per_doc_step(blk, seeds):
+        av_mat, a_sums = alphas(blk)
+        zs = blk.state[0]
+        ch: tuple[list, ...] = ([], [], [])
+        counts = np.zeros(len(seeds), dtype=np.int64)
+        for j in range(len(seeds)):
+            lo, hi = int(blk.indptr[j]), int(blk.indptr[j + 1])
+            if use_m3:
+                av, a_sum = av_mat[j], float(a_sums[j])
+            else:
+                av, a_sum = None, P * alpha
+            rng.seed(int(seeds[j]))
+            if reference:
+                z = zs[lo:hi]  # a view: the kernel writes through
+                nd = np.bincount(z, minlength=P).astype(np.int64)
+                doc_ch = _sweep_doc_reference(
+                    blk.ws[lo:hi], z, nd, nwp, np_, cand, lam, slb,
+                    beta, alpha, av, a_sum, rng,
                 )
             else:
-                n_tok = ws_flat.size
-                n_docs = len(doc_indptr) - 1
-                cw = np.empty(n_tok, dtype=np.int64)
-                co = np.empty(n_tok, dtype=np.int64)
-                cn = np.empty(n_tok, dtype=np.int64)
-                cc = np.empty(n_docs, dtype=np.int64)
-                n_ch = numba_kernel.sweep_batch_py(
-                    doc_indptr, ws_flat, zs_flat, seeds, P, W, nwp_flat,
-                    np_arr, csr_indptr, csr_data, lam_beta, slb, alpha,
-                    False, np.zeros((0, 0), dtype=np.float64),
-                    np.zeros(0, dtype=np.float64), nd_scratch, cdf_scratch,
-                    cw, co, cn, cc,
+                z = zs[lo:hi].tolist()
+                nd = [0] * P
+                for p in z:
+                    nd[p] += 1
+                doc_ch = _sweep_doc_fast(
+                    blk.ws[lo:hi].tolist(), z, nd, nwp_flat, np_l, W,
+                    word_cache, cand, lam, slb, beta, alpha, av, a_sum, rng,
                 )
-                ch = (cw[:n_ch], co[:n_ch], cn[:n_ch], cc)
-            deltas[j].append(ch)
+                zs[lo:hi] = z
+            for col, vals in zip(ch, doc_ch):
+                col.extend(vals)
+            counts[j] = len(doc_ch[0])
+        return tuple(np.asarray(c, dtype=np.int64) for c in ch), counts
 
-    def lst(off, vals):
-        return pa.ListArray.from_arrays(pa.array(off), pa.array(vals))
-
-    for (doc_col, words_col, _, doc_indptr, _, zs_flat), per_sweep in zip(
-        buf, deltas
-    ):
-        n = len(doc_indptr) - 1
-        dw, dold, dnew, ch_off = _interleave_doc_deltas(n, per_sweep)
-        yield pa.RecordBatch.from_arrays(
-            [doc_col, words_col,
-             lst(doc_indptr.astype(np.int32), zs_flat),
-             lst(ch_off.astype(np.int32), dw),
-             lst(ch_off.astype(np.int32), dold),
-             lst(ch_off.astype(np.int32), dnew)],
-            names=["doc_id", "words", "zs", "dw", "dp_old", "dp_new"],
-        )
-
-
-def _run_compiled_batches(
-    batches, kern, lib, const, nwp, np_, P, alpha, seed, sweep_idx,
-    use_m3, eps,
-):
-    """Arrow-batch loop for the compiled kernels (native C / numba): flat
-    token layout + one kernel call per batch, so per-token work never
-    re-enters the interpreter. Same AD-LDA working-copy discipline and
-    changed-token outputs as the per-doc kernels."""
-    W = nwp.shape[1]
-    nwp_flat = nwp.ravel().copy()
-    np_arr = np_.copy()
-    csr_indptr = const["csr_indptr"]
-    csr_data = const["csr_data"]
-    lam_beta = const["lam_beta"]
-    slb = np.ascontiguousarray(const["slb"])
-    nd_scratch = np.zeros(P, dtype=np.int64)
-    cdf_scratch = np.empty(max(int(const["max_cand"]), 1), dtype=np.float64)
-    for b in batches:
-        n = len(b)
-        if n == 0:
-            continue
-        ws_list = [np.ascontiguousarray(x, dtype=np.int64) for x in b["words"]]
-        lens = np.fromiter((x.size for x in ws_list), np.int64, n)
-        doc_indptr = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(lens, out=doc_indptr[1:])
-        ws_flat = np.concatenate(ws_list)
-        zs_flat = np.concatenate(
-            [np.asarray(x, dtype=np.int64) for x in b["zs"]]
-        )
-        # vectorized oracle.seed_for — identical int arithmetic in int64
-        # (values stay far below 2**63 for any int32 doc_id)
-        seeds = (
-            seed * 1_000_003 + sweep_idx * 10_007
-            + b["doc_id"].to_numpy(np.int64) * 131
-        ) % (2**32 - 1)
-        if use_m3:
-            av_mat = np.empty((n, P), dtype=np.float64)
-            a_sums = np.empty(n, dtype=np.float64)
-            for j, av in enumerate(_m3_alpha_rows(b["nbrs"], P, alpha, eps)):
-                av_mat[j] = av
-                # float(row.sum()) — same reduction the per-doc kernels use
-                a_sums[j] = float(av.sum())
-        else:
-            av_mat, a_sums = None, None
-        if kern == "native":
-            ch_w, ch_old, ch_new, ch_counts = native_kernel.sweep_batch_native(
-                lib, doc_indptr, ws_flat, zs_flat,
-                seeds.astype(np.uint32), P, W, nwp_flat, np_arr,
-                csr_indptr, csr_data, lam_beta, slb, alpha,
-                av_mat, a_sums, nd_scratch, cdf_scratch,
-            )
-        else:
-            n_tok = ws_flat.size
-            ch_w = np.empty(n_tok, dtype=np.int64)
-            ch_old = np.empty(n_tok, dtype=np.int64)
-            ch_new = np.empty(n_tok, dtype=np.int64)
-            ch_counts = np.empty(n, dtype=np.int64)
-            n_ch = numba_kernel.sweep_batch_py(
-                doc_indptr, ws_flat, zs_flat, seeds, P, W, nwp_flat,
-                np_arr, csr_indptr, csr_data, lam_beta, slb, alpha,
-                use_m3,
-                av_mat if use_m3 else np.zeros((0, 0), dtype=np.float64),
-                a_sums if use_m3 else np.zeros(0, dtype=np.float64),
-                nd_scratch, cdf_scratch, ch_w, ch_old, ch_new, ch_counts,
-            )
-            ch_w, ch_old, ch_new = ch_w[:n_ch], ch_old[:n_ch], ch_new[:n_ch]
-        ch_indptr = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(ch_counts, out=ch_indptr[1:])
-        yield pd.DataFrame({
-            "doc_id": b["doc_id"],
-            "words": b["words"],
-            "zs": np.split(zs_flat, doc_indptr[1:-1]),
-            "dw": np.split(ch_w, ch_indptr[1:-1]),
-            "dp_old": np.split(ch_old, ch_indptr[1:-1]),
-            "dp_new": np.split(ch_new, ch_indptr[1:-1]),
-        })
+    return per_doc_step
 
 
 @dataclass
@@ -543,12 +338,11 @@ class GibbsConfig:
     # checkpoints in plans/checkpoint.py as the durable resume points.
     # See models/state_lifecycle.py for the tradeoff.
     reliable_checkpoint: bool = False
-    # "native" = runtime-compiled C kernel (default; ~10× the fast
-    # kernel, falls back to "fast" where no C compiler exists);
-    # "numba" = the jitted twin (interpreted where numba is absent);
-    # "fast" = scalar-Python kernel; "reference" = the per-token NumPy
-    # kernel the oracle parity tests arbitrate against. ALL produce
-    # identical z-chains (test_gibbs_kernels.py).
+    # "native" = the runtime-compiled C kernel (default), or its
+    # bit-identical interpreted twin on an executor without a C compiler;
+    # "reference" = the per-token NumPy kernel the oracle parity tests
+    # arbitrate against. Both produce identical z-chains
+    # (test_gibbs_kernels.py).
     kernel: str = "native"
     # >1 fuses that many sweeps into ONE Spark job (mapInArrow pass):
     # each partition carries its locally-updated counts across the
@@ -563,6 +357,13 @@ class GibbsConfig:
     # unfused for n_partitions>1. Applies to the native non-M3 path;
     # other paths sweep per-job regardless.
     sweeps_per_job: int = 1
+
+    def __post_init__(self) -> None:
+        if self.kernel not in ("native", "reference"):
+            raise ValueError(
+                f"GibbsConfig.kernel must be 'native' or 'reference', "
+                f"got {self.kernel!r}"
+            )
 
     @property
     def alpha_eff(self) -> float:
@@ -604,25 +405,6 @@ def _collect_lam(
     return lam
 
 
-def resolve_kernel(name: str) -> str:
-    """Driver-side kernel resolution with explicit degradation. The
-    resolved name decides what the sweep-constant broadcast must carry
-    (CSR candidates + flat λ·β for the compiled kernels)."""
-    if name == "native" and not native_kernel.native_available():
-        warnings.warn(
-            "kernel='native': no C compiler available — using 'fast' "
-            "(bit-identical, slower)", stacklevel=2,
-        )
-        return "fast"
-    if name == "numba" and not numba_kernel.numba_available():
-        warnings.warn(
-            "kernel='numba': numba not installed — running the same "
-            "kernel body interpreted (bit-identical, slow); install "
-            "numba or use kernel='native'", stacklevel=2,
-        )
-    return name
-
-
 class DistributedGibbs(CheckpointedStateLifecycle):
     """Driver-side sweep loop. Usage:
 
@@ -653,19 +435,11 @@ class DistributedGibbs(CheckpointedStateLifecycle):
         self.cand = _collect_cand(obj_pred)
         self.lam = _collect_lam(lam_df, cfg.n_preds, cfg.n_words, cfg.lam_default)
         self.sum_lam_beta = self.lam.sum(axis=1) * cfg.beta
-        self.kernel = resolve_kernel(cfg.kernel)
-        if self.kernel in ("native", "numba"):
-            # sweep-constant compiled-kernel inputs, packed once:
-            # CSR candidates and λ·β ((lam*β) elementwise equals the fast
-            # kernel's per-entry float(lam[c,w])*β bit-for-bit)
-            self._csr_indptr, self._csr_data = native_kernel.cand_to_csr(
-                self.cand, cfg.n_words
-            )
-            self._lam_beta = np.ascontiguousarray(
-                (self.lam * cfg.beta).ravel()
-            )
-            self._max_cand = (
-                int(np.diff(self._csr_indptr).max()) if self.cand else 1
+        self.kernel = cfg.kernel
+        if self.kernel == "native" and not native_kernel.native_available():
+            warnings.warn(
+                "kernel='native': no C compiler available — sweeps run the "
+                "interpreted twin (bit-identical, slower)", stacklevel=2,
             )
         self.corpus = corpus
         self.state: DataFrame | None = None
@@ -803,15 +577,20 @@ class DistributedGibbs(CheckpointedStateLifecycle):
     # ---- sweep-constant broadcast (candidates / λ — shipped ONCE) ----
     def _ensure_const_bc(self):
         if self._const_bc is None:
-            payload = {
+            csr_indptr, csr_data = native_kernel.cand_to_csr(
+                self.cand, self.cfg.n_words
+            )
+            self._const_bc = self.spark.sparkContext.broadcast({
                 "cand": self.cand, "lam": self.lam, "slb": self.sum_lam_beta,
-            }
-            if self.kernel in ("native", "numba"):
-                payload.update(
-                    csr_indptr=self._csr_indptr, csr_data=self._csr_data,
-                    lam_beta=self._lam_beta, max_cand=self._max_cand,
-                )
-            self._const_bc = self.spark.sparkContext.broadcast(payload)
+                # the C kernel's CSR candidates and λ·β ((lam*β)
+                # elementwise equals the twin's per-entry
+                # float(lam[c,w])*β bit-for-bit)
+                "csr_indptr": csr_indptr, "csr_data": csr_data,
+                "lam_beta": np.ascontiguousarray(
+                    (self.lam * self.cfg.beta).ravel()
+                ),
+                "max_cand": int(np.diff(csr_indptr).max()) if self.cand else 1,
+            })
         return self._const_bc
 
     def close(self) -> None:
@@ -824,131 +603,24 @@ class DistributedGibbs(CheckpointedStateLifecycle):
     # ---- one sweep (or a fused block of n_fused sweeps) ----
     def sweep(self, n_fused: int = 1) -> None:
         cfg = self.cfg
-        sweep_idx = self.sweeps_done
-        if n_fused > 1 and (self.kernel != "native" or self.doc_sr is not None):
+        use_m3 = self.doc_sr is not None
+        if n_fused > 1 and (self.kernel != "native" or use_m3):
             raise ValueError(
                 "fused sweeps require kernel='native' and no doc_sr (M3 "
                 "re-derives neighbor payloads between sweeps)"
             )
         bc = self.spark.sparkContext.broadcast((self.nwp, self.np_))
         const_bc = self._ensure_const_bc()
-        P, alpha, beta, seed = cfg.n_preds, cfg.alpha_eff, cfg.beta, cfg.base_seed
-        eps = cfg.epsilon
-        use_m3 = self.doc_sr is not None
-        kernel = self.kernel
+        kernel, sweep0, seed = self.kernel, self.sweeps_done, cfg.base_seed
+        alpha, beta, eps = cfg.alpha_eff, cfg.beta, cfg.epsilon
 
-        def sweep_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def sweep_fn(batches):
             nwp, np_ = bc.value
-            const = const_bc.value
-            kern = kernel
-            lib = None
-            if kern == "native":
-                lib = native_kernel.load_native()
-                if lib is None:  # executor without a compiler: degrade
-                    kern = "fast"
-            if kern in ("native", "numba"):
-                yield from _run_compiled_batches(
-                    batches, kern, lib, const, nwp, np_, P, alpha, seed,
-                    sweep_idx, use_m3, eps,
-                )
-                return
-            cand, lam, slb = const["cand"], const["lam"], const["slb"]
-            # partition-local working copies (AD-LDA): the fast kernel keeps
-            # them as a flat int64 array + python int list, the reference
-            # kernel as the original 2-D array — same update sequence
-            if kernel == "reference":
-                nwp = nwp.copy()
-                np_ = np_.copy()
-            else:
-                W = nwp.shape[1]
-                nwp_flat = nwp.ravel().copy()
-                np_l = [int(x) for x in np_]
-                word_cache: dict = {}
-            rng0 = np.random.RandomState(0)
-            for b in batches:
-                zs_col = []
-                dw_col, dold_col, dnew_col = [], [], []
-                nbr_col = b["nbrs"] if use_m3 else [None] * len(b)
-                for d, ws, zs, nbrs in zip(
-                    b["doc_id"], b["words"], b["zs"], nbr_col
-                ):
-                    if use_m3:
-                        tup = []
-                        entries = (
-                            nbrs if isinstance(nbrs, (list, np.ndarray)) else []
-                        )
-                        for e in entries:
-                            pn = e["pn"]
-                            if pn is None or len(pn) == 0:
-                                pn = []
-                            tup.append((
-                                int(e["nbr"]),
-                                int(e["nd"]),
-                                np.asarray([x["p"] for x in pn], dtype=np.int64),
-                                np.asarray([x["n"] for x in pn], dtype=np.int64),
-                            ))
-                        av = alpha_from_neighbors(tup, P, alpha, eps)
-                        a_sum = float(av.sum())
-                    else:
-                        av, a_sum = None, P * alpha
-                    rng = reseed(rng0, seed, sweep_idx, int(d))
-                    if kernel == "reference":
-                        ws_a = np.asarray(ws, dtype=np.int64)
-                        zs_a = np.asarray(zs, dtype=np.int64).copy()
-                        nd = np.bincount(zs_a, minlength=P).astype(np.int64)
-                        ch = _sweep_doc_reference(
-                            ws_a, zs_a, nd, nwp, np_, cand, lam, slb,
-                            beta, alpha, av, a_sum, rng,
-                        )
-                        zs_col.append(zs_a)
-                    else:
-                        ws_l = np.asarray(ws, dtype=np.int64).tolist()
-                        zs_l = np.asarray(zs, dtype=np.int64).tolist()
-                        nd = [0] * P
-                        for p in zs_l:
-                            nd[p] += 1
-                        ch = _sweep_doc_fast(
-                            ws_l, zs_l, nd, nwp_flat, np_l, W, word_cache,
-                            cand, lam, slb, beta, alpha, av, a_sum, rng,
-                        )
-                        zs_col.append(np.asarray(zs_l, dtype=np.int64))
-                    dw_col.append(np.asarray(ch[0], dtype=np.int64))
-                    dold_col.append(np.asarray(ch[1], dtype=np.int64))
-                    dnew_col.append(np.asarray(ch[2], dtype=np.int64))
-                yield pd.DataFrame(
-                    {"doc_id": b["doc_id"], "words": b["words"],
-                     "zs": zs_col, "dw": dw_col, "dp_old": dold_col,
-                     "dp_new": dnew_col}
-                )
-
-        def sweep_fn_arrow(batches):
-            # Arrow-native twin of sweep_fn for the C kernel (no M3):
-            # falls back to the pandas path only if this executor cannot
-            # compile (then via the fast kernel — bit-identical)
-            lib = native_kernel.load_native()
-            if lib is None and n_fused == 1:
-                import pyarrow as pa
-
-                def as_pandas():
-                    for rb in batches:
-                        yield pa.Table.from_batches([rb]).to_pandas()
-
-                for pdf_out in sweep_fn(as_pandas()):
-                    yield pa.RecordBatch.from_pandas(pdf_out)
-                return
-            const = const_bc.value
-            nwp, np_ = bc.value
-            if n_fused > 1:
-                # the fused runner handles lib=None itself (interpreted
-                # twin — bit-identical per sweep, counts carry the same)
-                yield from _run_fused_arrow_batches(
-                    batches, lib, const, nwp, np_, P, alpha, seed,
-                    sweep_idx, n_fused,
-                )
-                return
-            yield from _run_arrow_batches(
-                batches, lib, const, nwp, np_, P, alpha, seed, sweep_idx,
-            )
+            lib = native_kernel.load_native() if kernel == "native" else None
+            step = _m1_step(lib, kernel, const_bc.value, nwp, np_, alpha,
+                            beta, eps, use_m3)
+            yield from run_sweeps(batches, step, seed, sweep0, n_fused,
+                                  STATE_COLS, DELTA_COLS)
 
         old = self.state
         # project away a previous sweep's delta columns (their aggregation
@@ -963,40 +635,12 @@ class DistributedGibbs(CheckpointedStateLifecycle):
             if use_m3
             else base
         )
-        # partitioning by doc_id is already established; mapInPandas /
-        # mapInArrow preserve it. localCheckpoint materializes the sweep
-        # AND truncates lineage — without it the plan chains one map per
-        # sweep (O(n) plan growth, and every sweep's broadcast stays
-        # referenced for task re-serialization: an unbounded leak at
-        # 1000 sweeps). The native non-M3 path goes through mapInArrow
-        # (zero-copy flat token buffers, no per-doc Python — see
-        # _run_arrow_batches).
-        if kernel == "native" and not use_m3:
-            swept = src.sortWithinPartitions("doc_id").mapInArrow(
-                sweep_fn_arrow, SWEEP_SCHEMA
-            )
-        else:
-            swept = src.sortWithinPartitions("doc_id").mapInPandas(
-                sweep_fn, SWEEP_SCHEMA
-            )
-        # lazy local checkpoint: the delta aggregation below is the action
-        # that materializes (and persists + lineage-truncates) the new
-        # state — one job per sweep instead of checkpoint-then-aggregate.
-        # The old state is released only AFTER that job: the sweep reads
-        # its blocks.
-        new_state = self._local_checkpoint(
-            swept, reliable=cfg.reliable_checkpoint, eager=False,
+        # partitioning by doc_id is already established; mapInArrow
+        # preserves it
+        swept = src.sortWithinPartitions("doc_id").mapInArrow(
+            sweep_fn, SWEEP_SCHEMA
         )
-        self.state = new_state
-        self.sweeps_done += n_fused
-        self._apply_count_deltas()
-        self._finalize_lazy_checkpoint()
-        self._release_old_state(old)
-        # The PREVIOUS sweep's broadcast is now unreferenced (its state was
-        # checkpointed a sweep ago and unpersisted above) — destroy it
-        # explicitly instead of waiting on ContextCleaner; the current bc is
-        # deferred one sweep out of caution.
-        self._retire_broadcast(bc)
+        self._commit_sweep(old, swept, bc, n_fused)
 
     def run(self, n_sweeps: int) -> None:
         if self.state is None:

@@ -589,16 +589,7 @@ class DistributedLodLda(CheckpointedStateLifecycle):
             .sortWithinPartitions("user_id")
             .mapInPandas(sweep_fn, SWEEP_SCHEMA)
         )
-        # lazy local checkpoint, materialized by the delta aggregation —
-        # one job per sweep (see gibbs.sweep / state_lifecycle.py)
-        self.state = self._local_checkpoint(
-            swept, reliable=cfg.reliable_checkpoint, eager=False,
-        )
-        self.sweeps_done += 1
-        self._apply_count_deltas()
-        self._finalize_lazy_checkpoint()
-        self._release_old_state(old)
-        self._retire_broadcast(bc)
+        self._commit_sweep(old, swept, bc)
 
     def run(self, n_sweeps: int) -> None:
         """n_sweeps iterations (runGibbsSampling, :532-566 — no burn-in

@@ -1,13 +1,14 @@
-"""Native (C / ctypes) doc-sweep kernel — bit-identical third kernel.
+"""Native (C / ctypes) sweep kernels for M1 and M6.
 
 The constrained collapsed-Gibbs token loop (EntSumModel.java:133-192
 semantics, see models/gibbs.py) is inherently sequential per document:
 token i's conditional depends on token i-1's update, so it cannot be
-vectorized in NumPy. The "fast" kernel (gibbs._sweep_doc_fast) removes
-per-token NumPy dispatch but is still interpreted Python — the remaining
-order-of-magnitude lever flagged in round 4. This module compiles that
-exact loop to machine code at runtime with the system C compiler and
-calls it once per Arrow batch through ctypes.
+vectorized in NumPy. This module compiles that exact loop to machine
+code at runtime with the system C compiler and calls it once per Arrow
+batch through ctypes, from the shared block runner (models/chain.py).
+Each kernel has one interpreted twin for executors without a compiler:
+gibbs._sweep_doc_fast for ``sweep_batch`` and ontopart._onto_sweep_py
+for ``onto_sweep_batch``.
 
 Bit-identity contract (arbitrated by tests/test_gibbs_kernels.py, which
 asserts z-chain AND count-matrix equality against the reference kernel):
@@ -18,7 +19,7 @@ asserts z-chain AND count-matrix equality against the reference kernel):
     ``random_sample`` ((a>>5)*2**26 + (b>>6)) / 2**53. Seeds come from
     the same ``oracle.seed_for(base_seed, sweep, doc)``; one uniform per
     token, drawn in token order (MT19937 emits the same double sequence
-    batched or one-at-a-time, so parity with the fast kernel's
+    batched or one-at-a-time, so parity with the twin's
     ``rng.rand(ndoc)`` pre-draw holds).
   - Arithmetic: the candidate probability is evaluated with the same
     IEEE-754 op order as the Python expression
@@ -36,9 +37,9 @@ DistributedGibbs and shipped in the sweep-constant broadcast.
 Compilation: the source is hashed into a per-user temp dir and built
 once per machine (atomic rename makes concurrent builds safe); workers
 just dlopen the cached .so. If no C compiler is available,
-``load_native()`` returns None and callers fall back to the "fast"
-kernel — all kernels are bit-identical, so a heterogeneous-cluster mix
-of fallbacks still produces the same chain.
+``load_native()`` returns None and the runner sweeps with the
+interpreted twin — bit-identical, so a heterogeneous-cluster mix of
+fallbacks still produces the same chain.
 """
 
 from __future__ import annotations

@@ -48,6 +48,7 @@ W is F10-pruned); token state never leaves its partition.
 
 from __future__ import annotations
 
+import warnings
 from collections.abc import Iterator
 from dataclasses import dataclass
 
@@ -57,6 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import native_kernel
+from .chain import run_sweeps
 from .gibbs import tokens_from_corpus
 from .oracle import reseed, rng_for
 from .state_lifecycle import CheckpointedStateLifecycle
@@ -70,6 +72,8 @@ SWEEP_SCHEMA = STATE_SCHEMA + (
     ", dw array<long>, dto array<long>, dco array<long>,"
     " dtn array<long>, dcn array<long>"
 )
+STATE_COLS = ("ts", "cs")
+DELTA_COLS = ("dw", "dto", "dco", "dtn", "dcn")
 
 
 @dataclass
@@ -84,13 +88,12 @@ class OntoPartConfig:
     n_partitions: int = 8
     # durable per-sweep checkpointing — see models/state_lifecycle.py
     reliable_checkpoint: bool = False
-    # "native" = the runtime-compiled C grid kernel (bit-identical; falls
-    # back to "python" where no C compiler exists); "python" = the
-    # per-token NumPy loop the oracle parity tests arbitrate against
-    kernel: str = "native"
+    # Sweeps run the runtime-compiled C grid kernel, or its bit-identical
+    # interpreted twin (_onto_sweep_py) on an executor without a C
+    # compiler; OntoPartOracle is the parity arbiter.
     # >1 fuses that many sweeps into ONE Spark job (same scheme, anchors
     # and default-1 rationale as GibbsConfig.sweeps_per_job — see
-    # gibbs.py; gates in test_ontopart_fused.py). Native path only.
+    # gibbs.py; gates in test_ontopart_fused.py).
     sweeps_per_job: int = 1
 
     @property
@@ -219,143 +222,23 @@ class OntoPartOracle:
         return np.round(theta, 4), np.round(phi, 4), np.round(zeta, 4)
 
 
-def _onto_compiled_batches(
-    batches, lib, csr, nct0, nwc0, T, C, W, alpha, beta, zeta, seed,
-    sweep_idx, max_cls,
+def _onto_sweep_py(
+    doc_indptr, seeds, ws_flat, ts_flat, cs_flat, nct, nwc, nt, nc,
+    cand, T, C, W, alpha, beta, zeta,
 ):
-    """Arrow-batch loop for the compiled M6 kernel: flat token layout,
-    one C call per batch (native_kernel.onto_sweep_batch). Same AD-LDA
-    working copies and changed-token outputs as the python path."""
-    cls_indptr, cls_data = csr
-    nct_flat = nct0.ravel().copy()
-    nwc_flat = nwc0.ravel().copy()
-    nt = nct0.sum(axis=1)
-    nc = nwc0.sum(axis=1)
-    ntd_scratch = np.zeros(T, dtype=np.int64)
-    termc_scratch = np.empty(max(max_cls, 1), dtype=np.float64)
-    cdf_scratch = np.empty(max(T * max_cls, 1), dtype=np.float64)
-    for b in batches:
-        n = len(b)
-        if n == 0:
-            continue
-        ws_list = [np.ascontiguousarray(x, dtype=np.int64) for x in b["words"]]
-        lens = np.fromiter((x.size for x in ws_list), np.int64, n)
-        doc_indptr = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(lens, out=doc_indptr[1:])
-        ws_flat = np.concatenate(ws_list)
-        ts_flat = np.concatenate([np.asarray(x, np.int64) for x in b["ts"]])
-        cs_flat = np.concatenate([np.asarray(x, np.int64) for x in b["cs"]])
-        seeds = (
-            (seed * 1_000_003 + sweep_idx * 10_007
-             + b["doc_id"].to_numpy(np.int64) * 131) % (2**32 - 1)
-        ).astype(np.uint32)
-        ch_w, ch_to, ch_co, ch_tn, ch_cn, ch_counts = (
-            native_kernel.onto_sweep_batch_native(
-                lib, doc_indptr, ws_flat, ts_flat, cs_flat, seeds, T, C, W,
-                nct_flat, nwc_flat, nt, nc, cls_indptr, cls_data,
-                alpha, beta, zeta, ntd_scratch, termc_scratch, cdf_scratch,
-            )
-        )
-        ch_indptr = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(ch_counts, out=ch_indptr[1:])
-        yield pd.DataFrame({
-            "doc_id": b["doc_id"],
-            "words": b["words"],
-            "ts": np.split(ts_flat, doc_indptr[1:-1]),
-            "cs": np.split(cs_flat, doc_indptr[1:-1]),
-            "dw": np.split(ch_w, ch_indptr[1:-1]),
-            "dto": np.split(ch_to, ch_indptr[1:-1]),
-            "dco": np.split(ch_co, ch_indptr[1:-1]),
-            "dtn": np.split(ch_tn, ch_indptr[1:-1]),
-            "dcn": np.split(ch_cn, ch_indptr[1:-1]),
-        })
-
-
-def _onto_arrow_batches(
-    batches, lib, csr, nct0, nwc0, T, C, W, alpha, beta, zeta, seed,
-    sweep_idx, max_cls,
-):
-    """mapInArrow loop for the compiled M6 kernel — same zero-copy layout
-    trick as gibbs._run_arrow_batches: Arrow list columns already store
-    the flat values buffer + offsets the C kernel consumes, so no per-doc
-    Python and no pandas materialization. Output reuses the input words
-    column; ts/cs/changed-token outputs are rewrapped by offset."""
-    import pyarrow as pa
-
-    cls_indptr, cls_data = csr
-    nct_flat = nct0.ravel().copy()
-    nwc_flat = nwc0.ravel().copy()
-    nt = nct0.sum(axis=1)
-    nc = nwc0.sum(axis=1)
-    ntd_scratch = np.zeros(T, dtype=np.int64)
-    termc_scratch = np.empty(max(max_cls, 1), dtype=np.float64)
-    cdf_scratch = np.empty(max(T * max_cls, 1), dtype=np.float64)
-    for rb in batches:
-        n = rb.num_rows
-        if n == 0:
-            continue
-        doc_ids = rb.column(0).to_numpy(zero_copy_only=False)
-        words_col = rb.column(1)
-        offsets32 = words_col.offsets.to_numpy(zero_copy_only=False)
-        doc_indptr = (offsets32 - offsets32[0]).astype(np.int64)
-        ws_flat = np.ascontiguousarray(
-            words_col.flatten().to_numpy(zero_copy_only=False),
-            dtype=np.int64,
-        )
-        # writable copies — the kernel mutates both in place
-        ts_flat = np.array(
-            rb.column(2).flatten().to_numpy(zero_copy_only=False),
-            dtype=np.int64,
-        )
-        cs_flat = np.array(
-            rb.column(3).flatten().to_numpy(zero_copy_only=False),
-            dtype=np.int64,
-        )
-        seeds = (
-            (seed * 1_000_003 + sweep_idx * 10_007
-             + doc_ids.astype(np.int64) * 131) % (2**32 - 1)
-        ).astype(np.uint32)
-        ch_w, ch_to, ch_co, ch_tn, ch_cn, ch_counts = (
-            native_kernel.onto_sweep_batch_native(
-                lib, doc_indptr, ws_flat, ts_flat, cs_flat, seeds, T, C, W,
-                nct_flat, nwc_flat, nt, nc, cls_indptr, cls_data,
-                alpha, beta, zeta, ntd_scratch, termc_scratch, cdf_scratch,
-            )
-        )
-        ch_off = np.zeros(n + 1, dtype=np.int32)
-        np.cumsum(ch_counts, out=ch_off[1:], dtype=np.int32)
-        off32 = doc_indptr.astype(np.int32)
-
-        def lst(off, vals):
-            return pa.ListArray.from_arrays(pa.array(off), pa.array(vals))
-
-        yield pa.RecordBatch.from_arrays(
-            [rb.column(0), words_col, lst(off32, ts_flat),
-             lst(off32, cs_flat), lst(ch_off, ch_w), lst(ch_off, ch_to),
-             lst(ch_off, ch_co), lst(ch_off, ch_tn), lst(ch_off, ch_cn)],
-            names=["doc_id", "words", "ts", "cs",
-                   "dw", "dto", "dco", "dtn", "dcn"],
-        )
-
-
-def _onto_fused_sweep_py(
-    doc_indptr, doc_ids, ws_flat, ts_flat, cs_flat, nct, nwc, nt, nc,
-    cand, T, C, W, alpha, beta, zeta, seed, sweep_idx,
-):
-    """Interpreted twin of one fused M6 sweep over a buffered batch's
-    flat arrays — the SAME per-token loop the unfused python kernel runs
-    (bit-identical to the C kernel by the existing parity tests), so a
-    compiler-less executor agrees with native mid-block. Mutates
-    ts/cs/nct/nwc/nt/nc in place; returns the change tuple."""
-    rng0 = np.random.RandomState(0)
+    """Interpreted twin of the C kernel's M6 batch sweep over flat
+    arrays — the oracle's per-token loop, bit-identical to the C kernel
+    (test_ontopart_fused.py), so a compiler-less executor agrees with
+    native even mid-block. Mutates ts/cs/nct/nwc/nt/nc in place; returns
+    the changed-token columns and per-doc change counts."""
+    rng = np.random.RandomState(0)
     n_docs = len(doc_indptr) - 1
     ch_w, ch_to, ch_co, ch_tn, ch_cn = [], [], [], [], []
     ch_counts = np.zeros(n_docs, dtype=np.int64)
     for j in range(n_docs):
         lo, hi = int(doc_indptr[j]), int(doc_indptr[j + 1])
-        ts = ts_flat[lo:hi]
-        ntd = np.bincount(ts, minlength=T).astype(np.int64)
-        rng = reseed(rng0, seed, sweep_idx, int(doc_ids[j]))
+        ntd = np.bincount(ts_flat[lo:hi], minlength=T).astype(np.int64)
+        rng.seed(int(seeds[j]))
         n_ch = 0
         for i in range(lo, hi):
             w, t_old, c_old = int(ws_flat[i]), int(ts_flat[i]), int(cs_flat[i])
@@ -382,108 +265,48 @@ def _onto_fused_sweep_py(
                 ch_cn.append(c_new)
                 n_ch += 1
         ch_counts[j] = n_ch
-    as_arr = (np.asarray(x, dtype=np.int64) for x in
-              (ch_w, ch_to, ch_co, ch_tn, ch_cn))
-    return (*as_arr, ch_counts)
+    cols = tuple(np.asarray(x, dtype=np.int64) for x in
+                 (ch_w, ch_to, ch_co, ch_tn, ch_cn))
+    return cols, ch_counts
 
 
-def _onto_fused_arrow_batches(
-    batches, lib, csr, nct0, nwc0, T, C, W, alpha, beta, zeta, seed,
-    sweep0, k, max_cls,
-):
-    """K fused M6 sweeps in ONE mapInArrow pass — the ontoPart twin of
-    gibbs._run_fused_arrow_batches, same scheme and anchors: partition-
-    local nct/nwc carry across the K sweeps (AD-LDA staleness extended
-    from within-a-sweep to within-a-block); bit-identical to unfused at
-    n_partitions=1; every sweep's (topic, class) deltas are emitted
-    per-doc sweep-ordered so the driver's delta aggregation reconstructs
-    the EXACT global counts at the block boundary (test_ontopart_fused).
-    RNG is per (seed, sweep, doc) — fusion never changes the random
-    numbers, only intermediate count freshness. ``lib`` None degrades to
-    the interpreted per-token twin, bit-identical per sweep."""
-    import pyarrow as pa
-
-    from .gibbs import _interleave_doc_delta_cols
-
+def _onto_step(lib, csr, nct0, nwc0, T, C, W, alpha, beta, zeta, max_cls):
+    """The M6 batch-sweep callable for ``chain.run_sweeps``: the C grid
+    kernel where ``lib`` loaded, else its interpreted twin. Both mutate
+    ONE set of partition-local working copies (AD-LDA) for the pass."""
     cls_indptr, cls_data = csr
-    nct_w = nct0.copy()
-    nwc_w = nwc0.copy()
-    nct_flat = nct_w.ravel()   # views: both kernels mutate ONE state
-    nwc_flat = nwc_w.ravel()
-    nt = nct_w.sum(axis=1)
-    nc = nwc_w.sum(axis=1)
-    ntd_scratch = np.zeros(T, dtype=np.int64)
-    termc_scratch = np.empty(max(max_cls, 1), dtype=np.float64)
-    cdf_scratch = np.empty(max(T * max_cls, 1), dtype=np.float64)
-    cand = None
+    nct, nwc = nct0.copy(), nwc0.copy()
+    nt, nc = nct.sum(axis=1), nwc.sum(axis=1)
     if lib is None:
         cand = {
             w: cls_data[cls_indptr[w]:cls_indptr[w + 1]]
             for w in range(len(cls_indptr) - 1)
         }
 
-    buf = []  # (doc_col, words_col, doc_ids, doc_indptr, ws, ts, cs)
-    for rb in batches:
-        if rb.num_rows == 0:
-            continue
-        words_col = rb.column(1)
-        offsets32 = words_col.offsets.to_numpy(zero_copy_only=False)
-        buf.append((
-            rb.column(0),
-            words_col,
-            rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64),
-            (offsets32 - offsets32[0]).astype(np.int64),
-            np.ascontiguousarray(
-                words_col.flatten().to_numpy(zero_copy_only=False),
-                dtype=np.int64,
-            ),
-            np.array(rb.column(2).flatten().to_numpy(zero_copy_only=False),
-                     dtype=np.int64),
-            np.array(rb.column(3).flatten().to_numpy(zero_copy_only=False),
-                     dtype=np.int64),
-        ))
+        def py_step(blk, seeds):
+            ts, cs = blk.state
+            return _onto_sweep_py(
+                blk.indptr, seeds, blk.ws, ts, cs, nct, nwc, nt, nc, cand,
+                T, C, W, alpha, beta, zeta,
+            )
 
-    deltas = [[] for _ in buf]  # per batch: per-sweep (cols, counts)
-    for s in range(k):
-        sweep_idx = sweep0 + s
-        for j, (_, _, doc_ids, doc_indptr, ws_flat, ts_flat, cs_flat) in (
-            enumerate(buf)
-        ):
-            if lib is not None:
-                seeds = (
-                    (seed * 1_000_003 + sweep_idx * 10_007 + doc_ids * 131)
-                    % (2**32 - 1)
-                ).astype(np.uint32)
-                ch = native_kernel.onto_sweep_batch_native(
-                    lib, doc_indptr, ws_flat, ts_flat, cs_flat, seeds,
-                    T, C, W, nct_flat, nwc_flat, nt, nc,
-                    cls_indptr, cls_data, alpha, beta, zeta,
-                    ntd_scratch, termc_scratch, cdf_scratch,
-                )
-            else:
-                ch = _onto_fused_sweep_py(
-                    doc_indptr, doc_ids, ws_flat, ts_flat, cs_flat,
-                    nct_w, nwc_w, nt, nc, cand, T, C, W,
-                    alpha, beta, zeta, seed, sweep_idx,
-                )
-            deltas[j].append((ch[:5], ch[5]))
+        return py_step
 
-    def lst(off, vals):
-        return pa.ListArray.from_arrays(pa.array(off), pa.array(vals))
+    nct_flat, nwc_flat = nct.ravel(), nwc.ravel()
+    ntd = np.zeros(T, dtype=np.int64)
+    termc = np.empty(max(max_cls, 1), dtype=np.float64)
+    cdf = np.empty(max(T * max_cls, 1), dtype=np.float64)
 
-    for (doc_col, words_col, _, doc_indptr, _, ts_flat, cs_flat), ps in (
-        zip(buf, deltas)
-    ):
-        n = len(doc_indptr) - 1
-        cols, ch_off = _interleave_doc_delta_cols(n, ps)
-        off32 = doc_indptr.astype(np.int32)
-        co32 = ch_off.astype(np.int32)
-        yield pa.RecordBatch.from_arrays(
-            [doc_col, words_col, lst(off32, ts_flat), lst(off32, cs_flat)]
-            + [lst(co32, c) for c in cols],
-            names=["doc_id", "words", "ts", "cs",
-                   "dw", "dto", "dco", "dtn", "dcn"],
+    def native_step(blk, seeds):
+        ts, cs = blk.state
+        *ch, counts = native_kernel.onto_sweep_batch_native(
+            lib, blk.indptr, blk.ws, ts, cs, seeds, T, C, W,
+            nct_flat, nwc_flat, nt, nc, cls_indptr, cls_data,
+            alpha, beta, zeta, ntd, termc, cdf,
         )
+        return tuple(ch), counts
+
+    return native_step
 
 
 class DistributedOntoPart(CheckpointedStateLifecycle):
@@ -504,22 +327,15 @@ class DistributedOntoPart(CheckpointedStateLifecycle):
         self.spark = spark
         self.cfg = cfg
         self.cls_cand = _collect_cls_cand(class_word)
-        self.kernel = cfg.kernel
-        if self.kernel == "native" and not native_kernel.native_available():
-            import warnings
-
+        if not native_kernel.native_available():
             warnings.warn(
-                "OntoPart kernel='native': no C compiler — using 'python'"
+                "OntoPart: no C compiler — sweeps run the interpreted twin"
                 " (bit-identical, slower)", stacklevel=2,
             )
-            self.kernel = "python"
-        if self.kernel == "native":
-            self._csr = native_kernel.cand_to_csr(
-                self.cls_cand, cfg.n_words
-            )
-            self._max_cls = (
-                int(np.diff(self._csr[0]).max()) if self.cls_cand else 1
-            )
+        self._csr = native_kernel.cand_to_csr(self.cls_cand, cfg.n_words)
+        self._max_cls = (
+            int(np.diff(self._csr[0]).max()) if self.cls_cand else 1
+        )
         self.corpus = corpus
         self.state: DataFrame | None = None
         self.nct: np.ndarray | None = None
@@ -623,146 +439,26 @@ class DistributedOntoPart(CheckpointedStateLifecycle):
 
     def sweep(self, n_fused: int = 1) -> None:
         cfg = self.cfg
-        sweep_idx = self.sweeps_done
-        kernel = self.kernel
-        if n_fused > 1 and kernel != "native":
-            raise ValueError("fused sweeps require kernel='native'")
-        # the compiled kernel ships CSR-packed candidates; the python
-        # kernel the dict (an executor whose compile fails rebuilds the
-        # dict from the CSR — cheap, and every kernel is bit-identical)
-        cand_payload = self._csr if kernel == "native" else self.cls_cand
-        bc = self.spark.sparkContext.broadcast(
-            (self.nct, self.nwc, cand_payload)
-        )
+        sweep0 = self.sweeps_done
+        bc = self.spark.sparkContext.broadcast((self.nct, self.nwc, self._csr))
         T, C, W = cfg.n_topics, cfg.n_classes, cfg.n_words
         a, b, z0, seed = cfg.alpha_eff, cfg.beta, cfg.zeta, cfg.base_seed
-        max_cls = self._max_cls if kernel == "native" else 0
+        max_cls = self._max_cls
 
-        def sweep_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            nct, nwc, cand = bc.value
-            kern = kernel
-            lib = None
-            if kern == "native":
-                lib = native_kernel.load_native()
-                if lib is None:  # degrade: rebuild the dict from the CSR
-                    indptr, data = cand
-                    cand = {
-                        w: data[indptr[w]:indptr[w + 1]]
-                        for w in range(len(indptr) - 1)
-                    }
-                    kern = "python"
-            if kern == "native":
-                yield from _onto_compiled_batches(
-                    batches, lib, cand, nct, nwc, T, C, W, a, b, z0,
-                    seed, sweep_idx, max_cls,
-                )
-                return
-            nct = nct.copy()      # partition-local working copies (AD-LDA)
-            nwc = nwc.copy()
-            nt = nct.sum(axis=1)
-            nc = nwc.sum(axis=1)
-            rng0 = np.random.RandomState(0)
-            for batch in batches:
-                ts_col, cs_col = [], []
-                dw_c, dto_c, dco_c, dtn_c, dcn_c = [], [], [], [], []
-                for d, ws, ts, cs in zip(
-                    batch["doc_id"], batch["words"], batch["ts"], batch["cs"]
-                ):
-                    ch = ([], [], [], [], [])
-                    ws = np.asarray(ws, dtype=np.int64)
-                    ts = np.asarray(ts, dtype=np.int64).copy()
-                    cs = np.asarray(cs, dtype=np.int64).copy()
-                    ntd = np.bincount(ts, minlength=T).astype(np.int64)
-                    rng = reseed(rng0, seed, sweep_idx, int(d))
-                    for i in range(len(ws)):
-                        w, t_old, c_old = int(ws[i]), int(ts[i]), int(cs[i])
-                        ntd[t_old] -= 1
-                        nct[t_old, c_old] -= 1
-                        nwc[c_old, w] -= 1
-                        nt[t_old] -= 1
-                        nc[c_old] -= 1
-                        t_new, c_new = _sample_token(
-                            rng.rand(), ntd, nct, nwc[:, w], nt, nc,
-                            cand[w], a, b, z0, C, W,
-                        )
-                        ts[i], cs[i] = t_new, c_new
-                        ntd[t_new] += 1
-                        nct[t_new, c_new] += 1
-                        nwc[c_new, w] += 1
-                        nt[t_new] += 1
-                        nc[c_new] += 1
-                        if t_new != t_old or c_new != c_old:
-                            ch[0].append(w)
-                            ch[1].append(t_old)
-                            ch[2].append(c_old)
-                            ch[3].append(t_new)
-                            ch[4].append(c_new)
-                    ts_col.append(ts)
-                    cs_col.append(cs)
-                    for col, vals in zip(
-                        (dw_c, dto_c, dco_c, dtn_c, dcn_c), ch
-                    ):
-                        col.append(np.asarray(vals, dtype=np.int64))
-                yield pd.DataFrame(
-                    {"doc_id": batch["doc_id"], "words": batch["words"],
-                     "ts": ts_col, "cs": cs_col, "dw": dw_c, "dto": dto_c,
-                     "dco": dco_c, "dtn": dtn_c, "dcn": dcn_c}
-                )
-
-        def sweep_fn_arrow(batches):
-            # Arrow-native twin of sweep_fn for the C kernel: falls back
-            # to the pandas path only if this executor cannot compile
-            # (then via the python kernel — bit-identical)
-            lib = native_kernel.load_native()
-            if n_fused > 1:
-                # the fused runner handles lib=None itself (interpreted
-                # per-token twin — bit-identical per sweep)
-                nct, nwc, cand = bc.value
-                yield from _onto_fused_arrow_batches(
-                    batches, lib, cand, nct, nwc, T, C, W, a, b, z0,
-                    seed, sweep_idx, n_fused, max_cls,
-                )
-                return
-            if lib is None:
-                import pyarrow as pa
-
-                def as_pandas():
-                    for rb in batches:
-                        yield pa.Table.from_batches([rb]).to_pandas()
-
-                for pdf_out in sweep_fn(as_pandas()):
-                    yield pa.RecordBatch.from_pandas(pdf_out)
-                return
-            nct, nwc, cand = bc.value
-            yield from _onto_arrow_batches(
-                batches, lib, cand, nct, nwc, T, C, W, a, b, z0,
-                seed, sweep_idx, max_cls,
-            )
+        def sweep_fn(batches):
+            nct, nwc, csr = bc.value
+            step = _onto_step(native_kernel.load_native(), csr, nct, nwc,
+                              T, C, W, a, b, z0, max_cls)
+            yield from run_sweeps(batches, step, seed, sweep0, n_fused,
+                                  STATE_COLS, DELTA_COLS)
 
         old = self.state
-        base = old.select("doc_id", "words", "ts", "cs")
-        # the native path goes through mapInArrow — zero-copy flat token
-        # buffers straight into the C kernel (see _onto_arrow_batches)
-        if kernel == "native":
-            swept = base.sortWithinPartitions("doc_id").mapInArrow(
-                sweep_fn_arrow, SWEEP_SCHEMA
-            )
-        else:
-            swept = base.sortWithinPartitions("doc_id").mapInPandas(
-                sweep_fn, SWEEP_SCHEMA
-            )
-        # lazy local checkpoint — materialized by the delta aggregation
-        # (one job per sweep); old state released after that job (see
-        # gibbs.sweep for the full rationale)
-        new_state = self._local_checkpoint(
-            swept, reliable=cfg.reliable_checkpoint, eager=False,
+        swept = (
+            old.select("doc_id", "words", "ts", "cs")
+            .sortWithinPartitions("doc_id")
+            .mapInArrow(sweep_fn, SWEEP_SCHEMA)
         )
-        self.state = new_state
-        self.sweeps_done += n_fused
-        self._apply_count_deltas()
-        self._finalize_lazy_checkpoint()
-        self._release_old_state(old)
-        self._retire_broadcast(bc)
+        self._commit_sweep(old, swept, bc, n_fused)
 
     def close(self) -> None:
         """Release the pending per-sweep broadcast retirement (the M6
@@ -773,15 +469,7 @@ class DistributedOntoPart(CheckpointedStateLifecycle):
     def run(self, n_sweeps: int) -> None:
         if self.state is None:
             self.init_state()
-        k = max(1, int(getattr(self.cfg, "sweeps_per_job", 1)))
-        if k > 1 and self.kernel != "native":
-            import warnings
-
-            warnings.warn(
-                "sweeps_per_job>1 applies only to the native kernel; "
-                "sweeping one per job", stacklevel=2,
-            )
-            k = 1
+        k = max(1, int(self.cfg.sweeps_per_job))
         done = 0
         while done < n_sweeps:
             step = min(k, n_sweeps - done)

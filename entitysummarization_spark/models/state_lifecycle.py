@@ -1,8 +1,9 @@
 """Iterative-sampler state lifecycle: checkpoint + explicit release.
 
-Shared by DistributedGibbs (M1/M2/M3/M5) and OntoPartGibbs (M6). Both
-samplers rewrite their full token state once per sweep via mapInPandas;
-without intervention that (a) chains one mapInPandas per sweep into an
+Shared by every distributed sampler: DistributedGibbs (M1/M2/M3/M5),
+DistributedEntLda2 (M4), DistributedOntoPart (M6) and DistributedLodLda
+(M7). Each rewrites its full token state once per sweep with one map
+pass; without intervention that (a) chains one map pass per sweep into an
 O(n)-deep plan, and (b) keeps every sweep's count broadcast referenced
 for task re-serialization — an unbounded leak at the reference's 500 to
 2000 production sweeps. The discipline here:
@@ -43,7 +44,10 @@ from pyspark.sql import DataFrame
 
 class CheckpointedStateLifecycle:
     """Mixin; requires ``self.spark``. Call _init_state_lifecycle() in
-    __init__."""
+    __init__. ``_commit_sweep`` additionally requires ``self.cfg``
+    (with ``reliable_checkpoint``), ``self.sweeps_done`` and an
+    ``_apply_count_deltas`` that aggregates the new state's delta
+    columns into the driver's counts."""
 
     def _init_state_lifecycle(self) -> None:
         self._state_handles: list = []
@@ -84,6 +88,23 @@ class CheckpointedStateLifecycle:
         self._pending_release = self._state_handles
         self._state_handles = [handle] if handle is not None else []
         return out
+
+    def _commit_sweep(self, old: DataFrame, swept: DataFrame, bc,
+                      n_sweeps: int = 1) -> None:
+        """The shared end of a sweep: checkpoint ``swept`` lazily, let the
+        delta aggregation be the action that materializes it (one job per
+        sweep instead of checkpoint-then-aggregate), then release the old
+        state — only now, since the sweep read its blocks — and retire
+        the previous sweep's broadcast (``bc`` is destroyed one sweep
+        later, out of caution)."""
+        self.state = self._local_checkpoint(
+            swept, reliable=self.cfg.reliable_checkpoint, eager=False,
+        )
+        self.sweeps_done += n_sweeps
+        self._apply_count_deltas()
+        self._finalize_lazy_checkpoint()
+        self._release_old_state(old)
+        self._retire_broadcast(bc)
 
     def _finalize_lazy_checkpoint(self) -> None:
         """Force lineage truncation of the current (lazily-checkpointed)

@@ -13,6 +13,7 @@ bit-identical states.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 
@@ -37,18 +38,9 @@ def save_checkpoint(gibbs: DistributedGibbs, path: str) -> str:
         F.sum(F.size("words")).alias("n_tokens"),
     )
     lineage.write.mode("overwrite").parquet(os.path.join(d, "lineage"))
-    meta = {
-        "sweeps_done": sweep,
-        "n_preds": gibbs.cfg.n_preds,
-        "n_words": gibbs.cfg.n_words,
-        "alpha": gibbs.cfg.alpha,
-        "beta": gibbs.cfg.beta,
-        "base_seed": gibbs.cfg.base_seed,
-        "n_partitions": gibbs.cfg.n_partitions,
-        # recorded for provenance; both kernels are bit-identical so a
-        # resume under either continues the same z-chain
-        "kernel": gibbs.cfg.kernel,
-    }
+    # the full config: a resume must continue the chain under exactly the
+    # settings it was sampled with (λ default, ε, fusion, checkpointing)
+    meta = {"sweeps_done": sweep, "config": dataclasses.asdict(gibbs.cfg)}
     tmp = os.path.join(d, "_meta.json.tmp")
     with open(tmp, "w") as f:
         json.dump(meta, f)
@@ -77,18 +69,14 @@ def load_checkpoint(
 ) -> DistributedGibbs:
     """Rebuild a DistributedGibbs positioned at the checkpointed sweep.
 
-    ``kernel`` overrides the checkpoint's recorded kernel — every kernel
-    is bit-identical, so a chain checkpointed under one may resume under
-    another (e.g. native on the cluster, fast on a compiler-less box);
-    test_gibbs.py asserts the cross-kernel resume equality."""
+    ``kernel`` overrides the checkpoint's recorded kernel — both kernels
+    are bit-identical, so a chain checkpointed under one may resume under
+    the other; test_gibbs.py asserts the cross-kernel resume equality."""
     with open(os.path.join(ckpt_dir, "meta.json")) as f:
         meta = json.load(f)
-    cfg = GibbsConfig(
-        n_preds=meta["n_preds"], n_words=meta["n_words"], alpha=meta["alpha"],
-        beta=meta["beta"], base_seed=meta["base_seed"],
-        n_partitions=meta["n_partitions"],
-        kernel=kernel or meta.get("kernel", "fast"),
-    )
+    cfg = GibbsConfig(**meta["config"])
+    if kernel is not None:
+        cfg = dataclasses.replace(cfg, kernel=kernel)
     g = DistributedGibbs(spark, corpus, obj_pred, lam_df, cfg)
     state = spark.read.parquet(os.path.join(ckpt_dir, "state"))
     g.state = (

@@ -22,7 +22,8 @@ from entitysummarization_spark.session import get_spark  # noqa: E402
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark(app_name="check", master="local[32]",
+    cores = len(os.sched_getaffinity(0))  # = nproc
+    spark = get_spark(app_name="check", master=f"local[{cores}]",
                       shuffle_partitions=32)
     queries = entry.queries()
     oracles = entry.oracle_sql()

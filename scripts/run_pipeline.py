@@ -43,9 +43,9 @@ def main() -> None:
     ap.add_argument("--checkpoint-every", type=int, default=10)
     ap.add_argument("--seed", type=int, default=7)
     ap.add_argument("--kernel", default="native",
-                    choices=["native", "numba", "fast", "reference"],
-                    help="Gibbs sweep kernel (all bit-identical; native "
-                         "falls back to fast where no C compiler exists)")
+                    choices=["native", "reference"],
+                    help="Gibbs sweep kernel (bit-identical; native runs "
+                         "its interpreted twin where no C compiler exists)")
     ap.add_argument("--sweeps-per-job", type=int, default=1,
                     help="fuse this many sweeps into one Spark job "
                          "(opt-in late-chain throughput mode; exact "

@@ -117,11 +117,11 @@ def test_checkpoint_resume_bit_identical(spark, bundle, tmp_path):
     assert np.array_equal(g_full.nwp, g_b.nwp)
 
     # cross-kernel resume: a chain checkpointed under the native kernel
-    # must continue identically under the interpreted fast kernel (the
-    # compiler-less-box scenario) — all kernels share one z-chain
+    # must continue identically under the reference kernel — both
+    # kernels share one z-chain
     g_c = load_checkpoint(spark, ck, b.corpus, b.obj_pred, b.lam,
-                          kernel="fast")
-    assert g_c.kernel == "fast"
+                          kernel="reference")
+    assert g_c.kernel == "reference"
     g_c.run(2)
     zc = g_c.z_state()
     for d in za:

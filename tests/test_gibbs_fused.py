@@ -20,12 +20,16 @@ import numpy as np
 import pytest
 
 from entitysummarization_spark.models import native_kernel
+from entitysummarization_spark.models.chain import (
+    _interleave_doc_delta_cols,
+    run_sweeps,
+)
 from entitysummarization_spark.models.gibbs import (
+    DELTA_COLS,
+    STATE_COLS,
     DistributedGibbs,
     GibbsConfig,
-    _interleave_doc_deltas,
-    _run_arrow_batches,
-    _run_fused_arrow_batches,
+    _m1_step,
 )
 from entitysummarization_spark.operators.canonicalize import canonical_triples
 from entitysummarization_spark.operators.corpus import build_corpus
@@ -66,7 +70,9 @@ def test_interleave_doc_deltas_groups_by_doc_sweep_ordered():
            np.array([1, 1, 3]), np.array([2, 0, 1]))
     s_b = (np.array([20, 21, 22]), np.array([5, 6, 6]),
            np.array([7, 8, 8]), np.array([1, 2, 0]))
-    dw, dold, dnew, off = _interleave_doc_deltas(3, [s_a, s_b])
+    (dw, dold, dnew), off = _interleave_doc_delta_cols(
+        3, [(s[:3], s[3]) for s in (s_a, s_b)]
+    )
     assert off.tolist() == [0, 3, 5, 6]
     assert dw.tolist() == [10, 11, 20, 21, 22, 12]
     assert dold.tolist() == [0, 0, 5, 6, 6, 2]
@@ -75,8 +81,8 @@ def test_interleave_doc_deltas_groups_by_doc_sweep_ordered():
 
 def test_interleave_doc_deltas_empty_sweeps():
     z = np.zeros(0, dtype=np.int64)
-    zero = (z, z, z, np.zeros(2, dtype=np.int64))
-    dw, dold, dnew, off = _interleave_doc_deltas(2, [zero, zero])
+    zero = ((z, z, z), np.zeros(2, dtype=np.int64))
+    (dw, dold, dnew), off = _interleave_doc_delta_cols(2, [zero, zero])
     assert off.tolist() == [0, 0, 0] and dw.size == 0
 
 
@@ -125,7 +131,7 @@ def test_fused_remainder_and_sweep_count(spark, bundle):
 def test_fused_rejects_non_native_and_m3(spark, bundle):
     b, P, W = bundle
     cfg = GibbsConfig(n_preds=P, n_words=W, base_seed=11, n_partitions=1,
-                      kernel="fast", sweeps_per_job=4)
+                      kernel="reference", sweeps_per_job=4)
     g = DistributedGibbs(spark, b.corpus, b.obj_pred, b.lam, cfg)
     g.init_state()
     with pytest.raises(ValueError, match="fused"):
@@ -168,27 +174,31 @@ def _tiny_problem():
     return rb, const, nwp, P, W
 
 
+def _sweep_block(rb, lib, const, nwp, P, sweep0, k, kernel="native",
+                 use_m3=False):
+    """One partition's pass through the shared runner: sweeps
+    sweep0..sweep0+k-1 of the tiny problem with the M1 batch sweep."""
+    step = _m1_step(lib, kernel, const, nwp, nwp.sum(axis=1), 50.0 / P,
+                    0.01, 0.9, use_m3)
+    out = list(run_sweeps(iter([rb]), step, 11, sweep0, k, STATE_COLS,
+                          DELTA_COLS))
+    assert len(out) == 1
+    return out[0]
+
+
 @needs_cc
 def test_fused_runner_matches_sequential_unfused():
     """Function-level parity: one partition's fused K=3 pass equals 3
-    sequential _run_arrow_batches calls with the driver's delta refresh
-    applied between them (exactly what DistributedGibbs does unfused)."""
+    sequential unfused passes with the driver's delta refresh applied
+    between them (exactly what DistributedGibbs does unfused)."""
     rb, const, nwp0, P, W = _tiny_problem()
     lib = native_kernel.load_native()
-    alpha, seed = 50.0 / P, 11
 
-    fused = list(_run_fused_arrow_batches(
-        iter([rb]), lib, const, nwp0.copy(), nwp0.sum(axis=1),
-        P, alpha, seed, 0, 3,
-    ))
-    assert len(fused) == 1
+    f = _sweep_block(rb, lib, const, nwp0, P, 0, 3)  # fused
 
     cur, nwp = rb, nwp0.copy()
     for s in range(3):
-        out = list(_run_arrow_batches(
-            iter([cur]), lib, const, nwp, nwp.sum(axis=1),
-            P, alpha, seed, s,
-        ))[0]
+        out = _sweep_block(cur, lib, const, nwp, P, s, 1)
         # driver-side exact delta refresh between unfused sweeps
         for row_dw, row_po, row_pn in zip(
             out.column("dw").to_pylist(),
@@ -204,7 +214,6 @@ def test_fused_runner_matches_sequential_unfused():
             [out.column("doc_id"), out.column("words"), out.column("zs")],
             names=["doc_id", "words", "zs"],
         )
-    f = fused[0]
     assert f.column("zs").to_pylist() == cur.column("zs").to_pylist()
     # fused deltas reconstruct the same final counts
     nwp_f = nwp0.copy()
@@ -243,22 +252,43 @@ def test_fused_multi_partition_summary_ndcg(spark):
 
 
 @needs_cc
-def test_fused_interpreted_fallback_matches_native():
-    """lib=None (executor without a compiler) runs the interpreted
-    numba-twin kernel inside the SAME fused runner — identical chain, so
-    heterogeneous clusters agree even mid-block."""
+@pytest.mark.parametrize("k", [1, 3])
+def test_fused_interpreted_fallback_matches_native(k):
+    """lib=None (executor without a compiler) runs the interpreted twin
+    inside the SAME runner — identical chain, so heterogeneous clusters
+    agree, unfused and even mid-block."""
     rb, const, nwp0, P, W = _tiny_problem()
+    a = _sweep_block(rb, native_kernel.load_native(), const, nwp0, P, 0, k)
+    b = _sweep_block(rb, None, const, nwp0, P, 0, k)
+    for col in ("zs", "dw", "dp_old", "dp_new"):
+        assert a.column(col).to_pylist() == b.column(col).to_pylist(), col
+
+
+@needs_cc
+def test_m3_interpreted_twin_matches_native():
+    """M3 per-doc α through the runner: the twin, the C kernel and the
+    reference kernel read the joined ``nbrs`` column into the same α
+    rows (doc 1 has no neighbors — the left-join null) and agree."""
+    import pyarrow as pa
+
+    rb, const, nwp0, P, W = _tiny_problem()
+    nbr_type = pa.list_(pa.struct([
+        ("nbr", pa.int64()), ("nd", pa.int64()),
+        ("pn", pa.list_(pa.struct([("p", pa.int64()), ("n", pa.int64())]))),
+    ]))
+    nbrs = pa.array([
+        [{"nbr": 1, "nd": 4, "pn": [{"p": 0, "n": 1}, {"p": 1, "n": 2},
+                                     {"p": 2, "n": 1}]}],
+        None,
+    ], type=nbr_type)
+    rb = pa.RecordBatch.from_arrays(
+        list(rb.columns) + [nbrs], names=rb.schema.names + ["nbrs"]
+    )
     lib = native_kernel.load_native()
-    alpha, seed = 50.0 / P, 11
-    a = list(_run_fused_arrow_batches(
-        iter([rb]), lib, const, nwp0.copy(), nwp0.sum(axis=1),
-        P, alpha, seed, 0, 3,
-    ))[0]
-    b = list(_run_fused_arrow_batches(
-        iter([rb]), None, const, nwp0.copy(), nwp0.sum(axis=1),
-        P, alpha, seed, 0, 3,
-    ))[0]
-    assert a.column("zs").to_pylist() == b.column("zs").to_pylist()
-    assert a.column("dw").to_pylist() == b.column("dw").to_pylist()
-    assert a.column("dp_old").to_pylist() == b.column("dp_old").to_pylist()
-    assert a.column("dp_new").to_pylist() == b.column("dp_new").to_pylist()
+    runs = [_sweep_block(rb, lib_, const, nwp0, P, 0, 1, kernel=kern,
+                         use_m3=True)
+            for lib_, kern in ((lib, "native"), (None, "native"),
+                               (None, "reference"))]
+    for col in ("zs", "dw", "dp_old", "dp_new"):
+        got = [r.column(col).to_pylist() for r in runs]
+        assert got[0] == got[1] == got[2], col

@@ -60,12 +60,11 @@ def test_alpha_from_neighbors_closed_form():
     assert np.allclose(av, expect)
 
 
-@pytest.mark.filterwarnings("ignore:kernel='numba'")  # expected degrade
-@pytest.mark.parametrize("kernel", ["native", "fast", "numba"])
+@pytest.mark.parametrize("kernel", ["native", "reference"])
 def test_m3_single_partition_bit_parity(spark, bundle, kernel):
-    """The M3 per-doc-alpha path must hold bit-parity under EVERY kernel
+    """The M3 per-doc-alpha path must hold bit-parity under both kernels
     (the per-doc alpha vector takes a different code path in the
-    compiled kernels than the scalar M1 alpha does)."""
+    compiled kernel than the scalar M1 alpha does)."""
     b, P, W = bundle
     corpus, cand, lam = _oracle_inputs(b, P, W)
     edges = _ring_edges(corpus)

@@ -94,3 +94,34 @@ def test_m5_multi_partition_token_conservation(spark, m5_inputs):
     n_tokens = corpus_df.toPandas()["freq"].sum()
     assert int(g.nwp.sum()) == int(n_tokens)
     assert (g.np_ == g.nwp.sum(axis=1)).all()
+
+
+def test_m5_checkpoint_resume_keeps_config(spark, m5_inputs, tmp_path):
+    """A checkpoint carries the full config: an M5 chain (λ default 0.0,
+    β=0.5) resumed from sweep 2 must continue exactly as the unbroken
+    chain — a resume that fell back to λ default 1.0 diverges."""
+    from entitysummarization_spark.plans.checkpoint import (
+        load_checkpoint,
+        save_checkpoint,
+    )
+
+    corpus_df, obj_pred, lam_df = m5_inputs
+    cfg = GibbsConfig(n_preds=P, n_words=W, beta=0.5, base_seed=23,
+                      n_partitions=1, lam_default=0.0)
+    g_full = DistributedGibbs(spark, corpus_df, obj_pred, lam_df, cfg)
+    g_full.run(6)
+
+    g_a = DistributedGibbs(spark, corpus_df, obj_pred, lam_df, cfg)
+    g_a.run(2)
+    ck = save_checkpoint(g_a, str(tmp_path / "ck"))
+    g_b = load_checkpoint(spark, ck, corpus_df, obj_pred, lam_df)
+    assert g_b.cfg == cfg
+    g_b.run(4)
+
+    zf, zb = g_full.z_state(), g_b.z_state()
+    assert set(zf) == set(zb)
+    for d in zf:
+        assert np.array_equal(zf[d], zb[d]), f"doc {d}"
+    assert np.array_equal(g_full.nwp, g_b.nwp)
+    for g in (g_full, g_a, g_b):
+        g.close()

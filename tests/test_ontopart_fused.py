@@ -8,7 +8,7 @@ anchors as the M1 fusion in test_gibbs_fused.py:
      a full recompute from the final (ts, cs) state at every block
      boundary, and conserve the token total;
   3. a compiler-less executor runs the interpreted per-token twin inside
-     the same fused runner — identical chain mid-block.
+     the same runner — identical chain, unfused and mid-block.
 """
 
 import numpy as np
@@ -22,11 +22,13 @@ from entitysummarization_spark.fixtures.samplers import (
     m6_corpus_rows,
 )
 from entitysummarization_spark.models import native_kernel
+from entitysummarization_spark.models.chain import run_sweeps
 from entitysummarization_spark.models.ontopart import (
+    DELTA_COLS,
+    STATE_COLS,
     DistributedOntoPart,
     OntoPartConfig,
-    _onto_arrow_batches,
-    _onto_fused_arrow_batches,
+    _onto_step,
 )
 
 needs_cc = pytest.mark.skipif(
@@ -49,7 +51,7 @@ def _run(spark, m6_inputs, n_partitions, sweeps, sweeps_per_job):
     corpus_df, class_word = m6_inputs
     cfg = OntoPartConfig(
         n_topics=T, n_classes=C, n_words=W, n_partitions=n_partitions,
-        kernel="native", sweeps_per_job=sweeps_per_job,
+        sweeps_per_job=sweeps_per_job,
     )
     m = DistributedOntoPart(spark, corpus_df, class_word, cfg)
     m.run(sweeps)
@@ -90,20 +92,6 @@ def test_fused_remainder_and_sweep_count(spark, m6_inputs):
     m.close()
 
 
-def test_fused_rejects_python_kernel(spark, m6_inputs):
-    corpus_df, class_word = m6_inputs
-    cfg = OntoPartConfig(n_topics=T, n_classes=C, n_words=W,
-                         n_partitions=1, kernel="python", sweeps_per_job=3)
-    m = DistributedOntoPart(spark, corpus_df, class_word, cfg)
-    m.init_state()
-    with pytest.raises(ValueError, match="fused"):
-        m.sweep(n_fused=2)
-    with pytest.warns(UserWarning, match="sweeps_per_job"):
-        m.run(2)
-    assert m.sweeps_done == 2
-    m.close()
-
-
 def _tiny_problem():
     """Driver-side micro problem for the fused runner: 2 docs, W=4
     words, T=2 topics, C=3 classes, full candidate sets."""
@@ -131,6 +119,18 @@ def _tiny_problem():
     return rb, csr, nct, nwc, t_, c_, w_
 
 
+def _sweep_block(rb, lib, csr, nct, nwc, sweep0, k):
+    """One partition's pass through the shared runner: sweeps
+    sweep0..sweep0+k-1 of the tiny problem with the M6 batch sweep."""
+    t_, c_ = nct.shape
+    step = _onto_step(lib, csr, nct, nwc, t_, c_, nwc.shape[1],
+                      50.0 / t_, 0.01, 0.01, c_)
+    out = list(run_sweeps(iter([rb]), step, 11, sweep0, k, STATE_COLS,
+                          DELTA_COLS))
+    assert len(out) == 1
+    return out[0]
+
+
 @needs_cc
 def test_fused_runner_matches_sequential_unfused():
     """One partition's fused K=3 pass equals 3 sequential unfused arrow
@@ -139,21 +139,12 @@ def test_fused_runner_matches_sequential_unfused():
 
     rb, csr, nct0, nwc0, t_, c_, w_ = _tiny_problem()
     lib = native_kernel.load_native()
-    a, b, z0, seed = 50.0 / t_, 0.01, 0.01, 11
-    max_cls = c_
 
-    fused = list(_onto_fused_arrow_batches(
-        iter([rb]), lib, csr, nct0.copy(), nwc0.copy(), t_, c_, w_,
-        a, b, z0, seed, 0, 3, max_cls,
-    ))
-    assert len(fused) == 1
+    f = _sweep_block(rb, lib, csr, nct0, nwc0, 0, 3)  # fused
 
     cur, nct, nwc = rb, nct0.copy(), nwc0.copy()
     for s in range(3):
-        out = list(_onto_arrow_batches(
-            iter([cur]), lib, csr, nct, nwc, t_, c_, w_,
-            a, b, z0, seed, s, max_cls,
-        ))[0]
+        out = _sweep_block(cur, lib, csr, nct, nwc, s, 1)
         for row in zip(*(out.column(k).to_pylist()
                          for k in ("dw", "dto", "dco", "dtn", "dcn"))):
             for w, to, co, tn, cn in zip(*row):
@@ -166,7 +157,6 @@ def test_fused_runner_matches_sequential_unfused():
              out.column("ts"), out.column("cs")],
             names=["doc_id", "words", "ts", "cs"],
         )
-    f = fused[0]
     assert f.column("ts").to_pylist() == cur.column("ts").to_pylist()
     assert f.column("cs").to_pylist() == cur.column("cs").to_pylist()
     # fused deltas reconstruct the same final counts
@@ -183,16 +173,12 @@ def test_fused_runner_matches_sequential_unfused():
 
 
 @needs_cc
-def test_fused_interpreted_fallback_matches_native():
+@pytest.mark.parametrize("k", [1, 3])
+def test_fused_interpreted_fallback_matches_native(k):
     """lib=None runs the interpreted per-token twin inside the SAME
-    fused runner — identical chain, deltas and state."""
+    runner — identical chain, deltas and state."""
     rb, csr, nct0, nwc0, t_, c_, w_ = _tiny_problem()
-    lib = native_kernel.load_native()
-    a, b, z0, seed = 50.0 / t_, 0.01, 0.01, 11
-    run = lambda L: list(_onto_fused_arrow_batches(  # noqa: E731
-        iter([rb]), L, csr, nct0.copy(), nwc0.copy(), t_, c_, w_,
-        a, b, z0, seed, 0, 3, c_,
-    ))[0]
-    x, y = run(lib), run(None)
+    x = _sweep_block(rb, native_kernel.load_native(), csr, nct0, nwc0, 0, k)
+    y = _sweep_block(rb, None, csr, nct0, nwc0, 0, k)
     for col in ("ts", "cs", "dw", "dto", "dco", "dtn", "dcn"):
         assert x.column(col).to_pylist() == y.column(col).to_pylist(), col

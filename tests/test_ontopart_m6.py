@@ -56,17 +56,16 @@ def _oracle():
     return OntoPartOracle(corpus, cand, cfg)
 
 
-@pytest.mark.parametrize("kernel", ["native", "python"])
-def test_m6_one_partition_bit_parity(spark, m6_inputs, kernel):
-    """Both the runtime-compiled C grid kernel (default; falls back to
-    python where no compiler exists) and the per-token NumPy kernel must
-    be bit-identical to the sequential oracle."""
+def test_m6_one_partition_bit_parity(spark, m6_inputs):
+    """The runtime-compiled C grid kernel (or, where no compiler exists,
+    its interpreted twin) must be bit-identical to the sequential
+    oracle."""
     corpus_df, class_word = m6_inputs
     oracle = _oracle()
     oracle.run(SWEEPS)
 
     cfg = OntoPartConfig(n_topics=T, n_classes=C, n_words=W,
-                         n_partitions=1, kernel=kernel)
+                         n_partitions=1)
     dist = DistributedOntoPart(spark, corpus_df, class_word, cfg)
     dist.run(SWEEPS)
 

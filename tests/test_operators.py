@@ -1,9 +1,7 @@
-"""Unit tests: linking/disambiguation, dedup, similarity, streaming,
-multimodal plumbing."""
+"""Unit tests: linking/disambiguation, dedup, similarity, streaming."""
 
 import numpy as np
 import pyspark.sql.functions as F
-import pytest
 
 from entitysummarization_spark.operators import dedup, linking, similarity
 
@@ -149,28 +147,3 @@ def test_streaming_windowed_counts_match_batch(spark, sf_dir, tmp_path):
         got.sort_values(key, ignore_index=True)[["window_start_s", "event_type", "n"]]
         .equals(expected.sort_values(key, ignore_index=True)[["window_start_s", "event_type", "n"]])
     )
-
-
-def test_multimodal_plumbing(spark):
-    from entitysummarization_spark.operators.multimodal import (
-        extract_media_features,
-        frame_sample_plan,
-        make_media_table,
-    )
-
-    media = make_media_table(spark, n=12)
-    # every kind now has an in-container decoder (stdlib PNG/MP4/WAV), so
-    # mode="real" passes the precondition — but these synthetic payloads
-    # are garbage, and real mode must FAIL on them rather than fall back
-    with pytest.raises(Exception):
-        extract_media_features(media, fake=False).collect()
-    feats = extract_media_features(media, fake=True).toPandas()
-    assert len(feats) == 12
-    assert set(feats.columns) == {"media_id", "kind", "width", "height",
-                                  "n_frames", "checksum", "decoder"}
-    assert (feats["decoder"] == "fake").all()
-    # deterministic: same input → same checksums
-    feats2 = extract_media_features(media, fake=True).toPandas()
-    assert sorted(feats["checksum"]) == sorted(feats2["checksum"])
-    frames = frame_sample_plan(media, every_n=30).toPandas()
-    assert (frames["frame_idx"] >= 0).all()
