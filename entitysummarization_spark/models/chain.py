@@ -1,53 +1,123 @@
-"""One Arrow block runner for the AD-LDA samplers (M1 and M6).
+"""One chain engine for the AD-LDA samplers (M1–M7).
 
-Every sweep of DistributedGibbs (models/gibbs.py) and DistributedOntoPart
-(models/ontopart.py) is one ``mapInArrow`` pass over the doc-partitioned
-token state. This module owns everything about that pass that does not
+DistributedGibbs (M1/M2/M3/M5, models/gibbs.py), DistributedEntLda2 (M4,
+models/entlda2.py), DistributedOntoPart (M6, models/ontopart.py) and
+DistributedLodLda (M7, models/lodlda.py) are one driver loop over
+partitioned token state. ``Chain`` owns every part of it that does not
 depend on the model:
 
-  - parsing a RecordBatch into flat int64 arrays: doc ids, token offsets,
-    words, and one writable array per state column. Arrow list columns
-    already hold a flat values buffer plus offsets, which is exactly the
-    compiled kernels' input layout;
-  - running k sweeps over the partition, each sweep's per-doc RNG seeded
-    by ``oracle.seed_for(base_seed, sweep, doc)`` (vectorized in
-    ``doc_seeds``), so the random numbers never depend on partitioning
-    or fusion;
-  - regrouping each sweep's changed-token columns per doc
-    (``_interleave_doc_delta_cols``) and rewrapping every output as a
-    ListArray.
+  - seeded init: one ``mapInArrow`` pass in which each doc draws its
+    initial state with its RNG seeded by
+    ``oracle.seed_for(base_seed, -1, doc)``;
+  - the exact driver-side counts: the absolute recompute from the state
+    and the delta apply from a sweep's changed-token columns, each ONE
+    explode → groupBy → toPandas job (``count_rows``);
+  - the sweep: broadcast the counts, one ``mapInArrow`` pass through
+    ``run_sweeps``, then ``_commit_sweep``;
+  - the run loop (fused blocks where the model allows them), ``close``
+    and ``z_state``;
+  - the checkpoint / broadcast lifecycle (below).
 
-A model supplies one batch-sweep callable ``step(block, seeds) ->
-(delta_cols, per_doc_counts)``. It owns the partition-local working
-copies of the global counts (the AD-LDA approximation: stale across
-partitions, exact within one) and mutates ``block.state`` in place. Each
-model's callable runs the compiled C kernel when
-``native_kernel.load_native()`` succeeds on that executor, and otherwise
-its interpreted twin. The two are bit-identical, so a cluster that mixes
-both still produces one chain.
+A model declares its ``Layout`` (key, items, pass-through, state and
+delta columns) and supplies hooks: its per-doc init draw, its batch-sweep
+step, the counts it broadcasts, and the ``np.add.at`` lines that apply
+counted rows to its driver store.
 
-With k = 1 the runner streams batch by batch. With k > 1 (a fused block,
-``sweeps_per_job``) it buffers the partition, sweeps it k times with the
-local counts carried from sweep to sweep, and emits every sweep's deltas
-so the driver reconstructs the exact global counts at the block boundary.
-With one partition a fused block is bit-identical to k unfused sweeps.
+The runner. Arrow list columns already hold a flat values buffer plus
+offsets, which is exactly the kernels' input layout, so a batch is
+parsed into flat int64 arrays (``Block``). ``run_sweeps`` runs k sweeps
+over a partition, each doc's RNG seeded by
+``oracle.seed_for(base_seed, sweep, doc)``, so the random numbers never
+depend on partitioning or fusion. A model's step owns partition-local
+working copies of the global counts (the AD-LDA approximation: stale
+across partitions, exact within one). M1 and M6 run their compiled C
+kernel where it loads and otherwise a bit-identical interpreted twin, so
+a cluster mixing both still produces one chain; M4 and M7 run their
+per-doc kernels over the flat slices (``per_doc``). A fused block
+(k > 1, ``sweeps_per_job``) carries the local counts from sweep to sweep
+and emits every sweep's deltas, so the driver reconstructs the exact
+global counts at the block boundary; with one partition it is
+bit-identical to k unfused sweeps.
+
+The lifecycle. Each sweep rewrites the full token state with one map
+pass; without intervention that (a) chains one pass per sweep into an
+O(n)-deep plan, and (b) keeps every sweep's count broadcast referenced
+for task re-serialization, an unbounded leak at the reference's 500 to
+2000 production sweeps. The discipline:
+
+  - checkpoint each new state: that materializes it AND truncates its
+    lineage (O(1) plan; the sweep's broadcast becomes unreferenced);
+  - checkpoint RDDs bypass the CacheManager, so DataFrame.unpersist()
+    is a no-op for them. The persisted RDD handle is read off the
+    checkpointed Dataset's own plan (a LogicalRDD whose ``rdd`` IS the
+    persisted RDD) and released at the RDD level one sweep later
+    (releasing earlier would destroy live blocks: a checkpointed plan
+    cannot recompute). Spark WARNs on every such release; the engine
+    raises only that logger (``MapPartitionsRDD``) to ERROR;
+  - the previous sweep's broadcast is destroy()ed once the next state
+    is materialized (deferred one sweep out of caution), and ``close``
+    destroys the last one.
+
+Fault tolerance: ``localCheckpoint`` (the default) stores blocks on the
+executors that computed them. That is cheap, but on a real cluster one
+executor loss mid-chain makes the in-flight state unrecoverable. Two
+mitigations compose: ``reliable_checkpoint=True`` in a sampler's config
+uses ``Dataset.checkpoint`` against ``setCheckpointDir(...)`` (every
+sweep durable, one distributed-FS write per sweep); or keep the default
+and rely on the every-k-sweeps Parquet checkpoints (plans/checkpoint.py)
+as the durable resume points. The 105-sweep soak in
+test_gibbs_kernels.py asserts flat plan size and flat persisted-block
+count under this discipline.
 """
 
 from __future__ import annotations
 
+import warnings
 from collections.abc import Callable, Iterator
+from functools import partial
 from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+# the logger of the per-sweep "locally checkpointed ... cannot be
+# recomputed after unpersisting" WARN
+LINEAGE_WARN_LOGGER = "org.apache.spark.rdd.MapPartitionsRDD"
+
+
+class Layout(NamedTuple):
+    """A sampler's state columns. ``key`` (long) partitions the state and
+    seeds each doc's RNG; every other column is array<long>: ``items``
+    (the tokens), ``carry`` (per-doc columns a sweep passes through),
+    ``state`` (token-aligned, rewritten by every sweep) and ``deltas``
+    (a sweep's changed-token columns)."""
+
+    key: str
+    items: str
+    state: tuple[str, ...]
+    deltas: tuple[str, ...]
+    carry: tuple[str, ...] = ()
+
+    @property
+    def columns(self) -> tuple[str, ...]:
+        return (self.key, self.items, *self.carry, *self.state)
+
+    def schema(self, deltas: bool = False) -> str:
+        cols = self.columns[1:] + (self.deltas if deltas else ())
+        return ", ".join(
+            [f"{self.key} long"] + [f"{c} array<long>" for c in cols]
+        )
 
 
 class Block(NamedTuple):
     rb: pa.RecordBatch        # the input batch (extra columns stay readable)
-    doc_ids: np.ndarray       # int64[n_docs]
+    keys: np.ndarray          # int64[n_docs] doc (or user) ids
     indptr: np.ndarray        # int64[n_docs+1] token offsets per doc
-    ws: np.ndarray            # int64[n_tok] words
+    ws: np.ndarray            # int64[n_tok] items (words, movies)
     state: list[np.ndarray]   # writable int64[n_tok] per state column
+    carry: list[tuple[np.ndarray, np.ndarray]]  # (offsets, values) each
 
 
 def doc_seeds(base_seed: int, sweep: int, doc_ids: np.ndarray) -> np.ndarray:
@@ -64,16 +134,25 @@ def _flat(col) -> np.ndarray:
     return col.flatten().to_numpy(zero_copy_only=False)
 
 
-def _block(rb: pa.RecordBatch, state_cols: tuple[str, ...]) -> Block:
-    words = rb.column("words")
-    off = words.offsets.to_numpy(zero_copy_only=False)
+def _parts(col) -> tuple[np.ndarray, np.ndarray]:
+    off = col.offsets.to_numpy(zero_copy_only=False)
+    return (
+        (off - off[0]).astype(np.int64),
+        np.ascontiguousarray(_flat(col), dtype=np.int64),
+    )
+
+
+def _block(rb: pa.RecordBatch, layout: Layout, state: bool = True) -> Block:
+    indptr, ws = _parts(rb.column(layout.items))
     return Block(
         rb,
-        rb.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64),
-        (off - off[0]).astype(np.int64),
-        np.ascontiguousarray(_flat(words), dtype=np.int64),
+        rb.column(layout.key).to_numpy(zero_copy_only=False).astype(np.int64),
+        indptr,
+        ws,
         # np.array copies: the kernels mutate the state in place
-        [np.array(_flat(rb.column(c)), dtype=np.int64) for c in state_cols],
+        [np.array(_flat(rb.column(c)), dtype=np.int64)
+         for c in (layout.state if state else ())],
+        [_parts(rb.column(c)) for c in layout.carry],
     )
 
 
@@ -113,16 +192,53 @@ def _list(off: np.ndarray, vals: np.ndarray) -> pa.ListArray:
     return pa.ListArray.from_arrays(pa.array(off), pa.array(vals))
 
 
-def _emit(blk: Block, per_sweep, names: list[str]) -> pa.RecordBatch:
+def _batch(blk: Block, layout: Layout, lists: list, names) -> pa.RecordBatch:
+    """The input's key, items and carry columns, then ``lists``."""
+    rb = blk.rb
+    return pa.RecordBatch.from_arrays(
+        [rb.column(layout.key).cast(pa.int64())]
+        + [rb.column(c) for c in (layout.items, *layout.carry)] + lists,
+        names=list(names),
+    )
+
+
+def _emit(blk: Block, per_sweep, layout: Layout) -> pa.RecordBatch:
     cols, ch_off = _interleave_doc_delta_cols(len(blk.indptr) - 1, per_sweep)
     off32 = blk.indptr.astype(np.int32)
     ch32 = ch_off.astype(np.int32)
-    return pa.RecordBatch.from_arrays(
-        [blk.rb.column("doc_id"), blk.rb.column("words")]
-        + [_list(off32, s) for s in blk.state]
-        + [_list(ch32, c) for c in cols],
-        names=names,
+    return _batch(
+        blk, layout,
+        [_list(off32, s) for s in blk.state] + [_list(ch32, c) for c in cols],
+        layout.columns + layout.deltas,
     )
+
+
+def run_init(
+    batches: Iterator[pa.RecordBatch],
+    draw: Callable,
+    base_seed: int,
+    layout: Layout,
+) -> Iterator[pa.RecordBatch]:
+    """The seeded init pass over one partition: per doc,
+    ``draw(rng, items, out)`` fills the doc's slices ``out`` of the state
+    columns, with ``rng`` seeded by ``seed_for(base_seed, -1, doc)``."""
+    # one RandomState reseeded per doc: rng.seed(n) gives the same state
+    # as RandomState(n) without its ~180 µs construction (67× a reseed)
+    rng = np.random.RandomState(0)
+    for rb in batches:
+        if not rb.num_rows:
+            continue
+        blk = _block(rb, layout, state=False)
+        seeds = doc_seeds(base_seed, -1, blk.keys)
+        state = [np.empty(len(blk.ws), dtype=np.int64) for _ in layout.state]
+        bounds = blk.indptr.tolist()
+        for j in range(len(seeds)):
+            lo, hi = bounds[j], bounds[j + 1]
+            rng.seed(int(seeds[j]))
+            draw(rng, blk.ws[lo:hi], [s[lo:hi] for s in state])
+        off32 = blk.indptr.astype(np.int32)
+        yield _batch(blk, layout, [_list(off32, s) for s in state],
+                     layout.columns)
 
 
 def run_sweeps(
@@ -131,25 +247,308 @@ def run_sweeps(
     base_seed: int,
     sweep0: int,
     k: int,
-    state_cols: tuple[str, ...],
-    delta_cols: tuple[str, ...],
+    layout: Layout,
 ) -> Iterator[pa.RecordBatch]:
     """Sweeps ``sweep0 .. sweep0+k-1`` over one partition's batches.
 
-    Output batches are (doc_id, words, *state_cols, *delta_cols); the
-    input's doc_id and words columns pass through unchanged."""
-    names = ["doc_id", "words", *state_cols, *delta_cols]
+    Output batches are the layout's columns then its delta columns; the
+    input's key, items and carry columns pass through unchanged."""
     if k == 1:
         for rb in batches:
             if rb.num_rows:
-                blk = _block(rb, state_cols)
-                seeds = doc_seeds(base_seed, sweep0, blk.doc_ids)
-                yield _emit(blk, [step(blk, seeds)], names)
+                blk = _block(rb, layout)
+                seeds = doc_seeds(base_seed, sweep0, blk.keys)
+                yield _emit(blk, [step(blk, seeds)], layout)
         return
-    blocks = [_block(rb, state_cols) for rb in batches if rb.num_rows]
+    blocks = [_block(rb, layout) for rb in batches if rb.num_rows]
     per_sweep: list[list] = [[] for _ in blocks]
     for sweep in range(sweep0, sweep0 + k):
         for blk, deltas in zip(blocks, per_sweep):
-            deltas.append(step(blk, doc_seeds(base_seed, sweep, blk.doc_ids)))
+            deltas.append(step(blk, doc_seeds(base_seed, sweep, blk.keys)))
     for blk, deltas in zip(blocks, per_sweep):
-        yield _emit(blk, deltas, names)
+        yield _emit(blk, deltas, layout)
+
+
+def per_doc(sweep_doc: Callable, n_cols: int):
+    """A batch step from a per-doc kernel: ``sweep_doc(blk, j, lo, hi,
+    rng)`` sweeps doc j (tokens lo:hi of the flat arrays) with ``rng``
+    already seeded and returns its ``n_cols`` changed-token lists."""
+    rng = np.random.RandomState(0)
+
+    def step(blk: Block, seeds: np.ndarray):
+        ch: tuple[list, ...] = tuple([] for _ in range(n_cols))
+        counts = np.zeros(len(seeds), dtype=np.int64)
+        bounds = blk.indptr.tolist()
+        for j in range(len(seeds)):
+            rng.seed(int(seeds[j]))
+            doc_ch = sweep_doc(blk, j, bounds[j], bounds[j + 1], rng)
+            for col, vals in zip(ch, doc_ch):
+                col.extend(vals)
+            counts[j] = len(doc_ch[0])
+        return tuple(np.asarray(c, dtype=np.int64) for c in ch), counts
+
+    return step
+
+
+def count_rows(df: DataFrame, cols: tuple[str, ...]) -> list[np.ndarray]:
+    """One job: explode the token-aligned array columns ``cols`` of
+    ``df`` together and count each distinct row. Returns one int64 array
+    per column, then the counts."""
+    pdf = (
+        df.select(F.explode(F.arrays_zip(*cols)).alias("x"))
+        .groupBy(*[F.col(f"x.{c}").alias(c) for c in cols])
+        .count()
+        .toPandas()
+    )
+    return [pdf[c].to_numpy(np.int64) for c in (*cols, "count")]
+
+
+def quiet_lineage_warn(spark: SparkSession) -> None:
+    """Raise only the per-sweep lineage WARN's logger to ERROR."""
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        LINEAGE_WARN_LOGGER, jvm.org.apache.logging.log4j.Level.ERROR
+    )
+
+
+class Chain:
+    """The model-independent driver loop. A model passes its ``Layout``
+    and implements:
+
+      - ``_source()``: the init input, the layout's key, items and carry
+        columns;
+      - ``_init_draw()`` → (payload, draw): ``draw(payload, rng, items,
+        out)`` fills one doc's state slices ``out``; ``payload`` is
+        broadcast for it;
+      - ``_sweeper()`` → (payload, make): ``make(payload)`` builds the
+        batch step on an executor from this sweep's broadcast payload;
+      - ``_reset_counts()``; ``_add_counts(cols, n)`` adds ``n`` at each
+        counted (items, *state) row; ``_add_deltas(cols, n)`` applies
+        ``n`` moves per counted row of the delta columns.
+    """
+
+    def __init__(self, spark: SparkSession, cfg, layout: Layout):
+        self.spark = spark
+        self.cfg = cfg
+        self.layout = layout
+        self.state: DataFrame | None = None
+        self.sweeps_done = 0
+        self._const_bc = None  # a sweep-constant broadcast, if any
+        self._state_handles: list = []
+        self._pending_release: list = []
+        self._bc_prev = None
+        quiet_lineage_warn(spark)
+
+    # ---- optional model hooks ----
+    def _can_fuse(self) -> bool:
+        return hasattr(self.cfg, "sweeps_per_job")
+
+    def _sweep_source(self, base: DataFrame) -> DataFrame:
+        return base
+
+    def _schedule(self, itr: int, before: bool) -> None:
+        """Driver-side work around sweep ``itr`` (M4's burn-in)."""
+
+    def _z_record(self, arrs: list[np.ndarray]):
+        return tuple(arrs)
+
+    # ---- init / counts ----
+    def init_state(self) -> None:
+        cfg, layout = self.cfg, self.layout
+        payload, draw = self._init_draw()
+        bc = self.spark.sparkContext.broadcast(payload)
+        seed = cfg.base_seed
+
+        def init_fn(batches):
+            yield from run_init(batches, partial(draw, bc.value), seed, layout)
+
+        # localCheckpoint (eager) both materializes the state AND truncates
+        # its lineage, so the init broadcast is immediately destroyable
+        self.state = self._local_checkpoint(
+            self._source().repartition(cfg.n_partitions, layout.key)
+            .sortWithinPartitions(layout.key)
+            .mapInArrow(init_fn, layout.schema()),
+            reliable=cfg.reliable_checkpoint,
+        )
+        self._refresh_global_counts()
+        self._destroy_broadcast_now(bc)
+        self.sweeps_done = 0
+
+    def _refresh_global_counts(self) -> None:
+        """Absolute recompute from the state: the init / restore path and
+        the arbiter of the delta apply."""
+        self._reset_counts()
+        *cols, n = count_rows(
+            self.state, (self.layout.items, *self.layout.state)
+        )
+        self._add_counts(cols, n)
+
+    def _apply_count_deltas(self) -> None:
+        """Refresh the counts from the sweep's changed tokens only.
+
+        Exact by induction on integer arithmetic: every partition's local
+        updates are (−1 at the old assignment, +1 at the new) per changed
+        token, and summing those over all partitions on top of exact
+        previous counts gives exactly what a full recompute from the new
+        state gives (the parity tests compare against the oracles). It
+        aggregates only tokens whose assignment changed, which collapses
+        as the chain converges."""
+        *cols, n = count_rows(self.state, self.layout.deltas)
+        self._add_deltas(cols, n)
+
+    # ---- sweep / run ----
+    def sweep(self, n_fused: int = 1) -> None:
+        """One sweep, or a fused block of ``n_fused`` sweeps, as one job."""
+        if n_fused > 1 and not self._can_fuse():
+            raise ValueError(
+                "fused sweeps need a fusable chain: M1 requires "
+                "kernel='native' and no doc_sr (M3 re-derives neighbor "
+                "payloads between sweeps); M4 and M7 sweep one per job"
+            )
+        layout, seed, sweep0 = self.layout, self.cfg.base_seed, self.sweeps_done
+        payload, make = self._sweeper()
+        bc = self.spark.sparkContext.broadcast(payload)
+
+        def sweep_fn(batches):
+            yield from run_sweeps(batches, make(bc.value), seed, sweep0,
+                                  n_fused, layout)
+
+        old = self.state
+        # project away a previous sweep's delta columns (their aggregation
+        # already happened) so they neither ride through Arrow nor grow the
+        # checkpoint; partitioning by key is already established and
+        # mapInArrow preserves it
+        swept = (
+            self._sweep_source(old.select(*layout.columns))
+            .sortWithinPartitions(layout.key)
+            .mapInArrow(sweep_fn, layout.schema(deltas=True))
+        )
+        self._commit_sweep(old, swept, bc, n_fused)
+
+    def run(self, n_sweeps: int) -> None:
+        if self.state is None:
+            self.init_state()
+        k = max(1, int(getattr(self.cfg, "sweeps_per_job", 1)))
+        if k > 1 and not self._can_fuse():
+            warnings.warn(
+                "sweeps_per_job>1 applies only to the native non-M3 "
+                "path; sweeping one per job", stacklevel=2,
+            )
+            k = 1
+        done = 0
+        while done < n_sweeps:
+            step, itr = min(k, n_sweeps - done), self.sweeps_done
+            self._schedule(itr, before=True)
+            self.sweep(n_fused=step)
+            self._schedule(itr, before=False)
+            done += step
+
+    def close(self) -> None:
+        """Destroy the sampler's long-lived broadcasts: the sweep-constant
+        one, if any, and the last sweep's."""
+        if self._const_bc is not None:
+            self._destroy_broadcast_now(self._const_bc)
+            self._const_bc = None
+        self._retire_broadcast(None)
+
+    def z_state(self) -> dict:
+        """key → the record's state arrays (oracle-comparable, tests)."""
+        key, cols = self.layout.key, self.layout.state
+        pdf = self.state.select(key, *cols).toPandas()
+        return {
+            int(k): self._z_record([np.asarray(v, dtype=np.int64) for v in vs])
+            for k, *vs in zip(pdf[key], *(pdf[c] for c in cols))
+        }
+
+    # ---- checkpoint / broadcast lifecycle ----
+    @staticmethod
+    def _checkpointed_rdd_handle(df: DataFrame):
+        """The persisted RDD behind a just-checkpointed Dataset: its
+        analyzed plan is a LogicalRDD wrapping exactly the RDD that
+        ``checkpoint``/``localCheckpoint`` persisted. Reading it off the
+        Dataset itself (rather than diffing getPersistentRDDs before/
+        after) cannot capture RDDs persisted concurrently by other jobs
+        on the same session."""
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() != "LogicalRDD":
+            return None
+        return plan.rdd()
+
+    def _local_checkpoint(
+        self, df: DataFrame, reliable: bool = False, eager: bool = True
+    ) -> DataFrame:
+        """``eager=False`` (local path only) defers materialization to the
+        caller's next action — the sweep uses this to fuse checkpoint
+        materialization into the delta-count aggregation, one job per
+        sweep instead of two. localCheckpoint persists its blocks during
+        whichever job first computes the RDD and truncates lineage at
+        that job's end, so the steady state is identical; the caller MUST
+        run an action over the returned state before releasing the
+        previous one. Reliable checkpoints stay eager: a non-eager
+        ``Dataset.checkpoint`` recomputes the RDD a second time to write
+        it unless it is already persisted."""
+        if reliable:
+            out = df.checkpoint(eager=True)  # needs setCheckpointDir
+        else:
+            out = df.localCheckpoint(eager=eager)
+        handle = self._checkpointed_rdd_handle(out)
+        self._pending_release = self._state_handles
+        self._state_handles = [handle] if handle is not None else []
+        return out
+
+    def _commit_sweep(self, old: DataFrame, swept: DataFrame, bc,
+                      n_sweeps: int = 1) -> None:
+        """The end of a sweep: checkpoint ``swept`` lazily, let the delta
+        aggregation be the action that materializes it (one job per sweep
+        instead of checkpoint-then-aggregate), then release the old state
+        — only now, since the sweep read its blocks — and retire the
+        previous sweep's broadcast (``bc`` is destroyed one sweep later,
+        out of caution)."""
+        self.state = self._local_checkpoint(
+            swept, reliable=self.cfg.reliable_checkpoint, eager=False,
+        )
+        self.sweeps_done += n_sweeps
+        self._apply_count_deltas()
+        self._finalize_lazy_checkpoint()
+        self._release_old_state(old)
+        self._retire_broadcast(bc)
+
+    def _finalize_lazy_checkpoint(self) -> None:
+        """Force lineage truncation of the current (lazily-checkpointed)
+        state. Needed because AQE materializes shuffle map stages via
+        ``submitMapStage``, which — unlike ``runJob`` — never calls
+        ``rdd.doCheckpoint()``; when the caller's materializing action
+        short-circuits after the map stage (e.g. an empty delta
+        aggregation), the state's blocks are cached but its lineage still
+        chains every previous sweep (and keeps their broadcasts
+        referenced — INTERNAL_ERROR_BROADCAST two sweeps later).
+        ``RDD.doCheckpoint`` is idempotent and, with all partitions
+        already cached by the map stage, truncates without launching a
+        job (LocalRDDCheckpointData computes only MISSING partitions).
+        private[spark] in Scala compiles to a public method, so py4j can
+        call it."""
+        for h in self._state_handles:
+            h.doCheckpoint()
+
+    def _release_old_state(self, old: DataFrame) -> None:
+        old.unpersist()  # covers a plain-persisted state (restore path)
+        for h in self._pending_release:
+            try:
+                h.unpersist(False)
+            except Exception:  # noqa: BLE001 — already released is fine
+                pass
+        self._pending_release = []
+
+    def _retire_broadcast(self, bc) -> None:
+        """Destroy the PREVIOUS sweep's broadcast and remember ``bc`` as
+        the one to destroy next sweep."""
+        if self._bc_prev is not None:
+            self._destroy_broadcast_now(self._bc_prev)
+        self._bc_prev = bc
+
+    @staticmethod
+    def _destroy_broadcast_now(bc) -> None:
+        try:
+            bc.destroy()
+        except Exception:  # noqa: BLE001 — already cleaned is fine
+            pass

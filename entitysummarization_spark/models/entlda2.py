@@ -48,50 +48,45 @@ is that Nwte is SPARSE with at most one nonzero per distinct
 so we carry it as {word: {(e, t): count}} and the model costs O(N), not
 O(E·T·W). That is what un-descopes M4.
 
-Distribution is the same AD-LDA scheme as models/gibbs.py: token state
-partitioned by doc_id (doc-local Ned row exact — only the doc's own
-tokens contribute to it), global Nte/Ne/sparse-Nwte + the E×T α matrix
-broadcast per sweep and updated partition-locally (stale across
-partitions within a sweep), then refreshed exactly from the sweep's
-changed tokens (integer-delta induction, arbitrated by the absolute
-recompute). θ/α/SR smoothing are driver-side E×T NumPy shared verbatim
-with the oracle. RNG is seeded per (base_seed, sweep, doc) with a fixed
-draw order (init: one randint(T) then one randint(E) per token; sweep:
-one rand per token of candidate-bearing docs), so a 1-partition run is
-bit-identical to the sequential oracle below.
+Distribution is the AD-LDA scheme of every sampler here, on the shared
+engine (models/chain.py): token state partitioned by doc_id (doc-local
+Ned row exact), global Nte/Ne/sparse-Nwte + the E×T α matrix broadcast
+per sweep and updated partition-locally (stale across partitions within
+a sweep), then refreshed exactly from the sweep's changed tokens. θ/α/SR
+smoothing are driver-side E×T NumPy shared verbatim with the oracle and
+run around each sweep (``_schedule``). RNG is seeded per
+(base_seed, sweep, doc) with a fixed draw order (init: one randint(T)
+then one randint(E) per token; sweep: one rand per token of
+candidate-bearing docs), so a 1-partition run is bit-identical to the
+sequential oracle below.
 
 Scale: token state never leaves its partition; what crosses the cluster
 per sweep is Nte (E×T, T small) + sparse Nwte (nnz ≤ N distinct
 assignment triples, in practice ≪ N after mixing) + α (E×T). The
-per-doc candidate list rides IN the state DataFrame (no driver dict of
-all docs). Driver-side θ/α is E×T dense — entities × topics, the same
-footprint the reference's posterior export already commits to.
+per-doc candidate list rides IN the state as a pass-through column (no
+driver dict of all docs). Driver-side θ/α is E×T dense — entities ×
+topics, the same footprint the reference's posterior export already
+commits to.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from dataclasses import dataclass
+from functools import partial
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .chain import Chain, Layout, per_doc
 from .gibbs import tokens_from_corpus
-from .oracle import doc_token_words, reseed, rng_for
-from .state_lifecycle import CheckpointedStateLifecycle
+from .oracle import doc_token_words, rng_for
 
-STATE_SCHEMA = (
-    "doc_id long, words array<long>, es array<long>, zs array<long>,"
-    " cands array<long>"
-)
-# a sweep additionally emits the tokens whose (entity, topic) assignment
-# CHANGED so the count refresh aggregates deltas over changed tokens only
-SWEEP_SCHEMA = STATE_SCHEMA + (
-    ", dw array<long>, deo array<long>, dto array<long>,"
-    " den array<long>, dtn array<long>"
-)
+# each doc carries its candidate entities through every sweep; a sweep
+# additionally emits the tokens whose (entity, topic) assignment CHANGED
+# so the count refresh aggregates deltas over changed tokens only
+LAYOUT = Layout("doc_id", "words", ("es", "zs"),
+                ("dw", "deo", "dto", "den", "dtn"), carry=("cands",))
 
 # sparse Nwte: word -> {(entity, topic): count}; nnz <= corpus tokens
 SparseNwte = dict[int, dict[tuple[int, int], int]]
@@ -110,7 +105,7 @@ class EntLda2Config:
     burn_in: int = 2              # burnIn (:34 — 200 of 500 there)
     base_seed: int = 7
     n_partitions: int = 8
-    # durable per-sweep checkpointing — see models/state_lifecycle.py
+    # durable per-sweep checkpointing — see models/chain.py
     reliable_checkpoint: bool = False
 
     @property
@@ -313,6 +308,22 @@ def _compute_phi(
     return phi
 
 
+def _schedule(m, itr: int, before: bool) -> None:
+    """The reference's burn-in schedule around sweep ``itr`` (:116-134),
+    shared by the oracle and the distributed chain ``m``: θ and α once
+    just before burn-in ends, then θ, its SR optimization and α after
+    every post-burn-in sweep."""
+    cfg = m.cfg
+    fire = itr + 1 == cfg.burn_in if before else itr + 1 >= cfg.burn_in
+    if not fire:
+        return
+    m.theta = _compute_theta(m.nte, m.ne, m.alpha_mat, m.sum_alpha)
+    if not before:
+        _optimize_theta(m.theta, m.ent_nbrs, m.ent_srs, cfg.gamma)
+    _compute_alpha(m.theta, m.ent_nbrs, m.alpha_mat, m.sum_alpha,
+                   cfg.alpha, cfg.epsilon)
+
+
 def _init_alpha(cfg: EntLda2Config) -> tuple[np.ndarray, np.ndarray]:
     """alphaMat = ALPHA everywhere, sumAlpha = T·ALPHA (:719-720)."""
     alpha_mat = np.full((cfg.n_entities, cfg.n_topics), cfg.alpha)
@@ -386,30 +397,12 @@ class EntLda2Oracle:
             )
 
     def run(self, n_sweeps: int) -> None:
-        cfg = self.cfg
         for _ in range(n_sweeps):
             itr = self.sweeps_done
-            if itr + 1 == cfg.burn_in:
-                self.theta = _compute_theta(
-                    self.nte, self.ne, self.alpha_mat, self.sum_alpha
-                )
-                _compute_alpha(
-                    self.theta, self.ent_nbrs, self.alpha_mat,
-                    self.sum_alpha, cfg.alpha, cfg.epsilon,
-                )
+            _schedule(self, itr, before=True)
             self.sweep(itr)
             self.sweeps_done += 1
-            if itr + 1 >= cfg.burn_in:
-                self.theta = _compute_theta(
-                    self.nte, self.ne, self.alpha_mat, self.sum_alpha
-                )
-                _optimize_theta(
-                    self.theta, self.ent_nbrs, self.ent_srs, cfg.gamma
-                )
-                _compute_alpha(
-                    self.theta, self.ent_nbrs, self.alpha_mat,
-                    self.sum_alpha, cfg.alpha, cfg.epsilon,
-                )
+            _schedule(self, itr, before=False)
 
     def phi(self) -> np.ndarray:
         return _compute_phi(self.nte, self.nwte, self.cfg.beta,
@@ -462,19 +455,47 @@ def _nbrs_from_df(doc_ent: DataFrame, E: int) -> tuple[list, list]:
         .agg(F.max("sr").alias("sr"))
         .toPandas()
     )
-    tmp: dict[int, list[tuple[int, float]]] = {}
-    for e, r, s in zip(pdf["ent_id"], pdf["rel_ent_id"], pdf["sr"]):
-        tmp.setdefault(int(e), []).append((int(r), float(s)))
-    ent_nbrs, ent_srs = [], []
-    for e in range(E):
-        pairs = sorted(tmp.get(e, ()))
-        ent_nbrs.append(np.asarray([p[0] for p in pairs], dtype=np.int64))
-        ent_srs.append(np.asarray([p[1] for p in pairs]))
-    return ent_nbrs, ent_srs
+    return nbrs_from_rows(
+        [(0, e, r, s) for e, r, s in
+         zip(pdf["ent_id"], pdf["rel_ent_id"], pdf["sr"])],
+        E,
+    )
 
 
-class DistributedEntLda2(CheckpointedStateLifecycle):
-    """Driver-side sweep loop, AD-LDA over DataFrame token state.
+def _m4_init(payload, rng, ws, out):
+    """Seeded init draw of one doc: z ~ U(T) then e ~ U(E) for EVERY
+    token, candidate-less docs included (:617-635)."""
+    T, E = payload
+    es, zs = out
+    for i in range(len(ws)):
+        zs[i] = rng.randint(T)
+        es[i] = rng.randint(E)
+
+
+def _m4_step(counts, tau, beta, E, W):
+    """The M4 batch-sweep callable for ``chain.run_sweeps``: _sweep_doc
+    per doc over the flat slices, against partition-local working copies
+    of the broadcast counts (AD-LDA)."""
+    nte0, ne0, nwte0, alpha_mat, sum_alpha = counts
+    nte, ne = nte0.copy(), ne0.copy()
+    nwte = {w: dict(sub) for w, sub in nwte0.items()}
+
+    def sweep_doc(blk, j, lo, hi, rng):
+        c_off, c_vals = blk.carry[0]
+        cands = c_vals[c_off[j]:c_off[j + 1]]
+        if len(cands) == 0:
+            return [], [], [], [], []      # :126 — skipped forever
+        es, zs = blk.state
+        return _sweep_doc(
+            rng, blk.ws[lo:hi], es[lo:hi], zs[lo:hi], cands, nte, ne, nwte,
+            alpha_mat, sum_alpha, tau, beta, E, W,
+        )
+
+    return per_doc(sweep_doc, 5)
+
+
+class DistributedEntLda2(Chain):
+    """The M4 chain on the shared engine (models/chain.py).
 
         m = DistributedEntLda2(spark, corpus_df, doc_ent_df, cfg)
         m.run(n_sweeps)
@@ -488,213 +509,73 @@ class DistributedEntLda2(CheckpointedStateLifecycle):
         doc_ent: DataFrame,       # doc_id, ent_id, rel_ent_id, sr
         cfg: EntLda2Config,
     ):
-        self.spark = spark
-        self.cfg = cfg
+        super().__init__(spark, cfg, LAYOUT)
         self.corpus = corpus
         self.doc_ent = doc_ent
         self.ent_nbrs, self.ent_srs = _nbrs_from_df(doc_ent, cfg.n_entities)
-        self.state: DataFrame | None = None
         self.nte: np.ndarray | None = None
         self.ne: np.ndarray | None = None
         self.nwte: SparseNwte | None = None
         self.alpha_mat, self.sum_alpha = _init_alpha(cfg)
         self.theta = np.zeros((cfg.n_entities, cfg.n_topics))
-        self.sweeps_done = 0
-        self._init_state_lifecycle()  # checkpoint/broadcast discipline
 
-    def init_state(self) -> None:
-        cfg = self.cfg
-        toks = tokens_from_corpus(self.corpus)
+    # ---- engine hooks ----
+    def _source(self) -> DataFrame:
+        """Tokens plus each doc's ascending candidate entities (empty for
+        a candidate-less doc)."""
         cands = self.doc_ent.groupBy("doc_id").agg(
-            F.sort_array(F.collect_set("ent_id")).alias("cands")
+            F.sort_array(F.collect_set(F.col("ent_id").cast("long")))
+            .alias("cands")
         )
-        base = toks.join(cands, "doc_id", "left").select(
+        return tokens_from_corpus(self.corpus).join(
+            cands, "doc_id", "left"
+        ).select(
             "doc_id", "words",
             F.coalesce(
                 F.col("cands"), F.array().cast("array<long>")
             ).alias("cands"),
         )
-        T, E, seed = cfg.n_topics, cfg.n_entities, cfg.base_seed
 
-        def init_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            rng0 = np.random.RandomState(0)
-            for b in batches:
-                es_col, zs_col = [], []
-                for d, ws in zip(b["doc_id"], b["words"]):
-                    rng = reseed(rng0, seed, -1, int(d))
-                    n = len(ws)
-                    z_arr = np.empty(n, dtype=np.int64)
-                    e_arr = np.empty(n, dtype=np.int64)
-                    for i in range(n):
-                        z_arr[i] = rng.randint(T)
-                        e_arr[i] = rng.randint(E)
-                    es_col.append(e_arr)
-                    zs_col.append(z_arr)
-                yield pd.DataFrame(
-                    {"doc_id": b["doc_id"], "words": b["words"],
-                     "es": es_col, "zs": zs_col, "cands": b["cands"]}
-                )
-
-        self.state = self._local_checkpoint(
-            base.repartition(cfg.n_partitions, "doc_id")
-            .sortWithinPartitions("doc_id")
-            .mapInPandas(init_fn, STATE_SCHEMA),
-            reliable=cfg.reliable_checkpoint,
-        )
-        self._refresh_global_counts()
+    def _init_draw(self):
+        cfg = self.cfg
+        # the θ/α schedule restarts with the chain
         self.alpha_mat, self.sum_alpha = _init_alpha(cfg)
         self.theta = np.zeros((cfg.n_entities, cfg.n_topics))
-        self.sweeps_done = 0
+        return (cfg.n_topics, cfg.n_entities), _m4_init
 
-    def _refresh_global_counts(self) -> None:
-        """Absolute recompute — the init path and the delta arbiter."""
+    def _reset_counts(self) -> None:
         cfg = self.cfg
-        etw = (
-            self.state.select(
-                F.explode(F.arrays_zip("es", "zs", "words")).alias("x")
-            )
-            .groupBy(
-                F.col("x.es").alias("e"),
-                F.col("x.zs").alias("t"),
-                F.col("x.words").alias("w"),
-            )
-            .count()
-            .toPandas()
-        )
-        nte = np.zeros((cfg.n_entities, cfg.n_topics), dtype=np.int64)
-        e_a = etw["e"].to_numpy(np.int64)
-        t_a = etw["t"].to_numpy(np.int64)
-        w_a = etw["w"].to_numpy(np.int64)
-        n_a = etw["count"].to_numpy(np.int64)
-        np.add.at(nte, (e_a, t_a), n_a)
-        nwte: SparseNwte = {}
-        for e, t, w, n in zip(e_a, t_a, w_a, n_a):
-            nwte.setdefault(int(w), {})[(int(e), int(t))] = int(n)
-        self.nte, self.ne, self.nwte = nte, nte.sum(axis=1), nwte
+        self.nte = np.zeros((cfg.n_entities, cfg.n_topics), dtype=np.int64)
+        self.ne = np.zeros(cfg.n_entities, dtype=np.int64)
+        self.nwte = {}
 
-    def _apply_count_deltas(self) -> None:
-        """Refresh Nte/Ne/Nwte from the sweep's changed tokens only —
-        exact by integer-delta induction (same scheme as
-        gibbs._apply_count_deltas; the parity tests arbitrate vs the
-        absolute recompute)."""
-        deltas = (
-            self.state.select(
-                F.explode(
-                    F.arrays_zip("dw", "deo", "dto", "den", "dtn")
-                ).alias("x")
-            )
-            .groupBy(
-                F.col("x.dw").alias("w"),
-                F.col("x.deo").alias("eo"),
-                F.col("x.dto").alias("to"),
-                F.col("x.den").alias("en"),
-                F.col("x.dtn").alias("tn"),
-            )
-            .count()
-            .toPandas()
-        )
-        if not len(deltas):
-            return
-        w = deltas["w"].to_numpy(np.int64)
-        eo = deltas["eo"].to_numpy(np.int64)
-        to = deltas["to"].to_numpy(np.int64)
-        en = deltas["en"].to_numpy(np.int64)
-        tn = deltas["tn"].to_numpy(np.int64)
-        n = deltas["count"].to_numpy(np.int64)
-        np.add.at(self.nte, (eo, to), -n)
-        np.add.at(self.nte, (en, tn), n)
-        np.add.at(self.ne, eo, -n)
-        np.add.at(self.ne, en, n)
-        for wi, eoi, toi, eni, tni, ni in zip(w, eo, to, en, tn, n):
-            sub = self.nwte.setdefault(int(wi), {})
-            ko, kn = (int(eoi), int(toi)), (int(eni), int(tni))
-            c = sub.get(ko, 0) - int(ni)
+    def _add_counts(self, cols, n) -> None:
+        w, e, t = cols
+        np.add.at(self.nte, (e, t), n)
+        np.add.at(self.ne, e, n)
+        for wi, key, ni in zip(w.tolist(), zip(e.tolist(), t.tolist()),
+                               n.tolist()):
+            sub = self.nwte.setdefault(wi, {})
+            c = sub.get(key, 0) + ni
             if c:
-                sub[ko] = c
+                sub[key] = c
             else:
-                sub.pop(ko, None)
-            sub[kn] = sub.get(kn, 0) + int(ni)
+                sub.pop(key, None)
 
-    def sweep(self) -> None:
+    def _add_deltas(self, cols, n) -> None:
+        w, eo, to, en, tn = cols
+        self._add_counts([w, eo, to], -n)
+        self._add_counts([w, en, tn], n)
+
+    def _sweeper(self):
         cfg = self.cfg
-        sweep_idx = self.sweeps_done
-        bc = self.spark.sparkContext.broadcast(
-            (self.nte, self.ne, self.nwte, self.alpha_mat, self.sum_alpha)
-        )
-        E, W = cfg.n_entities, cfg.n_words
-        tau, beta, seed = cfg.tau_eff, cfg.beta, cfg.base_seed
+        payload = (self.nte, self.ne, self.nwte, self.alpha_mat,
+                   self.sum_alpha)
+        return payload, partial(_m4_step, tau=cfg.tau_eff, beta=cfg.beta,
+                                E=cfg.n_entities, W=cfg.n_words)
 
-        def sweep_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            nte0, ne0, nwte0, alpha_mat, sum_alpha = bc.value
-            nte = nte0.copy()     # partition-local working copies (AD-LDA)
-            ne = ne0.copy()
-            nwte = {w: dict(sub) for w, sub in nwte0.items()}
-            rng0 = np.random.RandomState(0)
-            for batch in batches:
-                es_col, zs_col = [], []
-                dcols: tuple[list, ...] = ([], [], [], [], [])
-                for d, ws, es, zs, cands in zip(
-                    batch["doc_id"], batch["words"], batch["es"],
-                    batch["zs"], batch["cands"],
-                ):
-                    ws = np.asarray(ws, dtype=np.int64)
-                    es = np.asarray(es, dtype=np.int64).copy()
-                    zs = np.asarray(zs, dtype=np.int64).copy()
-                    cands = np.asarray(cands, dtype=np.int64)
-                    if len(cands) == 0:
-                        ch: tuple[list[int], ...] = ([], [], [], [], [])
-                    else:
-                        rng = reseed(rng0, seed, sweep_idx, int(d))
-                        ch = _sweep_doc(
-                            rng, ws, es, zs, cands, nte, ne, nwte,
-                            alpha_mat, sum_alpha, tau, beta, E, W,
-                        )
-                    es_col.append(es)
-                    zs_col.append(zs)
-                    for col, vals in zip(dcols, ch):
-                        col.append(np.asarray(vals, dtype=np.int64))
-                yield pd.DataFrame(
-                    {"doc_id": batch["doc_id"], "words": batch["words"],
-                     "es": es_col, "zs": zs_col, "cands": batch["cands"],
-                     "dw": dcols[0], "deo": dcols[1], "dto": dcols[2],
-                     "den": dcols[3], "dtn": dcols[4]}
-                )
-
-        old = self.state
-        swept = (
-            old.select("doc_id", "words", "es", "zs", "cands")
-            .sortWithinPartitions("doc_id")
-            .mapInPandas(sweep_fn, SWEEP_SCHEMA)
-        )
-        self._commit_sweep(old, swept, bc)
-
-    def run(self, n_sweeps: int) -> None:
-        """n_sweeps iterations of the reference schedule (:116-134)."""
-        cfg = self.cfg
-        if self.state is None:
-            self.init_state()
-        for _ in range(n_sweeps):
-            itr = self.sweeps_done
-            if itr + 1 == cfg.burn_in:
-                self.theta = _compute_theta(
-                    self.nte, self.ne, self.alpha_mat, self.sum_alpha
-                )
-                _compute_alpha(
-                    self.theta, self.ent_nbrs, self.alpha_mat,
-                    self.sum_alpha, cfg.alpha, cfg.epsilon,
-                )
-            self.sweep()
-            if itr + 1 >= cfg.burn_in:
-                self.theta = _compute_theta(
-                    self.nte, self.ne, self.alpha_mat, self.sum_alpha
-                )
-                _optimize_theta(
-                    self.theta, self.ent_nbrs, self.ent_srs, cfg.gamma
-                )
-                _compute_alpha(
-                    self.theta, self.ent_nbrs, self.alpha_mat,
-                    self.sum_alpha, cfg.alpha, cfg.epsilon,
-                )
+    def _schedule(self, itr: int, before: bool) -> None:
+        _schedule(self, itr, before)
 
     # ---- posteriors ----
     def theta_matrix(self) -> np.ndarray:
@@ -741,11 +622,3 @@ class DistributedEntLda2(CheckpointedStateLifecycle):
         return float(
             np.round(cfg.tau_eff / (nd + cfg.n_entities * cfg.tau_eff), 4)
         )
-
-    def z_state(self) -> dict[int, tuple[np.ndarray, np.ndarray]]:
-        pdf = self.state.select("doc_id", "es", "zs").toPandas()
-        return {
-            int(d): (np.asarray(e, dtype=np.int64),
-                     np.asarray(z, dtype=np.int64))
-            for d, e, z in zip(pdf["doc_id"], pdf["es"], pdf["zs"])
-        }

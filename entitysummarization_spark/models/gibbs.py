@@ -17,14 +17,12 @@ matrices. Distributed, that becomes the AD-LDA scheme (Newman et al. 2009,
     oracle (models/oracle.py) and any-partition runs are reproducible.
 
 Scale: only P×W counts ever reach the driver (bounded by the F10
-vocabulary prune); token state is never collected. Per sweep: one
-mapInArrow pass through the shared block runner (models/chain.py; no
-shuffle — partitioning by doc_id is established once and reused) + one
-aggregation of the changed tokens to refresh global counts. Each sweep's
-state is localCheckpoint-ed (lineage truncation: O(1) plan size and the
-per-sweep count broadcast becomes destroyable — at 1000 sweeps an
-undestroyed broadcast per sweep is an unbounded leak; the soak test in
-test_gibbs_kernels.py runs 100+ sweeps asserting both stay flat).
+vocabulary prune); token state is never collected. The chain runs on the
+shared engine (models/chain.py), which owns init, the count refresh, the
+sweep job, the run loop and the checkpoint/broadcast lifecycle: per
+sweep one mapInArrow pass (no shuffle — partitioning by doc_id is
+established once) plus one aggregation of the changed tokens. This
+module supplies the M1 layout, init draw, kernels and count store.
 Checkpoint/resume per north_rule: plans/checkpoint.py.
 
 Kernels: GibbsConfig.kernel is "native" (default) or "reference". Native
@@ -50,7 +48,6 @@ from __future__ import annotations
 
 import warnings
 from bisect import bisect_right
-from collections.abc import Iterator
 from dataclasses import dataclass
 
 import numpy as np
@@ -59,19 +56,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import native_kernel
-from .chain import run_sweeps
-from .oracle import alpha_from_neighbors, reseed
-from .state_lifecycle import CheckpointedStateLifecycle
+from .chain import Chain, Layout, per_doc
+from .oracle import alpha_from_neighbors
 
-STATE_SCHEMA = "doc_id long, words array<long>, zs array<long>"
-# a sweep additionally emits the tokens whose topic CHANGED (word, old
-# pred, new pred) so the global-count refresh can aggregate deltas over
-# changed tokens only instead of shuffling every token every sweep
-SWEEP_SCHEMA = (
-    STATE_SCHEMA + ", dw array<long>, dp_old array<long>, dp_new array<long>"
-)
-STATE_COLS = ("zs",)
-DELTA_COLS = ("dw", "dp_old", "dp_new")
+# one row per doc; a sweep additionally emits the tokens whose predicate
+# CHANGED (word, old pred, new pred) so the count refresh aggregates
+# deltas over changed tokens only
+LAYOUT = Layout("doc_id", "words", ("zs",), ("dw", "dp_old", "dp_new"))
 
 
 def _sweep_doc_reference(
@@ -226,7 +217,7 @@ def _m3_alpha_rows(nbr_col, P: int, alpha: float, eps: float):
 def _m3_alphas(blk, P: int, alpha: float, eps: float):
     """Per-doc α matrix and sums for one batch (M3), read from its
     joined ``nbrs`` column. α is frozen within a sweep."""
-    n = len(blk.doc_ids)
+    n = len(blk.keys)
     av_mat = np.empty((n, P), dtype=np.float64)
     a_sums = np.empty(n, dtype=np.float64)
     nbr_col = blk.rb.column("nbrs").to_pylist()
@@ -269,52 +260,58 @@ def _m1_step(lib, kernel, const, nwp, np_, alpha, beta, eps, use_m3):
         return native_step
 
     cand, lam, slb = const["cand"], const["lam"], const["slb"]
-    reference = kernel == "reference"
+    m3 = [None, None]  # this batch's (α matrix, α sums) under M3
+
+    def doc_alpha(j):
+        return (m3[0][j], float(m3[1][j])) if use_m3 else (None, P * alpha)
+
     # the reference kernel keeps the 2-D arrays, the twin a flat int64
     # array + python int list — the same update sequence either way
-    if reference:
+    if kernel == "reference":
         nwp, np_ = nwp.copy(), np_.copy()
+
+        def sweep_doc(blk, j, lo, hi, rng):
+            av, a_sum = doc_alpha(j)
+            z = blk.state[0][lo:hi]  # a view: the kernel writes through
+            nd = np.bincount(z, minlength=P).astype(np.int64)
+            return _sweep_doc_reference(
+                blk.ws[lo:hi], z, nd, nwp, np_, cand, lam, slb, beta, alpha,
+                av, a_sum, rng,
+            )
     else:
         nwp_flat = nwp.ravel().copy()
         np_l = [int(x) for x in np_]
         word_cache: dict = {}
-    rng = np.random.RandomState(0)
+
+        def sweep_doc(blk, j, lo, hi, rng):
+            av, a_sum = doc_alpha(j)
+            zs = blk.state[0]
+            z = zs[lo:hi].tolist()
+            nd = [0] * P
+            for p in z:
+                nd[p] += 1
+            ch = _sweep_doc_fast(
+                blk.ws[lo:hi].tolist(), z, nd, nwp_flat, np_l, W,
+                word_cache, cand, lam, slb, beta, alpha, av, a_sum, rng,
+            )
+            zs[lo:hi] = z
+            return ch
+
+    doc_step = per_doc(sweep_doc, 3)
 
     def per_doc_step(blk, seeds):
-        av_mat, a_sums = alphas(blk)
-        zs = blk.state[0]
-        ch: tuple[list, ...] = ([], [], [])
-        counts = np.zeros(len(seeds), dtype=np.int64)
-        for j in range(len(seeds)):
-            lo, hi = int(blk.indptr[j]), int(blk.indptr[j + 1])
-            if use_m3:
-                av, a_sum = av_mat[j], float(a_sums[j])
-            else:
-                av, a_sum = None, P * alpha
-            rng.seed(int(seeds[j]))
-            if reference:
-                z = zs[lo:hi]  # a view: the kernel writes through
-                nd = np.bincount(z, minlength=P).astype(np.int64)
-                doc_ch = _sweep_doc_reference(
-                    blk.ws[lo:hi], z, nd, nwp, np_, cand, lam, slb,
-                    beta, alpha, av, a_sum, rng,
-                )
-            else:
-                z = zs[lo:hi].tolist()
-                nd = [0] * P
-                for p in z:
-                    nd[p] += 1
-                doc_ch = _sweep_doc_fast(
-                    blk.ws[lo:hi].tolist(), z, nd, nwp_flat, np_l, W,
-                    word_cache, cand, lam, slb, beta, alpha, av, a_sum, rng,
-                )
-                zs[lo:hi] = z
-            for col, vals in zip(ch, doc_ch):
-                col.extend(vals)
-            counts[j] = len(doc_ch[0])
-        return tuple(np.asarray(c, dtype=np.int64) for c in ch), counts
+        m3[:] = alphas(blk)
+        return doc_step(blk, seeds)
 
     return per_doc_step
+
+
+def _m1_init(cand, rng, ws, out):
+    """Seeded init draw of one doc: a uniform candidate per token."""
+    zs = out[0]
+    for i, w in enumerate(ws.tolist()):
+        c = cand[w]
+        zs[i] = c[rng.randint(len(c))]
 
 
 @dataclass
@@ -336,7 +333,7 @@ class GibbsConfig:
     # checkpoint dir (durable across executor loss, one FS write per
     # sweep); False = localCheckpoint + the every-k-sweeps Parquet
     # checkpoints in plans/checkpoint.py as the durable resume points.
-    # See models/state_lifecycle.py for the tradeoff.
+    # See models/chain.py for the tradeoff.
     reliable_checkpoint: bool = False
     # "native" = the runtime-compiled C kernel (default), or its
     # bit-identical interpreted twin on an executor without a C compiler;
@@ -405,8 +402,8 @@ def _collect_lam(
     return lam
 
 
-class DistributedGibbs(CheckpointedStateLifecycle):
-    """Driver-side sweep loop. Usage:
+class DistributedGibbs(Chain):
+    """The M1 chain on the shared engine (models/chain.py). Usage:
 
         g = DistributedGibbs(spark, corpus_df, obj_pred_df, lam_df, cfg)
         g.init_state()
@@ -429,8 +426,7 @@ class DistributedGibbs(CheckpointedStateLifecycle):
         list BOTH directions (symmetrize upstream). α refreshes from the
         synchronized counts between sweeps; within a sweep it is frozen,
         which is what keeps multi-partition runs well-defined."""
-        self.spark = spark
-        self.cfg = cfg
+        super().__init__(spark, cfg, LAYOUT)
         self.doc_sr = doc_sr
         self.cand = _collect_cand(obj_pred)
         self.lam = _collect_lam(lam_df, cfg.n_preds, cfg.n_words, cfg.lam_default)
@@ -442,104 +438,55 @@ class DistributedGibbs(CheckpointedStateLifecycle):
                 "interpreted twin (bit-identical, slower)", stacklevel=2,
             )
         self.corpus = corpus
-        self.state: DataFrame | None = None
         self.nwp: np.ndarray | None = None
         self.np_: np.ndarray | None = None
-        self.sweeps_done = 0
-        self._const_bc = None  # sweep-constant broadcast, shipped once
-        self._init_state_lifecycle()  # checkpoint/broadcast discipline
 
-    # ---- state init ----
-    def init_state(self) -> None:
-        cfg = self.cfg
-        toks = tokens_from_corpus(self.corpus)
-        cand_bc = self.spark.sparkContext.broadcast(self.cand)
-        seed = cfg.base_seed
+    # ---- engine hooks ----
+    def _source(self) -> DataFrame:
+        return tokens_from_corpus(self.corpus)
 
-        def init_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            cand = cand_bc.value
-            rng0 = np.random.RandomState(0)
-            for b in batches:
-                zs_col = []
-                for d, ws in zip(b["doc_id"], b["words"]):
-                    rng = reseed(rng0, seed, -1, int(d))
-                    ws = np.asarray(ws, dtype=np.int64)
-                    zs = np.empty(len(ws), dtype=np.int64)
-                    for i, w in enumerate(ws):
-                        c = cand[int(w)]
-                        zs[i] = c[rng.randint(len(c))]
-                    zs_col.append(zs)
-                yield pd.DataFrame(
-                    {"doc_id": b["doc_id"], "words": b["words"], "zs": zs_col}
-                )
+    def _init_draw(self):
+        return self.cand, _m1_init
 
-        # localCheckpoint (eager) both materializes the state AND truncates
-        # its lineage, so the init broadcast is immediately destroyable —
-        # at 1000 sweeps an undestroyed broadcast per iteration is a leak
-        self.state = self._local_checkpoint(
-            toks.repartition(cfg.n_partitions, "doc_id")
-            .sortWithinPartitions("doc_id")
-            .mapInPandas(init_fn, STATE_SCHEMA),
-            reliable=cfg.reliable_checkpoint,
-        )
-        self._refresh_global_counts()
-        self._destroy_broadcast_now(cand_bc)
-        self.sweeps_done = 0
+    def _reset_counts(self) -> None:
+        self.nwp = np.zeros((self.cfg.n_preds, self.cfg.n_words), dtype=np.int64)
 
-    # ---- global count refresh (exact, from z-state) ----
-    def _refresh_global_counts(self) -> None:
-        cfg = self.cfg
-        pairs = (
-            self.state.select(F.explode(F.arrays_zip("zs", "words")).alias("t"))
-            .select(F.col("t.zs").alias("p"), F.col("t.words").alias("w"))
-            .groupBy("p", "w")
-            .count()
-            .toPandas()
-        )
-        nwp = np.zeros((cfg.n_preds, cfg.n_words), dtype=np.int64)
-        nwp[pairs["p"].to_numpy(np.int64), pairs["w"].to_numpy(np.int64)] = (
-            pairs["count"].to_numpy(np.int64)
-        )
-        self.nwp = nwp
-        self.np_ = nwp.sum(axis=1)
-
-    # ---- global count refresh (exact, delta-based) ----
-    def _apply_count_deltas(self) -> None:
-        """Refresh nwp/np_ from the sweep's changed tokens only.
-
-        Exact by induction on integer arithmetic: every partition's local
-        AD-LDA updates are (−1 at (p_old, w), +1 at (p_new, w)) per
-        changed token, and summing those deltas over all partitions on top
-        of exact previous counts yields exactly the counts a full
-        recompute from the new z-state gives (bit-parity tests compare
-        final nwp against the NumPy oracle). The win is scale: the old
-        refresh exploded and shuffled EVERY token every sweep; this
-        aggregates only tokens whose topic changed — which collapses as
-        the chain converges (late-sweep change rates are a few percent).
-        Absolute recompute (_refresh_global_counts) remains the init /
-        checkpoint-restore path and the arbiter."""
-        deltas = (
-            self.state.select(
-                F.explode(F.arrays_zip("dw", "dp_old", "dp_new")).alias("t")
-            )
-            .groupBy(
-                F.col("t.dw").alias("w"),
-                F.col("t.dp_old").alias("po"),
-                F.col("t.dp_new").alias("pn"),
-            )
-            .count()
-            .toPandas()
-        )
-        self.last_sweep_changes = 0
-        if len(deltas):
-            w = deltas["w"].to_numpy(np.int64)
-            n = deltas["count"].to_numpy(np.int64)
-            np.add.at(self.nwp,
-                      (deltas["po"].to_numpy(np.int64), w), -n)
-            np.add.at(self.nwp,
-                      (deltas["pn"].to_numpy(np.int64), w), n)
-            self.last_sweep_changes = int(n.sum())
+    def _add_counts(self, cols, n) -> None:
+        w, p = cols
+        np.add.at(self.nwp, (p, w), n)
         self.np_ = self.nwp.sum(axis=1)
+
+    def _add_deltas(self, cols, n) -> None:
+        w, po, pn = cols
+        self._add_counts([w, po], -n)
+        self._add_counts([w, pn], n)
+        self.last_sweep_changes = int(n.sum())
+
+    def _can_fuse(self) -> bool:
+        return self.kernel == "native" and self.doc_sr is None
+
+    def _sweeper(self):
+        cfg, kernel, const_bc = self.cfg, self.kernel, self._ensure_const_bc()
+        use_m3 = self.doc_sr is not None
+
+        def make(counts):
+            lib = native_kernel.load_native() if kernel == "native" else None
+            return _m1_step(lib, kernel, const_bc.value, *counts,
+                            cfg.alpha_eff, cfg.beta, cfg.epsilon, use_m3)
+
+        return (self.nwp, self.np_), make
+
+    def _sweep_source(self, base: DataFrame) -> DataFrame:
+        # the payload join re-keys state to spark.sql.shuffle.partitions —
+        # restore the sampler's partitioning so the AD-LDA partition count
+        # (and with n_partitions=1, oracle bit-parity) is preserved
+        if self.doc_sr is None:
+            return base
+        return self._with_nbr_payload(base).repartition(
+            self.cfg.n_partitions, "doc_id")
+
+    def _z_record(self, arrs):
+        return arrs[0]
 
     # ---- M3 neighbor payload (per-doc α smoothing inputs) ----
     def _with_nbr_payload(self, state: DataFrame) -> DataFrame:
@@ -593,71 +540,6 @@ class DistributedGibbs(CheckpointedStateLifecycle):
             })
         return self._const_bc
 
-    def close(self) -> None:
-        """Release the sampler's long-lived broadcast/state handles."""
-        if self._const_bc is not None:
-            self._destroy_broadcast_now(self._const_bc)
-            self._const_bc = None
-        self._retire_broadcast(None)
-
-    # ---- one sweep (or a fused block of n_fused sweeps) ----
-    def sweep(self, n_fused: int = 1) -> None:
-        cfg = self.cfg
-        use_m3 = self.doc_sr is not None
-        if n_fused > 1 and (self.kernel != "native" or use_m3):
-            raise ValueError(
-                "fused sweeps require kernel='native' and no doc_sr (M3 "
-                "re-derives neighbor payloads between sweeps)"
-            )
-        bc = self.spark.sparkContext.broadcast((self.nwp, self.np_))
-        const_bc = self._ensure_const_bc()
-        kernel, sweep0, seed = self.kernel, self.sweeps_done, cfg.base_seed
-        alpha, beta, eps = cfg.alpha_eff, cfg.beta, cfg.epsilon
-
-        def sweep_fn(batches):
-            nwp, np_ = bc.value
-            lib = native_kernel.load_native() if kernel == "native" else None
-            step = _m1_step(lib, kernel, const_bc.value, nwp, np_, alpha,
-                            beta, eps, use_m3)
-            yield from run_sweeps(batches, step, seed, sweep0, n_fused,
-                                  STATE_COLS, DELTA_COLS)
-
-        old = self.state
-        # project away a previous sweep's delta columns (their aggregation
-        # already happened) so they neither ride through Arrow nor grow the
-        # checkpoint
-        base = old.select("doc_id", "words", "zs")
-        # the payload join re-keys state to spark.sql.shuffle.partitions —
-        # restore the sampler's partitioning so the AD-LDA partition count
-        # (and with n_partitions=1, oracle bit-parity) is preserved
-        src = (
-            self._with_nbr_payload(base).repartition(cfg.n_partitions, "doc_id")
-            if use_m3
-            else base
-        )
-        # partitioning by doc_id is already established; mapInArrow
-        # preserves it
-        swept = src.sortWithinPartitions("doc_id").mapInArrow(
-            sweep_fn, SWEEP_SCHEMA
-        )
-        self._commit_sweep(old, swept, bc, n_fused)
-
-    def run(self, n_sweeps: int) -> None:
-        if self.state is None:
-            self.init_state()
-        k = max(1, int(self.cfg.sweeps_per_job))
-        if k > 1 and (self.kernel != "native" or self.doc_sr is not None):
-            warnings.warn(
-                "sweeps_per_job>1 applies only to the native non-M3 "
-                "path; sweeping one per job", stacklevel=2,
-            )
-            k = 1
-        done = 0
-        while done < n_sweeps:
-            step = min(k, n_sweeps - done)
-            self.sweep(n_fused=step)
-            done += step
-
     # ---- posteriors ----
     def theta(self, for_pairs: DataFrame | None = None) -> DataFrame:
         """θ(doc_id, pred_id) = round((Npd+α)/(Nd+Pα), 4).
@@ -704,9 +586,3 @@ class DistributedGibbs(CheckpointedStateLifecycle):
              "phi": phi.ravel()}
         )
         return self.spark.createDataFrame(pdf)
-
-    # ---- oracle-comparable state dump (tests) ----
-    def z_state(self) -> dict[int, np.ndarray]:
-        pdf = self.state.select("doc_id", "zs").toPandas()
-        return {int(d): np.asarray(z, dtype=np.int64) for d, z in
-                zip(pdf["doc_id"], pdf["zs"])}

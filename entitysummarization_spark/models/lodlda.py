@@ -54,7 +54,8 @@ movies with round(·, 4) (zero-sum → 1). Top-N hit rate
 (findTopNRecommendation, :136-161): SCRM = |test users with a
 test-set movie in their top N| / |test users|.
 
-Distribution — the Spark-first shape this model wants:
+Distribution — the Spark-first shape this model wants, on the shared
+engine (models/chain.py):
 
   - records are partitioned BY USER, so Ntu[u]/Nu[u] are exact
     partition-local state (only the user's own records touch them) —
@@ -63,9 +64,12 @@ Distribution — the Spark-first shape this model wants:
     and their row sums — topics × movies/features, tiny (the user
     dimension, the one that grows with data, never crosses the
     cluster);
+  - a record's context assignment is stored as ``n_contexts``
+    token-aligned columns (``cs0…``), so the engine's runner and count
+    job treat it like any other state column;
   - per sweep the global matrices broadcast out, each partition sweeps
     its users against stale copies, and the driver refreshes exactly
-    from the changed-record delta log (integer-delta induction,
+    from the changed-record delta columns (integer-delta induction,
     arbitrated against the absolute recompute by the parity tests);
   - θ (U×T) is never materialized on the driver: ``theta_df`` computes
     it distributed per user and the scoring join broadcasts only the
@@ -75,28 +79,15 @@ Distribution — the Spark-first shape this model wants:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from dataclasses import dataclass
+from functools import partial
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .oracle import reseed, rng_for
-from .state_lifecycle import CheckpointedStateLifecycle
-
-STATE_SCHEMA = (
-    "user_id long, movies array<long>, zs array<long>,"
-    " cs array<array<long>>"
-)
-# a sweep additionally emits per changed record (movie, old topic, new
-# topic, OLD context features) — the new features are ctx(movie), known
-# driver-side, so they need not travel
-SWEEP_SCHEMA = STATE_SCHEMA + (
-    ", dm array<long>, dto array<long>, dtn array<long>,"
-    " dco array<array<long>>"
-)
+from .chain import Chain, Layout, per_doc
+from .oracle import rng_for
 
 
 @dataclass
@@ -298,7 +289,28 @@ def ctx_from_rows(
 # sequential oracle
 # ---------------------------------------------------------------------
 
-class LodLdaOracle:
+class _Counts:
+    """Nmt/Nct row sums and the φ/ζ posteriors, shared by the oracle and
+    the distributed chain."""
+
+    @property
+    def nt_m(self) -> np.ndarray:
+        return self.nmt.sum(axis=1)
+
+    @property
+    def nt_c(self) -> np.ndarray:
+        return self.nct.sum(axis=1)
+
+    def phi(self) -> np.ndarray:
+        return _compute_phi(self.nmt, self.nt_m, self.cfg.beta,
+                            self.cfg.n_movies)
+
+    def zeta(self) -> np.ndarray:
+        return _compute_zeta(self.nct, self.nt_c, self.cfg.gamma,
+                             self.cfg.n_features)
+
+
+class LodLdaOracle(_Counts):
     """Sequential NumPy reference for bit-parity tests (SURVEY §5).
 
     ``records``: user → ascending movie ids (one entry per interaction);
@@ -343,14 +355,6 @@ class LodLdaOracle:
             self.zs[u], self.cs[u] = z_arr, c_list
         self.sweeps_done = 0
 
-    @property
-    def nt_m(self) -> np.ndarray:
-        return self.nmt.sum(axis=1)
-
-    @property
-    def nt_c(self) -> np.ndarray:
-        return self.nct.sum(axis=1)
-
     def sweep(self, sweep_idx: int) -> None:
         cfg = self.cfg
         nt_m, nt_c = self.nt_m.copy(), self.nt_c.copy()
@@ -374,14 +378,6 @@ class LodLdaOracle:
         rows = _theta_rows(counts, nu, cfg.alpha_eff, cfg.n_topics)
         return {u: rows[i] for i, u in enumerate(self.user_ids)}
 
-    def phi(self) -> np.ndarray:
-        return _compute_phi(self.nmt, self.nt_m, self.cfg.beta,
-                            self.cfg.n_movies)
-
-    def zeta(self) -> np.ndarray:
-        return _compute_zeta(self.nct, self.nt_c, self.cfg.gamma,
-                             self.cfg.n_features)
-
     def rank_matrix(
         self, test_users: list[int], test_movies: list[int],
     ) -> dict[tuple[int, int], float]:
@@ -393,8 +389,50 @@ class LodLdaOracle:
 # distributed sampler
 # ---------------------------------------------------------------------
 
-class DistributedLodLda(CheckpointedStateLifecycle):
-    """Driver-side sweep loop, AD-LDA over user-partitioned record state.
+def _m7_init(payload, rng, ms, out):
+    """Seeded init draw of one user: per record z ~ U(T), then the
+    nContexts random features, slot by slot (:723-728)."""
+    T, FEAT = payload
+    zs, *cs = out
+    for i in range(len(ms)):
+        zs[i] = rng.randint(T)
+        for c in cs:
+            c[i] = rng.randint(FEAT)
+
+
+def _m7_step(counts, T, M, FEAT, alpha, beta, gamma):
+    """The M7 batch-sweep callable for ``chain.run_sweeps``: _sweep_user
+    per user over the flat slices, against partition-local working
+    copies of the broadcast counts (AD-LDA)."""
+    nmt0, nct0, ctx = counts
+    nmt, nct = nmt0.copy(), nct0.copy()
+    nt_m, nt_c = nmt.sum(axis=1), nct.sum(axis=1)
+    C = ctx.shape[1]
+
+    def sweep_user(blk, j, lo, hi, rng):
+        zs, *cs_cols = blk.state
+        z = zs[lo:hi]  # a view: the kernel writes through
+        # a LIST of rows: _sweep_user rebinds cs[i] to the movie's
+        # context, so the c_old it read stays the record's old row
+        cs = list(np.stack([c[lo:hi] for c in cs_cols], axis=1))
+        ntu_u = np.bincount(z, minlength=T).astype(np.int64)
+        m, to, tn, co = _sweep_user(
+            rng, blk.ws[lo:hi], z, cs, ntu_u, nmt, nt_m, nct, nt_c, ctx,
+            alpha, beta, gamma, M, FEAT,
+        )
+        new = np.stack(cs, axis=1)
+        for k, c in enumerate(cs_cols):
+            c[lo:hi] = new[k]
+        return (m, to, tn,
+                *np.asarray(co, dtype=np.int64).reshape(-1, C).T)
+
+    return per_doc(sweep_user, 3 + C)
+
+
+class DistributedLodLda(_Counts, Chain):
+    """The M7 chain on the shared engine (models/chain.py), over
+    user-partitioned record state. A record's context assignment is
+    stored as ``n_contexts`` token-aligned columns ``cs0…``.
 
         m = DistributedLodLda(spark, ratings_df, ctx_df, cfg)
         m.run(n_sweeps)
@@ -408,196 +446,58 @@ class DistributedLodLda(CheckpointedStateLifecycle):
         movie_ctx: DataFrame,     # movie_id, slot, feature_id
         cfg: LodLdaConfig,
     ):
-        self.spark = spark
-        self.cfg = cfg
+        C = range(cfg.n_contexts)
+        # per changed record: movie, old topic, new topic, OLD context
+        # features — the new ones are ctx(movie), known driver-side
+        super().__init__(spark, cfg, Layout(
+            "user_id", "movies", ("zs", *(f"cs{k}" for k in C)),
+            ("dm", "dto", "dtn", *(f"dco{k}" for k in C)),
+        ))
         self.ratings = ratings
         rows = [
             (int(r["movie_id"]), int(r["slot"]), int(r["feature_id"]))
             for r in movie_ctx.collect()  # M×C dim table — driver-small
         ]
         self.ctx = ctx_from_rows(rows, cfg.n_movies, cfg.n_contexts)
-        self.state: DataFrame | None = None
         self.nmt: np.ndarray | None = None
         self.nct: np.ndarray | None = None
-        self.sweeps_done = 0
-        self._init_state_lifecycle()
 
-    @property
-    def nt_m(self) -> np.ndarray:
-        return self.nmt.sum(axis=1)
-
-    @property
-    def nt_c(self) -> np.ndarray:
-        return self.nct.sum(axis=1)
-
-    def init_state(self) -> None:
-        cfg = self.cfg
-        base = self.ratings.groupBy("user_id").agg(
+    # ---- engine hooks ----
+    def _source(self) -> DataFrame:
+        return self.ratings.groupBy("user_id").agg(
             F.sort_array(F.collect_list(F.col("movie_id").cast("long")))
             .alias("movies")
         )
-        T, FEAT, C = cfg.n_topics, cfg.n_features, cfg.n_contexts
-        seed = cfg.base_seed
 
-        def init_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            rng0 = np.random.RandomState(0)
-            for b in batches:
-                zs_col, cs_col = [], []
-                for u, ms in zip(b["user_id"], b["movies"]):
-                    rng = reseed(rng0, seed, -1, int(u))
-                    n = len(ms)
-                    z_arr = np.empty(n, dtype=np.int64)
-                    c_rows = []
-                    for i in range(n):
-                        z_arr[i] = rng.randint(T)
-                        c_rows.append(np.asarray(
-                            [rng.randint(FEAT) for _ in range(C)],
-                            dtype=np.int64,
-                        ))
-                    zs_col.append(z_arr)
-                    cs_col.append(c_rows)
-                yield pd.DataFrame(
-                    {"user_id": b["user_id"], "movies": b["movies"],
-                     "zs": zs_col, "cs": cs_col}
-                )
+    def _init_draw(self):
+        return (self.cfg.n_topics, self.cfg.n_features), _m7_init
 
-        self.state = self._local_checkpoint(
-            base.repartition(cfg.n_partitions, "user_id")
-            .sortWithinPartitions("user_id")
-            .mapInPandas(init_fn, STATE_SCHEMA),
-            reliable=cfg.reliable_checkpoint,
-        )
-        self._refresh_global_counts()
-        self.sweeps_done = 0
-
-    def _refresh_global_counts(self) -> None:
-        """Absolute recompute — the init path and the delta arbiter."""
+    def _reset_counts(self) -> None:
         cfg = self.cfg
-        zm = (
-            self.state.select(
-                F.explode(F.arrays_zip("zs", "movies")).alias("x")
-            )
-            .groupBy(F.col("x.zs").alias("t"), F.col("x.movies").alias("m"))
-            .count()
-            .toPandas()
-        )
-        nmt = np.zeros((cfg.n_topics, cfg.n_movies), dtype=np.int64)
-        np.add.at(
-            nmt,
-            (zm["t"].to_numpy(np.int64), zm["m"].to_numpy(np.int64)),
-            zm["count"].to_numpy(np.int64),
-        )
-        zc = (
-            self.state.select(
-                F.explode(F.arrays_zip("zs", "cs")).alias("x")
-            )
-            .select(F.col("x.zs").alias("t"), F.explode("x.cs").alias("f"))
-            .groupBy("t", "f")
-            .count()
-            .toPandas()
-        )
-        nct = np.zeros((cfg.n_topics, cfg.n_features), dtype=np.int64)
-        np.add.at(
-            nct,
-            (zc["t"].to_numpy(np.int64), zc["f"].to_numpy(np.int64)),
-            zc["count"].to_numpy(np.int64),
-        )
-        self.nmt, self.nct = nmt, nct
+        self.nmt = np.zeros((cfg.n_topics, cfg.n_movies), dtype=np.int64)
+        self.nct = np.zeros((cfg.n_topics, cfg.n_features), dtype=np.int64)
 
-    def _apply_count_deltas(self) -> None:
-        """Refresh Nmt/Nct from the sweep's changed records only — exact
-        by integer-delta induction (new features are ctx[movie],
-        driver-known, so only the OLD features travel)."""
-        deltas = (
-            self.state.select(
-                F.explode(
-                    F.arrays_zip("dm", "dto", "dtn", "dco")
-                ).alias("x")
-            )
-            .groupBy(
-                F.col("x.dm").alias("m"),
-                F.col("x.dto").alias("to"),
-                F.col("x.dtn").alias("tn"),
-                F.col("x.dco").alias("co"),
-            )
-            .count()
-            .toPandas()
-        )
-        if not len(deltas):
-            return
-        for m, to, tn, co, n in zip(
-            deltas["m"], deltas["to"], deltas["tn"], deltas["co"],
-            deltas["count"],
-        ):
-            m, to, tn, n = int(m), int(to), int(tn), int(n)
-            self.nmt[to, m] -= n
-            self.nmt[tn, m] += n
-            for f in co:
-                self.nct[to, int(f)] -= n
-            for f in self.ctx[m]:
-                self.nct[tn, f] += n
+    def _add_counts(self, cols, n) -> None:
+        m, t, *cs = cols
+        np.add.at(self.nmt, (t, m), n)
+        for f in cs:
+            np.add.at(self.nct, (t, f), n)
 
-    def sweep(self) -> None:
+    def _add_deltas(self, cols, n) -> None:
+        m, to, tn, *co = cols
+        self._add_counts([m, to, *co], -n)
+        self._add_counts([m, tn, *self.ctx[m].T], n)
+
+    def _sweeper(self):
         cfg = self.cfg
-        sweep_idx = self.sweeps_done
-        bc = self.spark.sparkContext.broadcast(
-            (self.nmt, self.nct, self.ctx)
+        return (self.nmt, self.nct, self.ctx), partial(
+            _m7_step, T=cfg.n_topics, M=cfg.n_movies, FEAT=cfg.n_features,
+            alpha=cfg.alpha_eff, beta=cfg.beta, gamma=cfg.gamma,
         )
-        M, FEAT = cfg.n_movies, cfg.n_features
-        T = cfg.n_topics
-        alpha, beta, gamma = cfg.alpha_eff, cfg.beta, cfg.gamma
-        seed = cfg.base_seed
 
-        def sweep_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            nmt0, nct0, ctx = bc.value
-            nmt = nmt0.copy()     # partition-local working copies (AD-LDA)
-            nct = nct0.copy()
-            nt_m = nmt.sum(axis=1)
-            nt_c = nct.sum(axis=1)
-            rng0 = np.random.RandomState(0)
-            for batch in batches:
-                zs_col, cs_col = [], []
-                dcols: tuple[list, ...] = ([], [], [], [])
-                for u, ms, zs, cs in zip(
-                    batch["user_id"], batch["movies"], batch["zs"],
-                    batch["cs"],
-                ):
-                    ms = np.asarray(ms, dtype=np.int64)
-                    zs = np.asarray(zs, dtype=np.int64).copy()
-                    cs = [np.asarray(c, dtype=np.int64) for c in cs]
-                    ntu_u = np.bincount(zs, minlength=T).astype(np.int64)
-                    rng = reseed(rng0, seed, sweep_idx, int(u))
-                    ch = _sweep_user(
-                        rng, ms, zs, cs, ntu_u, nmt, nt_m, nct, nt_c,
-                        ctx, alpha, beta, gamma, M, FEAT,
-                    )
-                    zs_col.append(zs)
-                    cs_col.append(cs)
-                    for col, vals in zip(dcols[:3], ch[:3]):
-                        col.append(np.asarray(vals, dtype=np.int64))
-                    dcols[3].append(ch[3])
-                yield pd.DataFrame(
-                    {"user_id": batch["user_id"], "movies": batch["movies"],
-                     "zs": zs_col, "cs": cs_col,
-                     "dm": dcols[0], "dto": dcols[1], "dtn": dcols[2],
-                     "dco": dcols[3]}
-                )
-
-        old = self.state
-        swept = (
-            old.select("user_id", "movies", "zs", "cs")
-            .sortWithinPartitions("user_id")
-            .mapInPandas(sweep_fn, SWEEP_SCHEMA)
-        )
-        self._commit_sweep(old, swept, bc)
-
-    def run(self, n_sweeps: int) -> None:
-        """n_sweeps iterations (runGibbsSampling, :532-566 — no burn-in
-        hooks; they are commented out in the reference)."""
-        if self.state is None:
-            self.init_state()
-        for _ in range(n_sweeps):
-            self.sweep()
+    def _z_record(self, arrs):
+        zs, *cs = arrs
+        return zs, list(np.stack(cs, axis=1))
 
     # ---- posteriors ----
     def theta_df(self) -> DataFrame:
@@ -626,14 +526,6 @@ class DistributedLodLda(CheckpointedStateLifecycle):
             "user_id",
             F.transform(raw, lambda x: F.bround(x / s, 4)).alias("theta"),
         )
-
-    def phi(self) -> np.ndarray:
-        return _compute_phi(self.nmt, self.nt_m, self.cfg.beta,
-                            self.cfg.n_movies)
-
-    def zeta(self) -> np.ndarray:
-        return _compute_zeta(self.nct, self.nt_c, self.cfg.gamma,
-                             self.cfg.n_features)
 
     def _movie_dim(self, test_movies: list[int]) -> DataFrame:
         """Broadcastable movie dim: φ column, ζ columns of the movie's
@@ -718,16 +610,6 @@ class DistributedLodLda(CheckpointedStateLifecycle):
         return hits / n_users
 
     # ---- test hooks ----
-    def z_state(self) -> dict[int, tuple[np.ndarray, list[np.ndarray]]]:
-        pdf = self.state.select("user_id", "zs", "cs").toPandas()
-        return {
-            int(u): (
-                np.asarray(z, dtype=np.int64),
-                [np.asarray(c, dtype=np.int64) for c in c_rows],
-            )
-            for u, z, c_rows in zip(pdf["user_id"], pdf["zs"], pdf["cs"])
-        }
-
     def ntu_state(self) -> dict[int, np.ndarray]:
         """User topic counts recomputed from state (exactness check)."""
         T = self.cfg.n_topics

@@ -7,7 +7,7 @@ vectorized in NumPy. This module compiles that exact loop to machine
 code at runtime with the system C compiler and calls it once per Arrow
 batch through ctypes, from the shared block runner (models/chain.py).
 Each kernel has one interpreted twin for executors without a compiler:
-gibbs._sweep_doc_fast for ``sweep_batch`` and ontopart._onto_sweep_py
+gibbs._sweep_doc_fast for ``sweep_batch`` and ontopart._sweep_doc
 for ``onto_sweep_batch``.
 
 Bit-identity contract (arbitrated by tests/test_gibbs_kernels.py, which

@@ -34,13 +34,14 @@ the intended index/denominator fixes:
 θ=(Ntd+α)/(Nd+T·α), φ=(Nct+β)/(Nt+C·β), ζ=(Nwc+ζ0)/(Nc+W·ζ0), all
 4-decimal rounded like every reference posterior.
 
-Distribution is the same AD-LDA scheme as models/gibbs.py: token state
-partitioned by doc_id (doc-local Ntd exact), global Nct/Nwc broadcast per
-sweep and updated partition-locally (stale across partitions), then
-recomputed exactly from the new state. RNG is seeded per
-(base_seed, sweep, doc) with a fixed draw order (init: one randint for t
-then one for c per token; sweep: one rand per token), so a 1-partition
-run is bit-identical to the NumPy oracle below.
+Distribution is the AD-LDA scheme of every sampler here, on the shared
+engine (models/chain.py): token state partitioned by doc_id (doc-local
+Ntd exact), global Nct/Nwc broadcast per sweep and updated
+partition-locally (stale across partitions), then refreshed exactly from
+the sweep's changed tokens. RNG is seeded per (base_seed, sweep, doc)
+with a fixed draw order (init: one randint for t then one for c per
+token; sweep: one rand per token), so a 1-partition run is bit-identical
+to the NumPy oracle below.
 
 Scale: only T×C + C×W counts cross the cluster (T, C are ontology-sized;
 W is F10-pruned); token state never leaves its partition.
@@ -49,31 +50,21 @@ W is F10-pruned); token state never leaves its partition.
 from __future__ import annotations
 
 import warnings
-from collections.abc import Iterator
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import native_kernel
-from .chain import run_sweeps
+from .chain import Chain, Layout, per_doc
 from .gibbs import tokens_from_corpus
-from .oracle import reseed, rng_for
-from .state_lifecycle import CheckpointedStateLifecycle
+from .oracle import rng_for
 
-STATE_SCHEMA = (
-    "doc_id long, words array<long>, ts array<long>, cs array<long>"
-)
 # a sweep additionally emits the tokens whose (topic, class) assignment
 # CHANGED so the count refresh aggregates deltas over changed tokens only
-SWEEP_SCHEMA = STATE_SCHEMA + (
-    ", dw array<long>, dto array<long>, dco array<long>,"
-    " dtn array<long>, dcn array<long>"
-)
-STATE_COLS = ("ts", "cs")
-DELTA_COLS = ("dw", "dto", "dco", "dtn", "dcn")
+LAYOUT = Layout("doc_id", "words", ("ts", "cs"),
+                ("dw", "dto", "dco", "dtn", "dcn"))
 
 
 @dataclass
@@ -86,10 +77,10 @@ class OntoPartConfig:
     zeta: float = 0.01        # word-given-class smoothing (ZETA, :62)
     base_seed: int = 7
     n_partitions: int = 8
-    # durable per-sweep checkpointing — see models/state_lifecycle.py
+    # durable per-sweep checkpointing — see models/chain.py
     reliable_checkpoint: bool = False
     # Sweeps run the runtime-compiled C grid kernel, or its bit-identical
-    # interpreted twin (_onto_sweep_py) on an executor without a C
+    # interpreted twin (_sweep_doc) on an executor without a C
     # compiler; OntoPartOracle is the parity arbiter.
     # >1 fuses that many sweeps into ONE Spark job (same scheme, anchors
     # and default-1 rationale as GibbsConfig.sweeps_per_job — see
@@ -182,28 +173,13 @@ class OntoPartOracle:
 
     def sweep(self, sweep_idx: int) -> None:
         cfg = self.cfg
-        T, C, W = cfg.n_topics, cfg.n_classes, cfg.n_words
-        a, b, z0 = cfg.alpha_eff, cfg.beta, cfg.zeta
         for d in self.doc_ids:
-            rng = rng_for(cfg.base_seed, sweep_idx, d)
-            ws, ts, cs, ntd = self.tokens[d], self.ts[d], self.cs[d], self.ntd[d]
-            for i in range(len(ws)):
-                w, t_old, c_old = int(ws[i]), int(ts[i]), int(cs[i])
-                ntd[t_old] -= 1
-                self.nct[t_old, c_old] -= 1
-                self.nwc[c_old, w] -= 1
-                self.nt[t_old] -= 1
-                self.nc[c_old] -= 1
-                t_new, c_new = _sample_token(
-                    rng.rand(), ntd, self.nct, self.nwc[:, w], self.nt,
-                    self.nc, self.cls_cand[w], a, b, z0, C, W,
-                )
-                ts[i], cs[i] = t_new, c_new
-                ntd[t_new] += 1
-                self.nct[t_new, c_new] += 1
-                self.nwc[c_new, w] += 1
-                self.nt[t_new] += 1
-                self.nc[c_new] += 1
+            _sweep_doc(
+                rng_for(cfg.base_seed, sweep_idx, d), self.tokens[d],
+                self.ts[d], self.cs[d], self.ntd[d], self.nct, self.nwc,
+                self.nt, self.nc, self.cls_cand, cfg.alpha_eff, cfg.beta,
+                cfg.zeta, cfg.n_classes, cfg.n_words,
+            )
 
     def run(self, n_sweeps: int) -> None:
         for s in range(n_sweeps):
@@ -222,52 +198,36 @@ class OntoPartOracle:
         return np.round(theta, 4), np.round(phi, 4), np.round(zeta, 4)
 
 
-def _onto_sweep_py(
-    doc_indptr, seeds, ws_flat, ts_flat, cs_flat, nct, nwc, nt, nc,
-    cand, T, C, W, alpha, beta, zeta,
+def _sweep_doc(
+    rng, ws, ts, cs, ntd, nct, nwc, nt, nc, cand, alpha, beta, zeta, C, W,
 ):
-    """Interpreted twin of the C kernel's M6 batch sweep over flat
-    arrays — the oracle's per-token loop, bit-identical to the C kernel
+    """One Gibbs pass over a doc's tokens — the oracle's loop and the
+    interpreted twin of the C grid kernel, bit-identical to it
     (test_ontopart_fused.py), so a compiler-less executor agrees with
-    native even mid-block. Mutates ts/cs/nct/nwc/nt/nc in place; returns
-    the changed-token columns and per-doc change counts."""
-    rng = np.random.RandomState(0)
-    n_docs = len(doc_indptr) - 1
-    ch_w, ch_to, ch_co, ch_tn, ch_cn = [], [], [], [], []
-    ch_counts = np.zeros(n_docs, dtype=np.int64)
-    for j in range(n_docs):
-        lo, hi = int(doc_indptr[j]), int(doc_indptr[j + 1])
-        ntd = np.bincount(ts_flat[lo:hi], minlength=T).astype(np.int64)
-        rng.seed(int(seeds[j]))
-        n_ch = 0
-        for i in range(lo, hi):
-            w, t_old, c_old = int(ws_flat[i]), int(ts_flat[i]), int(cs_flat[i])
-            ntd[t_old] -= 1
-            nct[t_old, c_old] -= 1
-            nwc[c_old, w] -= 1
-            nt[t_old] -= 1
-            nc[c_old] -= 1
-            t_new, c_new = _sample_token(
-                rng.rand(), ntd, nct, nwc[:, w], nt, nc,
-                cand[w], alpha, beta, zeta, C, W,
-            )
-            ts_flat[i], cs_flat[i] = t_new, c_new
-            ntd[t_new] += 1
-            nct[t_new, c_new] += 1
-            nwc[c_new, w] += 1
-            nt[t_new] += 1
-            nc[c_new] += 1
-            if t_new != t_old or c_new != c_old:
-                ch_w.append(w)
-                ch_to.append(t_old)
-                ch_co.append(c_old)
-                ch_tn.append(t_new)
-                ch_cn.append(c_new)
-                n_ch += 1
-        ch_counts[j] = n_ch
-    cols = tuple(np.asarray(x, dtype=np.int64) for x in
-                 (ch_w, ch_to, ch_co, ch_tn, ch_cn))
-    return cols, ch_counts
+    native even mid-block. Mutates ts/cs/ntd/nct/nwc/nt/nc in place;
+    returns the changed-token lists (w, t_old, c_old, t_new, c_new)."""
+    changed: tuple[list[int], ...] = ([], [], [], [], [])
+    for i in range(len(ws)):
+        w, t_old, c_old = int(ws[i]), int(ts[i]), int(cs[i])
+        ntd[t_old] -= 1
+        nct[t_old, c_old] -= 1
+        nwc[c_old, w] -= 1
+        nt[t_old] -= 1
+        nc[c_old] -= 1
+        t_new, c_new = _sample_token(
+            rng.rand(), ntd, nct, nwc[:, w], nt, nc, cand[w],
+            alpha, beta, zeta, C, W,
+        )
+        ts[i], cs[i] = t_new, c_new
+        ntd[t_new] += 1
+        nct[t_new, c_new] += 1
+        nwc[c_new, w] += 1
+        nt[t_new] += 1
+        nc[c_new] += 1
+        if t_new != t_old or c_new != c_old:
+            for col, v in zip(changed, (w, t_old, c_old, t_new, c_new)):
+                col.append(v)
+    return changed
 
 
 def _onto_step(lib, csr, nct0, nwc0, T, C, W, alpha, beta, zeta, max_cls):
@@ -283,14 +243,15 @@ def _onto_step(lib, csr, nct0, nwc0, T, C, W, alpha, beta, zeta, max_cls):
             for w in range(len(cls_indptr) - 1)
         }
 
-        def py_step(blk, seeds):
+        def sweep_doc(blk, j, lo, hi, rng):
             ts, cs = blk.state
-            return _onto_sweep_py(
-                blk.indptr, seeds, blk.ws, ts, cs, nct, nwc, nt, nc, cand,
-                T, C, W, alpha, beta, zeta,
+            ntd = np.bincount(ts[lo:hi], minlength=T).astype(np.int64)
+            return _sweep_doc(
+                rng, blk.ws[lo:hi], ts[lo:hi], cs[lo:hi], ntd, nct, nwc, nt,
+                nc, cand, alpha, beta, zeta, C, W,
             )
 
-        return py_step
+        return per_doc(sweep_doc, 5)
 
     nct_flat, nwc_flat = nct.ravel(), nwc.ravel()
     ntd = np.zeros(T, dtype=np.int64)
@@ -309,8 +270,19 @@ def _onto_step(lib, csr, nct0, nwc0, T, C, W, alpha, beta, zeta, max_cls):
     return native_step
 
 
-class DistributedOntoPart(CheckpointedStateLifecycle):
-    """Driver-side sweep loop, AD-LDA over DataFrame token state.
+def _onto_init(payload, rng, ws, out):
+    """Seeded init draw of one doc: per token a uniform topic, then a
+    uniform allowed class."""
+    T, cand = payload
+    ts, cs = out
+    for i, w in enumerate(ws.tolist()):
+        cls = cand[w]
+        ts[i] = rng.randint(T)
+        cs[i] = cls[rng.randint(len(cls))]
+
+
+class DistributedOntoPart(Chain):
+    """The M6 chain on the shared engine (models/chain.py).
 
         m = DistributedOntoPart(spark, corpus_df, class_word_df, cfg)
         m.run(n_sweeps)
@@ -324,8 +296,7 @@ class DistributedOntoPart(CheckpointedStateLifecycle):
         class_word: DataFrame,      # class_id, word_id (classToWordMap)
         cfg: OntoPartConfig,
     ):
-        self.spark = spark
-        self.cfg = cfg
+        super().__init__(spark, cfg, LAYOUT)
         self.cls_cand = _collect_cls_cand(class_word)
         if not native_kernel.native_available():
             warnings.warn(
@@ -337,144 +308,41 @@ class DistributedOntoPart(CheckpointedStateLifecycle):
             int(np.diff(self._csr[0]).max()) if self.cls_cand else 1
         )
         self.corpus = corpus
-        self.state: DataFrame | None = None
         self.nct: np.ndarray | None = None
         self.nwc: np.ndarray | None = None
-        self.sweeps_done = 0
-        self._init_state_lifecycle()  # checkpoint/broadcast discipline
 
-    def init_state(self) -> None:
+    # ---- engine hooks ----
+    def _source(self) -> DataFrame:
+        return tokens_from_corpus(self.corpus)
+
+    def _init_draw(self):
+        return (self.cfg.n_topics, self.cls_cand), _onto_init
+
+    def _reset_counts(self) -> None:
         cfg = self.cfg
-        toks = tokens_from_corpus(self.corpus)
-        cand_bc = self.spark.sparkContext.broadcast(self.cls_cand)
-        T, seed = cfg.n_topics, cfg.base_seed
+        self.nct = np.zeros((cfg.n_topics, cfg.n_classes), dtype=np.int64)
+        self.nwc = np.zeros((cfg.n_classes, cfg.n_words), dtype=np.int64)
 
-        def init_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            cand = cand_bc.value
-            rng0 = np.random.RandomState(0)
-            for b in batches:
-                ts_col, cs_col = [], []
-                for d, ws in zip(b["doc_id"], b["words"]):
-                    rng = reseed(rng0, seed, -1, int(d))
-                    n = len(ws)
-                    t_arr = np.empty(n, dtype=np.int64)
-                    c_arr = np.empty(n, dtype=np.int64)
-                    for i, w in enumerate(np.asarray(ws, dtype=np.int64)):
-                        cls = cand[int(w)]
-                        t_arr[i] = rng.randint(T)
-                        c_arr[i] = cls[rng.randint(len(cls))]
-                    ts_col.append(t_arr)
-                    cs_col.append(c_arr)
-                yield pd.DataFrame(
-                    {"doc_id": b["doc_id"], "words": b["words"],
-                     "ts": ts_col, "cs": cs_col}
-                )
+    def _add_counts(self, cols, n) -> None:
+        w, t, c = cols
+        np.add.at(self.nct, (t, c), n)
+        np.add.at(self.nwc, (c, w), n)
 
-        self.state = self._local_checkpoint(
-            toks.repartition(cfg.n_partitions, "doc_id")
-            .sortWithinPartitions("doc_id")
-            .mapInPandas(init_fn, STATE_SCHEMA),
-            reliable=cfg.reliable_checkpoint,
-        )
-        self._refresh_global_counts()
-        self._destroy_broadcast_now(cand_bc)
-        self.sweeps_done = 0
+    def _add_deltas(self, cols, n) -> None:
+        w, to, co, tn, cn = cols
+        self._add_counts([w, to, co], -n)
+        self._add_counts([w, tn, cn], n)
 
-    def _refresh_global_counts(self) -> None:
-        cfg = self.cfg
-        ex = self.state.select(
-            F.explode(F.arrays_zip("ts", "cs", "words")).alias("x")
-        ).select(
-            F.col("x.ts").alias("t"),
-            F.col("x.cs").alias("c"),
-            F.col("x.words").alias("w"),
-        ).persist()
-        tc = ex.groupBy("t", "c").count().toPandas()
-        cw = ex.groupBy("c", "w").count().toPandas()
-        ex.unpersist()
-        nct = np.zeros((cfg.n_topics, cfg.n_classes), dtype=np.int64)
-        nct[tc["t"].to_numpy(np.int64), tc["c"].to_numpy(np.int64)] = (
-            tc["count"].to_numpy(np.int64)
-        )
-        nwc = np.zeros((cfg.n_classes, cfg.n_words), dtype=np.int64)
-        nwc[cw["c"].to_numpy(np.int64), cw["w"].to_numpy(np.int64)] = (
-            cw["count"].to_numpy(np.int64)
-        )
-        self.nct, self.nwc = nct, nwc
+    def _sweeper(self):
+        cfg, max_cls = self.cfg, self._max_cls
 
-    def _apply_count_deltas(self) -> None:
-        """Refresh nct/nwc from the sweep's changed tokens only — the
-        same exact-by-induction integer-delta scheme as
-        gibbs._apply_count_deltas (bit-parity tests arbitrate); the old
-        refresh exploded and double-aggregated every token every sweep.
-        Absolute recompute (_refresh_global_counts) stays the init path
-        and the arbiter."""
-        deltas = (
-            self.state.select(
-                F.explode(
-                    F.arrays_zip("dw", "dto", "dco", "dtn", "dcn")
-                ).alias("x")
-            )
-            .groupBy(
-                F.col("x.dw").alias("w"),
-                F.col("x.dto").alias("to"),
-                F.col("x.dco").alias("co"),
-                F.col("x.dtn").alias("tn"),
-                F.col("x.dcn").alias("cn"),
-            )
-            .count()
-            .toPandas()
-        )
-        if len(deltas):
-            w = deltas["w"].to_numpy(np.int64)
-            n = deltas["count"].to_numpy(np.int64)
-            to = deltas["to"].to_numpy(np.int64)
-            co = deltas["co"].to_numpy(np.int64)
-            tn = deltas["tn"].to_numpy(np.int64)
-            cn = deltas["cn"].to_numpy(np.int64)
-            np.add.at(self.nct, (to, co), -n)
-            np.add.at(self.nct, (tn, cn), n)
-            np.add.at(self.nwc, (co, w), -n)
-            np.add.at(self.nwc, (cn, w), n)
+        def make(counts):
+            nct, nwc, csr = counts
+            return _onto_step(native_kernel.load_native(), csr, nct, nwc,
+                              cfg.n_topics, cfg.n_classes, cfg.n_words,
+                              cfg.alpha_eff, cfg.beta, cfg.zeta, max_cls)
 
-    def sweep(self, n_fused: int = 1) -> None:
-        cfg = self.cfg
-        sweep0 = self.sweeps_done
-        bc = self.spark.sparkContext.broadcast((self.nct, self.nwc, self._csr))
-        T, C, W = cfg.n_topics, cfg.n_classes, cfg.n_words
-        a, b, z0, seed = cfg.alpha_eff, cfg.beta, cfg.zeta, cfg.base_seed
-        max_cls = self._max_cls
-
-        def sweep_fn(batches):
-            nct, nwc, csr = bc.value
-            step = _onto_step(native_kernel.load_native(), csr, nct, nwc,
-                              T, C, W, a, b, z0, max_cls)
-            yield from run_sweeps(batches, step, seed, sweep0, n_fused,
-                                  STATE_COLS, DELTA_COLS)
-
-        old = self.state
-        swept = (
-            old.select("doc_id", "words", "ts", "cs")
-            .sortWithinPartitions("doc_id")
-            .mapInArrow(sweep_fn, SWEEP_SCHEMA)
-        )
-        self._commit_sweep(old, swept, bc, n_fused)
-
-    def close(self) -> None:
-        """Release the pending per-sweep broadcast retirement (the M6
-        twin of DistributedGibbs.close; M6 holds no long-lived const
-        broadcast)."""
-        self._retire_broadcast(None)
-
-    def run(self, n_sweeps: int) -> None:
-        if self.state is None:
-            self.init_state()
-        k = max(1, int(self.cfg.sweeps_per_job))
-        done = 0
-        while done < n_sweeps:
-            step = min(k, n_sweeps - done)
-            self.sweep(n_fused=step)
-            done += step
+        return (self.nct, self.nwc, self._csr), make
 
     # ---- posteriors ----
     def theta(self) -> DataFrame:
@@ -510,10 +378,3 @@ class DistributedOntoPart(CheckpointedStateLifecycle):
         return np.round(
             (self.nwc + cfg.zeta) / (nc[:, None] + cfg.n_words * cfg.zeta), 4
         )
-
-    def z_state(self) -> dict[int, tuple[np.ndarray, np.ndarray]]:
-        pdf = self.state.select("doc_id", "ts", "cs").toPandas()
-        return {
-            int(d): (np.asarray(t, dtype=np.int64), np.asarray(c, dtype=np.int64))
-            for d, t, c in zip(pdf["doc_id"], pdf["ts"], pdf["cs"])
-        }

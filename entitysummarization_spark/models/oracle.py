@@ -36,17 +36,6 @@ def rng_for(base_seed: int, sweep: int, doc_id: int) -> np.random.RandomState:
     return np.random.RandomState(seed_for(base_seed, sweep, doc_id))
 
 
-def reseed(rng: np.random.RandomState, base_seed: int, sweep: int,
-           doc_id: int) -> np.random.RandomState:
-    """rng.seed(n) produces the SAME state as RandomState(n) (legacy MT
-    seeding) but skips object construction — which goes through
-    SeedSequence.generate_state and costs ~180 µs/call, 67× the reseed.
-    With ~10-token docs that construction was 70% of a whole Gibbs sweep,
-    so the hot paths reseed one cached RandomState per partition."""
-    rng.seed(seed_for(base_seed, sweep, doc_id))
-    return rng
-
-
 def doc_token_words(word_ids: np.ndarray, freqs: np.ndarray) -> np.ndarray:
     """Deterministic token layout: ascending word_id, repeated freq times."""
     order = np.argsort(word_ids, kind="stable")

@@ -19,25 +19,26 @@ the native kernel; each sweep records
 Output: one JSON line on stdout with the per-sweep table; a markdown
 table (for BENCH.md) on stderr.
 
-Run: env PYTHONPATH=/root/repo python scripts/bench_delta_refresh.py
+Run from the repo root: python scripts/bench_delta_refresh.py
 """
 
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from entitysummarization_spark.models.gibbs import (  # noqa: E402
     DistributedGibbs, GibbsConfig,
 )
 from entitysummarization_spark.session import get_spark  # noqa: E402
 
-import os  # noqa: E402
 
 P = int(os.environ.get("DELTA_BENCH_P", 264))
 W = int(os.environ.get("DELTA_BENCH_W", 4000))
@@ -81,7 +82,7 @@ def synth_corpus(rng: np.random.RandomState):
 def main() -> None:
     rng = np.random.RandomState(264)
     rows, cand_rows = synth_corpus(rng)
-    spark = get_spark(master="local[32]")
+    spark = get_spark()  # local[nproc], or SPARK_GRAFT_CPUS
     corpus = spark.createDataFrame(rows, "doc_id long, word_id long, freq int")
     obj_pred = spark.createDataFrame(
         cand_rows, "word_id long, pred_ids array<long>"

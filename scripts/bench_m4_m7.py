@@ -3,9 +3,10 @@
 M4 EntLDA2 (models/entlda2.py) and M7 LodLda (models/lodlda.py) — at
 sizes large enough that per-sweep fixed cost (job launch + checkpoint)
 does not dominate, mirroring how M1/M6 throughput is recorded in
-BENCH.md. Deterministic synthetic fixtures (seeded NumPy), local[32].
+BENCH.md. Deterministic synthetic fixtures (seeded NumPy), local[nproc]
+(``get_spark``'s default; SPARK_GRAFT_CPUS overrides it).
 
-Run: env PYTHONPATH=/root/repo python scripts/bench_m4_m7.py
+Run from the repo root: python scripts/bench_m4_m7.py
 Prints one JSON line per model.
 
 Sizes are chosen for the models' very different per-unit cost: an M4
@@ -17,13 +18,15 @@ T-vector — so M4 runs ~200k tokens and M7 ~1M records.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from entitysummarization_spark.session import get_spark  # noqa: E402
 from entitysummarization_spark.models.entlda2 import (  # noqa: E402
@@ -119,8 +122,7 @@ def bench_m7(spark) -> dict:
 
 
 def main() -> None:
-    spark = get_spark(app_name="bench-m4-m7", master="local[32]",
-                      shuffle_partitions=32)
+    spark = get_spark(app_name="bench-m4-m7")  # local[nproc]
     try:
         for fn in (bench_m4, bench_m7):
             print(json.dumps(fn(spark)), flush=True)

@@ -25,3 +25,15 @@ def fixture_small():
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture
+def one_record_batches(spark):
+    """Arrow batches of one record each for the test's duration, so a
+    sampler's runner rewraps every column batch by batch; the session's
+    setting is restored afterwards."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    yield
+    spark.conf.set(key, old)

@@ -1,0 +1,106 @@
+"""The shared chain engine (models/chain.py): every sampler destroys its
+broadcasts on close(), and the per-sweep lineage WARN is silenced."""
+
+import pytest
+
+from entitysummarization_spark.fixtures.samplers import (
+    M4_E,
+    M4_T,
+    M4_W,
+    M6_C,
+    M6_T,
+    M6_W,
+    M7_C,
+    M7_F,
+    M7_M,
+    M7_T,
+    m4_corpus_rows,
+    m4_ent_rows,
+    m6_class_rows,
+    m6_corpus_rows,
+    m7_ctx_rows,
+    m7_rating_rows,
+)
+from entitysummarization_spark.models.chain import LINEAGE_WARN_LOGGER
+from entitysummarization_spark.models.entlda2 import (
+    DistributedEntLda2,
+    EntLda2Config,
+)
+from entitysummarization_spark.models.gibbs import DistributedGibbs, GibbsConfig
+from entitysummarization_spark.models.lodlda import (
+    DistributedLodLda,
+    LodLdaConfig,
+)
+from entitysummarization_spark.models.ontopart import (
+    DistributedOntoPart,
+    OntoPartConfig,
+)
+
+CORPUS = "doc_id long, word_id long, freq int"
+
+
+def _m1(spark):
+    """M1 over the M6 fixture, classes standing in for predicates."""
+    cand: dict[int, list[int]] = {}
+    for c, w in m6_class_rows():
+        cand.setdefault(w, []).append(c)
+    return DistributedGibbs(
+        spark, spark.createDataFrame(m6_corpus_rows(), CORPUS),
+        spark.createDataFrame(sorted(cand.items()),
+                              "word_id long, pred_ids array<long>"),
+        None, GibbsConfig(n_preds=M6_C, n_words=M6_W, n_partitions=2),
+    )
+
+
+def _m4(spark):
+    return DistributedEntLda2(
+        spark, spark.createDataFrame(m4_corpus_rows(), CORPUS),
+        spark.createDataFrame(
+            m4_ent_rows(), "doc_id long, ent_id long, rel_ent_id long, sr double"
+        ),
+        EntLda2Config(n_topics=M4_T, n_entities=M4_E, n_words=M4_W,
+                      n_partitions=2),
+    )
+
+
+def _m6(spark):
+    return DistributedOntoPart(
+        spark, spark.createDataFrame(m6_corpus_rows(), CORPUS),
+        spark.createDataFrame(m6_class_rows(), "class_id long, word_id long"),
+        OntoPartConfig(n_topics=M6_T, n_classes=M6_C, n_words=M6_W,
+                       n_partitions=2),
+    )
+
+
+def _m7(spark):
+    return DistributedLodLda(
+        spark, spark.createDataFrame(m7_rating_rows(),
+                                     "user_id long, movie_id long"),
+        spark.createDataFrame(m7_ctx_rows(),
+                              "movie_id long, slot int, feature_id long"),
+        LodLdaConfig(n_topics=M7_T, n_movies=M7_M, n_features=M7_F,
+                     n_contexts=M7_C, n_partitions=2),
+    )
+
+
+SAMPLERS = {"m1": _m1, "m4": _m4, "m6": _m6, "m7": _m7}
+
+
+@pytest.mark.parametrize("name", sorted(SAMPLERS))
+def test_close_destroys_last_broadcast(spark, name):
+    m = SAMPLERS[name](spark)
+    m.run(2)
+    last = m._bc_prev
+    assert last is not None and last._jbroadcast.isValid()
+    m.close()
+    assert not last._jbroadcast.isValid()
+    assert m._bc_prev is None and getattr(m, "_const_bc", None) is None
+
+
+def test_lineage_warn_logger_raised_to_error(spark):
+    _m6(spark)
+    jvm = spark.sparkContext._jvm
+    logger = jvm.org.apache.logging.log4j.LogManager.getLogger(
+        LINEAGE_WARN_LOGGER
+    )
+    assert logger.getLevel().toString() == "ERROR"

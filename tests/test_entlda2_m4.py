@@ -58,6 +58,18 @@ def _oracle(cfg=None):
 
 
 def test_m4_one_partition_bit_parity(spark, m4_inputs):
+    _assert_one_partition_bit_parity(spark, m4_inputs)
+
+
+def test_m4_one_partition_bit_parity_one_record_batches(
+    spark, m4_inputs, one_record_batches
+):
+    """The same parity with one doc per Arrow batch: the carried
+    ``cands`` column survives the runner's batch-by-batch rewrap."""
+    _assert_one_partition_bit_parity(spark, m4_inputs)
+
+
+def _assert_one_partition_bit_parity(spark, m4_inputs):
     corpus_df, doc_ent = m4_inputs
     orc = _oracle()
     orc.run(SWEEPS)

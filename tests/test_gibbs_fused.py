@@ -25,8 +25,7 @@ from entitysummarization_spark.models.chain import (
     run_sweeps,
 )
 from entitysummarization_spark.models.gibbs import (
-    DELTA_COLS,
-    STATE_COLS,
+    LAYOUT,
     DistributedGibbs,
     GibbsConfig,
     _m1_step,
@@ -180,8 +179,7 @@ def _sweep_block(rb, lib, const, nwp, P, sweep0, k, kernel="native",
     sweep0..sweep0+k-1 of the tiny problem with the M1 batch sweep."""
     step = _m1_step(lib, kernel, const, nwp, nwp.sum(axis=1), 50.0 / P,
                     0.01, 0.9, use_m3)
-    out = list(run_sweeps(iter([rb]), step, 11, sweep0, k, STATE_COLS,
-                          DELTA_COLS))
+    out = list(run_sweeps(iter([rb]), step, 11, sweep0, k, LAYOUT))
     assert len(out) == 1
     return out[0]
 

@@ -67,7 +67,7 @@ def test_removed_kernels_rejected(kernel):
 def test_reliable_checkpoint_same_chain(spark, bundle, tmp_path):
     """GibbsConfig.reliable_checkpoint=True (durable Dataset.checkpoint
     per sweep — the executor-loss-safe option documented in
-    state_lifecycle.py) must produce the identical z-chain, and the
+    models/chain.py) must produce the identical z-chain, and the
     direct plan-handle release must keep the block inventory flat."""
     b, P, W = bundle
     sc = spark.sparkContext

@@ -62,8 +62,7 @@ def m7_inputs(spark):
     return ratings, ctx, test
 
 
-@pytest.fixture(scope="module")
-def m7_pair(spark, m7_inputs):
+def _pair(spark, m7_inputs):
     """(oracle, distributed) after SWEEPS sweeps at 1 partition."""
     ratings, ctx, _test = m7_inputs
     orc = _oracle()
@@ -73,7 +72,24 @@ def m7_pair(spark, m7_inputs):
     return orc, dist
 
 
+@pytest.fixture(scope="module")
+def m7_pair(spark, m7_inputs):
+    return _pair(spark, m7_inputs)
+
+
 def test_m7_one_partition_bit_parity(m7_pair):
+    _assert_one_partition_bit_parity(m7_pair)
+
+
+def test_m7_one_partition_bit_parity_one_record_batches(
+    spark, m7_inputs, one_record_batches
+):
+    """The same parity with one user per Arrow batch: the context
+    columns survive the runner's batch-by-batch rewrap."""
+    _assert_one_partition_bit_parity(_pair(spark, m7_inputs))
+
+
+def _assert_one_partition_bit_parity(m7_pair):
     orc, dist = m7_pair
     zstate = dist.z_state()
     assert sorted(zstate) == orc.user_ids

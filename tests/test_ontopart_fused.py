@@ -24,8 +24,7 @@ from entitysummarization_spark.fixtures.samplers import (
 from entitysummarization_spark.models import native_kernel
 from entitysummarization_spark.models.chain import run_sweeps
 from entitysummarization_spark.models.ontopart import (
-    DELTA_COLS,
-    STATE_COLS,
+    LAYOUT,
     DistributedOntoPart,
     OntoPartConfig,
     _onto_step,
@@ -125,8 +124,7 @@ def _sweep_block(rb, lib, csr, nct, nwc, sweep0, k):
     t_, c_ = nct.shape
     step = _onto_step(lib, csr, nct, nwc, t_, c_, nwc.shape[1],
                       50.0 / t_, 0.01, 0.01, c_)
-    out = list(run_sweeps(iter([rb]), step, 11, sweep0, k, STATE_COLS,
-                          DELTA_COLS))
+    out = list(run_sweeps(iter([rb]), step, 11, sweep0, k, LAYOUT))
     assert len(out) == 1
     return out[0]
 
