@@ -9,11 +9,12 @@ depend on the model:
   - seeded init: one ``mapInArrow`` pass in which each doc draws its
     initial state with its RNG seeded by
     ``oracle.seed_for(base_seed, -1, doc)``;
-  - the exact driver-side counts: the absolute recompute from the state
-    and the delta apply from a sweep's changed-token columns, each ONE
-    explode → groupBy → toPandas job (``count_rows``);
+  - the exact driver-side counts: the absolute recompute from the state,
+    one explode → groupBy → toPandas job (``count_rows``), and the delta
+    apply from the delta rows a sweep emits;
   - the sweep: broadcast the counts, one ``mapInArrow`` pass through
-    ``run_sweeps``, then ``_commit_sweep``;
+    ``run_sweeps``, then ``_commit_sweep`` — one Spark job of one stage
+    (M3 adds its neighbour join);
   - the run loop (fused blocks where the model allows them), ``close``
     and ``z_state``;
   - the checkpoint / broadcast lifecycle (below).
@@ -33,11 +34,16 @@ working copies of the global counts (the AD-LDA approximation: stale
 across partitions, exact within one). M1 and M6 run their compiled C
 kernel where it loads and otherwise a bit-identical interpreted twin, so
 a cluster mixing both still produces one chain; M4 and M7 run their
-per-doc kernels over the flat slices (``per_doc``). A fused block
-(k > 1, ``sweeps_per_job``) carries the local counts from sweep to sweep
-and emits every sweep's deltas, so the driver reconstructs the exact
-global counts at the block boundary; with one partition it is
-bit-identical to k unfused sweeps.
+per-doc kernels over the flat slices (``per_doc``). After the swept
+state rows of each batch the runner yields that batch's delta rows:
+every distinct changed-token row (the layout's delta columns) once, with
+its count over all the block's sweeps. AD-LDA refreshes the global
+counts by a sum of integer deltas, and a sum needs no shuffle: the
+driver collects the delta rows and adds them. A fused block (k > 1,
+``sweeps_per_job``) carries the local counts from sweep to sweep and
+counts every sweep's deltas, so the driver reconstructs the exact global
+counts at the block boundary; with one partition it is bit-identical to
+k unfused sweeps.
 
 The lifecycle. Each sweep rewrites the full token state with one map
 pass; without intervention that (a) chains one pass per sweep into an
@@ -45,8 +51,10 @@ O(n)-deep plan, and (b) keeps every sweep's count broadcast referenced
 for task re-serialization, an unbounded leak at the reference's 500 to
 2000 production sweeps. The discipline:
 
-  - checkpoint each new state: that materializes it AND truncates its
-    lineage (O(1) plan; the sweep's broadcast becomes unreferenced);
+  - checkpoint each sweep's output lazily; the collect of its delta
+    rows is the action that materializes it AND truncates its lineage
+    (O(1) plan; the sweep's broadcast becomes unreferenced). The state
+    is the output's state rows, projected to the layout's columns;
   - checkpoint RDDs bypass the CacheManager, so DataFrame.unpersist()
     is a no-op for them. The persisted RDD handle is read off the
     checkpointed Dataset's own plan (a LogicalRDD whose ``rdd`` IS the
@@ -86,13 +94,18 @@ from pyspark.sql import functions as F
 # recomputed after unpersisting" WARN
 LINEAGE_WARN_LOGGER = "org.apache.spark.rdd.MapPartitionsRDD"
 
+# a sweep output's count column: written only on delta rows, null on
+# state rows (a delta row's key is null too, but keys come from input)
+COUNT = "n"
+
 
 class Layout(NamedTuple):
     """A sampler's state columns. ``key`` (long) partitions the state and
     seeds each doc's RNG; every other column is array<long>: ``items``
-    (the tokens), ``carry`` (per-doc columns a sweep passes through),
-    ``state`` (token-aligned, rewritten by every sweep) and ``deltas``
-    (a sweep's changed-token columns)."""
+    (the tokens), ``carry`` (per-doc columns a sweep passes through) and
+    ``state`` (token-aligned, rewritten by every sweep). ``deltas`` name
+    the long columns of a sweep's delta rows (one changed-token row
+    each)."""
 
     key: str
     items: str
@@ -105,9 +118,12 @@ class Layout(NamedTuple):
         return (self.key, self.items, *self.carry, *self.state)
 
     def schema(self, deltas: bool = False) -> str:
-        cols = self.columns[1:] + (self.deltas if deltas else ())
+        """The state's schema; ``deltas`` appends the sweep output's
+        delta and count columns."""
         return ", ".join(
-            [f"{self.key} long"] + [f"{c} array<long>" for c in cols]
+            [f"{self.key} long"]
+            + [f"{c} array<long>" for c in self.columns[1:]]
+            + [f"{c} long" for c in (*self.deltas, COUNT) if deltas]
         )
 
 
@@ -156,38 +172,6 @@ def _block(rb: pa.RecordBatch, layout: Layout, state: bool = True) -> Block:
     )
 
 
-def _interleave_doc_delta_cols(n_docs, per_sweep):
-    """Regroup per-sweep changed-token columns by doc.
-
-    ``per_sweep`` is a list of (cols, counts) — one entry per fused
-    sweep, ``cols`` a tuple of that sweep's flat changed-token arrays
-    (any number of parallel columns) and ``counts`` the per-doc change
-    counts. Returns (out_cols, offsets) where offsets (int64[n_docs+1])
-    delimits each doc's deltas from ALL sweeps, sweep-ordered within a
-    doc. Pure index arithmetic, O(total changes)."""
-    n_cols = len(per_sweep[0][0]) if per_sweep else 0
-    total_counts = np.zeros(n_docs, dtype=np.int64)
-    for _, cc in per_sweep:
-        total_counts += cc
-    offsets = np.zeros(n_docs + 1, dtype=np.int64)
-    np.cumsum(total_counts, out=offsets[1:])
-    total = int(offsets[-1])
-    out_cols = tuple(np.empty(total, dtype=np.int64) for _ in range(n_cols))
-    acc = np.zeros(n_docs, dtype=np.int64)
-    for cols, cc in per_sweep:
-        m = int(cc.sum())
-        if m == 0:
-            continue
-        starts = offsets[:-1] + acc
-        seg0 = np.zeros(n_docs, dtype=np.int64)
-        np.cumsum(cc[:-1], out=seg0[1:])
-        pos = np.repeat(starts - seg0, cc) + np.arange(m, dtype=np.int64)
-        for out, col in zip(out_cols, cols):
-            out[pos] = col
-        acc += cc
-    return out_cols, offsets
-
-
 def _list(off: np.ndarray, vals: np.ndarray) -> pa.ListArray:
     return pa.ListArray.from_arrays(pa.array(off), pa.array(vals))
 
@@ -202,14 +186,30 @@ def _batch(blk: Block, layout: Layout, lists: list, names) -> pa.RecordBatch:
     )
 
 
-def _emit(blk: Block, per_sweep, layout: Layout) -> pa.RecordBatch:
-    cols, ch_off = _interleave_doc_delta_cols(len(blk.indptr) - 1, per_sweep)
+def _emit(blk: Block, per_sweep: list, layout: Layout):
+    """A batch's swept state rows (null deltas and count), then its delta
+    rows (null key, items, carry and state): each distinct changed-token
+    row of ``per_sweep`` (one tuple of flat delta columns per sweep) once,
+    with its count over all those sweeps."""
+    names = [*layout.columns, *layout.deltas, COUNT]
     off32 = blk.indptr.astype(np.int32)
-    ch32 = ch_off.astype(np.int32)
-    return _batch(
+    yield _batch(
         blk, layout,
-        [_list(off32, s) for s in blk.state] + [_list(ch32, c) for c in cols],
-        layout.columns + layout.deltas,
+        [_list(off32, s) for s in blk.state]
+        + [pa.nulls(len(blk.keys), pa.int64())] * (len(layout.deltas) + 1),
+        names,
+    )
+    rows = np.concatenate([np.column_stack(cols) for cols in per_sweep])
+    if not len(rows):
+        return
+    rows, n = np.unique(rows, axis=0, return_counts=True)
+    m = len(n)
+    yield pa.RecordBatch.from_arrays(
+        [pa.nulls(m, pa.int64())]
+        + [pa.nulls(m, pa.list_(pa.int64()))] * (len(layout.columns) - 1)
+        + [pa.array(c) for c in np.ascontiguousarray(rows.T)]
+        + [pa.array(n)],
+        names=names,
     )
 
 
@@ -243,7 +243,7 @@ def run_init(
 
 def run_sweeps(
     batches: Iterator[pa.RecordBatch],
-    step: Callable[[Block, np.ndarray], tuple],
+    step: Callable[[Block, np.ndarray], tuple[np.ndarray, ...]],
     base_seed: int,
     sweep0: int,
     k: int,
@@ -251,14 +251,16 @@ def run_sweeps(
 ) -> Iterator[pa.RecordBatch]:
     """Sweeps ``sweep0 .. sweep0+k-1`` over one partition's batches.
 
-    Output batches are the layout's columns then its delta columns; the
-    input's key, items and carry columns pass through unchanged."""
+    ``step(blk, seeds)`` sweeps a batch in place and returns its flat
+    changed-token columns. Output batches have the layout's columns, then
+    its delta columns and ``COUNT`` (see ``_emit``); the input's key,
+    items and carry columns pass through unchanged."""
     if k == 1:
         for rb in batches:
             if rb.num_rows:
                 blk = _block(rb, layout)
                 seeds = doc_seeds(base_seed, sweep0, blk.keys)
-                yield _emit(blk, [step(blk, seeds)], layout)
+                yield from _emit(blk, [step(blk, seeds)], layout)
         return
     blocks = [_block(rb, layout) for rb in batches if rb.num_rows]
     per_sweep: list[list] = [[] for _ in blocks]
@@ -266,7 +268,7 @@ def run_sweeps(
         for blk, deltas in zip(blocks, per_sweep):
             deltas.append(step(blk, doc_seeds(base_seed, sweep, blk.keys)))
     for blk, deltas in zip(blocks, per_sweep):
-        yield _emit(blk, deltas, layout)
+        yield from _emit(blk, deltas, layout)
 
 
 def per_doc(sweep_doc: Callable, n_cols: int):
@@ -277,15 +279,13 @@ def per_doc(sweep_doc: Callable, n_cols: int):
 
     def step(blk: Block, seeds: np.ndarray):
         ch: tuple[list, ...] = tuple([] for _ in range(n_cols))
-        counts = np.zeros(len(seeds), dtype=np.int64)
         bounds = blk.indptr.tolist()
         for j in range(len(seeds)):
             rng.seed(int(seeds[j]))
             doc_ch = sweep_doc(blk, j, bounds[j], bounds[j + 1], rng)
             for col, vals in zip(ch, doc_ch):
                 col.extend(vals)
-            counts[j] = len(doc_ch[0])
-        return tuple(np.asarray(c, dtype=np.int64) for c in ch), counts
+        return tuple(np.asarray(c, dtype=np.int64) for c in ch)
 
     return step
 
@@ -332,6 +332,7 @@ class Chain:
         self.cfg = cfg
         self.layout = layout
         self.state: DataFrame | None = None
+        self._sweep_out: DataFrame | None = None  # last sweep's raw output
         self.sweeps_done = 0
         self._const_bc = None  # a sweep-constant broadcast, if any
         self._state_handles: list = []
@@ -384,7 +385,7 @@ class Chain:
         self._add_counts(cols, n)
 
     def _apply_count_deltas(self) -> None:
-        """Refresh the counts from the sweep's changed tokens only.
+        """Refresh the counts from the sweep's delta rows only.
 
         Exact by induction on integer arithmetic: every partition's local
         updates are (−1 at the old assignment, +1 at the new) per changed
@@ -392,9 +393,14 @@ class Chain:
         previous counts gives exactly what a full recompute from the new
         state gives (the parity tests compare against the oracles). It
         aggregates only tokens whose assignment changed, which collapses
-        as the chain converges."""
-        *cols, n = count_rows(self.state, self.layout.deltas)
-        self._add_deltas(cols, n)
+        as the chain converges. One collect of the lazily checkpointed
+        sweep output, no exchange: it is also the action that materializes
+        and truncates the new state."""
+        cols = (*self.layout.deltas, COUNT)
+        pdf = (self._sweep_out.where(F.col(COUNT).isNotNull())
+               .select(*cols).toPandas())
+        *deltas, n = [pdf[c].to_numpy(np.int64) for c in cols]
+        self._add_deltas(deltas, n)
 
     # ---- sweep / run ----
     def sweep(self, n_fused: int = 1) -> None:
@@ -414,12 +420,10 @@ class Chain:
                                   n_fused, layout)
 
         old = self.state
-        # project away a previous sweep's delta columns (their aggregation
-        # already happened) so they neither ride through Arrow nor grow the
-        # checkpoint; partitioning by key is already established and
-        # mapInArrow preserves it
+        # partitioning by key is already established and mapInArrow
+        # preserves it
         swept = (
-            self._sweep_source(old.select(*layout.columns))
+            self._sweep_source(old)
             .sortWithinPartitions(layout.key)
             .mapInArrow(sweep_fn, layout.schema(deltas=True))
         )
@@ -479,7 +483,7 @@ class Chain:
     ) -> DataFrame:
         """``eager=False`` (local path only) defers materialization to the
         caller's next action — the sweep uses this to fuse checkpoint
-        materialization into the delta-count aggregation, one job per
+        materialization into the collect of its delta rows, one job per
         sweep instead of two. localCheckpoint persists its blocks during
         whichever job first computes the RDD and truncates lineage at
         that job's end, so the steady state is identical; the caller MUST
@@ -498,37 +502,23 @@ class Chain:
 
     def _commit_sweep(self, old: DataFrame, swept: DataFrame, bc,
                       n_sweeps: int = 1) -> None:
-        """The end of a sweep: checkpoint ``swept`` lazily, let the delta
-        aggregation be the action that materializes it (one job per sweep
-        instead of checkpoint-then-aggregate), then release the old state
-        — only now, since the sweep read its blocks — and retire the
+        """The end of a sweep: checkpoint ``swept`` lazily, let the collect
+        of its delta rows be the action that materializes it (one job per
+        sweep), keep its state rows as the state, then release the old
+        state — only now, since the sweep read its blocks — and retire the
         previous sweep's broadcast (``bc`` is destroyed one sweep later,
         out of caution)."""
-        self.state = self._local_checkpoint(
+        # the handle of the raw checkpointed output is the one released
+        # next sweep: the filtered state's plan is not a LogicalRDD
+        self._sweep_out = self._local_checkpoint(
             swept, reliable=self.cfg.reliable_checkpoint, eager=False,
         )
+        self.state = (self._sweep_out.where(F.col(COUNT).isNull())
+                      .select(*self.layout.columns))
         self.sweeps_done += n_sweeps
         self._apply_count_deltas()
-        self._finalize_lazy_checkpoint()
         self._release_old_state(old)
         self._retire_broadcast(bc)
-
-    def _finalize_lazy_checkpoint(self) -> None:
-        """Force lineage truncation of the current (lazily-checkpointed)
-        state. Needed because AQE materializes shuffle map stages via
-        ``submitMapStage``, which — unlike ``runJob`` — never calls
-        ``rdd.doCheckpoint()``; when the caller's materializing action
-        short-circuits after the map stage (e.g. an empty delta
-        aggregation), the state's blocks are cached but its lineage still
-        chains every previous sweep (and keeps their broadcasts
-        referenced — INTERNAL_ERROR_BROADCAST two sweeps later).
-        ``RDD.doCheckpoint`` is idempotent and, with all partitions
-        already cached by the map stage, truncates without launching a
-        job (LocalRDDCheckpointData computes only MISSING partitions).
-        private[spark] in Scala compiles to a public method, so py4j can
-        call it."""
-        for h in self._state_handles:
-            h.doCheckpoint()
 
     def _release_old_state(self, old: DataFrame) -> None:
         old.unpersist()  # covers a plain-persisted state (restore path)

@@ -52,9 +52,10 @@ Distribution is the AD-LDA scheme of every sampler here, on the shared
 engine (models/chain.py): token state partitioned by doc_id (doc-local
 Ned row exact), global Nte/Ne/sparse-Nwte + the E×T α matrix broadcast
 per sweep and updated partition-locally (stale across partitions within
-a sweep), then refreshed exactly from the sweep's changed tokens. θ/α/SR
-smoothing are driver-side E×T NumPy shared verbatim with the oracle and
-run around each sweep (``_schedule``). RNG is seeded per
+a sweep), then refreshed exactly from the counted changed-token rows the
+sweep pass emits (one job, no shuffle). θ/α/SR smoothing are driver-side
+E×T NumPy shared verbatim with the oracle and run around each sweep
+(``_schedule``). RNG is seeded per
 (base_seed, sweep, doc) with a fixed draw order (init: one randint(T)
 then one randint(E) per token; sweep: one rand per token of
 candidate-bearing docs), so a 1-partition run is bit-identical to the
@@ -83,8 +84,8 @@ from .gibbs import tokens_from_corpus
 from .oracle import doc_token_words, rng_for
 
 # each doc carries its candidate entities through every sweep; a sweep
-# additionally emits the tokens whose (entity, topic) assignment CHANGED
-# so the count refresh aggregates deltas over changed tokens only
+# additionally emits the tokens whose (entity, topic) assignment CHANGED,
+# counted, so the count refresh adds deltas over changed tokens only
 LAYOUT = Layout("doc_id", "words", ("es", "zs"),
                 ("dw", "deo", "dto", "den", "dtn"), carry=("cands",))
 

@@ -10,8 +10,8 @@ matrices. Distributed, that becomes the AD-LDA scheme (Newman et al. 2009,
     (Npd, Nd) are exact because a doc never splits across partitions;
   - global counts (Nwp P×W, Np) are broadcast each sweep and updated
     LOCALLY within a partition while it sweeps (stale across partitions —
-    the standard AD-LDA approximation), then recomputed exactly from the
-    new z-state by a groupBy and re-broadcast;
+    the standard AD-LDA approximation), then refreshed exactly on the
+    driver by summing the partitions' integer deltas, and re-broadcast;
   - RNG is seeded per (base_seed, sweep, doc) — independent of
     partitioning — so a 1-partition run is bit-identical to the NumPy
     oracle (models/oracle.py) and any-partition runs are reproducible.
@@ -20,17 +20,19 @@ Scale: only P×W counts ever reach the driver (bounded by the F10
 vocabulary prune); token state is never collected. The chain runs on the
 shared engine (models/chain.py), which owns init, the count refresh, the
 sweep job, the run loop and the checkpoint/broadcast lifecycle: per
-sweep one mapInArrow pass (no shuffle — partitioning by doc_id is
-established once) plus one aggregation of the changed tokens. This
-module supplies the M1 layout, init draw, kernels and count store.
+sweep one mapInArrow pass that also emits its aggregated count deltas,
+one Spark job of one stage (no shuffle — partitioning by doc_id is
+established once; M3 adds its neighbour join). This module supplies the
+M1 layout, init draw, kernels and count store.
 Checkpoint/resume per north_rule: plans/checkpoint.py.
 
 Kernels: GibbsConfig.kernel is "native" (default) or "reference". Native
 runs the runtime-compiled C kernel (models/native_kernel.py) once per
 Arrow batch; an executor without a C compiler runs its interpreted twin,
 _sweep_doc_fast, per doc over the same flat slices. "reference" runs
-_sweep_doc_reference, the per-token NumPy transcription the oracle
-parity tests arbitrate against. All three are bit-identical by
+_sweep_doc_reference (models/oracle.py), the per-token NumPy
+transcription GibbsOracle also runs and the parity tests arbitrate
+against. All three are bit-identical by
 construction (same seeded-RNG contract, same IEEE op order), so a
 cluster mixing compiled and interpreted executors still produces one
 chain. tests/test_gibbs_kernels.py holds native to the reference on
@@ -57,54 +59,12 @@ from pyspark.sql import functions as F
 
 from . import native_kernel
 from .chain import Chain, Layout, per_doc
-from .oracle import alpha_from_neighbors
+from .oracle import _sweep_doc_reference, alpha_from_neighbors
 
 # one row per doc; a sweep additionally emits the tokens whose predicate
-# CHANGED (word, old pred, new pred) so the count refresh aggregates
+# CHANGED (word, old pred, new pred), counted, so the count refresh adds
 # deltas over changed tokens only
 LAYOUT = Layout("doc_id", "words", ("zs",), ("dw", "dp_old", "dp_new"))
-
-
-def _sweep_doc_reference(
-    ws, zs, nd, nwp, np_, cand, lam, slb, beta, alpha, av, a_sum, rng
-):
-    """Per-token NumPy kernel — the arbiter the NumPy oracle, the C
-    kernel and its twin are held bit-identical to (EntSumModel.java:133-192
-    semantics). One rng.rand() per token, CDF over the word's candidate
-    predicates, in-place count updates. Mutates zs/nd/nwp/np_; returns the
-    changed-token lists (word, old pred, new pred) for the delta-based
-    global-count refresh."""
-    ndoc = len(ws)
-    use_m3 = av is not None
-    ch_w: list = []
-    ch_old: list = []
-    ch_new: list = []
-    for i in range(ndoc):
-        w, p_old = int(ws[i]), int(zs[i])
-        nd[p_old] -= 1
-        nwp[p_old, w] -= 1
-        np_[p_old] -= 1
-        c = cand[w]
-        a_c = av[c] if use_m3 else alpha
-        probs = (
-            (nd[c] + a_c) / (ndoc - 1 + a_sum)
-            * (nwp[c, w] + lam[c, w] * beta)
-            / (np_[c] + slb[c])
-        )
-        cdf = np.cumsum(probs)
-        u = rng.rand() * cdf[-1]
-        p_new = int(
-            c[int(np.searchsorted(cdf, u, side="right").clip(0, len(c) - 1))]
-        )
-        zs[i] = p_new
-        nd[p_new] += 1
-        nwp[p_new, w] += 1
-        np_[p_new] += 1
-        if p_new != p_old:
-            ch_w.append(w)
-            ch_old.append(p_old)
-            ch_new.append(p_new)
-    return ch_w, ch_old, ch_new
 
 
 def _sweep_doc_fast(
@@ -250,12 +210,11 @@ def _m1_step(lib, kernel, const, nwp, np_, alpha, beta, eps, use_m3):
 
         def native_step(blk, seeds):
             av_mat, a_sums = alphas(blk)
-            *ch, counts = native_kernel.sweep_batch_native(
+            return native_kernel.sweep_batch_native(
                 lib, blk.indptr, blk.ws, blk.state[0], seeds, P, W,
                 nwp_flat, np_arr, const["csr_indptr"], const["csr_data"],
                 const["lam_beta"], slb, alpha, av_mat, a_sums, nd, cdf,
             )
-            return tuple(ch), counts
 
         return native_step
 

@@ -66,11 +66,12 @@ engine (models/chain.py):
     cluster);
   - a record's context assignment is stored as ``n_contexts``
     token-aligned columns (``cs0…``), so the engine's runner and count
-    job treat it like any other state column;
+    refresh treat it like any other state column;
   - per sweep the global matrices broadcast out, each partition sweeps
-    its users against stale copies, and the driver refreshes exactly
-    from the changed-record delta columns (integer-delta induction,
-    arbitrated against the absolute recompute by the parity tests);
+    its users against stale copies and emits its counted changed-record
+    rows in the same pass, and the driver refreshes exactly from them
+    (integer-delta induction, arbitrated against the absolute recompute
+    by the parity tests);
   - θ (U×T) is never materialized on the driver: ``theta_df`` computes
     it distributed per user and the scoring join broadcasts only the
     movie dim (φ/ζ/ctx, M×T). At MovieLens-and-beyond scale U is the

@@ -101,8 +101,7 @@ static double mt_double(mt_t *st) {
 /* One AD-LDA sweep over a batch of documents.  Token layout is flat with
    doc_indptr boundaries; zs / nwp / np_ are updated in place (the
    partition-local AD-LDA working copies).  Changed tokens are appended
-   flat to ch_w/ch_old/ch_new with per-doc counts in ch_counts.  Returns
-   the total number of changed tokens. */
+   flat to ch_w/ch_old/ch_new.  Returns the number of changed tokens. */
 int64_t sweep_batch(
     int64_t n_docs,
     const int64_t *doc_indptr,
@@ -124,8 +123,7 @@ int64_t sweep_batch(
     double *cdf,            /* scratch, len >= max candidate count */
     int64_t *ch_w,
     int64_t *ch_old,
-    int64_t *ch_new,
-    int64_t *ch_counts      /* out, len n_docs */
+    int64_t *ch_new
 ) {
     int64_t n_changed = 0;
     mt_t st;
@@ -135,7 +133,6 @@ int64_t sweep_batch(
         const double *av = av_mat ? av_mat + d * P : 0;
         const double a_sum = av_mat ? a_sums[d] : (double)P * alpha;
         const double denom = (double)(ndoc - 1) + a_sum;
-        int64_t doc_changed = 0;
         mt_seed(&st, seeds[d]);
         memset(nd, 0, (size_t)P * sizeof(int64_t));
         for (int64_t i = t0; i < t1; i++) nd[zs[i]]++;
@@ -180,10 +177,8 @@ int64_t sweep_batch(
                 ch_old[n_changed] = p_old;
                 ch_new[n_changed] = p_new;
                 n_changed++;
-                doc_changed++;
             }
         }
-        ch_counts[d] = doc_changed;
     }
     return n_changed;
 }
@@ -218,14 +213,12 @@ int64_t onto_sweep_batch(
     double *termc,          /* scratch, len >= max classes per word */
     double *cdf,            /* scratch, len >= T * max classes */
     int64_t *ch_w, int64_t *ch_to, int64_t *ch_co,
-    int64_t *ch_tn, int64_t *ch_cn,
-    int64_t *ch_counts
+    int64_t *ch_tn, int64_t *ch_cn
 ) {
     int64_t n_changed = 0;
     mt_t st;
     for (int64_t d = 0; d < n_docs; d++) {
         const int64_t t0 = doc_indptr[d], t1 = doc_indptr[d + 1];
-        int64_t doc_changed = 0;
         mt_seed(&st, seeds[d]);
         memset(ntd, 0, (size_t)T * sizeof(int64_t));
         for (int64_t i = t0; i < t1; i++) ntd[ts[i]]++;
@@ -284,10 +277,8 @@ int64_t onto_sweep_batch(
                 ch_tn[n_changed] = tnew;
                 ch_cn[n_changed] = cnew;
                 n_changed++;
-                doc_changed++;
             }
         }
-        ch_counts[d] = doc_changed;
     }
     return n_changed;
 }
@@ -340,7 +331,7 @@ def load_native() -> ctypes.CDLL | None:
             ctypes.c_int64, _I64P, _I64P, _I64P, _U32P,
             ctypes.c_int64, ctypes.c_int64, _I64P, _I64P,
             _I64P, _I64P, _F64P, _F64P, ctypes.c_double,
-            _F64P, _F64P, _I64P, _F64P, _I64P, _I64P, _I64P, _I64P,
+            _F64P, _F64P, _I64P, _F64P, _I64P, _I64P, _I64P,
         ]
         lib.onto_sweep_batch.restype = ctypes.c_int64
         lib.onto_sweep_batch.argtypes = [
@@ -350,7 +341,7 @@ def load_native() -> ctypes.CDLL | None:
             ctypes.c_double, ctypes.c_double, ctypes.c_double,
             ctypes.c_double, ctypes.c_double,
             _I64P, _F64P, _F64P,
-            _I64P, _I64P, _I64P, _I64P, _I64P, _I64P,
+            _I64P, _I64P, _I64P, _I64P, _I64P,
         ]
     except Exception:  # noqa: BLE001 — no compiler / sandboxed tmp: fall back
         lib = None
@@ -404,16 +395,14 @@ def sweep_batch_native(
     a_sums: np.ndarray | None,
     nd_scratch: np.ndarray,
     cdf_scratch: np.ndarray,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """One batch sweep; mutates zs_flat / nwp_flat / np_arr in place.
-    Returns (ch_w, ch_old, ch_new, ch_counts) with the flat changed-token
-    triples and per-doc change counts."""
+    Returns (ch_w, ch_old, ch_new), the flat changed-token triples."""
     n_docs = len(doc_indptr) - 1
     n_tok = len(ws_flat)
     ch_w = np.empty(n_tok, dtype=np.int64)
     ch_old = np.empty(n_tok, dtype=np.int64)
     ch_new = np.empty(n_tok, dtype=np.int64)
-    ch_counts = np.empty(n_docs, dtype=np.int64)
     n = lib.sweep_batch(
         n_docs, _ptr_i64(doc_indptr), _ptr_i64(ws_flat), _ptr_i64(zs_flat),
         seeds.ctypes.data_as(_U32P), P, W, _ptr_i64(nwp_flat),
@@ -423,9 +412,8 @@ def sweep_batch_native(
         _ptr_f64(a_sums) if a_sums is not None else None,
         _ptr_i64(nd_scratch), _ptr_f64(cdf_scratch),
         _ptr_i64(ch_w), _ptr_i64(ch_old), _ptr_i64(ch_new),
-        _ptr_i64(ch_counts),
     )
-    return ch_w[:n], ch_old[:n], ch_new[:n], ch_counts
+    return ch_w[:n], ch_old[:n], ch_new[:n]
 
 
 def onto_sweep_batch_native(
@@ -452,11 +440,10 @@ def onto_sweep_batch_native(
     cdf_scratch: np.ndarray,
 ) -> tuple[np.ndarray, ...]:
     """One M6 batch sweep; mutates ts/cs/nct/nwc/nt/nc in place. Returns
-    (ch_w, ch_to, ch_co, ch_tn, ch_cn, ch_counts)."""
+    the flat changed-token columns (ch_w, ch_to, ch_co, ch_tn, ch_cn)."""
     n_docs = len(doc_indptr) - 1
     n_tok = len(ws_flat)
     outs = [np.empty(n_tok, dtype=np.int64) for _ in range(5)]
-    ch_counts = np.empty(n_docs, dtype=np.int64)
     n = lib.onto_sweep_batch(
         n_docs, _ptr_i64(doc_indptr), _ptr_i64(ws_flat), _ptr_i64(ts_flat),
         _ptr_i64(cs_flat), seeds.ctypes.data_as(_U32P), T, C, W,
@@ -465,6 +452,6 @@ def onto_sweep_batch_native(
         alpha, beta, zeta, C * beta, W * zeta,
         _ptr_i64(ntd_scratch), _ptr_f64(termc_scratch),
         _ptr_f64(cdf_scratch),
-        *(_ptr_i64(o) for o in outs), _ptr_i64(ch_counts),
+        *(_ptr_i64(o) for o in outs),
     )
-    return tuple(o[:n] for o in outs) + (ch_counts,)
+    return tuple(o[:n] for o in outs)

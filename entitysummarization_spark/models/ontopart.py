@@ -38,7 +38,8 @@ Distribution is the AD-LDA scheme of every sampler here, on the shared
 engine (models/chain.py): token state partitioned by doc_id (doc-local
 Ntd exact), global Nct/Nwc broadcast per sweep and updated
 partition-locally (stale across partitions), then refreshed exactly from
-the sweep's changed tokens. RNG is seeded per (base_seed, sweep, doc)
+the counted changed-token rows the sweep pass emits (one job, no
+shuffle). RNG is seeded per (base_seed, sweep, doc)
 with a fixed draw order (init: one randint for t then one for c per
 token; sweep: one rand per token), so a 1-partition run is bit-identical
 to the NumPy oracle below.
@@ -62,7 +63,8 @@ from .gibbs import tokens_from_corpus
 from .oracle import rng_for
 
 # a sweep additionally emits the tokens whose (topic, class) assignment
-# CHANGED so the count refresh aggregates deltas over changed tokens only
+# CHANGED, counted, so the count refresh adds deltas over changed tokens
+# only
 LAYOUT = Layout("doc_id", "words", ("ts", "cs"),
                 ("dw", "dto", "dco", "dtn", "dcn"))
 
@@ -260,12 +262,11 @@ def _onto_step(lib, csr, nct0, nwc0, T, C, W, alpha, beta, zeta, max_cls):
 
     def native_step(blk, seeds):
         ts, cs = blk.state
-        *ch, counts = native_kernel.onto_sweep_batch_native(
+        return native_kernel.onto_sweep_batch_native(
             lib, blk.indptr, blk.ws, ts, cs, seeds, T, C, W,
             nct_flat, nwc_flat, nt, nc, cls_indptr, cls_data,
             alpha, beta, zeta, ntd, termc, cdf,
         )
-        return tuple(ch), counts
 
     return native_step
 

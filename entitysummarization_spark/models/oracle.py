@@ -85,6 +85,49 @@ def alpha_from_neighbors(
     return (1.0 - epsilon) * alpha0 + epsilon * (P / len(nbrs)) * sum_prob
 
 
+def _sweep_doc_reference(
+    ws, zs, nd, nwp, np_, cand, lam, slb, beta, alpha, av, a_sum, rng
+):
+    """Per-token NumPy kernel of one doc — the M1 arbiter: GibbsOracle
+    and the "reference" chain kernel run it, and the C kernel and its
+    twin (models/gibbs.py) are held bit-identical to it
+    (EntSumModel.java:133-192 semantics). One rng.rand() per token, CDF
+    over the word's candidate predicates, in-place count updates. Mutates
+    zs/nd/nwp/np_; returns the changed-token lists (word, old pred, new
+    pred) for the delta-based global-count refresh."""
+    ndoc = len(ws)
+    use_m3 = av is not None
+    ch_w: list = []
+    ch_old: list = []
+    ch_new: list = []
+    for i in range(ndoc):
+        w, p_old = int(ws[i]), int(zs[i])
+        nd[p_old] -= 1
+        nwp[p_old, w] -= 1
+        np_[p_old] -= 1
+        c = cand[w]
+        a_c = av[c] if use_m3 else alpha
+        probs = (
+            (nd[c] + a_c) / (ndoc - 1 + a_sum)
+            * (nwp[c, w] + lam[c, w] * beta)
+            / (np_[c] + slb[c])
+        )
+        cdf = np.cumsum(probs)
+        u = rng.rand() * cdf[-1]
+        p_new = int(
+            c[int(np.searchsorted(cdf, u, side="right").clip(0, len(c) - 1))]
+        )
+        zs[i] = p_new
+        nd[p_new] += 1
+        nwp[p_new, w] += 1
+        np_[p_new] += 1
+        if p_new != p_old:
+            ch_w.append(w)
+            ch_old.append(p_old)
+            ch_new.append(p_new)
+    return ch_w, ch_old, ch_new
+
+
 @dataclass
 class OracleState:
     doc_ids: list[int]
@@ -205,34 +248,16 @@ class GibbsOracle:
             nwp = snap_nwp.copy()
             np_ = snap_np.copy()
             for d in docs:
-                rng = rng_for(self.base_seed, sweep_idx, d)
-                ws, zs, nd = s.tokens[d], s.z[d], s.npd[d]
-                ndoc = len(ws)
                 if self.doc_nbrs is not None:
                     av = self.alpha_vec[d]
-                    a_of = lambda c: av[c]          # noqa: E731
                     a_sum = float(av.sum())
                 else:
-                    a_of = lambda c: a              # noqa: E731
-                    a_sum = P * a
-                for i in range(ndoc):
-                    w, p_old = int(ws[i]), int(zs[i])
-                    nd[p_old] -= 1
-                    nwp[p_old, w] -= 1
-                    np_[p_old] -= 1
-                    c = self.cand[w]
-                    probs = (
-                        (nd[c] + a_of(c)) / (ndoc - 1 + a_sum)
-                        * (nwp[c, w] + self.lam[c, w] * b)
-                        / (np_[c] + self.sum_lam_beta[c])
-                    )
-                    cdf = np.cumsum(probs)
-                    u = rng.rand() * cdf[-1]
-                    p_new = int(c[int(np.searchsorted(cdf, u, side="right").clip(0, len(c) - 1))])
-                    zs[i] = p_new
-                    nd[p_new] += 1
-                    nwp[p_new, w] += 1
-                    np_[p_new] += 1
+                    av, a_sum = None, P * a
+                _sweep_doc_reference(
+                    s.tokens[d], s.z[d], s.npd[d], nwp, np_, self.cand,
+                    self.lam, self.sum_lam_beta, b, a, av, a_sum,
+                    rng_for(self.base_seed, sweep_idx, d),
+                )
         # exact global refresh from the merged z-state (gibbs.py
         # _refresh_global_counts analog)
         nwp_g = np.zeros((P, self.W), dtype=np.int64)

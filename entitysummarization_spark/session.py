@@ -49,7 +49,8 @@ def get_spark(
         # long run accumulates O(n_iter × dataset) in the checkpoint dir
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        # a heap that fits a 15 GB, 4-vCPU host; SPARK_DRIVER_MEM overrides
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "6g"))
         # broadcast threshold: our dictionaries are a few MB; default 10MB ok,
         # we still mark dims with broadcast() explicitly at call sites.
     )

@@ -1,5 +1,6 @@
-"""The shared chain engine (models/chain.py): every sampler destroys its
-broadcasts on close(), and the per-sweep lineage WARN is silenced."""
+"""The shared chain engine (models/chain.py): every sweep is one Spark job
+of one stage, every sampler destroys its broadcasts on close(), and the
+per-sweep lineage WARN is silenced."""
 
 import pytest
 
@@ -84,6 +85,29 @@ def _m7(spark):
 
 
 SAMPLERS = {"m1": _m1, "m4": _m4, "m6": _m6, "m7": _m7}
+
+
+@pytest.mark.parametrize(
+    "name,k", [("m1", 1), ("m1", 2), ("m4", 1), ("m6", 1), ("m7", 1)],
+    ids=["m1", "m1-fused2", "m4", "m6", "m7"],
+)
+def test_sweep_is_one_job_of_one_stage(spark, name, k):
+    """The sweep pass emits its own count deltas, so collecting them needs
+    no shuffle: the whole sweep, unfused or fused, is one job."""
+    m = SAMPLERS[name](spark)
+    m.init_state()
+    sc = spark.sparkContext
+    group = f"one-job-sweep-{name}-{k}"
+    sc.setJobGroup(group, "one sweep")
+    try:
+        m.sweep(n_fused=k)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert len(jobs) == 1, jobs
+    assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1
+    m.close()
 
 
 @pytest.mark.parametrize("name", sorted(SAMPLERS))

@@ -131,13 +131,13 @@ def test_checkpoint_resume_bit_identical(spark, bundle, tmp_path):
 
 def test_zero_change_chain_survives_broadcast_retirement(spark):
     """Regression: a corpus where every word has exactly ONE candidate
-    predicate never changes any z — every sweep's delta aggregation is
-    EMPTY, so AQE materializes the map stage via submitMapStage and
-    short-circuits the final stage, and (before the explicit
-    _finalize_lazy_checkpoint) the lazily-checkpointed state's lineage
-    was never truncated: sweep k+2's task serialization then hit the
-    destroyed sweep-k broadcast (INTERNAL_ERROR_BROADCAST). Five sweeps
-    over two partitions reproduce the original failure at sweep 2."""
+    predicate never changes any z, so no sweep emits a delta row. The
+    collect of the (absent) delta rows must still materialize the lazily
+    checkpointed state and truncate its lineage; otherwise sweep k+2's
+    task serialization hits the destroyed sweep-k broadcast
+    (INTERNAL_ERROR_BROADCAST). When the deltas were aggregated through a
+    shuffle, AQE's submitMapStage skipped the truncation and five sweeps
+    over two partitions failed at sweep 2."""
     from entitysummarization_spark.models.gibbs import (
         DistributedGibbs,
         GibbsConfig,

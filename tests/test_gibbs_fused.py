@@ -20,10 +20,7 @@ import numpy as np
 import pytest
 
 from entitysummarization_spark.models import native_kernel
-from entitysummarization_spark.models.chain import (
-    _interleave_doc_delta_cols,
-    run_sweeps,
-)
+from entitysummarization_spark.models.chain import COUNT, run_sweeps
 from entitysummarization_spark.models.gibbs import (
     LAYOUT,
     DistributedGibbs,
@@ -58,31 +55,6 @@ def _run(spark, b, P, W, n_partitions, sweeps, sweeps_per_job):
     g = DistributedGibbs(spark, b.corpus, b.obj_pred, b.lam, cfg)
     g.run(sweeps)
     return g
-
-
-def test_interleave_doc_deltas_groups_by_doc_sweep_ordered():
-    """Pure index arithmetic: per-sweep flat change arrays regroup into
-    per-doc segments, sweeps in order within a doc."""
-    # 3 docs; sweep A changes (doc0: 10,11) (doc2: 12); sweep B changes
-    # (doc0: 20) (doc1: 21,22)
-    s_a = (np.array([10, 11, 12]), np.array([0, 0, 2]),
-           np.array([1, 1, 3]), np.array([2, 0, 1]))
-    s_b = (np.array([20, 21, 22]), np.array([5, 6, 6]),
-           np.array([7, 8, 8]), np.array([1, 2, 0]))
-    (dw, dold, dnew), off = _interleave_doc_delta_cols(
-        3, [(s[:3], s[3]) for s in (s_a, s_b)]
-    )
-    assert off.tolist() == [0, 3, 5, 6]
-    assert dw.tolist() == [10, 11, 20, 21, 22, 12]
-    assert dold.tolist() == [0, 0, 5, 6, 6, 2]
-    assert dnew.tolist() == [1, 1, 7, 8, 8, 3]
-
-
-def test_interleave_doc_deltas_empty_sweeps():
-    z = np.zeros(0, dtype=np.int64)
-    zero = ((z, z, z), np.zeros(2, dtype=np.int64))
-    (dw, dold, dnew), off = _interleave_doc_delta_cols(2, [zero, zero])
-    assert off.tolist() == [0, 0, 0] and dw.size == 0
 
 
 @needs_cc
@@ -173,15 +145,26 @@ def _tiny_problem():
     return rb, const, nwp, P, W
 
 
+def delta_rows(batches, cols):
+    """A runner pass's delta rows as (*cols, count) tuples: the rows whose
+    count is set."""
+    return [
+        row for rb in batches
+        for row in zip(*(rb.column(c).to_pylist() for c in (*cols, COUNT)))
+        if row[-1] is not None
+    ]
+
+
 def _sweep_block(rb, lib, const, nwp, P, sweep0, k, kernel="native",
                  use_m3=False):
     """One partition's pass through the shared runner: sweeps
-    sweep0..sweep0+k-1 of the tiny problem with the M1 batch sweep."""
+    sweep0..sweep0+k-1 of the tiny problem with the M1 batch sweep.
+    Returns the swept state batch and the pass's delta rows."""
     step = _m1_step(lib, kernel, const, nwp, nwp.sum(axis=1), 50.0 / P,
                     0.01, 0.9, use_m3)
     out = list(run_sweeps(iter([rb]), step, 11, sweep0, k, LAYOUT))
-    assert len(out) == 1
-    return out[0]
+    assert len(out) in (1, 2)
+    return out[0], delta_rows(out, LAYOUT.deltas)
 
 
 @needs_cc
@@ -192,20 +175,15 @@ def test_fused_runner_matches_sequential_unfused():
     rb, const, nwp0, P, W = _tiny_problem()
     lib = native_kernel.load_native()
 
-    f = _sweep_block(rb, lib, const, nwp0, P, 0, 3)  # fused
+    f, f_deltas = _sweep_block(rb, lib, const, nwp0, P, 0, 3)  # fused
 
     cur, nwp = rb, nwp0.copy()
     for s in range(3):
-        out = _sweep_block(cur, lib, const, nwp, P, s, 1)
+        out, deltas = _sweep_block(cur, lib, const, nwp, P, s, 1)
         # driver-side exact delta refresh between unfused sweeps
-        for row_dw, row_po, row_pn in zip(
-            out.column("dw").to_pylist(),
-            out.column("dp_old").to_pylist(),
-            out.column("dp_new").to_pylist(),
-        ):
-            for w, po, pn in zip(row_dw, row_po, row_pn):
-                nwp[po, w] -= 1
-                nwp[pn, w] += 1
+        for w, po, pn, n in deltas:
+            nwp[po, w] -= n
+            nwp[pn, w] += n
         import pyarrow as pa
 
         cur = pa.RecordBatch.from_arrays(
@@ -215,13 +193,9 @@ def test_fused_runner_matches_sequential_unfused():
     assert f.column("zs").to_pylist() == cur.column("zs").to_pylist()
     # fused deltas reconstruct the same final counts
     nwp_f = nwp0.copy()
-    for row_dw, row_po, row_pn in zip(
-        f.column("dw").to_pylist(), f.column("dp_old").to_pylist(),
-        f.column("dp_new").to_pylist(),
-    ):
-        for w, po, pn in zip(row_dw, row_po, row_pn):
-            nwp_f[po, w] -= 1
-            nwp_f[pn, w] += 1
+    for w, po, pn, n in f_deltas:
+        nwp_f[po, w] -= n
+        nwp_f[pn, w] += n
     assert np.array_equal(nwp_f, nwp)
 
 
@@ -256,10 +230,11 @@ def test_fused_interpreted_fallback_matches_native(k):
     inside the SAME runner — identical chain, so heterogeneous clusters
     agree, unfused and even mid-block."""
     rb, const, nwp0, P, W = _tiny_problem()
-    a = _sweep_block(rb, native_kernel.load_native(), const, nwp0, P, 0, k)
-    b = _sweep_block(rb, None, const, nwp0, P, 0, k)
-    for col in ("zs", "dw", "dp_old", "dp_new"):
-        assert a.column(col).to_pylist() == b.column(col).to_pylist(), col
+    a, da = _sweep_block(rb, native_kernel.load_native(), const, nwp0, P,
+                         0, k)
+    b, db = _sweep_block(rb, None, const, nwp0, P, 0, k)
+    assert a.column("zs").to_pylist() == b.column("zs").to_pylist()
+    assert da == db
 
 
 @needs_cc
@@ -287,6 +262,7 @@ def test_m3_interpreted_twin_matches_native():
                          use_m3=True)
             for lib_, kern in ((lib, "native"), (None, "native"),
                                (None, "reference"))]
-    for col in ("zs", "dw", "dp_old", "dp_new"):
-        got = [r.column(col).to_pylist() for r in runs]
-        assert got[0] == got[1] == got[2], col
+    got = [r.column("zs").to_pylist() for r, _ in runs]
+    assert got[0] == got[1] == got[2]
+    deltas = [d for _, d in runs]
+    assert deltas[0] == deltas[1] == deltas[2]

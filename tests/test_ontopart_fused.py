@@ -29,6 +29,7 @@ from entitysummarization_spark.models.ontopart import (
     OntoPartConfig,
     _onto_step,
 )
+from test_gibbs_fused import delta_rows
 
 needs_cc = pytest.mark.skipif(
     not native_kernel.native_available(), reason="no C compiler"
@@ -120,13 +121,14 @@ def _tiny_problem():
 
 def _sweep_block(rb, lib, csr, nct, nwc, sweep0, k):
     """One partition's pass through the shared runner: sweeps
-    sweep0..sweep0+k-1 of the tiny problem with the M6 batch sweep."""
+    sweep0..sweep0+k-1 of the tiny problem with the M6 batch sweep.
+    Returns the swept state batch and the pass's delta rows."""
     t_, c_ = nct.shape
     step = _onto_step(lib, csr, nct, nwc, t_, c_, nwc.shape[1],
                       50.0 / t_, 0.01, 0.01, c_)
     out = list(run_sweeps(iter([rb]), step, 11, sweep0, k, LAYOUT))
-    assert len(out) == 1
-    return out[0]
+    assert len(out) in (1, 2)
+    return out[0], delta_rows(out, LAYOUT.deltas)
 
 
 @needs_cc
@@ -138,18 +140,16 @@ def test_fused_runner_matches_sequential_unfused():
     rb, csr, nct0, nwc0, t_, c_, w_ = _tiny_problem()
     lib = native_kernel.load_native()
 
-    f = _sweep_block(rb, lib, csr, nct0, nwc0, 0, 3)  # fused
+    f, f_deltas = _sweep_block(rb, lib, csr, nct0, nwc0, 0, 3)  # fused
 
     cur, nct, nwc = rb, nct0.copy(), nwc0.copy()
     for s in range(3):
-        out = _sweep_block(cur, lib, csr, nct, nwc, s, 1)
-        for row in zip(*(out.column(k).to_pylist()
-                         for k in ("dw", "dto", "dco", "dtn", "dcn"))):
-            for w, to, co, tn, cn in zip(*row):
-                nct[to, co] -= 1
-                nct[tn, cn] += 1
-                nwc[co, w] -= 1
-                nwc[cn, w] += 1
+        out, deltas = _sweep_block(cur, lib, csr, nct, nwc, s, 1)
+        for w, to, co, tn, cn, n in deltas:
+            nct[to, co] -= n
+            nct[tn, cn] += n
+            nwc[co, w] -= n
+            nwc[cn, w] += n
         cur = pa.RecordBatch.from_arrays(
             [out.column("doc_id"), out.column("words"),
              out.column("ts"), out.column("cs")],
@@ -159,13 +159,11 @@ def test_fused_runner_matches_sequential_unfused():
     assert f.column("cs").to_pylist() == cur.column("cs").to_pylist()
     # fused deltas reconstruct the same final counts
     nct_f, nwc_f = nct0.copy(), nwc0.copy()
-    for row in zip(*(f.column(k).to_pylist()
-                     for k in ("dw", "dto", "dco", "dtn", "dcn"))):
-        for w, to, co, tn, cn in zip(*row):
-            nct_f[to, co] -= 1
-            nct_f[tn, cn] += 1
-            nwc_f[co, w] -= 1
-            nwc_f[cn, w] += 1
+    for w, to, co, tn, cn, n in f_deltas:
+        nct_f[to, co] -= n
+        nct_f[tn, cn] += n
+        nwc_f[co, w] -= n
+        nwc_f[cn, w] += n
     np.testing.assert_array_equal(nct_f, nct)
     np.testing.assert_array_equal(nwc_f, nwc)
 
@@ -176,7 +174,9 @@ def test_fused_interpreted_fallback_matches_native(k):
     """lib=None runs the interpreted per-token twin inside the SAME
     runner — identical chain, deltas and state."""
     rb, csr, nct0, nwc0, t_, c_, w_ = _tiny_problem()
-    x = _sweep_block(rb, native_kernel.load_native(), csr, nct0, nwc0, 0, k)
-    y = _sweep_block(rb, None, csr, nct0, nwc0, 0, k)
-    for col in ("ts", "cs", "dw", "dto", "dco", "dtn", "dcn"):
+    x, dx = _sweep_block(rb, native_kernel.load_native(), csr, nct0, nwc0,
+                         0, k)
+    y, dy = _sweep_block(rb, None, csr, nct0, nwc0, 0, k)
+    for col in ("ts", "cs"):
         assert x.column(col).to_pylist() == y.column(col).to_pylist(), col
+    assert dx == dy
