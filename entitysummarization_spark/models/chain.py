@@ -9,19 +9,21 @@ depend on the model:
   - seeded init: one ``mapInArrow`` pass in which each doc draws its
     initial state with its RNG seeded by
     ``oracle.seed_for(base_seed, -1, doc)``;
-  - the exact driver-side counts: the absolute recompute from the state,
-    one explode → groupBy → toPandas job (``count_rows``), and the delta
-    apply from the delta rows a sweep emits;
+  - the exact driver-side counts, by one count path: every pass that
+    writes the state — init, sweep, and the count-only pass of a restore
+    or recompute — also emits counted rows over the layout's
+    ``(items, *state)`` columns, and ``_commit`` adds them through the
+    model's ``_add_counts(cols, n)`` with ``n`` signed;
   - the sweep: broadcast the counts, one ``mapInArrow`` pass through
-    ``run_sweeps``, then ``_commit_sweep`` — one Spark job of one stage
-    (M3 adds its neighbour join);
+    ``run_sweeps``, then ``_commit`` — one Spark job of one stage (M3
+    adds its neighbour join);
   - the run loop (fused blocks where the model allows them), ``close``
     and ``z_state``;
   - the checkpoint / broadcast lifecycle (below).
 
-A model declares its ``Layout`` (key, items, pass-through, state and
-delta columns) and supplies hooks: its per-doc init draw, its batch-sweep
-step, the counts it broadcasts, and the ``np.add.at`` lines that apply
+A model declares its ``Layout`` (key, items, pass-through and state
+columns) and supplies hooks: its per-doc init draw, its batch-sweep
+step, the counts it broadcasts, and the ``np.add.at`` lines that add
 counted rows to its driver store.
 
 The runner. Arrow list columns already hold a flat values buffer plus
@@ -35,11 +37,12 @@ across partitions, exact within one). M1 and M6 run their compiled C
 kernel where it loads and otherwise a bit-identical interpreted twin, so
 a cluster mixing both still produces one chain; M4 and M7 run their
 per-doc kernels over the flat slices (``per_doc``). After the swept
-state rows of each batch the runner yields that batch's delta rows:
-every distinct changed-token row (the layout's delta columns) once, with
-its count over all the block's sweeps. AD-LDA refreshes the global
-counts by a sum of integer deltas, and a sum needs no shuffle: the
-driver collects the delta rows and adds them. A fused block (k > 1,
+state rows of each batch the runner yields that batch's count rows:
+each changed token is an old-assignment row at −1 and a new-assignment
+row at +1, and every distinct signed row appears once with its count
+over all the block's sweeps. AD-LDA refreshes the global counts by a sum
+of integer deltas, and a sum needs no shuffle: the driver collects the
+count rows and adds them. A fused block (k > 1,
 ``sweeps_per_job``) carries the local counts from sweep to sweep and
 counts every sweep's deltas, so the driver reconstructs the exact global
 counts at the block boundary; with one partition it is bit-identical to
@@ -51,14 +54,14 @@ O(n)-deep plan, and (b) keeps every sweep's count broadcast referenced
 for task re-serialization, an unbounded leak at the reference's 500 to
 2000 production sweeps. The discipline:
 
-  - checkpoint each sweep's output lazily; the collect of its delta
-    rows is the action that materializes it AND truncates its lineage
-    (O(1) plan; the sweep's broadcast becomes unreferenced). The state
-    is the output's state rows, projected to the layout's columns;
+  - checkpoint each pass's output lazily; the collect of its count rows
+    is the action that materializes it AND truncates its lineage (O(1)
+    plan; the pass's broadcast becomes unreferenced). The state is the
+    output's state rows, projected to the layout's columns;
   - checkpoint RDDs bypass the CacheManager, so DataFrame.unpersist()
     is a no-op for them. The persisted RDD handle is read off the
     checkpointed Dataset's own plan (a LogicalRDD whose ``rdd`` IS the
-    persisted RDD) and released at the RDD level one sweep later
+    persisted RDD) and released at the RDD level one pass later
     (releasing earlier would destroy live blocks: a checkpointed plan
     cannot recompute). Spark WARNs on every such release; the engine
     raises only that logger (``MapPartitionsRDD``) to ERROR;
@@ -94,36 +97,34 @@ from pyspark.sql import functions as F
 # recomputed after unpersisting" WARN
 LINEAGE_WARN_LOGGER = "org.apache.spark.rdd.MapPartitionsRDD"
 
-# a sweep output's count column: written only on delta rows, null on
-# state rows (a delta row's key is null too, but keys come from input)
+# a pass output's count column: written only on count rows, null on
+# state rows (a count row's key is null too, but keys come from input)
 COUNT = "n"
+LONGS = pa.list_(pa.int64())
 
 
 class Layout(NamedTuple):
     """A sampler's state columns. ``key`` (long) partitions the state and
     seeds each doc's RNG; every other column is array<long>: ``items``
     (the tokens), ``carry`` (per-doc columns a sweep passes through) and
-    ``state`` (token-aligned, rewritten by every sweep). ``deltas`` name
-    the long columns of a sweep's delta rows (one changed-token row
-    each)."""
+    ``state`` (token-aligned, rewritten by every sweep). The counts are
+    kept over ``(items, *state)``."""
 
     key: str
     items: str
     state: tuple[str, ...]
-    deltas: tuple[str, ...]
     carry: tuple[str, ...] = ()
 
     @property
     def columns(self) -> tuple[str, ...]:
         return (self.key, self.items, *self.carry, *self.state)
 
-    def schema(self, deltas: bool = False) -> str:
-        """The state's schema; ``deltas`` appends the sweep output's
-        delta and count columns."""
+    def schema(self) -> str:
+        """A pass output's schema: the state's columns, then ``COUNT``."""
         return ", ".join(
             [f"{self.key} long"]
             + [f"{c} array<long>" for c in self.columns[1:]]
-            + [f"{c} long" for c in (*self.deltas, COUNT) if deltas]
+            + [f"{COUNT} long"]
         )
 
 
@@ -177,40 +178,66 @@ def _list(off: np.ndarray, vals: np.ndarray) -> pa.ListArray:
 
 
 def _batch(blk: Block, layout: Layout, lists: list, names) -> pa.RecordBatch:
-    """The input's key, items and carry columns, then ``lists``."""
+    """The input's key, items and carry columns, then ``lists``. The
+    input's types are normalized (a source's lists may have non-null
+    values), so these rows and the count rows share one schema."""
     rb = blk.rb
     return pa.RecordBatch.from_arrays(
         [rb.column(layout.key).cast(pa.int64())]
-        + [rb.column(c) for c in (layout.items, *layout.carry)] + lists,
+        + [rb.column(c).cast(LONGS) for c in (layout.items, *layout.carry)]
+        + lists,
         names=list(names),
     )
 
 
-def _emit(blk: Block, per_sweep: list, layout: Layout):
-    """A batch's swept state rows (null deltas and count), then its delta
-    rows (null key, items, carry and state): each distinct changed-token
-    row of ``per_sweep`` (one tuple of flat delta columns per sweep) once,
-    with its count over all those sweeps."""
-    names = [*layout.columns, *layout.deltas, COUNT]
+def _emit(blk: Block, layout: Layout, counted: list):
+    """A batch's state rows (null count), then its count rows: each
+    distinct row of ``counted`` — (sign, flat (items, *state) columns)
+    pairs — once, its count the signed number of times it occurs. A count
+    row has a null key and carry and one-value lists as items and state;
+    the sign is part of the row, so +1 and −1 rows never cancel."""
+    names = [*layout.columns, COUNT]
     off32 = blk.indptr.astype(np.int32)
     yield _batch(
         blk, layout,
         [_list(off32, s) for s in blk.state]
-        + [pa.nulls(len(blk.keys), pa.int64())] * (len(layout.deltas) + 1),
+        + [pa.nulls(len(blk.keys), pa.int64())],
         names,
     )
-    rows = np.concatenate([np.column_stack(cols) for cols in per_sweep])
+    rows = np.concatenate([
+        np.column_stack([np.full(len(cols[0]), sign), *cols])
+        for sign, cols in counted
+    ])
     if not len(rows):
         return
-    rows, n = np.unique(rows, axis=0, return_counts=True)
+    # np.unique(rows, axis=0, return_counts=True), ~4× faster: lexsort and
+    # run starts instead of a sort of the rows as one void dtype
+    rows = rows[np.lexsort(rows.T[::-1])]
+    new = np.ones(len(rows), dtype=bool)
+    new[1:] = (rows[1:] != rows[:-1]).any(axis=1)
+    starts = np.flatnonzero(new)
+    rows, n = rows[starts], np.diff(starts, append=len(rows))
+    sign, items, *state = np.ascontiguousarray(rows.T)
     m = len(n)
+    one = np.arange(m + 1, dtype=np.int32)
     yield pa.RecordBatch.from_arrays(
-        [pa.nulls(m, pa.int64())]
-        + [pa.nulls(m, pa.list_(pa.int64()))] * (len(layout.columns) - 1)
-        + [pa.array(c) for c in np.ascontiguousarray(rows.T)]
-        + [pa.array(n)],
+        [pa.nulls(m, pa.int64()), _list(one, items)]
+        + [pa.nulls(m, LONGS)] * len(layout.carry)
+        + [_list(one, s) for s in state]
+        + [pa.array(sign * n)],
         names=names,
     )
+
+
+def run_counts(
+    batches: Iterator[pa.RecordBatch], layout: Layout
+) -> Iterator[pa.RecordBatch]:
+    """The count-only pass over one partition: each batch's state rows as
+    they are, then its (items, *state) rows at +1."""
+    for rb in batches:
+        if rb.num_rows:
+            blk = _block(rb, layout)
+            yield from _emit(blk, layout, [(1, (blk.ws, *blk.state))])
 
 
 def run_init(
@@ -221,7 +248,8 @@ def run_init(
 ) -> Iterator[pa.RecordBatch]:
     """The seeded init pass over one partition: per doc,
     ``draw(rng, items, out)`` fills the doc's slices ``out`` of the state
-    columns, with ``rng`` seeded by ``seed_for(base_seed, -1, doc)``."""
+    columns, with ``rng`` seeded by ``seed_for(base_seed, -1, doc)``.
+    Each batch's (items, *state) rows follow at +1."""
     # one RandomState reseeded per doc: rng.seed(n) gives the same state
     # as RandomState(n) without its ~180 µs construction (67× a reseed)
     rng = np.random.RandomState(0)
@@ -236,9 +264,8 @@ def run_init(
             lo, hi = bounds[j], bounds[j + 1]
             rng.seed(int(seeds[j]))
             draw(rng, blk.ws[lo:hi], [s[lo:hi] for s in state])
-        off32 = blk.indptr.astype(np.int32)
-        yield _batch(blk, layout, [_list(off32, s) for s in state],
-                     layout.columns)
+        yield from _emit(blk._replace(state=state), layout,
+                         [(1, (blk.ws, *state))])
 
 
 def run_sweeps(
@@ -252,23 +279,28 @@ def run_sweeps(
     """Sweeps ``sweep0 .. sweep0+k-1`` over one partition's batches.
 
     ``step(blk, seeds)`` sweeps a batch in place and returns its flat
-    changed-token columns. Output batches have the layout's columns, then
-    its delta columns and ``COUNT`` (see ``_emit``); the input's key,
-    items and carry columns pass through unchanged."""
+    changed-token columns ``(items, *old state, *new state)``. Output
+    batches have the layout's columns and ``COUNT`` (see ``_emit``); the
+    input's key, items and carry columns pass through unchanged."""
+    s = len(layout.state)
+
+    def moves(ch):
+        return [(-1, (ch[0], *ch[1:1 + s])), (1, (ch[0], *ch[1 + s:]))]
+
     if k == 1:
         for rb in batches:
             if rb.num_rows:
                 blk = _block(rb, layout)
                 seeds = doc_seeds(base_seed, sweep0, blk.keys)
-                yield from _emit(blk, [step(blk, seeds)], layout)
+                yield from _emit(blk, layout, moves(step(blk, seeds)))
         return
     blocks = [_block(rb, layout) for rb in batches if rb.num_rows]
-    per_sweep: list[list] = [[] for _ in blocks]
+    counted: list[list] = [[] for _ in blocks]
     for sweep in range(sweep0, sweep0 + k):
-        for blk, deltas in zip(blocks, per_sweep):
-            deltas.append(step(blk, doc_seeds(base_seed, sweep, blk.keys)))
-    for blk, deltas in zip(blocks, per_sweep):
-        yield from _emit(blk, deltas, layout)
+        for blk, rows in zip(blocks, counted):
+            rows += moves(step(blk, doc_seeds(base_seed, sweep, blk.keys)))
+    for blk, rows in zip(blocks, counted):
+        yield from _emit(blk, layout, rows)
 
 
 def per_doc(sweep_doc: Callable, n_cols: int):
@@ -290,19 +322,6 @@ def per_doc(sweep_doc: Callable, n_cols: int):
     return step
 
 
-def count_rows(df: DataFrame, cols: tuple[str, ...]) -> list[np.ndarray]:
-    """One job: explode the token-aligned array columns ``cols`` of
-    ``df`` together and count each distinct row. Returns one int64 array
-    per column, then the counts."""
-    pdf = (
-        df.select(F.explode(F.arrays_zip(*cols)).alias("x"))
-        .groupBy(*[F.col(f"x.{c}").alias(c) for c in cols])
-        .count()
-        .toPandas()
-    )
-    return [pdf[c].to_numpy(np.int64) for c in (*cols, "count")]
-
-
 def quiet_lineage_warn(spark: SparkSession) -> None:
     """Raise only the per-sweep lineage WARN's logger to ERROR."""
     jvm = spark.sparkContext._jvm
@@ -322,9 +341,8 @@ class Chain:
         broadcast for it;
       - ``_sweeper()`` → (payload, make): ``make(payload)`` builds the
         batch step on an executor from this sweep's broadcast payload;
-      - ``_reset_counts()``; ``_add_counts(cols, n)`` adds ``n`` at each
-        counted (items, *state) row; ``_add_deltas(cols, n)`` applies
-        ``n`` moves per counted row of the delta columns.
+      - ``_reset_counts()``; ``_add_counts(cols, n)`` adds the signed
+        ``n`` at each counted (items, *state) row.
     """
 
     def __init__(self, spark: SparkSession, cfg, layout: Layout):
@@ -332,11 +350,10 @@ class Chain:
         self.cfg = cfg
         self.layout = layout
         self.state: DataFrame | None = None
-        self._sweep_out: DataFrame | None = None  # last sweep's raw output
         self.sweeps_done = 0
+        self.last_sweep_changes = 0  # tokens the last sweep (block) moved
         self._const_bc = None  # a sweep-constant broadcast, if any
         self._state_handles: list = []
-        self._pending_release: list = []
         self._bc_prev = None
         quiet_lineage_warn(spark)
 
@@ -363,44 +380,25 @@ class Chain:
         def init_fn(batches):
             yield from run_init(batches, partial(draw, bc.value), seed, layout)
 
-        # localCheckpoint (eager) both materializes the state AND truncates
-        # its lineage, so the init broadcast is immediately destroyable
-        self.state = self._local_checkpoint(
+        self._reset_counts()
+        self._commit(
             self._source().repartition(cfg.n_partitions, layout.key)
             .sortWithinPartitions(layout.key)
-            .mapInArrow(init_fn, layout.schema()),
-            reliable=cfg.reliable_checkpoint,
+            .mapInArrow(init_fn, layout.schema())
         )
-        self._refresh_global_counts()
+        # the commit's collect truncated the lineage: bc is unreferenced
         self._destroy_broadcast_now(bc)
         self.sweeps_done = 0
 
     def _refresh_global_counts(self) -> None:
-        """Absolute recompute from the state: the init / restore path and
-        the arbiter of the delta apply."""
+        """Absolute recompute: one count-only pass over the current state,
+        which it also re-checkpoints — the restore path and the arbiter of
+        the sweeps' signed count rows."""
+        layout = self.layout
         self._reset_counts()
-        *cols, n = count_rows(
-            self.state, (self.layout.items, *self.layout.state)
-        )
-        self._add_counts(cols, n)
-
-    def _apply_count_deltas(self) -> None:
-        """Refresh the counts from the sweep's delta rows only.
-
-        Exact by induction on integer arithmetic: every partition's local
-        updates are (−1 at the old assignment, +1 at the new) per changed
-        token, and summing those over all partitions on top of exact
-        previous counts gives exactly what a full recompute from the new
-        state gives (the parity tests compare against the oracles). It
-        aggregates only tokens whose assignment changed, which collapses
-        as the chain converges. One collect of the lazily checkpointed
-        sweep output, no exchange: it is also the action that materializes
-        and truncates the new state."""
-        cols = (*self.layout.deltas, COUNT)
-        pdf = (self._sweep_out.where(F.col(COUNT).isNotNull())
-               .select(*cols).toPandas())
-        *deltas, n = [pdf[c].to_numpy(np.int64) for c in cols]
-        self._add_deltas(deltas, n)
+        self._commit(self.state.mapInArrow(
+            partial(run_counts, layout=layout), layout.schema()
+        ))
 
     # ---- sweep / run ----
     def sweep(self, n_fused: int = 1) -> None:
@@ -419,15 +417,18 @@ class Chain:
             yield from run_sweeps(batches, make(bc.value), seed, sweep0,
                                   n_fused, layout)
 
-        old = self.state
         # partitioning by key is already established and mapInArrow
         # preserves it
-        swept = (
-            self._sweep_source(old)
+        n = self._commit(
+            self._sweep_source(self.state)
             .sortWithinPartitions(layout.key)
-            .mapInArrow(sweep_fn, layout.schema(deltas=True))
+            .mapInArrow(sweep_fn, layout.schema())
         )
-        self._commit_sweep(old, swept, bc, n_fused)
+        self.sweeps_done += n_fused
+        # each changed token is one +1 row
+        self.last_sweep_changes = int(n[n > 0].sum())
+        # bc is destroyed one sweep later, out of caution
+        self._retire_broadcast(bc)
 
     def run(self, n_sweeps: int) -> None:
         if self.state is None:
@@ -478,56 +479,42 @@ class Chain:
             return None
         return plan.rdd()
 
-    def _local_checkpoint(
-        self, df: DataFrame, reliable: bool = False, eager: bool = True
-    ) -> DataFrame:
-        """``eager=False`` (local path only) defers materialization to the
-        caller's next action — the sweep uses this to fuse checkpoint
-        materialization into the collect of its delta rows, one job per
-        sweep instead of two. localCheckpoint persists its blocks during
-        whichever job first computes the RDD and truncates lineage at
-        that job's end, so the steady state is identical; the caller MUST
-        run an action over the returned state before releasing the
-        previous one. Reliable checkpoints stay eager: a non-eager
-        ``Dataset.checkpoint`` recomputes the RDD a second time to write
-        it unless it is already persisted."""
-        if reliable:
-            out = df.checkpoint(eager=True)  # needs setCheckpointDir
+    def _commit(self, out: DataFrame) -> np.ndarray:
+        """The end of every pass that writes the state. ``out`` is
+        checkpointed lazily and its state rows become the state; the
+        collect of its count rows, added through ``_add_counts``, is the
+        one action: it materializes the new state and truncates its
+        lineage (one job per pass). Only then is the old state released,
+        since the pass read its blocks. Returns the signed counts.
+
+        localCheckpoint persists its blocks during whichever job first
+        computes the RDD and truncates lineage at that job's end. Reliable
+        checkpoints stay eager: a non-eager ``Dataset.checkpoint``
+        recomputes the RDD a second time to write it unless it is already
+        persisted."""
+        if self.cfg.reliable_checkpoint:
+            out = out.checkpoint(eager=True)  # needs setCheckpointDir
         else:
-            out = df.localCheckpoint(eager=eager)
+            out = out.localCheckpoint(eager=False)
+        # the raw checkpointed output's handle is the one released after
+        # the next pass: the filtered state's plan is not a LogicalRDD
         handle = self._checkpointed_rdd_handle(out)
-        self._pending_release = self._state_handles
+        pending = self._state_handles
         self._state_handles = [handle] if handle is not None else []
-        return out
-
-    def _commit_sweep(self, old: DataFrame, swept: DataFrame, bc,
-                      n_sweeps: int = 1) -> None:
-        """The end of a sweep: checkpoint ``swept`` lazily, let the collect
-        of its delta rows be the action that materializes it (one job per
-        sweep), keep its state rows as the state, then release the old
-        state — only now, since the sweep read its blocks — and retire the
-        previous sweep's broadcast (``bc`` is destroyed one sweep later,
-        out of caution)."""
-        # the handle of the raw checkpointed output is the one released
-        # next sweep: the filtered state's plan is not a LogicalRDD
-        self._sweep_out = self._local_checkpoint(
-            swept, reliable=self.cfg.reliable_checkpoint, eager=False,
-        )
-        self.state = (self._sweep_out.where(F.col(COUNT).isNull())
+        self.state = (out.where(F.col(COUNT).isNull())
                       .select(*self.layout.columns))
-        self.sweeps_done += n_sweeps
-        self._apply_count_deltas()
-        self._release_old_state(old)
-        self._retire_broadcast(bc)
-
-    def _release_old_state(self, old: DataFrame) -> None:
-        old.unpersist()  # covers a plain-persisted state (restore path)
-        for h in self._pending_release:
+        counted = (self.layout.items, *self.layout.state)
+        pdf = (out.where(F.col(COUNT).isNotNull())
+               .select(*[F.col(c)[0].alias(c) for c in counted], COUNT)
+               .toPandas())
+        *cols, n = [pdf[c].to_numpy(np.int64) for c in (*counted, COUNT)]
+        self._add_counts(cols, n)
+        for h in pending:
             try:
                 h.unpersist(False)
             except Exception:  # noqa: BLE001 — already released is fine
                 pass
-        self._pending_release = []
+        return n
 
     def _retire_broadcast(self, bc) -> None:
         """Destroy the PREVIOUS sweep's broadcast and remember ``bc`` as

@@ -52,8 +52,8 @@ Distribution is the AD-LDA scheme of every sampler here, on the shared
 engine (models/chain.py): token state partitioned by doc_id (doc-local
 Ned row exact), global Nte/Ne/sparse-Nwte + the E×T α matrix broadcast
 per sweep and updated partition-locally (stale across partitions within
-a sweep), then refreshed exactly from the counted changed-token rows the
-sweep pass emits (one job, no shuffle). θ/α/SR smoothing are driver-side
+a sweep), then refreshed exactly from the signed count rows the sweep pass
+emits (one job, no shuffle). θ/α/SR smoothing are driver-side
 E×T NumPy shared verbatim with the oracle and run around each sweep
 (``_schedule``). RNG is seeded per
 (base_seed, sweep, doc) with a fixed draw order (init: one randint(T)
@@ -83,11 +83,9 @@ from .chain import Chain, Layout, per_doc
 from .gibbs import tokens_from_corpus
 from .oracle import doc_token_words, rng_for
 
-# each doc carries its candidate entities through every sweep; a sweep
-# additionally emits the tokens whose (entity, topic) assignment CHANGED,
-# counted, so the count refresh adds deltas over changed tokens only
-LAYOUT = Layout("doc_id", "words", ("es", "zs"),
-                ("dw", "deo", "dto", "den", "dtn"), carry=("cands",))
+# each doc carries its candidate entities through every sweep; the
+# counts are kept over (word, entity, topic)
+LAYOUT = Layout("doc_id", "words", ("es", "zs"), carry=("cands",))
 
 # sparse Nwte: word -> {(entity, topic): count}; nnz <= corpus tokens
 SparseNwte = dict[int, dict[tuple[int, int], int]]
@@ -165,7 +163,7 @@ def _sweep_doc(
     W: int,
 ) -> tuple[list[int], list[int], list[int], list[int], list[int]]:
     """One Gibbs pass over a doc's tokens; returns the changed-token log
-    (w, e_old, t_old, e_new, t_new) for the delta count refresh."""
+    (w, e_old, t_old, e_new, t_new) the sweep's count rows come from."""
     T = nte.shape[1]
     pos = {int(e): i for i, e in enumerate(cands)}
     ned_c = np.zeros(len(cands), dtype=np.int64)
@@ -562,11 +560,6 @@ class DistributedEntLda2(Chain):
                 sub[key] = c
             else:
                 sub.pop(key, None)
-
-    def _add_deltas(self, cols, n) -> None:
-        w, eo, to, en, tn = cols
-        self._add_counts([w, eo, to], -n)
-        self._add_counts([w, en, tn], n)
 
     def _sweeper(self):
         cfg = self.cfg

@@ -20,8 +20,8 @@ Scale: only P×W counts ever reach the driver (bounded by the F10
 vocabulary prune); token state is never collected. The chain runs on the
 shared engine (models/chain.py), which owns init, the count refresh, the
 sweep job, the run loop and the checkpoint/broadcast lifecycle: per
-sweep one mapInArrow pass that also emits its aggregated count deltas,
-one Spark job of one stage (no shuffle — partitioning by doc_id is
+sweep one mapInArrow pass that also emits its signed count rows, one
+Spark job of one stage (no shuffle — partitioning by doc_id is
 established once; M3 adds its neighbour join). This module supplies the
 M1 layout, init draw, kernels and count store.
 Checkpoint/resume per north_rule: plans/checkpoint.py.
@@ -61,10 +61,8 @@ from . import native_kernel
 from .chain import Chain, Layout, per_doc
 from .oracle import _sweep_doc_reference, alpha_from_neighbors
 
-# one row per doc; a sweep additionally emits the tokens whose predicate
-# CHANGED (word, old pred, new pred), counted, so the count refresh adds
-# deltas over changed tokens only
-LAYOUT = Layout("doc_id", "words", ("zs",), ("dw", "dp_old", "dp_new"))
+# one row per doc; the counts are kept over (word, pred)
+LAYOUT = Layout("doc_id", "words", ("zs",))
 
 
 def _sweep_doc_fast(
@@ -414,12 +412,6 @@ class DistributedGibbs(Chain):
         w, p = cols
         np.add.at(self.nwp, (p, w), n)
         self.np_ = self.nwp.sum(axis=1)
-
-    def _add_deltas(self, cols, n) -> None:
-        w, po, pn = cols
-        self._add_counts([w, po], -n)
-        self._add_counts([w, pn], n)
-        self.last_sweep_changes = int(n.sum())
 
     def _can_fuse(self) -> bool:
         return self.kernel == "native" and self.doc_sr is None

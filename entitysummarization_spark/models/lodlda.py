@@ -68,8 +68,8 @@ engine (models/chain.py):
     token-aligned columns (``cs0…``), so the engine's runner and count
     refresh treat it like any other state column;
   - per sweep the global matrices broadcast out, each partition sweeps
-    its users against stale copies and emits its counted changed-record
-    rows in the same pass, and the driver refreshes exactly from them
+    its users against stale copies and emits its signed count rows in
+    the same pass, and the driver refreshes exactly from them
     (integer-delta induction, arbitrated against the absolute recompute
     by the parity tests);
   - θ (U×T) is never materialized on the driver: ``theta_df`` computes
@@ -160,7 +160,7 @@ def _sweep_user(
     FEAT: int,
 ) -> tuple[list[int], list[int], list[int], list[np.ndarray]]:
     """One Gibbs pass over a user's records; returns the changed-record
-    log (m, t_old, t_new, old features) for the delta count refresh.
+    log (m, t_old, t_new, old features) the sweep's count rows come from.
     Nu[u] with one record removed is len-1 throughout (the reference's
     paired Nu ∓1, :694/:697)."""
     nu_m = len(movies) - 1
@@ -404,7 +404,8 @@ def _m7_init(payload, rng, ms, out):
 def _m7_step(counts, T, M, FEAT, alpha, beta, gamma):
     """The M7 batch-sweep callable for ``chain.run_sweeps``: _sweep_user
     per user over the flat slices, against partition-local working
-    copies of the broadcast counts (AD-LDA)."""
+    copies of the broadcast counts (AD-LDA). A changed record's new
+    context features are its movie's, ``ctx[m]``."""
     nmt0, nct0, ctx = counts
     nmt, nct = nmt0.copy(), nct0.copy()
     nt_m, nt_c = nmt.sum(axis=1), nct.sum(axis=1)
@@ -424,10 +425,10 @@ def _m7_step(counts, T, M, FEAT, alpha, beta, gamma):
         new = np.stack(cs, axis=1)
         for k, c in enumerate(cs_cols):
             c[lo:hi] = new[k]
-        return (m, to, tn,
-                *np.asarray(co, dtype=np.int64).reshape(-1, C).T)
+        return (m, to, *np.asarray(co, dtype=np.int64).reshape(-1, C).T,
+                tn, *ctx[m].T)
 
-    return per_doc(sweep_user, 3 + C)
+    return per_doc(sweep_user, 3 + 2 * C)
 
 
 class DistributedLodLda(_Counts, Chain):
@@ -447,12 +448,9 @@ class DistributedLodLda(_Counts, Chain):
         movie_ctx: DataFrame,     # movie_id, slot, feature_id
         cfg: LodLdaConfig,
     ):
-        C = range(cfg.n_contexts)
-        # per changed record: movie, old topic, new topic, OLD context
-        # features — the new ones are ctx(movie), known driver-side
         super().__init__(spark, cfg, Layout(
-            "user_id", "movies", ("zs", *(f"cs{k}" for k in C)),
-            ("dm", "dto", "dtn", *(f"dco{k}" for k in C)),
+            "user_id", "movies",
+            ("zs", *(f"cs{k}" for k in range(cfg.n_contexts))),
         ))
         self.ratings = ratings
         rows = [
@@ -483,11 +481,6 @@ class DistributedLodLda(_Counts, Chain):
         np.add.at(self.nmt, (t, m), n)
         for f in cs:
             np.add.at(self.nct, (t, f), n)
-
-    def _add_deltas(self, cols, n) -> None:
-        m, to, tn, *co = cols
-        self._add_counts([m, to, *co], -n)
-        self._add_counts([m, tn, *self.ctx[m].T], n)
 
     def _sweeper(self):
         cfg = self.cfg

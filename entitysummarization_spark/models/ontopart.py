@@ -38,8 +38,7 @@ Distribution is the AD-LDA scheme of every sampler here, on the shared
 engine (models/chain.py): token state partitioned by doc_id (doc-local
 Ntd exact), global Nct/Nwc broadcast per sweep and updated
 partition-locally (stale across partitions), then refreshed exactly from
-the counted changed-token rows the sweep pass emits (one job, no
-shuffle). RNG is seeded per (base_seed, sweep, doc)
+the signed count rows the sweep pass emits (one job, no shuffle). RNG is seeded per (base_seed, sweep, doc)
 with a fixed draw order (init: one randint for t then one for c per
 token; sweep: one rand per token), so a 1-partition run is bit-identical
 to the NumPy oracle below.
@@ -62,11 +61,8 @@ from .chain import Chain, Layout, per_doc
 from .gibbs import tokens_from_corpus
 from .oracle import rng_for
 
-# a sweep additionally emits the tokens whose (topic, class) assignment
-# CHANGED, counted, so the count refresh adds deltas over changed tokens
-# only
-LAYOUT = Layout("doc_id", "words", ("ts", "cs"),
-                ("dw", "dto", "dco", "dtn", "dcn"))
+# one row per doc; the counts are kept over (word, topic, class)
+LAYOUT = Layout("doc_id", "words", ("ts", "cs"))
 
 
 @dataclass
@@ -328,11 +324,6 @@ class DistributedOntoPart(Chain):
         w, t, c = cols
         np.add.at(self.nct, (t, c), n)
         np.add.at(self.nwc, (c, w), n)
-
-    def _add_deltas(self, cols, n) -> None:
-        w, to, co, tn, cn = cols
-        self._add_counts([w, to, co], -n)
-        self._add_counts([w, tn, cn], n)
 
     def _sweeper(self):
         cfg, max_cls = self.cfg, self._max_cls

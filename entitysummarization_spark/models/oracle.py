@@ -94,7 +94,7 @@ def _sweep_doc_reference(
     (EntSumModel.java:133-192 semantics). One rng.rand() per token, CDF
     over the word's candidate predicates, in-place count updates. Mutates
     zs/nd/nwp/np_; returns the changed-token lists (word, old pred, new
-    pred) for the delta-based global-count refresh."""
+    pred) the sweep's signed count rows come from."""
     ndoc = len(ws)
     use_m3 = av is not None
     ch_w: list = []
@@ -258,7 +258,7 @@ class GibbsOracle:
                     self.lam, self.sum_lam_beta, b, a, av, a_sum,
                     rng_for(self.base_seed, sweep_idx, d),
                 )
-        # exact global refresh from the merged z-state (gibbs.py
+        # exact global refresh from the merged z-state (the chain's
         # _refresh_global_counts analog)
         nwp_g = np.zeros((P, self.W), dtype=np.int64)
         for d in s.doc_ids:

@@ -4,11 +4,14 @@ The reference's resume story is file-rename markers (`*_done`,
 PatternMatchingMachine.java:2570) plus Java-serialized matrices
 (EntSumModel.java:598-701). Ours: the sampler's z-state (one row per doc)
 is written to a Parquet checkpoint every k sweeps together with a lineage
-table; resume reads the latest checkpoint, rebuilds global counts exactly
-from the z-state (they are a pure function of it), and continues the
-sweep schedule. Because RNG is seeded per (base_seed, sweep, doc),
-run(10) and run(5)+checkpoint+resume+run(5) on one partition produce
-bit-identical states.
+table and the chain's full config; resume reads the latest checkpoint
+and ends in the chain's count-only pass: one job that checkpoints the
+z-state and rebuilds the global counts exactly from it (they are a pure
+function of it), then continues the sweep schedule. Because RNG is
+seeded per (base_seed, sweep, doc), run(10) and
+run(5)+checkpoint+resume+run(5) on one partition produce bit-identical
+states. A checkpoint records whether the chain is M3 (SR-smoothed α),
+and a resume that does not pass the same ``doc_sr`` choice is refused.
 """
 
 from __future__ import annotations
@@ -28,11 +31,7 @@ def save_checkpoint(gibbs: DistributedGibbs, path: str) -> str:
     overwrite (re-running a failed save is safe)."""
     sweep = gibbs.sweeps_done
     d = os.path.join(path, f"sweep={sweep:05d}")
-    # base columns only: a sweep's delta columns are already aggregated
-    # into the driver counts and would only bloat the checkpoint
-    gibbs.state.select("doc_id", "words", "zs").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(d, "state"))
+    gibbs.state.write.mode("overwrite").parquet(os.path.join(d, "state"))
     lineage = gibbs.state.groupBy(F.spark_partition_id().alias("partition_id")).agg(
         F.count("*").alias("n_docs"),
         F.sum(F.size("words")).alias("n_tokens"),
@@ -40,7 +39,9 @@ def save_checkpoint(gibbs: DistributedGibbs, path: str) -> str:
     lineage.write.mode("overwrite").parquet(os.path.join(d, "lineage"))
     # the full config: a resume must continue the chain under exactly the
     # settings it was sampled with (λ default, ε, fusion, checkpointing)
-    meta = {"sweeps_done": sweep, "config": dataclasses.asdict(gibbs.cfg)}
+    # and with or without M3's SR neighbours
+    meta = {"sweeps_done": sweep, "config": dataclasses.asdict(gibbs.cfg),
+            "m3": gibbs.doc_sr is not None}
     tmp = os.path.join(d, "_meta.json.tmp")
     with open(tmp, "w") as f:
         json.dump(meta, f)
@@ -66,25 +67,32 @@ def load_checkpoint(
     obj_pred,
     lam_df,
     kernel: str | None = None,
+    doc_sr=None,
 ) -> DistributedGibbs:
     """Rebuild a DistributedGibbs positioned at the checkpointed sweep.
 
     ``kernel`` overrides the checkpoint's recorded kernel — both kernels
     are bit-identical, so a chain checkpointed under one may resume under
-    the other; test_gibbs.py asserts the cross-kernel resume equality."""
+    the other; test_gibbs.py asserts the cross-kernel resume equality.
+    ``doc_sr`` is the M3 SR edge list the chain was built with; it must
+    be given exactly when the checkpoint is an M3 chain's."""
     with open(os.path.join(ckpt_dir, "meta.json")) as f:
         meta = json.load(f)
+    m3 = meta.get("m3", False)
+    if m3 != (doc_sr is not None):
+        raise ValueError(
+            f"{ckpt_dir} holds {'an M3' if m3 else 'a non-M3'} chain: "
+            "pass doc_sr exactly when resuming an M3 chain"
+        )
     cfg = GibbsConfig(**meta["config"])
     if kernel is not None:
         cfg = dataclasses.replace(cfg, kernel=kernel)
-    g = DistributedGibbs(spark, corpus, obj_pred, lam_df, cfg)
-    state = spark.read.parquet(os.path.join(ckpt_dir, "state"))
+    g = DistributedGibbs(spark, corpus, obj_pred, lam_df, cfg, doc_sr=doc_sr)
     g.state = (
-        state.repartition(cfg.n_partitions, "doc_id")
+        spark.read.parquet(os.path.join(ckpt_dir, "state"))
+        .repartition(cfg.n_partitions, "doc_id")
         .sortWithinPartitions("doc_id")
-        .persist()
     )
-    g.state.count()
     g._refresh_global_counts()
     g.sweeps_done = meta["sweeps_done"]
     return g

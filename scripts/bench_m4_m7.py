@@ -12,7 +12,7 @@ Prints one JSON line per model.
 Sizes are chosen for the models' very different per-unit cost: an M4
 token draws over a |cands|x T grid with a sparse-Nwte slice rebuild
 (the heaviest interpreted kernel in the repo), an M7 record draws one
-T-vector — so M4 runs ~200k tokens and M7 ~1M records.
+T-vector — so M4 runs ~300k tokens and M7 ~1M records.
 """
 
 from __future__ import annotations

@@ -1,7 +1,9 @@
-"""The shared chain engine (models/chain.py): every sweep is one Spark job
-of one stage, every sampler destroys its broadcasts on close(), and the
-per-sweep lineage WARN is silenced."""
+"""The shared chain engine (models/chain.py): every sweep and every count
+recompute is one Spark job of one stage, every sampler reports the tokens
+its last sweep changed, every sampler destroys its broadcasts on close(),
+and the per-sweep lineage WARN is silenced."""
 
+import numpy as np
 import pytest
 
 from entitysummarization_spark.fixtures.samplers import (
@@ -87,6 +89,19 @@ def _m7(spark):
 SAMPLERS = {"m1": _m1, "m4": _m4, "m6": _m6, "m7": _m7}
 
 
+def _assert_one_job_of_one_stage(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert len(jobs) == 1, jobs
+    assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1
+
+
 @pytest.mark.parametrize(
     "name,k", [("m1", 1), ("m1", 2), ("m4", 1), ("m6", 1), ("m7", 1)],
     ids=["m1", "m1-fused2", "m4", "m6", "m7"],
@@ -96,17 +111,44 @@ def test_sweep_is_one_job_of_one_stage(spark, name, k):
     no shuffle: the whole sweep, unfused or fused, is one job."""
     m = SAMPLERS[name](spark)
     m.init_state()
-    sc = spark.sparkContext
-    group = f"one-job-sweep-{name}-{k}"
-    sc.setJobGroup(group, "one sweep")
-    try:
-        m.sweep(n_fused=k)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    tracker = sc.statusTracker()
-    jobs = tracker.getJobIdsForGroup(group)
-    assert len(jobs) == 1, jobs
-    assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1
+    _assert_one_job_of_one_stage(spark, f"one-job-sweep-{name}-{k}",
+                                 lambda: m.sweep(n_fused=k))
+    m.close()
+
+
+@pytest.mark.parametrize("name", sorted(SAMPLERS))
+def test_count_refresh_is_one_job_of_one_stage(spark, name):
+    """The absolute recompute is a count-only pass that emits its own
+    count rows, so it needs no shuffle either."""
+    m = SAMPLERS[name](spark)
+    m.init_state()
+    _assert_one_job_of_one_stage(spark, f"one-job-refresh-{name}",
+                                 m._refresh_global_counts)
+    m.close()
+
+
+def _token_states(m) -> dict:
+    """key → int64[n_tokens, n_state columns], from ``z_state()``."""
+    return {
+        k: np.column_stack([np.asarray(x) for x in
+                            (rec if isinstance(rec, tuple) else (rec,))])
+        for k, rec in m.z_state().items()
+    }
+
+
+@pytest.mark.parametrize("name", sorted(SAMPLERS))
+def test_last_sweep_changes(spark, name):
+    """Every sampler reports how many tokens its last sweep moved."""
+    m = SAMPLERS[name](spark)
+    m.init_state()
+    before = _token_states(m)
+    m.sweep()
+    after = _token_states(m)
+    assert set(before) == set(after)
+    changed = sum(int((before[k] != after[k]).any(axis=1).sum())
+                  for k in before)
+    assert changed > 0
+    assert m.last_sweep_changes == changed
     m.close()
 
 

@@ -93,14 +93,27 @@ def _assert_one_partition_bit_parity(spark, m4_inputs):
 
 
 def test_m4_delta_refresh_matches_absolute(spark, m4_inputs):
-    """The per-sweep integer-delta refresh must equal the absolute
-    explode-and-aggregate recompute (exactness by induction)."""
+    """The per-sweep integer-delta refresh must equal a NumPy recount
+    from the z-state and the absolute count-only recompute (exactness by
+    induction)."""
     corpus_df, doc_ent = m4_inputs
     cfg = EntLda2Config(n_topics=T, n_entities=E, n_words=W, n_partitions=3)
     dist = DistributedEntLda2(spark, corpus_df, doc_ent, cfg)
     dist.run(SWEEPS)
     nte_d, ne_d = dist.nte.copy(), dist.ne.copy()
     nwte_d = {w: dict(s) for w, s in dist.nwte.items()}
+    # a NumPy recount from the z-state, independent of the chain engine
+    words = dict(dist.state.select("doc_id", "words").collect())
+    nte_re = np.zeros((E, T), dtype=np.int64)
+    nwte_re: dict = {}
+    for d, (es, zs) in dist.z_state().items():
+        np.add.at(nte_re, (es, zs), 1)
+        for w, e, t in zip(words[d], es.tolist(), zs.tolist()):
+            sub = nwte_re.setdefault(w, {})
+            sub[(e, t)] = sub.get((e, t), 0) + 1
+    np.testing.assert_array_equal(nte_d, nte_re)
+    np.testing.assert_array_equal(ne_d, nte_re.sum(axis=1))
+    assert {w: s for w, s in nwte_d.items() if s} == nwte_re
     dist._refresh_global_counts()
     np.testing.assert_array_equal(nte_d, dist.nte)
     np.testing.assert_array_equal(ne_d, dist.ne)

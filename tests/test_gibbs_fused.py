@@ -83,6 +83,12 @@ def test_fused_counts_exact_at_block_boundary(spark, bundle):
     g = _run(spark, b, P, W, n_partitions=3, sweeps=4, sweeps_per_job=2)
     n_tokens = int(g.np_.sum())
     nwp_delta = g.nwp.copy()
+    # a NumPy recount from the z-state, independent of the chain engine
+    words = dict(g.state.select("doc_id", "words").collect())
+    recount = np.zeros((P, W), dtype=np.int64)
+    for d, z in g.z_state().items():
+        np.add.at(recount, (z, words[d]), 1)
+    assert np.array_equal(nwp_delta, recount)
     g._refresh_global_counts()  # absolute recompute — the arbiter
     assert np.array_equal(nwp_delta, g.nwp)
     assert int(g.nwp.sum()) == n_tokens
@@ -145,11 +151,12 @@ def _tiny_problem():
     return rb, const, nwp, P, W
 
 
-def delta_rows(batches, cols):
-    """A runner pass's delta rows as (*cols, count) tuples: the rows whose
-    count is set."""
+def delta_rows(batches, layout):
+    """A runner pass's signed count rows as (items, *state, n) tuples:
+    the rows whose count is set (their list columns hold one value)."""
+    cols = (layout.items, *layout.state)
     return [
-        row for rb in batches
+        (*(v[0] for v in row[:-1]), row[-1]) for rb in batches
         for row in zip(*(rb.column(c).to_pylist() for c in (*cols, COUNT)))
         if row[-1] is not None
     ]
@@ -159,12 +166,12 @@ def _sweep_block(rb, lib, const, nwp, P, sweep0, k, kernel="native",
                  use_m3=False):
     """One partition's pass through the shared runner: sweeps
     sweep0..sweep0+k-1 of the tiny problem with the M1 batch sweep.
-    Returns the swept state batch and the pass's delta rows."""
+    Returns the swept state batch and the pass's signed count rows."""
     step = _m1_step(lib, kernel, const, nwp, nwp.sum(axis=1), 50.0 / P,
                     0.01, 0.9, use_m3)
     out = list(run_sweeps(iter([rb]), step, 11, sweep0, k, LAYOUT))
     assert len(out) in (1, 2)
-    return out[0], delta_rows(out, LAYOUT.deltas)
+    return out[0], delta_rows(out, LAYOUT)
 
 
 @needs_cc
@@ -181,9 +188,8 @@ def test_fused_runner_matches_sequential_unfused():
     for s in range(3):
         out, deltas = _sweep_block(cur, lib, const, nwp, P, s, 1)
         # driver-side exact delta refresh between unfused sweeps
-        for w, po, pn, n in deltas:
-            nwp[po, w] -= n
-            nwp[pn, w] += n
+        for w, p, n in deltas:
+            nwp[p, w] += n
         import pyarrow as pa
 
         cur = pa.RecordBatch.from_arrays(
@@ -193,9 +199,8 @@ def test_fused_runner_matches_sequential_unfused():
     assert f.column("zs").to_pylist() == cur.column("zs").to_pylist()
     # fused deltas reconstruct the same final counts
     nwp_f = nwp0.copy()
-    for w, po, pn, n in f_deltas:
-        nwp_f[po, w] -= n
-        nwp_f[pn, w] += n
+    for w, p, n in f_deltas:
+        nwp_f[p, w] += n
     assert np.array_equal(nwp_f, nwp)
 
 

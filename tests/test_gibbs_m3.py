@@ -87,6 +87,68 @@ def test_m3_single_partition_bit_parity(spark, bundle, kernel):
         assert np.array_equal(zs[d], oracle.state.z[d]), f"doc {d} diverged"
 
 
+def _m3_chain(spark, b, P, W, sr):
+    cfg = GibbsConfig(n_preds=P, n_words=W, base_seed=11, n_partitions=1)
+    return DistributedGibbs(spark, b.corpus, b.obj_pred, b.lam, cfg,
+                            doc_sr=sr)
+
+
+def test_m3_checkpoint_resume_bit_identical(spark, bundle, tmp_path):
+    """An M3 chain resumed with its doc_sr continues exactly: run(4)
+    equals run(2) + save + load + run(2) in z-state and Nwp."""
+    from entitysummarization_spark.plans.checkpoint import (
+        load_checkpoint,
+        save_checkpoint,
+    )
+
+    b, P, W = bundle
+    corpus, _cand, _lam = _oracle_inputs(b, P, W)
+    sr = spark.createDataFrame(_ring_edges(corpus), "doc_a long, doc_b long")
+    g_ref = _m3_chain(spark, b, P, W, sr)
+    g_ref.run(4)
+    g_a = _m3_chain(spark, b, P, W, sr)
+    g_a.run(2)
+    ck = save_checkpoint(g_a, str(tmp_path / "ck"))
+    g_b = load_checkpoint(spark, ck, b.corpus, b.obj_pred, b.lam, doc_sr=sr)
+    g_b.run(2)
+    z_ref, z_b = g_ref.z_state(), g_b.z_state()
+    assert set(z_ref) == set(z_b)
+    for d in z_ref:
+        assert np.array_equal(z_ref[d], z_b[d]), f"doc {d} diverged"
+    assert np.array_equal(g_ref.nwp, g_b.nwp)
+    for g in (g_ref, g_a, g_b):
+        g.close()
+
+
+def test_m3_checkpoint_refuses_resume_without_doc_sr(spark, bundle,
+                                                     tmp_path):
+    """Loading an M3 checkpoint without its doc_sr would silently resume
+    as M1 (no SR-smoothed α); it raises instead, as does loading an M1
+    checkpoint with a doc_sr."""
+    from entitysummarization_spark.plans.checkpoint import (
+        load_checkpoint,
+        save_checkpoint,
+    )
+
+    b, P, W = bundle
+    corpus, _cand, _lam = _oracle_inputs(b, P, W)
+    sr = spark.createDataFrame(_ring_edges(corpus), "doc_a long, doc_b long")
+    g = _m3_chain(spark, b, P, W, sr)
+    g.run(1)
+    ck = save_checkpoint(g, str(tmp_path / "ck"))
+    g.close()
+    with pytest.raises(ValueError, match="M3"):
+        load_checkpoint(spark, ck, b.corpus, b.obj_pred, b.lam)
+    # and an M1 checkpoint is not resumed as M3
+    g1 = DistributedGibbs(spark, b.corpus, b.obj_pred, b.lam,
+                          GibbsConfig(n_preds=P, n_words=W, n_partitions=1))
+    g1.init_state()
+    ck1 = save_checkpoint(g1, str(tmp_path / "ck1"))
+    g1.close()
+    with pytest.raises(ValueError, match="non-M3"):
+        load_checkpoint(spark, ck1, b.corpus, b.obj_pred, b.lam, doc_sr=sr)
+
+
 def test_m3_changes_assignments_vs_m1(spark, bundle):
     b, P, W = bundle
     corpus, cand, lam = _oracle_inputs(b, P, W)

@@ -105,9 +105,25 @@ def _assert_one_partition_bit_parity(m7_pair):
     assert np.array_equal(dist.nt_c, orc.nt_c)
 
 
+def _recount(dist):
+    """(Nmt, Nct) recounted with NumPy from the z-state, independent of
+    the chain engine."""
+    movies = dict(dist.state.select("user_id", "movies").collect())
+    nmt = np.zeros((T, M), dtype=np.int64)
+    nct = np.zeros((T, FEAT), dtype=np.int64)
+    for u, (zs, cs) in dist.z_state().items():
+        np.add.at(nmt, (zs, movies[u]), 1)
+        for z, c in zip(zs, cs):
+            np.add.at(nct, (z, c), 1)
+    return nmt, nct
+
+
 def test_m7_delta_refresh_matches_absolute(m7_pair):
     _orc, dist = m7_pair
     nmt, nct = dist.nmt.copy(), dist.nct.copy()
+    nmt_re, nct_re = _recount(dist)
+    assert np.array_equal(nmt, nmt_re)
+    assert np.array_equal(nct, nct_re)
     dist._refresh_global_counts()
     assert np.array_equal(nmt, dist.nmt)
     assert np.array_equal(nct, dist.nct)
@@ -165,6 +181,9 @@ def test_m7_multi_partition_invariants(spark, m7_inputs):
             assert np.array_equal(c, ctx_mat[int(m)])
     # delta refresh stayed exact across partitions
     nmt, nct = d3.nmt.copy(), d3.nct.copy()
+    nmt_re, nct_re = _recount(d3)
+    assert np.array_equal(nmt, nmt_re)
+    assert np.array_equal(nct, nct_re)
     d3._refresh_global_counts()
     assert np.array_equal(nmt, d3.nmt)
     assert np.array_equal(nct, d3.nct)

@@ -78,6 +78,15 @@ def test_fused_counts_exact_at_block_boundary(spark, m6_inputs):
     m = _run(spark, m6_inputs, n_partitions=3, sweeps=4, sweeps_per_job=2)
     n_tokens = int(m.nct.sum())
     nct_delta, nwc_delta = m.nct.copy(), m.nwc.copy()
+    # a NumPy recount from the z-state, independent of the chain engine
+    words = dict(m.state.select("doc_id", "words").collect())
+    nct_re = np.zeros((T, C), dtype=np.int64)
+    nwc_re = np.zeros((C, W), dtype=np.int64)
+    for d, (ts, cs) in m.z_state().items():
+        np.add.at(nct_re, (ts, cs), 1)
+        np.add.at(nwc_re, (cs, words[d]), 1)
+    np.testing.assert_array_equal(nct_delta, nct_re)
+    np.testing.assert_array_equal(nwc_delta, nwc_re)
     m._refresh_global_counts()  # absolute recompute — the arbiter
     np.testing.assert_array_equal(nct_delta, m.nct)
     np.testing.assert_array_equal(nwc_delta, m.nwc)
@@ -122,13 +131,13 @@ def _tiny_problem():
 def _sweep_block(rb, lib, csr, nct, nwc, sweep0, k):
     """One partition's pass through the shared runner: sweeps
     sweep0..sweep0+k-1 of the tiny problem with the M6 batch sweep.
-    Returns the swept state batch and the pass's delta rows."""
+    Returns the swept state batch and the pass's signed count rows."""
     t_, c_ = nct.shape
     step = _onto_step(lib, csr, nct, nwc, t_, c_, nwc.shape[1],
                       50.0 / t_, 0.01, 0.01, c_)
     out = list(run_sweeps(iter([rb]), step, 11, sweep0, k, LAYOUT))
     assert len(out) in (1, 2)
-    return out[0], delta_rows(out, LAYOUT.deltas)
+    return out[0], delta_rows(out, LAYOUT)
 
 
 @needs_cc
@@ -145,11 +154,9 @@ def test_fused_runner_matches_sequential_unfused():
     cur, nct, nwc = rb, nct0.copy(), nwc0.copy()
     for s in range(3):
         out, deltas = _sweep_block(cur, lib, csr, nct, nwc, s, 1)
-        for w, to, co, tn, cn, n in deltas:
-            nct[to, co] -= n
-            nct[tn, cn] += n
-            nwc[co, w] -= n
-            nwc[cn, w] += n
+        for w, t, c, n in deltas:
+            nct[t, c] += n
+            nwc[c, w] += n
         cur = pa.RecordBatch.from_arrays(
             [out.column("doc_id"), out.column("words"),
              out.column("ts"), out.column("cs")],
@@ -159,11 +166,9 @@ def test_fused_runner_matches_sequential_unfused():
     assert f.column("cs").to_pylist() == cur.column("cs").to_pylist()
     # fused deltas reconstruct the same final counts
     nct_f, nwc_f = nct0.copy(), nwc0.copy()
-    for w, to, co, tn, cn, n in f_deltas:
-        nct_f[to, co] -= n
-        nct_f[tn, cn] += n
-        nwc_f[co, w] -= n
-        nwc_f[cn, w] += n
+    for w, t, c, n in f_deltas:
+        nct_f[t, c] += n
+        nwc_f[c, w] += n
     np.testing.assert_array_equal(nct_f, nct)
     np.testing.assert_array_equal(nwc_f, nwc)
 
