@@ -37,11 +37,6 @@ def tokenize(text: str) -> list[str]:
     return [t for t in _TOKEN_RE.findall(text.lower())]
 
 
-def tokenize_with_spans(text: str) -> list[tuple[str, int]]:
-    low = text.lower()
-    return [(m.group(0), m.start()) for m in _TOKEN_RE.finditer(low)]
-
-
 # --- G13: sentence detection (SentParDetector analog) -------------------
 # Re-expresses the core split rule of
 # dicgenerator/SentParDetector.java:markupRawText (:92-115): a sentence

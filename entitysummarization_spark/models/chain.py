@@ -19,6 +19,10 @@ depend on the model:
     adds its neighbour join);
   - the run loop (fused blocks where the model allows them), ``close``
     and ``z_state``;
+  - the per-doc posteriors (M1 θ, M4 ζ, M6 θ: ``_doc_posterior``), each
+    one map over the state: ``doc_count`` counts a value inside the doc's
+    own row, so nothing is exploded and grouped (M3's neighbour payload
+    and M7's θ use it too);
   - the checkpoint / broadcast lifecycle (below).
 
 A model declares its ``Layout`` (key, items, pass-through and state
@@ -69,16 +73,16 @@ for task re-serialization, an unbounded leak at the reference's 500 to
     is materialized (deferred one sweep out of caution), and ``close``
     destroys the last one.
 
-Fault tolerance: ``localCheckpoint`` (the default) stores blocks on the
-executors that computed them. That is cheap, but on a real cluster one
-executor loss mid-chain makes the in-flight state unrecoverable. Two
-mitigations compose: ``reliable_checkpoint=True`` in a sampler's config
-uses ``Dataset.checkpoint`` against ``setCheckpointDir(...)`` (every
-sweep durable, one distributed-FS write per sweep); or keep the default
-and rely on the every-k-sweeps Parquet checkpoints (plans/checkpoint.py)
-as the durable resume points. The 105-sweep soak in
-test_gibbs_kernels.py asserts flat plan size and flat persisted-block
-count under this discipline.
+Fault tolerance: ``localCheckpoint`` stores blocks on the executors that
+computed them. That is cheap, but on a real cluster one executor loss
+mid-chain makes the in-flight state unrecoverable. Two mitigations
+compose: when the session has a checkpoint dir (``setCheckpointDir``),
+every pass uses ``Dataset.checkpoint`` against it instead, the rule
+operators/graph._iter_checkpoint follows (every sweep durable, one
+distributed-FS write per sweep); or rely on the every-k-sweeps Parquet
+checkpoints (plans/checkpoint.py) as the durable resume points. The
+105-sweep soak in test_gibbs_kernels.py asserts flat plan size and flat
+persisted-block count under this discipline.
 """
 
 from __future__ import annotations
@@ -90,7 +94,7 @@ from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # the logger of the per-sweep "locally checkpointed ... cannot be
@@ -135,6 +139,12 @@ class Block(NamedTuple):
     ws: np.ndarray            # int64[n_tok] items (words, movies)
     state: list[np.ndarray]   # writable int64[n_tok] per state column
     carry: list[tuple[np.ndarray, np.ndarray]]  # (offsets, values) each
+
+
+def doc_count(col, v) -> Column:
+    """How many entries of the array ``col`` equal ``v``: a doc's count
+    of one value, computed inside the doc's own row."""
+    return F.size(F.filter(col, lambda z: z == v))
 
 
 def doc_seeds(base_seed: int, sweep: int, doc_ids: np.ndarray) -> np.ndarray:
@@ -465,6 +475,30 @@ class Chain:
             for k, *vs in zip(pdf[key], *(pdf[c] for c in cols))
         }
 
+    def _doc_posterior(self, col: str, name: str, prior: float, k: int,
+                       out: str, pairs: DataFrame | None = None) -> DataFrame:
+        """(key, ``name``, ``out``) with ``out`` = round((n + prior) /
+        (Nd + k·prior), 4), where n is the doc's count of the value in its
+        state column ``col`` and Nd its number of items. Without
+        ``pairs``: each distinct value a doc holds. With ``pairs`` (key,
+        ``name``): each distinct requested pair of a doc in the state, zero
+        counts included."""
+        key, items = self.layout.key, self.layout.items
+        if pairs is None:
+            rows = self.state.select(
+                key, items, col, F.explode(F.array_distinct(col)).alias(name))
+        else:
+            rows = pairs.select(key, name).distinct().join(
+                self.state.select(key, items, col), key)
+        return rows.select(
+            key, name,
+            F.round(
+                (doc_count(col, F.col(name)) + F.lit(prior))
+                / (F.size(items) + F.lit(k * prior)),
+                4,
+            ).alias(out),
+        )
+
     # ---- checkpoint / broadcast lifecycle ----
     @staticmethod
     def _checkpointed_rdd_handle(df: DataFrame):
@@ -489,11 +523,11 @@ class Chain:
 
         localCheckpoint persists its blocks during whichever job first
         computes the RDD and truncates lineage at that job's end. Reliable
-        checkpoints stay eager: a non-eager ``Dataset.checkpoint``
-        recomputes the RDD a second time to write it unless it is already
-        persisted."""
-        if self.cfg.reliable_checkpoint:
-            out = out.checkpoint(eager=True)  # needs setCheckpointDir
+        checkpoints (the session has a checkpoint dir) stay eager: a
+        non-eager ``Dataset.checkpoint`` recomputes the RDD a second time
+        to write it unless it is already persisted."""
+        if self.spark.sparkContext.getCheckpointDir() is not None:
+            out = out.checkpoint(eager=True)
         else:
             out = out.localCheckpoint(eager=False)
         # the raw checkpointed output's handle is the one released after

@@ -104,8 +104,6 @@ class EntLda2Config:
     burn_in: int = 2              # burnIn (:34 — 200 of 500 there)
     base_seed: int = 7
     n_partitions: int = 8
-    # durable per-sweep checkpointing — see models/chain.py
-    reliable_checkpoint: bool = False
 
     @property
     def tau_eff(self) -> float:
@@ -594,21 +592,8 @@ class DistributedEntLda2(Chain):
         DataFrame carries the sparse part and `zeta_fill_value` the
         rest)."""
         cfg = self.cfg
-        tau, E = cfg.tau_eff, cfg.n_entities
-        nd = self.state.select("doc_id", F.size("words").alias("nd"))
-        ned = (
-            self.state.select("doc_id", F.explode("es").alias("ent_id"))
-            .groupBy("doc_id", "ent_id")
-            .agg(F.count("*").alias("ned"))
-        )
-        return ned.join(nd, "doc_id").select(
-            "doc_id",
-            "ent_id",
-            F.round(
-                (F.col("ned") + F.lit(tau)) / (F.col("nd") + F.lit(E * tau)),
-                4,
-            ).alias("zeta"),
-        )
+        return self._doc_posterior("es", "ent_id", cfg.tau_eff,
+                                   cfg.n_entities, "zeta")
 
     def zeta_fill_value(self, nd: int) -> float:
         """ζ of an unassigned (doc, entity) cell for a doc of nd tokens."""

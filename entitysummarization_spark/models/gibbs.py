@@ -22,8 +22,12 @@ shared engine (models/chain.py), which owns init, the count refresh, the
 sweep job, the run loop and the checkpoint/broadcast lifecycle: per
 sweep one mapInArrow pass that also emits its signed count rows, one
 Spark job of one stage (no shuffle — partitioning by doc_id is
-established once; M3 adds its neighbour join). This module supplies the
-M1 layout, init draw, kernels and count store.
+established once; M3 adds its neighbour join). The posteriors build no
+dense frame on the driver: θ counts each pred inside its doc's own state
+row (``Chain._doc_posterior``), M3's neighbour payload the same way, and
+φ is the driver's P×W array, broadcast once and expanded to rows on the
+executors. This module supplies the M1 layout, init draw, kernels and
+count store.
 Checkpoint/resume per north_rule: plans/checkpoint.py.
 
 Kernels: GibbsConfig.kernel is "native" (default) or "reference". Native
@@ -53,12 +57,12 @@ from bisect import bisect_right
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import native_kernel
-from .chain import Chain, Layout, per_doc
+from .chain import Chain, Layout, doc_count, per_doc
 from .oracle import _sweep_doc_reference, alpha_from_neighbors
 
 # one row per doc; the counts are kept over (word, pred)
@@ -286,12 +290,6 @@ class GibbsConfig:
     # only category-word TF-IDF entries are set
     # (sontoldamodel/SontoLDA.java:524-531, used at :138-139).
     lam_default: float = 1.0
-    # True = per-sweep Dataset.checkpoint against the session's
-    # checkpoint dir (durable across executor loss, one FS write per
-    # sweep); False = localCheckpoint + the every-k-sweeps Parquet
-    # checkpoints in plans/checkpoint.py as the durable resume points.
-    # See models/chain.py for the tradeoff.
-    reliable_checkpoint: bool = False
     # "native" = the runtime-compiled C kernel (default), or its
     # bit-identical interpreted twin on an executor without a C compiler;
     # "reference" = the per-token NumPy kernel the oracle parity tests
@@ -445,16 +443,16 @@ class DistributedGibbs(Chain):
         (nbr, nd, [(p, n), ...]) so the sweep UDF can rebuild the exact
         neighbor θ and call alpha_from_neighbors — identical input order
         to the oracle, hence bit-identical α."""
-        npd = (
-            state.select("doc_id", F.explode("zs").alias("p"))
-            .groupBy("doc_id", "p")
-            .agg(F.count("*").alias("n"))
+        payload = state.select(
+            "doc_id",
+            F.size("words").alias("nd"),
+            F.transform(
+                F.array_sort(F.array_distinct("zs")),
+                lambda p: F.struct(
+                    p.alias("p"), doc_count("zs", p).cast("long").alias("n")
+                ),
+            ).alias("pn"),
         )
-        pn = npd.groupBy("doc_id").agg(
-            F.sort_array(F.collect_list(F.struct("p", "n"))).alias("pn")
-        )
-        payload = pn.join(state.select("doc_id", F.size("words").alias("nd")),
-                          "doc_id")
         nbrs = (
             self.doc_sr.select(
                 F.col("doc_a").cast("long").alias("doc_a"),
@@ -498,42 +496,29 @@ class DistributedGibbs(Chain):
         ``for_pairs`` (doc_id, pred_id) limits output to needed cells (at
         scale D×P is too wide to materialize for every doc)."""
         cfg = self.cfg
-        a, P = cfg.alpha_eff, cfg.n_preds
-        nd = self.state.select("doc_id", F.size("words").alias("nd"))
-        npd = (
-            self.state.select("doc_id", F.explode("zs").alias("pred_id"))
-            .groupBy("doc_id", "pred_id")
-            .agg(F.count("*").alias("npd"))
-        )
-        if for_pairs is None:
-            base = npd
-        else:
-            base = for_pairs.select("doc_id", "pred_id").distinct().join(
-                npd, ["doc_id", "pred_id"], "left"
-            )
-        return (
-            base.join(nd, "doc_id")
-            .select(
-                "doc_id",
-                "pred_id",
-                F.round(
-                    (F.coalesce("npd", F.lit(0)) + F.lit(a))
-                    / (F.col("nd") + F.lit(P * a)),
-                    4,
-                ).alias("theta"),
-            )
-        )
+        return self._doc_posterior("zs", "pred_id", cfg.alpha_eff,
+                                   cfg.n_preds, "theta", for_pairs)
 
     def phi(self) -> DataFrame:
-        """φ(pred_id, word_id) — dense P×W, computed driver-side (small)."""
+        """φ(pred_id, word_id) — dense P×W. The P×W array is computed on
+        the driver (the counts already live there), broadcast once, and
+        expanded to rows on the executors, one pred's W rows at a time."""
         phi = np.round(
             (self.nwp + self.lam * self.cfg.beta)
             / (self.np_[:, None] + self.sum_lam_beta[:, None]),
             4,
         )
-        p_idx, w_idx = np.nonzero(np.ones_like(phi))
-        pdf = pd.DataFrame(
-            {"pred_id": p_idx.astype("int64"), "word_id": w_idx.astype("int64"),
-             "phi": phi.ravel()}
-        )
-        return self.spark.createDataFrame(pdf)
+        bc = self.spark.sparkContext.broadcast(phi)
+        words = pa.array(np.arange(phi.shape[1], dtype=np.int64))
+
+        def rows(batches):
+            for rb in batches:
+                for p in rb.column(0).to_numpy().tolist():
+                    yield pa.RecordBatch.from_arrays(
+                        [pa.array(np.full(len(words), p, dtype=np.int64)),
+                         words, pa.array(bc.value[p])],
+                        names=["pred_id", "word_id", "phi"],
+                    )
+
+        return self.spark.range(self.cfg.n_preds).mapInArrow(
+            rows, "pred_id long, word_id long, phi double")

@@ -87,7 +87,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .chain import Chain, Layout, per_doc
+from .chain import Chain, Layout, doc_count, per_doc
 from .oracle import rng_for
 
 
@@ -102,7 +102,6 @@ class LodLdaConfig:
     gamma: float = 0.01           # GAMMA (:77)
     base_seed: int = 7
     n_partitions: int = 8
-    reliable_checkpoint: bool = False
 
     @property
     def alpha_eff(self) -> float:
@@ -500,13 +499,8 @@ class DistributedLodLda(_Counts, Chain):
         (computeTheta, :477-493). U×T never reaches the driver."""
         cfg = self.cfg
         T, alpha = cfg.n_topics, cfg.alpha_eff
-        def topic_count(t: int):
-            return F.aggregate(
-                "zs", F.lit(0).cast("long"),
-                lambda acc, z: acc + F.when(z == F.lit(t), 1).otherwise(0),
-            )
-
-        counts = F.array(*[topic_count(t) for t in range(T)])
+        counts = F.transform(F.sequence(F.lit(0), F.lit(T - 1)),
+                             lambda t: doc_count("zs", t))
         raw = F.transform(
             counts,
             lambda c: F.bround(

@@ -75,8 +75,6 @@ class OntoPartConfig:
     zeta: float = 0.01        # word-given-class smoothing (ZETA, :62)
     base_seed: int = 7
     n_partitions: int = 8
-    # durable per-sweep checkpointing — see models/chain.py
-    reliable_checkpoint: bool = False
     # Sweeps run the runtime-compiled C grid kernel, or its bit-identical
     # interpreted twin (_sweep_doc) on an executor without a C
     # compiler; OntoPartOracle is the parity arbiter.
@@ -340,20 +338,8 @@ class DistributedOntoPart(Chain):
     def theta(self) -> DataFrame:
         """θ(doc_id, topic) = round((Ntd+α)/(Nd+T·α), 4), distributed."""
         cfg = self.cfg
-        a, T = cfg.alpha_eff, cfg.n_topics
-        nd = self.state.select("doc_id", F.size("words").alias("nd"))
-        ntd = (
-            self.state.select("doc_id", F.explode("ts").alias("topic"))
-            .groupBy("doc_id", "topic")
-            .agg(F.count("*").alias("ntd"))
-        )
-        return ntd.join(nd, "doc_id").select(
-            "doc_id",
-            "topic",
-            F.round(
-                (F.col("ntd") + F.lit(a)) / (F.col("nd") + F.lit(T * a)), 4
-            ).alias("theta"),
-        )
+        return self._doc_posterior("ts", "topic", cfg.alpha_eff,
+                                   cfg.n_topics, "theta")
 
     def phi(self) -> np.ndarray:
         """φ T×C = round((Nct+β)/(Nt+C·β), 4) — dense, driver-side (small)."""

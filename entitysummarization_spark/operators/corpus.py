@@ -7,7 +7,6 @@ weight structures:
   - objectToPredicateMap (J3, EntityProc.java:365-403): obj → observed preds
   - λ weight matrix (A6, EntityProc.java:440-453): weight(pred, word) =
     #categories(obj) if (pred,obj) observed and obj categorized, else 1
-  - corpus statistics D/W/N (A2, ModelParameters.java:72-104)
 
 All pure DataFrame ops; dictionaries are broadcast-joined dims.
 """
@@ -150,13 +149,4 @@ def constrain_by_types(
                 F.col("typed_pred_ids"),
             ).otherwise(F.col("pred_ids")).alias("pred_ids"),
         )
-    )
-
-
-def corpus_stats(corpus: DataFrame) -> DataFrame:
-    """A2: D, W, N (ModelParameters.java:72-104)."""
-    return corpus.agg(
-        F.countDistinct("doc_id").alias("n_docs"),
-        F.countDistinct("word_id").alias("n_words"),
-        F.sum("freq").cast("long").alias("n_tokens"),
     )

@@ -38,7 +38,7 @@ def save_checkpoint(gibbs: DistributedGibbs, path: str) -> str:
     )
     lineage.write.mode("overwrite").parquet(os.path.join(d, "lineage"))
     # the full config: a resume must continue the chain under exactly the
-    # settings it was sampled with (λ default, ε, fusion, checkpointing)
+    # settings it was sampled with (λ default, ε, kernel, fusion)
     # and with or without M3's SR neighbours
     meta = {"sweeps_done": sweep, "config": dataclasses.asdict(gibbs.cfg),
             "m3": gibbs.doc_sr is not None}
@@ -84,6 +84,9 @@ def load_checkpoint(
             f"{ckpt_dir} holds {'an M3' if m3 else 'a non-M3'} chain: "
             "pass doc_sr exactly when resuming an M3 chain"
         )
+    # checkpoints written before the checkpoint-dir rule carry the
+    # retired reliable_checkpoint field
+    meta["config"].pop("reliable_checkpoint", None)
     cfg = GibbsConfig(**meta["config"])
     if kernel is not None:
         cfg = dataclasses.replace(cfg, kernel=kernel)

@@ -163,26 +163,3 @@ def write_bucketed(
     if path is not None:
         w = w.option("path", path)
     w.saveAsTable(table)
-
-
-def materialize_bucketed(
-    result: PipelineResult,
-    base_path: str,
-    prefix: str = "esum",
-    n_buckets: int = 64,
-) -> dict[str, str]:
-    """Bucketed variant of `materialize`: canon and summaries co-bucketed
-    on `subj` (same bucket count), theta on `doc_id`. Returns
-    {logical name: catalog table name}. Downstream subj-keyed joins
-    between the co-bucketed tables plan shuffle-free
-    (tests/test_bucketed.py asserts the Exchange-free physical plan)."""
-    tables = {}
-    for name, df, key in [
-        ("canon", result.canon, "subj"),
-        ("summaries", result.summaries, "subj"),
-        ("theta", result.theta, "doc_id"),
-    ]:
-        tbl = f"{prefix}_{name}_bucketed"
-        write_bucketed(df, tbl, key, n_buckets, path=f"{base_path}/{name}")
-        tables[name] = tbl
-    return tables

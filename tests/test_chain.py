@@ -1,7 +1,8 @@
-"""The shared chain engine (models/chain.py): every sweep and every count
-recompute is one Spark job of one stage, every sampler reports the tokens
-its last sweep changed, every sampler destroys its broadcasts on close(),
-and the per-sweep lineage WARN is silenced."""
+"""The shared chain engine (models/chain.py): every sweep, every count
+recompute and every per-doc posterior is one Spark job of one stage,
+every sampler reports the tokens its last sweep changed, every sampler
+destroys its broadcasts on close(), and the per-sweep lineage WARN is
+silenced."""
 
 import numpy as np
 import pytest
@@ -124,6 +125,27 @@ def test_count_refresh_is_one_job_of_one_stage(spark, name):
     m.init_state()
     _assert_one_job_of_one_stage(spark, f"one-job-refresh-{name}",
                                  m._refresh_global_counts)
+    m.close()
+
+
+POSTERIORS = {
+    "m1": lambda m: m.theta(),
+    "m4": lambda m: m.zeta(),
+    "m6": lambda m: m.theta(),
+    "m7": lambda m: m.theta_df(),
+}
+
+
+@pytest.mark.parametrize("name", sorted(SAMPLERS))
+def test_doc_posterior_is_one_job_of_one_stage(spark, name):
+    """A doc's counts live in its own state row, so every per-doc
+    posterior is one map over the state: no explode→groupBy shuffle."""
+    m = SAMPLERS[name](spark)
+    m.init_state()
+    df = POSTERIORS[name](m)
+    _assert_one_job_of_one_stage(
+        spark, f"one-job-posterior-{name}",
+        lambda: df.write.format("noop").mode("overwrite").save())
     m.close()
 
 

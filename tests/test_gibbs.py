@@ -6,6 +6,7 @@ import pytest
 
 from entitysummarization_spark.models.gibbs import DistributedGibbs, GibbsConfig
 from entitysummarization_spark.models.oracle import GibbsOracle
+from entitysummarization_spark.models.pipeline_oracle import java_round
 from entitysummarization_spark.operators.canonicalize import canonical_triples
 from entitysummarization_spark.operators.corpus import build_corpus
 from entitysummarization_spark.operators.extraction import extract_triples
@@ -87,6 +88,34 @@ def test_theta_rows_bounded(spark, bundle):
     # φ rows sum ≈ 1 up to rounding (4-decimal rounding is reference behavior)
     sums = ph.groupby("pred_id")["phi"].sum()
     assert (abs(sums - 1.0) < 0.05).all()
+
+
+def test_theta_for_pairs_matches_recount(spark, bundle):
+    """θ for requested (doc, pred) pairs equals a NumPy recount from the
+    z-state: one row per distinct pair (a duplicate request included),
+    and a pred the doc never samples at its zero-count value."""
+    b, P, W = bundle
+    cfg = GibbsConfig(n_preds=P, n_words=W, base_seed=11, n_partitions=1)
+    g = DistributedGibbs(spark, b.corpus, b.obj_pred, b.lam, cfg)
+    g.run(2)
+    zs = g.z_state()
+    d0 = next(d for d in sorted(zs) if len(set(zs[d].tolist())) < P)
+    unsampled = min(set(range(P)) - set(zs[d0].tolist()))
+    pairs = [(d, int(z[0])) for d, z in sorted(zs.items())[:5]]
+    pairs += [pairs[0], (d0, unsampled), (d0, int(zs[d0][-1]))]
+    got = g.theta(
+        for_pairs=spark.createDataFrame(pairs, "doc_id long, pred_id long")
+    ).collect()
+    a = cfg.alpha_eff
+    want = {
+        (d, p): java_round(
+            (int(np.count_nonzero(zs[d] == p)) + a) / (len(zs[d]) + P * a), 4)
+        for d, p in pairs
+    }
+    assert len(got) == len(want)
+    assert {(r["doc_id"], r["pred_id"]): r["theta"] for r in got} == want
+    assert want[(d0, unsampled)] == java_round(a / (len(zs[d0]) + P * a), 4)
+    g.close()
 
 
 def test_checkpoint_resume_bit_identical(spark, bundle, tmp_path):

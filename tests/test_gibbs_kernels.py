@@ -65,16 +65,18 @@ def test_removed_kernels_rejected(kernel):
 
 
 def test_reliable_checkpoint_same_chain(spark, bundle, tmp_path):
-    """GibbsConfig.reliable_checkpoint=True (durable Dataset.checkpoint
-    per sweep — the executor-loss-safe option documented in
-    models/chain.py) must produce the identical z-chain, and the
+    """With a checkpoint dir set, every pass uses a durable
+    Dataset.checkpoint (the executor-loss-safe path documented in
+    models/chain.py); it must produce the identical z-chain, and the
     direct plan-handle release must keep the block inventory flat."""
     b, P, W = bundle
     sc = spark.sparkContext
+    # the local-checkpoint reference chain, built before the dir is set
+    g2 = _run(spark, b, P, W, "native", 2, sweeps=7)
     sc.setCheckpointDir(str(tmp_path / "ckpt"))
     try:
         cfg = GibbsConfig(n_preds=P, n_words=W, base_seed=11,
-                          n_partitions=2, reliable_checkpoint=True)
+                          n_partitions=2)
         g = DistributedGibbs(spark, b.corpus, b.obj_pred, b.lam, cfg)
         g.run(4)
         blocks_after_4 = sc._jsc.getPersistentRDDs().size()
@@ -82,7 +84,6 @@ def test_reliable_checkpoint_same_chain(spark, bundle, tmp_path):
         assert (
             sc._jsc.getPersistentRDDs().size() <= blocks_after_4 + 1
         )
-        g2 = _run(spark, b, P, W, "native", 2, sweeps=7)
         z1, z2 = g.z_state(), g2.z_state()
         assert set(z1) == set(z2)
         for d in z1:
