@@ -18,3 +18,5 @@ text analysis) under operators/.
 """
 
 __version__ = "0.1.0"
+
+from entitysummarization_spark import _zipimport  # noqa: E402,F401  (worker-side only)

@@ -300,9 +300,10 @@ class GibbsConfig:
     # each partition carries its locally-updated counts across the
     # fused sweeps instead of receiving the cross-partition refresh —
     # the AD-LDA staleness extended across the block. Amortizes the
-    # per-job fixed cost (launch + Arrow transfer + checkpoint, ~0.6 s
-    # measured — the dominant per-sweep term at late chain) by the
-    # fusion factor. Exact anchors: bit-identical to unfused at
+    # per-job fixed cost by the fusion factor: at P=264, W=4000 on ~400k
+    # tokens (local[4], 4 vCPU) an unfused sweep job takes 0.37 s and a
+    # fused ×4 block 0.41 s, so that cost is still most of a sweep.
+    # Exact anchors: bit-identical to unfused at
     # n_partitions=1; global counts exactly reconstructed from the
     # block's deltas at every block boundary (test_gibbs_fused.py).
     # DEFAULT 1: the bit-parity-to-reference contract holds only
