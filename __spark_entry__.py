@@ -82,7 +82,7 @@ def entry(spark: SparkSession) -> DataFrame:
     )
     canon = canonical_triples(triples)
     b = build_corpus(canon)
-    P, W = int(b.preds.count()), int(b.words.count())
+    P, W = b.n_preds, b.n_words
     if P == 0 or W == 0:
         return canon
     g = DistributedGibbs(
@@ -736,7 +736,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         tw = tw.persist()
         dt = dt.persist()
         n_docs = dt.select("doc_id").distinct().count()
-        n_words = bundle.words.count()
+        n_words = bundle.n_words
         k_topics = tw.select("topic").distinct().count()
         bad_topic_sums = (
             tw.groupBy("topic").agg(F.sum("weight").alias("s"))
@@ -1174,7 +1174,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             extract_triples(spark, repos, fx.vocab)
         ).persist()
         b = build_corpus(canon)
-        P, W = int(b.preds.count()), int(b.words.count())
+        P, W = b.n_preds, b.n_words
 
         cp = b.corpus.toPandas()
         corpus = {

@@ -1,41 +1,24 @@
-"""Canonicalization — skew-aware aggregation of extracted triples.
+"""Canonicalization — skew-aware aggregation of extracted triples, and the
+dense string→id dictionaries the corpus is built on.
 
 The reference canonicalizes by interning every string into HashMaps in one
 JVM (src/esum/EntityProc.java:338-347,846-886). Distributed, the same step
 is a groupBy over keys whose distribution is heavily skewed (head entities
 like `java.util.List` / DBpedia `United_States` appear in ~30% of docs —
-FIXTURES.md §1). Spark's hash aggregate already does a map-side partial
-combine; for the pathological case (few giant keys, high-cardinality
-payload aggs) we add an explicit two-phase *salted* aggregation so no
-single reducer owns a head key, plus AQE skew handling session-wide.
+FIXTURES.md §1). Spark's hash aggregate does a map-side partial combine,
+which bounds each head key's share of its reducer; AQE skew handling is on
+session-wide.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from itertools import accumulate
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def salted_count(
-    df: DataFrame,
-    keys: list[str],
-    n_salt: int = 32,
-    count_col: str = "freq",
-) -> DataFrame:
-    """Two-phase skew-safe count: groupBy(salt, keys) → groupBy(keys).
-
-    Salt is deterministic (crc32 of the whole row's concat) so results are
-    reproducible; at 100 TB the first phase bounds any one task's share of a
-    head key to ~1/n_salt of its rows.
-    """
-    salted = df.withColumn(
-        "_salt", F.pmod(F.crc32(F.concat_ws("\x1f", *df.columns)), F.lit(n_salt))
-    )
-    partial = salted.groupBy("_salt", *keys).agg(F.count("*").alias("_pc"))
-    return partial.groupBy(*keys).agg(F.sum("_pc").cast("long").alias(count_col))
-
-
-def canonical_triples(triples: DataFrame, use_salt: bool = False) -> DataFrame:
+def canonical_triples(triples: DataFrame) -> DataFrame:
     """Distinct (subj, pred, obj) with occurrence counts across provenance.
 
     The A1 'fact bag' aggregation (EntityProc.java:846-886) — one triple row
@@ -45,68 +28,70 @@ def canonical_triples(triples: DataFrame, use_salt: bool = False) -> DataFrame:
     already does a map-side partial combine, so a head key (`United_States`
     / `java.util.List`-class objects) arrives at its reducer as ≤1 partial
     row per map task — the same bound explicit salting would give, with
-    ONE shuffle instead of two. ``use_salt=True`` switches to the two-phase
-    `salted_count` plan, which is the right shape when the payload agg is
-    holistic (collect_set of provenance, exact distinct counts) and
-    map-side combine can't shrink the head key.
+    ONE shuffle instead of two.
     """
-    if use_salt:
-        return salted_count(triples, ["subj", "pred", "obj"], count_col="freq")
     return triples.groupBy("subj", "pred", "obj").agg(
         F.count("*").cast("long").alias("freq")
     )
 
 
-def dense_ids(df: DataFrame, col: str, id_col: str) -> DataFrame:
-    """Deterministic dense string→long dictionary: id = rank in sorted-name
-    order, 0-based.
+def dense_ids(df: DataFrame) -> tuple[DataFrame, dict[str, int]]:
+    """Deterministic dense string→long dictionaries, several in one pass.
+
+    ``df`` holds ``(kind, name)`` rows; each kind is its own dictionary.
+    Returns ``(kind, name, id)`` — id = the name's rank in sorted-name
+    order within its kind, 0-based — and each kind's size. A kind with no
+    rows is absent from the sizes.
 
     The reference assigns IDs in first-seen file order
     (EntityProc.java:338-347) — meaningless under parallel scan order, so we
     assign by sorted name (documented deviation; the mapping stays bijective,
-    which is all the model needs). Returns (col, id_col).
+    which is all the model needs). Like the reference, all dictionaries come
+    from one scan.
 
-    Scale shape (no single-task window): range-repartition on the sort key →
-    per-partition row_number + cumulative partition-count offsets. Range
-    partitions are ordered and non-overlapping, so
-    ``offset[pid] + local_rank`` IS the global sorted rank regardless of
-    where the sampled boundaries fall — every partition sorts/numbers in
-    parallel and only the #partitions-row count table reaches the driver.
-    (The previous global no-partition ``row_number`` pushed the whole dict —
-    one id per subject document, i.e. billions of rows at 100 TB — through
-    ONE task.) The partitioned frame is persisted so the count job and the
-    numbering job see identical range boundaries.
+    Scale shape (no single-task window): one range repartition on
+    ``(kind, name)``, sorted within each partition. Range partitions are
+    ordered and non-overlapping, so a row's global position in
+    ``(kind, name)`` order is its partition's offset plus its position in
+    the partition (``monotonically_increasing_id``'s low 33 bits), and its
+    id is that minus the number of rows of smaller kinds. One collect of
+    the per-(partition, kind) counts gives both, wherever the sampled
+    boundaries fall. The sorted frame is persisted so the collect and the
+    numbering see identical partitions; it is not checkpointed before the
+    collect, because a checkpointed sorted frame lost its size statistics
+    and `build_corpus`'s `subj` join then broadcast the triples.
     """
     spark = df.sparkSession
     n_parts = spark.sparkContext.defaultParallelism
     d = (
-        df.select(col).distinct()
-        .repartitionByRange(n_parts, F.col(col))
+        df.select("kind", "name").distinct()
+        .repartitionByRange(n_parts, "kind", "name")
+        .sortWithinPartitions("kind", "name")
+        .select(
+            "kind", "name", F.spark_partition_id().alias("_pid"),
+            F.monotonically_increasing_id().bitwiseAND(2**33 - 1).alias("_pos"),
+        )
         .persist()
     )
-    counts = {
-        r["_pid"]: r["n"]
-        for r in d.groupBy(F.spark_partition_id().alias("_pid"))
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    offsets, acc = {}, 0
-    for pid in range(n_parts):
-        offsets[pid] = acc
-        acc += counts.get(pid, 0)
-    off_map = F.create_map(
-        *[F.lit(x) for pid in offsets for x in (pid, offsets[pid])]
-    )
-    w = Window.partitionBy("_pid").orderBy(col)
-    out = (
-        d.withColumn("_pid", F.spark_partition_id())
-        .withColumn(
-            id_col,
-            (F.row_number().over(w).cast("long") - 1
-             + F.element_at(off_map, F.col("_pid")).cast("long")),
-        )
-        .select(col, id_col)
-        .localCheckpoint(eager=True)
-    )
+    stats = d.groupBy("_pid", "kind").agg(F.count("*").alias("n")).collect()
+    part_rows, sizes = [0] * n_parts, {}
+    for r in stats:
+        part_rows[r["_pid"]] += r["n"]
+        sizes[r["kind"]] = sizes.get(r["kind"], 0) + r["n"]
+    kinds = sorted(sizes)   # Spark's string order: UTF-8 bytes = code points
+    part_off = dict(zip(range(n_parts), accumulate(part_rows, initial=0)))
+    kind_off = dict(zip(kinds, accumulate((sizes[k] for k in kinds), initial=0)))
+    out = d.select(
+        "kind", "name",
+        (F.element_at(_lit_map(part_off, "int"), F.col("_pid"))
+         - F.element_at(_lit_map(kind_off, "string"), F.col("kind"))
+         + F.col("_pos")).alias("id"),
+    ).localCheckpoint(eager=True)
     d.unpersist()
-    return out
+    return out, sizes
+
+
+def _lit_map(m: dict, key_type: str) -> Column:
+    """A literal ``map<key_type, bigint>`` column (typed even when empty)."""
+    return F.create_map(*[F.lit(x) for kv in m.items() for x in kv]).cast(
+        f"map<{key_type},bigint>")

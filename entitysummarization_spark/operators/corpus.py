@@ -30,6 +30,8 @@ class Corpus:
     facts: DataFrame         # doc_id, pred_id, word_id, freq (observed pairs)
     obj_pred: DataFrame      # word_id, pred_ids array (J3 constraint map)
     lam: DataFrame           # pred_id, word_id, weight (λ, sparse — default 1)
+    n_preds: int             # rows of preds
+    n_words: int             # rows of words
 
 
 def build_corpus(
@@ -45,9 +47,6 @@ def build_corpus(
     ``min_word_freq`` is the F10 vocabulary prune
     (ImportData.java:868-895, default wordFrequency=10 in config.properties:85).
     """
-    docs = dense_ids(canon, "subj", "doc_id")
-    preds = dense_ids(canon, "pred", "pred_id")
-
     t = canon
     if category_boost and entity_category is not None:
         ncat = entity_category.groupBy("entity_name").agg(
@@ -66,7 +65,24 @@ def build_corpus(
     word_tot = t.groupBy("obj").agg(F.sum("freq").alias("_tot"))
     kept = word_tot.filter(F.col("_tot") >= min_word_freq).select("obj")
     t = t.join(kept, "obj", "semi") if min_word_freq > 1 else t
-    words = dense_ids(t, "obj", "word_id")
+
+    # all three dictionaries in one pass, as the reference interns
+    # subjects, predicates and objects in one scan
+    ids, sizes = dense_ids(
+        canon.select(F.lit("subj").alias("kind"), F.col("subj").alias("name"))
+        .unionByName(canon.select(F.lit("pred").alias("kind"),
+                                  F.col("pred").alias("name")))
+        .unionByName(t.select(F.lit("obj").alias("kind"),
+                              F.col("obj").alias("name")))
+    )
+
+    def dictionary(kind: str, id_col: str) -> DataFrame:
+        return ids.filter(F.col("kind") == kind).select(
+            F.col("name").alias(kind), F.col("id").alias(id_col))
+
+    docs = dictionary("subj", "doc_id")
+    preds = dictionary("pred", "pred_id")
+    words = dictionary("obj", "word_id")
 
     # Join strategy at scale: `preds` is a genuine dim (a few hundred
     # predicates) — force broadcast. `docs` is one row per SUBJECT DOCUMENT
@@ -110,7 +126,8 @@ def build_corpus(
         ).distinct()
 
     return Corpus(corpus=corpus, docs=docs, words=words, preds=preds,
-                  facts=facts, obj_pred=obj_pred, lam=lam)
+                  facts=facts, obj_pred=obj_pred, lam=lam,
+                  n_preds=sizes.get("pred", 0), n_words=sizes.get("obj", 0))
 
 
 def constrain_by_types(

@@ -1,6 +1,6 @@
 """End-to-end KG-construction pipeline (EP1 lifecycle, SURVEY.md §3).
 
-repos scan → extract_triples (mapInPandas) → canonicalize (salted groupBy)
+repos scan → extract_triples (mapInPandas) → canonicalize (groupBy)
 → corpus + constraint maps → distributed constrained Gibbs → θ/φ →
 top-k summaries. Optional materialization to partitioned Parquet
 (Iceberg-layout fallback — no Iceberg runtime jar in this sandbox) with
@@ -58,9 +58,7 @@ def run_pipeline(
     bundle = build_corpus(canon, entity_category=entity_category,
                           min_word_freq=min_word_freq)
 
-    n_preds = bundle.preds.count()
-    n_words = bundle.words.count()
-    if n_preds == 0 or n_words == 0:
+    if bundle.n_preds == 0 or bundle.n_words == 0:
         # empty input → empty outputs with stable schemas (no sampler run)
         empty_theta = spark.createDataFrame([], "doc_id long, pred_id long, theta double")
         empty_phi = spark.createDataFrame([], "pred_id long, word_id long, phi double")
@@ -71,7 +69,7 @@ def run_pipeline(
                               theta=empty_theta, phi=empty_phi,
                               summaries=empty_sum, gibbs=None)
     cfg = GibbsConfig(
-        n_preds=int(n_preds), n_words=int(n_words), alpha=alpha, beta=beta,
+        n_preds=bundle.n_preds, n_words=bundle.n_words, alpha=alpha, beta=beta,
         base_seed=base_seed, n_partitions=n_partitions, kernel=kernel,
         sweeps_per_job=sweeps_per_job,
     )

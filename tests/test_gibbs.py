@@ -19,7 +19,7 @@ def bundle(spark, fixture_small):
     triples = extract_triples(spark, repos, fx.vocab)
     canon = canonical_triples(triples).persist()
     b = build_corpus(canon)
-    P, W = b.preds.count(), b.words.count()
+    P, W = b.n_preds, b.n_words
     return b, int(P), int(W)
 
 
@@ -182,7 +182,7 @@ def test_zero_change_chain_survives_broadcast_retirement(spark):
         rows, "subj string, pred string, obj string, freq long"
     )
     b = build_corpus(canon)
-    P, W = int(b.preds.count()), int(b.words.count())
+    P, W = b.n_preds, b.n_words
     g = DistributedGibbs(
         spark, b.corpus, b.obj_pred, b.lam,
         GibbsConfig(n_preds=P, n_words=W, base_seed=3, n_partitions=2),

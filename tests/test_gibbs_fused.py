@@ -43,7 +43,7 @@ def bundle(spark, fixture_small):
     triples = extract_triples(spark, repos, fx.vocab)
     canon = canonical_triples(triples).persist()
     b = build_corpus(canon)
-    P, W = b.preds.count(), b.words.count()
+    P, W = b.n_preds, b.n_words
     return b, int(P), int(W)
 
 

@@ -19,7 +19,7 @@ def bundle(spark, fixture_small):
     repos = spark.createDataFrame(fx.repos.head(24))
     canon = canonical_triples(extract_triples(spark, repos, fx.vocab)).persist()
     b = build_corpus(canon)
-    return b, int(b.preds.count()), int(b.words.count())
+    return b, b.n_preds, b.n_words
 
 
 def _oracle_inputs(b, P, W):

@@ -58,3 +58,70 @@ def test_sources_read_text_dir(spark, tmp_path):
     rt = read_table(spark, str(tmp_path / "t.parquet"))
     assert rt.count() == 100
     assert rt.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
+def test_build_corpus_prune_and_boost_match_pandas(spark):
+    """F10 prune after the category boost, against a pandas recount:
+    pruned objects get no word id, word ids are the sorted rank over the
+    kept words only, and corpus freq carries the boost."""
+    import pandas as pd
+
+    from entitysummarization_spark.operators.corpus import build_corpus
+
+    canon = pd.DataFrame(
+        [("s2", "p1", "a", 1), ("s1", "p1", "a", 1), ("s1", "p2", "b", 2),
+         ("s3", "p2", "b", 2), ("s1", "p1", "c", 1), ("s2", "p2", "d", 1),
+         ("s3", "p1", "e", 5), ("s2", "p1", "z", 1)],
+        columns=["subj", "pred", "obj", "freq"],
+    )
+    # c (freq 1) reaches the threshold only through its 3 categories;
+    # d (freq 1, 2 categories) and a (freq 2, 1 category) stay below it
+    ec = pd.DataFrame(
+        [("a", "x"), ("c", "x"), ("c", "y"), ("c", "w"), ("d", "x"),
+         ("d", "y"), ("q", "x")],
+        columns=["entity_name", "category"],
+    )
+    b = build_corpus(
+        spark.createDataFrame(canon, "subj string, pred string, obj string, freq long"),
+        entity_category=spark.createDataFrame(ec),
+        category_boost=True, min_word_freq=3,
+    )
+
+    ncat = ec.groupby("entity_name").size()
+    boosted = canon.assign(
+        freq=canon["freq"] * canon["obj"].map(ncat).fillna(1).clip(lower=1))
+    tot = boosted.groupby("obj")["freq"].sum()
+    kept = sorted(tot[tot >= 3].index)
+    assert kept == ["b", "c", "e"]
+    rank = {n: i for i, n in enumerate(kept)}
+    assert {r["obj"]: r["word_id"] for r in b.words.collect()} == rank
+    assert b.n_words == len(kept)
+    docs = {n: i for i, n in enumerate(sorted(canon["subj"].unique()))}
+    assert {r["subj"]: r["doc_id"] for r in b.docs.collect()} == docs
+    k = boosted[boosted["obj"].isin(kept)]
+    want = (k.assign(doc_id=k["subj"].map(docs), word_id=k["obj"].map(rank))
+            .groupby(["doc_id", "word_id"])["freq"].sum())
+    got = {(r["doc_id"], r["word_id"]): r["freq"] for r in b.corpus.collect()}
+    assert got == want.to_dict()
+    assert got[(docs["s1"], rank["c"])] == 3
+
+
+def test_run_pipeline_without_triples_returns_empty_outputs(spark, fixture_small):
+    """Input with no extractable triples short-circuits before the sampler:
+    empty θ/φ/summaries with their schemas, no Gibbs chain."""
+    from entitysummarization_spark.plans.pipeline import run_pipeline
+
+    repos = fixture_small.repos.head(3).assign(content="nothing to see\n")
+    res = run_pipeline(spark, spark.createDataFrame(repos),
+                       vocab=fixture_small.vocab, n_sweeps=1, k=2,
+                       n_partitions=2)
+    assert res.gibbs is None
+    assert res.corpus.n_preds == res.corpus.n_words == 0
+    assert res.theta.schema.simpleString() == (
+        "struct<doc_id:bigint,pred_id:bigint,theta:double>")
+    assert res.phi.schema.simpleString() == (
+        "struct<pred_id:bigint,word_id:bigint,phi:double>")
+    assert res.summaries.columns == [
+        "doc_id", "subj", "rank", "pred", "obj", "theta", "phi", "score"]
+    for df in (res.triples, res.theta, res.phi, res.summaries):
+        assert df.count() == 0

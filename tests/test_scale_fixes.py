@@ -73,13 +73,44 @@ def test_dense_ids_is_global_sorted_rank(spark):
 
     rnd = random.Random(7)
     names = sorted({"n%05d" % rnd.randrange(10**5) for _ in range(500)})
-    shuffled = names[:]
-    rnd.shuffle(shuffled)
-    df = spark.createDataFrame(
-        [(s,) for s in shuffled for _ in range(2)], "name string"
-    ).repartition(8)
-    got = {r["name"]: r["the_id"] for r in dense_ids(df, "name", "the_id").collect()}
-    assert got == {n: i for i, n in enumerate(names)}
+    # three kinds over the same names (the others over every 2nd / 3rd
+    # name), so kinds interleave across the range partitions
+    kinds = {"name": names, "alt": names[::2], "zed": names[::3]}
+    rows = [(k, s) for k, kn in kinds.items() for s in kn for _ in range(2)]
+    rnd.shuffle(rows)
+    df = spark.createDataFrame(rows, "kind string, name string").repartition(8)
+    ids, sizes = dense_ids(df)
+    for kind, kn in kinds.items():
+        got = {r["name"]: r["id"]
+               for r in ids.filter(F.col("kind") == kind).collect()}
+        assert got == {n: i for i, n in enumerate(kn)}, kind
+    assert sizes == {k: len(kn) for k, kn in kinds.items()}
+
+
+def test_build_corpus_dictionaries_in_one_pass(spark, fixture_small):
+    """The three dictionaries come from one range-sorted pass, and their
+    sizes from that pass's own collect: 24 jobs when each dictionary ran
+    its own pass."""
+    from entitysummarization_spark.operators.canonicalize import canonical_triples
+    from entitysummarization_spark.operators.corpus import build_corpus
+    from entitysummarization_spark.operators.extraction import extract_triples
+
+    canon = canonical_triples(extract_triples(
+        spark, spark.createDataFrame(fixture_small.repos), fixture_small.vocab
+    )).persist()
+    canon.count()
+    sc = spark.sparkContext
+    group = "build-corpus-one-pass"
+    sc.setJobGroup(group, group)
+    try:
+        b = build_corpus(canon)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 8, jobs
+    assert b.n_preds == b.preds.count() > 0
+    assert b.n_words == b.words.count() > 0
+    canon.unpersist()
 
 
 def test_materialize_pred_partition_pruning(spark, fixture_small, tmp_path):
