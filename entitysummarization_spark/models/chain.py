@@ -23,12 +23,13 @@ depend on the model:
     one map over the state: ``doc_count`` counts a value inside the doc's
     own row, so nothing is exploded and grouped (M3's neighbour payload
     and M7's θ use it too);
-  - the checkpoint / broadcast lifecycle (below).
+  - save / restore and the checkpoint / broadcast lifecycle (below).
 
 A model declares its ``Layout`` (key, items, pass-through and state
 columns) and supplies hooks: its per-doc init draw, its batch-sweep
-step, the counts it broadcasts, and the ``np.add.at`` lines that add
-counted rows to its driver store.
+step, the counts it broadcasts each sweep and the constants it
+broadcasts once, and the ``np.add.at`` lines that add counted rows to
+its driver store.
 
 The runner. Arrow list columns already hold a flat values buffer plus
 offsets, which is exactly the kernels' input layout, so a batch is
@@ -71,7 +72,11 @@ for task re-serialization, an unbounded leak at the reference's 500 to
     raises only that logger (``MapPartitionsRDD``) to ERROR;
   - the previous sweep's broadcast is destroy()ed once the next state
     is materialized (deferred one sweep out of caution), and ``close``
-    destroys the last one.
+    destroys the last one and the sweep-constant one (M1's candidates
+    and λ, M6's class CSR, M7's movie contexts);
+  - ``restore`` ends in the count-only pass, which rebuilds the counts
+    exactly from the saved state. RNG is seeded per (base_seed, sweep,
+    doc), so run(4) and run(2) + save + restore + run(2) are one chain.
 
 Fault tolerance: ``localCheckpoint`` stores blocks on the executors that
 computed them. That is cheap, but on a real cluster one executor loss
@@ -79,16 +84,19 @@ mid-chain makes the in-flight state unrecoverable. Two mitigations
 compose: when the session has a checkpoint dir (``setCheckpointDir``),
 every pass uses ``Dataset.checkpoint`` against it instead, the rule
 operators/graph._iter_checkpoint follows (every sweep durable, one
-distributed-FS write per sweep); or rely on the every-k-sweeps Parquet
-checkpoints (plans/checkpoint.py) as the durable resume points. The
-105-sweep soak in test_gibbs_kernels.py asserts flat plan size and flat
-persisted-block count under this discipline.
+distributed-FS write per sweep); or ``save`` every k sweeps and
+``restore`` from the latest. The 105-sweep soak in test_gibbs_kernels.py
+asserts flat plan size and flat persisted-block count under this
+discipline.
 """
 
 from __future__ import annotations
 
+import json
+import os
 import warnings
 from collections.abc import Callable, Iterator
+from dataclasses import asdict
 from functools import partial
 from typing import NamedTuple
 
@@ -349,11 +357,18 @@ class Chain:
       - ``_init_draw()`` → (payload, draw): ``draw(payload, rng, items,
         out)`` fills one doc's state slices ``out``; ``payload`` is
         broadcast for it;
-      - ``_sweeper()`` → (payload, make): ``make(payload)`` builds the
-        batch step on an executor from this sweep's broadcast payload;
+      - ``_sweeper()`` → (payload, make): ``make(payload, const)``
+        builds the batch step on an executor from this sweep's broadcast
+        payload and the chain's ``_sweep_const()`` payload;
       - ``_reset_counts()``; ``_add_counts(cols, n)`` adds the signed
         ``n`` at each counted (items, *state) row.
+
+    A checkpoint names the chain by ``model`` and also holds the
+    attributes ``driver_state`` names.
     """
+
+    model = ""
+    driver_state: tuple[str, ...] = ()
 
     def __init__(self, spark: SparkSession, cfg, layout: Layout):
         self.spark = spark
@@ -362,7 +377,7 @@ class Chain:
         self.state: DataFrame | None = None
         self.sweeps_done = 0
         self.last_sweep_changes = 0  # tokens the last sweep (block) moved
-        self._const_bc = None  # a sweep-constant broadcast, if any
+        self._const_bc = None  # the sweep-constant broadcast
         self._state_handles: list = []
         self._bc_prev = None
         quiet_lineage_warn(spark)
@@ -377,10 +392,21 @@ class Chain:
     def _schedule(self, itr: int, before: bool) -> None:
         """Driver-side work around sweep ``itr`` (M4's burn-in)."""
 
+    def _sweep_const(self):
+        """The payload every sweep reads unchanged."""
+        return None
+
     def _z_record(self, arrs: list[np.ndarray]):
         return tuple(arrs)
 
     # ---- init / counts ----
+    def _partitioned(self, df: DataFrame) -> DataFrame:
+        """``df`` in the state's layout: hash-partitioned and sorted by
+        the key."""
+        key = self.layout.key
+        return (df.repartition(self.cfg.n_partitions, key)
+                .sortWithinPartitions(key))
+
     def init_state(self) -> None:
         cfg, layout = self.cfg, self.layout
         payload, draw = self._init_draw()
@@ -391,11 +417,8 @@ class Chain:
             yield from run_init(batches, partial(draw, bc.value), seed, layout)
 
         self._reset_counts()
-        self._commit(
-            self._source().repartition(cfg.n_partitions, layout.key)
-            .sortWithinPartitions(layout.key)
-            .mapInArrow(init_fn, layout.schema())
-        )
+        self._commit(self._partitioned(self._source())
+                     .mapInArrow(init_fn, layout.schema()))
         # the commit's collect truncated the lineage: bc is unreferenced
         self._destroy_broadcast_now(bc)
         self.sweeps_done = 0
@@ -422,10 +445,11 @@ class Chain:
         layout, seed, sweep0 = self.layout, self.cfg.base_seed, self.sweeps_done
         payload, make = self._sweeper()
         bc = self.spark.sparkContext.broadcast(payload)
+        const_bc = self._const_broadcast()
 
         def sweep_fn(batches):
-            yield from run_sweeps(batches, make(bc.value), seed, sweep0,
-                                  n_fused, layout)
+            yield from run_sweeps(batches, make(bc.value, const_bc.value),
+                                  seed, sweep0, n_fused, layout)
 
         # partitioning by key is already established and mapInArrow
         # preserves it
@@ -457,6 +481,56 @@ class Chain:
             self.sweep(n_fused=step)
             self._schedule(itr, before=False)
             done += step
+
+    def save(self, path: str) -> str:
+        """Write the state, one lineage row per partition, the
+        ``driver_state`` and last ``meta.json``, renamed into place as
+        the commit marker, under ``path/sweep=<n>``; return that dir."""
+        d = os.path.join(path, f"sweep={self.sweeps_done:05d}")
+        self.state.write.mode("overwrite").parquet(os.path.join(d, "state"))
+        self.state.groupBy(F.spark_partition_id().alias("partition_id")).agg(
+            F.count("*").alias("n_docs"),
+            F.sum(F.size(self.layout.items)).alias("n_tokens"),
+        ).write.mode("overwrite").parquet(os.path.join(d, "lineage"))
+        if self.driver_state:
+            np.savez(os.path.join(d, "driver.npz"),
+                     **{a: getattr(self, a) for a in self.driver_state})
+        tmp = os.path.join(d, "_meta.json.tmp")
+        with open(tmp, "w") as f:
+            json.dump({"model": self.model, "sweeps_done": self.sweeps_done,
+                       "config": asdict(self.cfg)}, f)
+        os.replace(tmp, os.path.join(d, "meta.json"))
+        return d
+
+    def restore(self, ckpt_dir: str) -> None:
+        """Continue the chain ``save`` wrote to ``ckpt_dir``; refuse
+        another model's or one saved under another config."""
+        with open(os.path.join(ckpt_dir, "meta.json")) as f:
+            meta = json.load(f)
+        # a checkpoint older than the model field is M1's, flagged if M3
+        saved = meta.get("model") or ("M3" if meta.get("m3") else "M1")
+        if saved != self.model:
+            raise ValueError(
+                f"{ckpt_dir} holds an {saved} chain: a non-{self.model} "
+                f"checkpoint cannot resume an {self.model} chain"
+            )
+        # both M1 kernels are bit-identical: a resume may switch kernel
+        cfg = asdict(self.cfg)
+        changed = [f"{k}={v!r}" for k, v in meta["config"].items()
+                   if k in cfg and k != "kernel" and v != cfg[k]]
+        if changed:
+            raise ValueError(
+                f"{ckpt_dir} was sampled under {', '.join(changed)}: "
+                "resume it under the config it was saved with"
+            )
+        if self.driver_state:
+            with np.load(os.path.join(ckpt_dir, "driver.npz")) as z:
+                for a in self.driver_state:
+                    setattr(self, a, z[a])
+        self.state = self._partitioned(
+            self.spark.read.parquet(os.path.join(ckpt_dir, "state")))
+        self._refresh_global_counts()
+        self.sweeps_done = meta["sweeps_done"]
 
     def close(self) -> None:
         """Destroy the sampler's long-lived broadcasts: the sweep-constant
@@ -549,6 +623,14 @@ class Chain:
             except Exception:  # noqa: BLE001 — already released is fine
                 pass
         return n
+
+    def _const_broadcast(self):
+        """The ``_sweep_const()`` payload, broadcast once per chain;
+        ``close`` destroys it."""
+        if self._const_bc is None:
+            self._const_bc = self.spark.sparkContext.broadcast(
+                self._sweep_const())
+        return self._const_bc
 
     def _retire_broadcast(self, bc) -> None:
         """Destroy the PREVIOUS sweep's broadcast and remember ``bc`` as

@@ -499,6 +499,10 @@ class DistributedEntLda2(Chain):
         theta = m.theta_matrix(); phi = m.phi(); zeta = m.zeta()
     """
 
+    model = "M4"
+    # the burn-in schedule's state: a restore must continue it
+    driver_state = ("theta", "alpha_mat", "sum_alpha")
+
     def __init__(
         self,
         spark: SparkSession,
@@ -563,8 +567,9 @@ class DistributedEntLda2(Chain):
         cfg = self.cfg
         payload = (self.nte, self.ne, self.nwte, self.alpha_mat,
                    self.sum_alpha)
-        return payload, partial(_m4_step, tau=cfg.tau_eff, beta=cfg.beta,
-                                E=cfg.n_entities, W=cfg.n_words)
+        step = partial(_m4_step, tau=cfg.tau_eff, beta=cfg.beta,
+                       E=cfg.n_entities, W=cfg.n_words)
+        return payload, lambda counts, _const: step(counts)
 
     def _schedule(self, itr: int, before: bool) -> None:
         _schedule(self, itr, before)

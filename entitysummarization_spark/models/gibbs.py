@@ -19,16 +19,16 @@ matrices. Distributed, that becomes the AD-LDA scheme (Newman et al. 2009,
 Scale: only P×W counts ever reach the driver (bounded by the F10
 vocabulary prune); token state is never collected. The chain runs on the
 shared engine (models/chain.py), which owns init, the count refresh, the
-sweep job, the run loop and the checkpoint/broadcast lifecycle: per
-sweep one mapInArrow pass that also emits its signed count rows, one
-Spark job of one stage (no shuffle — partitioning by doc_id is
-established once; M3 adds its neighbour join). The posteriors build no
-dense frame on the driver: θ counts each pred inside its doc's own state
-row (``Chain._doc_posterior``), M3's neighbour payload the same way, and
-φ is the driver's P×W array, broadcast once and expanded to rows on the
-executors. This module supplies the M1 layout, init draw, kernels and
-count store.
-Checkpoint/resume per north_rule: plans/checkpoint.py.
+sweep job, the run loop, save/restore and the checkpoint/broadcast
+lifecycle: per sweep one mapInArrow pass that also emits its signed
+count rows, one Spark job of one stage (no shuffle — partitioning by
+doc_id is established once; M3 adds its neighbour join). The posteriors
+build no dense frame on the driver: θ counts each pred inside its doc's
+own state row (``Chain._doc_posterior``), M3's neighbour payload the
+same way, and φ is the driver's P×W array, broadcast once and expanded
+to rows on the executors. This module supplies the M1 layout, init draw,
+kernels and count store. A checkpoint names the chain M1, or M3 with
+``doc_sr``.
 
 Kernels: GibbsConfig.kernel is "native" (default) or "reference". Native
 runs the runtime-compiled C kernel (models/native_kernel.py) once per
@@ -43,11 +43,9 @@ chain. tests/test_gibbs_kernels.py holds native to the reference on
 z-chain AND count-matrix equality; the runner-level tests in
 test_gibbs_fused.py hold the twin to native.
 
-Broadcast discipline: sweep-CONSTANT inputs (candidate CSR, λ·β, Σλβ)
-ship once per sampler in ``_const_bc``; the per-sweep broadcast carries
-only the refreshed (Nwp, Np) counts. At reference scale the constants
-(λ is a dense P×W float64) dominate, so rebroadcasting them every sweep
-— as rounds ≤4 did — multiplied network cost by the sweep count.
+Broadcast discipline: the sweep-constant inputs (candidates, λ·β, Σλβ;
+λ is a dense P×W float64) ship once per chain (``_sweep_const``); the
+per-sweep broadcast carries only the refreshed (Nwp, Np) counts.
 """
 
 from __future__ import annotations
@@ -159,31 +157,21 @@ def _sweep_doc_fast(
     return ch_w, ch_old, ch_new
 
 
-def _m3_alpha_rows(nbr_col, P: int, alpha: float, eps: float):
-    """Rebuild each doc's SR-smoothed α vector from the joined neighbor
-    payload (``nbrs.to_pylist()``; None where the doc has no neighbors)
-    — identical input order to the oracle (see _with_nbr_payload)."""
-    for nbrs in nbr_col:
-        tup = []
-        for e in nbrs or []:
-            pn = e["pn"] or []
-            tup.append((
-                int(e["nbr"]),
-                int(e["nd"]),
-                np.asarray([x["p"] for x in pn], dtype=np.int64),
-                np.asarray([x["n"] for x in pn], dtype=np.int64),
-            ))
-        yield alpha_from_neighbors(tup, P, alpha, eps)
-
-
 def _m3_alphas(blk, P: int, alpha: float, eps: float):
-    """Per-doc α matrix and sums for one batch (M3), read from its
-    joined ``nbrs`` column. α is frozen within a sweep."""
+    """Per-doc SR-smoothed α matrix and sums for one batch (M3), rebuilt
+    from its joined ``nbrs`` column (None where the doc has no
+    neighbors) in the oracle's input order (see _with_nbr_payload). α is
+    frozen within a sweep."""
     n = len(blk.keys)
     av_mat = np.empty((n, P), dtype=np.float64)
     a_sums = np.empty(n, dtype=np.float64)
-    nbr_col = blk.rb.column("nbrs").to_pylist()
-    for j, av in enumerate(_m3_alpha_rows(nbr_col, P, alpha, eps)):
+    for j, nbrs in enumerate(blk.rb.column("nbrs").to_pylist()):
+        av = alpha_from_neighbors([
+            (int(e["nbr"]), int(e["nd"]),
+             np.asarray([x["p"] for x in e["pn"] or []], dtype=np.int64),
+             np.asarray([x["n"] for x in e["pn"] or []], dtype=np.int64))
+            for e in nbrs or []
+        ], P, alpha, eps)
         av_mat[j] = av
         # float(row.sum()) — the same reduction for every kernel
         a_sums[j] = float(av.sum())
@@ -384,6 +372,7 @@ class DistributedGibbs(Chain):
         which is what keeps multi-partition runs well-defined."""
         super().__init__(spark, cfg, LAYOUT)
         self.doc_sr = doc_sr
+        self.model = "M1" if doc_sr is None else "M3"
         self.cand = _collect_cand(obj_pred)
         self.lam = _collect_lam(lam_df, cfg.n_preds, cfg.n_words, cfg.lam_default)
         self.sum_lam_beta = self.lam.sum(axis=1) * cfg.beta
@@ -416,15 +405,31 @@ class DistributedGibbs(Chain):
         return self.kernel == "native" and self.doc_sr is None
 
     def _sweeper(self):
-        cfg, kernel, const_bc = self.cfg, self.kernel, self._ensure_const_bc()
+        cfg, kernel = self.cfg, self.kernel
         use_m3 = self.doc_sr is not None
 
-        def make(counts):
+        def make(counts, const):
             lib = native_kernel.load_native() if kernel == "native" else None
-            return _m1_step(lib, kernel, const_bc.value, *counts,
+            return _m1_step(lib, kernel, const, *counts,
                             cfg.alpha_eff, cfg.beta, cfg.epsilon, use_m3)
 
         return (self.nwp, self.np_), make
+
+    def _sweep_const(self):
+        """Candidates and λ, shipped once per chain."""
+        csr_indptr, csr_data = native_kernel.cand_to_csr(
+            self.cand, self.cfg.n_words
+        )
+        return {
+            "cand": self.cand, "lam": self.lam, "slb": self.sum_lam_beta,
+            # the C kernel's CSR candidates and λ·β ((lam*β) elementwise
+            # equals the twin's per-entry float(lam[c,w])*β bit-for-bit)
+            "csr_indptr": csr_indptr, "csr_data": csr_data,
+            "lam_beta": np.ascontiguousarray(
+                (self.lam * self.cfg.beta).ravel()
+            ),
+            "max_cand": int(np.diff(csr_indptr).max()) if self.cand else 1,
+        }
 
     def _sweep_source(self, base: DataFrame) -> DataFrame:
         # the payload join re-keys state to spark.sql.shuffle.partitions —
@@ -470,25 +475,6 @@ class DistributedGibbs(Chain):
             )
         )
         return state.join(nbrs, "doc_id", "left")
-
-    # ---- sweep-constant broadcast (candidates / λ — shipped ONCE) ----
-    def _ensure_const_bc(self):
-        if self._const_bc is None:
-            csr_indptr, csr_data = native_kernel.cand_to_csr(
-                self.cand, self.cfg.n_words
-            )
-            self._const_bc = self.spark.sparkContext.broadcast({
-                "cand": self.cand, "lam": self.lam, "slb": self.sum_lam_beta,
-                # the C kernel's CSR candidates and λ·β ((lam*β)
-                # elementwise equals the twin's per-entry
-                # float(lam[c,w])*β bit-for-bit)
-                "csr_indptr": csr_indptr, "csr_data": csr_data,
-                "lam_beta": np.ascontiguousarray(
-                    (self.lam * self.cfg.beta).ravel()
-                ),
-                "max_cand": int(np.diff(csr_indptr).max()) if self.cand else 1,
-            })
-        return self._const_bc
 
     # ---- posteriors ----
     def theta(self, for_pairs: DataFrame | None = None) -> DataFrame:

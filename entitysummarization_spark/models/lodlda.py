@@ -400,12 +400,12 @@ def _m7_init(payload, rng, ms, out):
             c[i] = rng.randint(FEAT)
 
 
-def _m7_step(counts, T, M, FEAT, alpha, beta, gamma):
+def _m7_step(counts, ctx, T, M, FEAT, alpha, beta, gamma):
     """The M7 batch-sweep callable for ``chain.run_sweeps``: _sweep_user
     per user over the flat slices, against partition-local working
     copies of the broadcast counts (AD-LDA). A changed record's new
     context features are its movie's, ``ctx[m]``."""
-    nmt0, nct0, ctx = counts
+    nmt0, nct0 = counts
     nmt, nct = nmt0.copy(), nct0.copy()
     nt_m, nt_c = nmt.sum(axis=1), nct.sum(axis=1)
     C = ctx.shape[1]
@@ -439,6 +439,8 @@ class DistributedLodLda(_Counts, Chain):
         m.run(n_sweeps)
         theta = m.theta_df(); scores = m.score_df(test_df)
     """
+
+    model = "M7"
 
     def __init__(
         self,
@@ -483,10 +485,13 @@ class DistributedLodLda(_Counts, Chain):
 
     def _sweeper(self):
         cfg = self.cfg
-        return (self.nmt, self.nct, self.ctx), partial(
+        return (self.nmt, self.nct), partial(
             _m7_step, T=cfg.n_topics, M=cfg.n_movies, FEAT=cfg.n_features,
             alpha=cfg.alpha_eff, beta=cfg.beta, gamma=cfg.gamma,
         )
+
+    def _sweep_const(self):
+        return self.ctx
 
     def _z_record(self, arrs):
         zs, *cs = arrs
@@ -596,12 +601,3 @@ class DistributedLodLda(_Counts, Chain):
         )
         n_users = test.select("user_id").distinct().count()
         return hits / n_users
-
-    # ---- test hooks ----
-    def ntu_state(self) -> dict[int, np.ndarray]:
-        """User topic counts recomputed from state (exactness check)."""
-        T = self.cfg.n_topics
-        return {
-            u: np.bincount(z, minlength=T).astype(np.int64)
-            for u, (z, _c) in self.z_state().items()
-        }

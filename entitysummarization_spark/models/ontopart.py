@@ -284,6 +284,8 @@ class DistributedOntoPart(Chain):
         theta, phi, zeta = m.theta(), m.phi(), m.zeta()
     """
 
+    model = "M6"
+
     def __init__(
         self,
         spark: SparkSession,
@@ -326,13 +328,15 @@ class DistributedOntoPart(Chain):
     def _sweeper(self):
         cfg, max_cls = self.cfg, self._max_cls
 
-        def make(counts):
-            nct, nwc, csr = counts
-            return _onto_step(native_kernel.load_native(), csr, nct, nwc,
+        def make(counts, csr):
+            return _onto_step(native_kernel.load_native(), csr, *counts,
                               cfg.n_topics, cfg.n_classes, cfg.n_words,
                               cfg.alpha_eff, cfg.beta, cfg.zeta, max_cls)
 
-        return (self.nct, self.nwc, self._csr), make
+        return (self.nct, self.nwc), make
+
+    def _sweep_const(self):
+        return self._csr
 
     # ---- posteriors ----
     def theta(self) -> DataFrame:

@@ -31,7 +31,7 @@ import pandas as pd
 from ..fixtures import make_fixture
 from ..functions.automaton import AhoCorasick, tokenize
 from ..functions.murmur3 import partition_of_long
-from ..operators.extraction import extract_triples_pdf
+from ..operators.extraction import MENTION_MAX_ATTR, extract_triples_pdf
 from .oracle import GibbsOracle
 
 
@@ -51,14 +51,13 @@ def pipeline_oracle(
     n_partitions: int = 4,
     base_seed: int = 7,
     beta: float = 0.01,
-    mention_max_attr: int = 2,
 ) -> dict:
     """Returns {"summaries": DataFrame, "canon": DataFrame, "n_preds",
     "n_words", "z": {doc_id: ndarray}} — the exact expected output of
     run_pipeline(fixture(n_files, seed), vocab, n_sweeps, k, n_partitions).
     """
     fx = make_fixture(n_files=n_files, seed=seed)
-    sub = fx.vocab[fx.vocab["attr"] <= mention_max_attr]
+    sub = fx.vocab[fx.vocab["attr"] <= MENTION_MAX_ATTR]
     patterns = [" ".join(tokenize(s)) for s in sub["surface"]]
     ac = AhoCorasick(patterns)
     s2n = dict(zip(patterns, sub["entity_name"]))

@@ -28,6 +28,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.automaton import AhoCorasick, tokenize
 
+# the surface tiers mention detection uses: title and redirect, the
+# high-confidence tiers of Entity.java:12-18
+MENTION_MAX_ATTR = 2
+
 TRIPLE_SCHEMA = (
     "subj string, pred string, obj string, repo string, path string, commit string"
 )
@@ -99,16 +103,14 @@ def extract_triples(
     spark: SparkSession,
     repos: DataFrame,
     vocab: pd.DataFrame | None = None,
-    mention_max_attr: int = 2,
 ) -> DataFrame:
     """repos(repo,path,commit,lang,content) → triples DataFrame.
 
     ``vocab`` (surface, entity_id, attr, entity_name) drives mention
-    detection; attr ≤ ``mention_max_attr`` surfaces participate (title /
-    redirect tiers — the high-confidence tiers of Entity.java:12-18).
+    detection; attr ≤ ``MENTION_MAX_ATTR`` surfaces participate.
     """
     if vocab is not None:
-        sub = vocab[vocab["attr"] <= mention_max_attr]
+        sub = vocab[vocab["attr"] <= MENTION_MAX_ATTR]
         patterns = [" ".join(tokenize(s)) for s in sub["surface"]]
         s2n = dict(zip(patterns, sub["entity_name"]))
         # cached per (SparkContext, lexicon): the vocabulary is a dim —

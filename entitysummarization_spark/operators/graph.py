@@ -13,9 +13,7 @@ Reference analogs (file:line under /root/reference/TextProcessing/src/cs/uga/edu
 
 Determinism: every loop runs a FIXED iteration count (a parameter), so the
 result is a pure function of (edges, n_iter) — reproducible across engines
-and partitionings, and expressible as an unrolled SQL oracle. Convergence
-short-circuiting (stop when no label changes) is available via
-``until_fixpoint`` but off for oracle-checked runs.
+and partitionings, and expressible as an unrolled SQL oracle.
 
 Scale: per iteration one shuffle (groupBy dst). Scores/labels stay
 DataFrames — nothing collects to the driver. Lineage is truncated every
@@ -60,11 +58,7 @@ def _symmetric(edges: DataFrame) -> DataFrame:
     ).distinct()
 
 
-def connected_components(
-    edges: DataFrame,
-    n_iter: int = 20,
-    until_fixpoint: bool = False,
-) -> DataFrame:
+def connected_components(edges: DataFrame, n_iter: int = 20) -> DataFrame:
     """Min-label propagation CC: (node, component) with component =
     min node id reachable within ``n_iter`` hops (= the true component
     once n_iter ≥ graph diameter).
@@ -76,7 +70,7 @@ def connected_components(
     sym = _symmetric(edges).persist()
     nodes = sym.select(F.col("src").alias("node")).distinct()
     labels = nodes.withColumn("component", F.col("node"))
-    for i in range(n_iter):
+    for _ in range(n_iter):
         nbr_min = (
             sym.join(labels, sym.dst == labels.node)
             .groupBy(F.col("src").alias("node"))
@@ -93,20 +87,7 @@ def connected_components(
         )
         # labels feeds both the neighbor gather and the reassembly; eager
         # materialization per round keeps the plan linear in n_iter
-        new_labels = _iter_checkpoint(new_labels)
-        if until_fixpoint:
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "node")
-                .filter(F.col("n.component") != F.col("o.component"))
-                .limit(1)
-                .count()
-            )
-            labels = new_labels
-            if changed == 0:
-                break
-        else:
-            labels = new_labels
+        labels = _iter_checkpoint(new_labels)
     # labels is localCheckpoint-materialized — the cached edge list is no
     # longer referenced by the returned plan
     sym.unpersist()

@@ -75,18 +75,11 @@ def run_pipeline(
     )
     gibbs = DistributedGibbs(spark, bundle.corpus, bundle.obj_pred, bundle.lam, cfg)
     if checkpoint_dir and checkpoint_every > 0:
-        from .checkpoint import save_checkpoint
-
-        done = 0
-        while done < n_sweeps:
-            step = min(checkpoint_every, n_sweeps - done)
-            gibbs.run(step)
-            done += step
-            save_checkpoint(gibbs, checkpoint_dir)
-        if n_sweeps == 0:
-            # a 0-sweep run still leaves a (sweep-0) resume point —
-            # downstream tooling expects checkpoint_dir to be populated
-            save_checkpoint(gibbs, checkpoint_dir)
+        # run(0) still initializes, so a 0-sweep run leaves a sweep-0
+        # resume point: downstream tooling expects checkpoint_dir filled
+        for done in range(0, max(n_sweeps, 1), checkpoint_every):
+            gibbs.run(min(checkpoint_every, n_sweeps - done))
+            gibbs.save(checkpoint_dir)
     else:
         gibbs.run(n_sweeps)
 
@@ -136,14 +129,8 @@ def materialize(
     lineage.write.mode("overwrite").parquet(f"{out_dir}/lineage")
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    n_buckets: int = 64,
-    path: str | None = None,
-    sort: bool = True,
-) -> None:
+def write_bucketed(df: DataFrame, table: str, key: str, n_buckets: int = 64,
+                   path: str | None = None) -> None:
     """Hash-bucketed, per-bucket-sorted parquet table (catalog-registered;
     ``path`` makes it external so tests keep storage out of the warehouse).
 
@@ -155,9 +142,8 @@ def write_bucketed(
     canon↔theta shuffle from every downstream per-entity consumer — the
     shuffle is paid ONCE at write time instead of per query.
     """
-    w = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, key)
-    if sort:
-        w = w.sortBy(key)
+    w = (df.write.mode("overwrite").format("parquet")
+         .bucketBy(n_buckets, key).sortBy(key))
     if path is not None:
         w = w.option("path", path)
     w.saveAsTable(table)

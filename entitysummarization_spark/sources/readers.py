@@ -6,8 +6,8 @@ EntityProc.java:888-922; PatternMatchingMachine.java:1874-1876). Spark
 replaces every one of them with a distributed scan; these helpers add the
 two policies every caller here needs:
 
-  - ``read_table``: parquet (or any ``format``) scan + a re-split to the
-    session's parallelism. Small single-row-group files arrive as ONE
+  - ``read_table``: parquet scan + a re-split to the session's
+    parallelism. Small single-row-group files arrive as ONE
     partition, which would serialize every downstream CPU-heavy stage
     (tokenize/shingle/hash) on one core; at real scale file splitting
     makes this a no-op, and the explicit repartition keeps local runs
@@ -23,16 +23,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 
-def read_table(
-    spark: SparkSession,
-    path: str,
-    fmt: str = "parquet",
-    repartition: bool = True,
-) -> DataFrame:
-    df = spark.read.format(fmt).load(path)
-    if repartition:
-        df = df.repartition(spark.sparkContext.defaultParallelism)
-    return df
+def read_table(spark: SparkSession, path: str) -> DataFrame:
+    return spark.read.parquet(path).repartition(
+        spark.sparkContext.defaultParallelism)
 
 
 def read_text_dir(spark: SparkSession, directory: str) -> DataFrame:

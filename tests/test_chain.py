@@ -1,8 +1,13 @@
 """The shared chain engine (models/chain.py): every sweep, every count
 recompute and every per-doc posterior is one Spark job of one stage,
-every sampler reports the tokens its last sweep changed, every sampler
-destroys its broadcasts on close(), and the per-sweep lineage WARN is
-silenced."""
+every sampler reports the tokens its last sweep changed, ships its sweep
+constants once and destroys its broadcasts on close(), every sampler
+resumes bit-identically from a checkpoint, and the per-sweep lineage
+WARN is silenced."""
+
+import dataclasses
+import json
+import os
 
 import numpy as np
 import pytest
@@ -43,16 +48,22 @@ from entitysummarization_spark.models.ontopart import (
 CORPUS = "doc_id long, word_id long, freq int"
 
 
-def _m1(spark):
-    """M1 over the M6 fixture, classes standing in for predicates."""
+def _m1_inputs(spark):
+    """M1's (corpus, obj_pred, lam) over the M6 fixture, classes standing
+    in for predicates."""
     cand: dict[int, list[int]] = {}
     for c, w in m6_class_rows():
         cand.setdefault(w, []).append(c)
+    return (spark.createDataFrame(m6_corpus_rows(), CORPUS),
+            spark.createDataFrame(sorted(cand.items()),
+                                  "word_id long, pred_ids array<long>"),
+            None)
+
+
+def _m1(spark):
     return DistributedGibbs(
-        spark, spark.createDataFrame(m6_corpus_rows(), CORPUS),
-        spark.createDataFrame(sorted(cand.items()),
-                              "word_id long, pred_ids array<long>"),
-        None, GibbsConfig(n_preds=M6_C, n_words=M6_W, n_partitions=2),
+        spark, *_m1_inputs(spark),
+        GibbsConfig(n_preds=M6_C, n_words=M6_W, n_partitions=2),
     )
 
 
@@ -192,3 +203,106 @@ def test_lineage_warn_logger_raised_to_error(spark):
         LINEAGE_WARN_LOGGER
     )
     assert logger.getLevel().toString() == "ERROR"
+
+
+@pytest.mark.parametrize("name", sorted(SAMPLERS))
+def test_sweep_constants_broadcast_once(spark, name):
+    """A chain's sweep constants (M1's candidates and λ, M6's class CSR,
+    M7's movie contexts) ship in one broadcast that every sweep reuses
+    and close() destroys."""
+    m = SAMPLERS[name](spark)
+    m.run(1)
+    const = m._const_bc
+    m.run(1)
+    assert m._const_bc is const and const._jbroadcast.isValid()
+    m.close()
+    assert not const._jbroadcast.isValid()
+
+
+# the driver counts of each sampler; M4's include its burn-in θ and α
+DRIVER_COUNTS = {
+    "m4": lambda m: (m.nte, m.ne, m.theta, m.alpha_mat, m.sum_alpha),
+    "m6": lambda m: (m.nct, m.nwc),
+    "m7": lambda m: (m.nmt, m.nct),
+}
+
+
+@pytest.mark.parametrize("name", sorted(DRIVER_COUNTS))
+def test_resume_bit_identical(spark, name, tmp_path):
+    """run(4) equals run(2) + save + restore into a fresh instance +
+    run(2), in the state and the driver counts. M4 saves after its
+    burn-in (2 sweeps), so a resume that lost θ/α diverges."""
+    full = SAMPLERS[name](spark)
+    full.run(4)
+    a = SAMPLERS[name](spark)
+    a.run(2)
+    ck = a.save(str(tmp_path / "ck"))
+    assert ck.endswith("sweep=00002")
+    b = SAMPLERS[name](spark)
+    b.restore(ck)
+    assert b.sweeps_done == 2
+    b.run(2)
+    want, got = _token_states(full), _token_states(b)
+    assert set(want) == set(got)
+    for k in want:
+        assert np.array_equal(want[k], got[k]), f"record {k}"
+    for x, y in zip(DRIVER_COUNTS[name](full), DRIVER_COUNTS[name](b)):
+        assert np.array_equal(x, y)
+    if name == "m4":
+        assert full.nwte == b.nwte
+    for m in (full, a, b):
+        m.close()
+
+
+def test_restore_refuses_another_sampler(spark, tmp_path):
+    m6 = _m6(spark)
+    m6.init_state()
+    ck = m6.save(str(tmp_path / "ck"))
+    m6.close()
+    with pytest.raises(ValueError, match="holds an M6 chain"):
+        _m7(spark).restore(ck)
+
+
+def test_restore_refuses_changed_config(spark, tmp_path):
+    m = _m6(spark)
+    m.init_state()
+    ck = m.save(str(tmp_path / "ck"))
+    m.close()
+    other = _m6(spark)
+    other.cfg = dataclasses.replace(other.cfg, base_seed=8)
+    with pytest.raises(ValueError, match="base_seed=7"):
+        other.restore(ck)
+
+
+def test_load_checkpoint_reads_older_meta(spark, tmp_path):
+    """A checkpoint whose meta.json predates the model field (sweeps_done,
+    config with the retired reliable_checkpoint key, and the m3 flag)
+    still resumes, and its m3 flag still guards an M3 resume."""
+    from entitysummarization_spark.plans.checkpoint import (
+        load_checkpoint,
+        save_checkpoint,
+    )
+
+    g = _m1(spark)
+    g.run(2)
+    ck = save_checkpoint(g, str(tmp_path / "ck"))
+    meta_path = os.path.join(ck, "meta.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    meta = {"sweeps_done": meta["sweeps_done"],
+            "config": {**meta["config"], "reliable_checkpoint": False},
+            "m3": False}
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    r = load_checkpoint(spark, ck, *_m1_inputs(spark))
+    assert r.sweeps_done == 2 and r.cfg == g.cfg
+    assert np.array_equal(r.nwp, g.nwp)
+    zr, zg = r.z_state(), g.z_state()
+    assert zr.keys() == zg.keys()
+    assert all(np.array_equal(zr[d], zg[d]) for d in zg)
+    for m in (g, r):
+        m.close()
+    with open(meta_path, "w") as f:
+        json.dump({**meta, "m3": True}, f)
+    with pytest.raises(ValueError, match="M3"):
+        load_checkpoint(spark, ck, *_m1_inputs(spark))

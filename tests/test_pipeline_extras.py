@@ -1,5 +1,7 @@
 """M2 type-gating and the sha256 content invariant."""
 
+import os
+
 import pyspark.sql.functions as F
 
 from entitysummarization_spark.operators.corpus import constrain_by_types
@@ -125,3 +127,21 @@ def test_run_pipeline_without_triples_returns_empty_outputs(spark, fixture_small
         "doc_id", "subj", "rank", "pred", "obj", "theta", "phi", "score"]
     for df in (res.triples, res.theta, res.phi, res.summaries):
         assert df.count() == 0
+
+
+def test_run_pipeline_zero_sweeps_saves_sweep_zero(spark, tmp_path):
+    """A 0-sweep run with checkpointing initializes the chain, leaves a
+    sweep-0 resume point and still returns summaries."""
+    from entitysummarization_spark.fixtures import make_fixture
+    from entitysummarization_spark.plans.checkpoint import latest_checkpoint
+    from entitysummarization_spark.plans.pipeline import run_pipeline
+
+    fx = make_fixture(20, seed=3)
+    ck = str(tmp_path / "ck")
+    res = run_pipeline(spark, spark.createDataFrame(fx.repos),
+                       vocab=fx.vocab, n_sweeps=0, k=2, n_partitions=2,
+                       checkpoint_dir=ck, checkpoint_every=5)
+    assert latest_checkpoint(ck) == os.path.join(ck, "sweep=00000")
+    assert res.gibbs.sweeps_done == 0
+    assert res.summaries.count() > 0
+    res.gibbs.close()
