@@ -8,7 +8,7 @@ idiomatic Spark DataFrame pipeline:
     repos (repo, path, commit, lang, content)
       → extract_triples (vectorized mapInPandas)      [operators.extraction]
       → entity linking (broadcast dict join + AC UDF) [operators.linking]
-      → canonicalization (salted groupBy)             [operators.canonicalize]
+      → canonicalization (skew-aware groupBy)         [operators.canonicalize]
       → corpus (doc_id, word_id, freq)                [operators.corpus]
       → constrained collapsed Gibbs (AD-LDA)          [models.gibbs]
       → θ/φ posteriors → top-k entity summaries       [operators.summary]

@@ -39,9 +39,9 @@ over a partition, each doc's RNG seeded by
 depend on partitioning or fusion. A model's step owns partition-local
 working copies of the global counts (the AD-LDA approximation: stale
 across partitions, exact within one). M1 and M6 run their compiled C
-kernel where it loads and otherwise a bit-identical interpreted twin, so
-a cluster mixing both still produces one chain; M4 and M7 run their
-per-doc kernels over the flat slices (``per_doc``). After the swept
+kernel where it loads; otherwise, like M4 and M7 always, they run their
+oracle's per-doc kernel over the flat slices (``per_doc``). The two are
+bit-identical, so a cluster mixing both still produces one chain. After the swept
 state rows of each batch the runner yields that batch's count rows:
 each changed token is an old-assignment row at −1 and a new-assignment
 row at +1, and every distinct signed row appears once with its count
@@ -73,7 +73,7 @@ for task re-serialization, an unbounded leak at the reference's 500 to
   - the previous sweep's broadcast is destroy()ed once the next state
     is materialized (deferred one sweep out of caution), and ``close``
     destroys the last one and the sweep-constant one (M1's candidates
-    and λ, M6's class CSR, M7's movie contexts);
+    and λ·β, M6's class CSR, M7's movie contexts);
   - ``restore`` ends in the count-only pass, which rebuilds the counts
     exactly from the saved state. RNG is seeded per (base_seed, sweep,
     doc), so run(4) and run(2) + save + restore + run(2) are one chain.
@@ -438,9 +438,8 @@ class Chain:
         """One sweep, or a fused block of ``n_fused`` sweeps, as one job."""
         if n_fused > 1 and not self._can_fuse():
             raise ValueError(
-                "fused sweeps need a fusable chain: M1 requires "
-                "kernel='native' and no doc_sr (M3 re-derives neighbor "
-                "payloads between sweeps); M4 and M7 sweep one per job"
+                "fused sweeps need a fusable chain: M3 re-derives neighbor "
+                "payloads between sweeps; M4 and M7 sweep one per job"
             )
         layout, seed, sweep0 = self.layout, self.cfg.base_seed, self.sweeps_done
         payload, make = self._sweeper()
@@ -470,8 +469,8 @@ class Chain:
         k = max(1, int(getattr(self.cfg, "sweeps_per_job", 1)))
         if k > 1 and not self._can_fuse():
             warnings.warn(
-                "sweeps_per_job>1 applies only to the native non-M3 "
-                "path; sweeping one per job", stacklevel=2,
+                "sweeps_per_job>1 does not apply to M3; sweeping one "
+                "per job", stacklevel=2,
             )
             k = 1
         done = 0
@@ -486,6 +485,11 @@ class Chain:
         """Write the state, one lineage row per partition, the
         ``driver_state`` and last ``meta.json``, renamed into place as
         the commit marker, under ``path/sweep=<n>``; return that dir."""
+        if self.state is None:
+            raise ValueError(
+                f"the {self.model} chain has no state yet: call init_state "
+                "or run before save"
+            )
         d = os.path.join(path, f"sweep={self.sweeps_done:05d}")
         self.state.write.mode("overwrite").parquet(os.path.join(d, "state"))
         self.state.groupBy(F.spark_partition_id().alias("partition_id")).agg(

@@ -32,26 +32,25 @@ kernels and count store. A checkpoint names the chain M1, or M3 with
 
 Kernels: GibbsConfig.kernel is "native" (default) or "reference". Native
 runs the runtime-compiled C kernel (models/native_kernel.py) once per
-Arrow batch; an executor without a C compiler runs its interpreted twin,
-_sweep_doc_fast, per doc over the same flat slices. "reference" runs
-_sweep_doc_reference (models/oracle.py), the per-token NumPy
-transcription GibbsOracle also runs and the parity tests arbitrate
-against. All three are bit-identical by
-construction (same seeded-RNG contract, same IEEE op order), so a
-cluster mixing compiled and interpreted executors still produces one
+Arrow batch. "reference", and "native" on an executor without a C
+compiler, run _sweep_doc_reference (models/oracle.py) per doc over the
+same flat slices: the per-token NumPy kernel GibbsOracle runs, as every
+sampler's interpreted kernel is its oracle's. The two are bit-identical
+by construction (same seeded-RNG contract, same IEEE op order), so a
+cluster mixing compiled and compiler-less executors still produces one
 chain. tests/test_gibbs_kernels.py holds native to the reference on
-z-chain AND count-matrix equality; the runner-level tests in
-test_gibbs_fused.py hold the twin to native.
+z-chain AND count-matrix equality; test_gibbs_fused.py does the same at
+the runner, unfused and fused.
 
-Broadcast discipline: the sweep-constant inputs (candidates, λ·β, Σλβ;
-λ is a dense P×W float64) ship once per chain (``_sweep_const``); the
-per-sweep broadcast carries only the refreshed (Nwp, Np) counts.
+Broadcast discipline: the sweep-constant inputs (CSR candidates, λ·β,
+Σλβ; λ·β is a dense P×W float64) ship once per chain
+(``_sweep_const``); the per-sweep broadcast carries only the refreshed
+(Nwp, Np) counts.
 """
 
 from __future__ import annotations
 
 import warnings
-from bisect import bisect_right
 from dataclasses import dataclass
 
 import numpy as np
@@ -65,96 +64,6 @@ from .oracle import _sweep_doc_reference, alpha_from_neighbors
 
 # one row per doc; the counts are kept over (word, pred)
 LAYOUT = Layout("doc_id", "words", ("zs",))
-
-
-def _sweep_doc_fast(
-    ws_l, zs_l, nd, nwp_flat, np_l, W, word_cache, cand, lam, slb, beta,
-    alpha, av, a_sum, rng
-):
-    """Scalar-Python twin of _sweep_doc_reference and of the C kernel,
-    BIT-IDENTICAL by construction (test_gibbs_fused.py asserts it against
-    native inside the runner):
-
-      - rng.rand(ndoc) pre-draws the token uniforms — MT19937 emits the
-        same double sequence batched or one-at-a-time;
-      - each candidate's probability is computed with the exact IEEE-754
-        op order of the reference's elementwise expression, and the
-        running CDF sum reproduces np.cumsum's sequential accumulation
-        (0.0 + x == x exactly, probabilities are non-negative);
-      - bisect_right == np.searchsorted(side="right").
-
-    Why it is faster (~5×): the reference pays ~6 NumPy dispatches on
-    len(c)-sized arrays PER TOKEN (µs each on tiny arrays); here the
-    candidate loop is plain-float arithmetic over per-word cached lists
-    (candidates, flat nwp offsets, λ·β, Σλβ — all sweep-constant), and the
-    only NumPy touched per token is two flat int64 reads/writes. Mutates
-    zs_l/nd/np_l (python lists) and nwp_flat (flat int64) in place;
-    returns the changed-token lists (word, old pred, new pred)."""
-    ndoc = len(ws_l)
-    denom = ndoc - 1 + a_sum
-    # .tolist() / int()/float() conversions are bit-exact; keeping every
-    # operand a plain python float/int matters because np.float64 SCALAR
-    # arithmetic pays a ufunc dispatch (~10× a float op) per operation
-    us = rng.rand(ndoc).tolist()
-    a_l = av.tolist() if av is not None else None
-    item = nwp_flat.item
-    ch_w: list = []
-    ch_old: list = []
-    ch_new: list = []
-    for i in range(ndoc):
-        w = ws_l[i]
-        p_old = zs_l[i]
-        nd[p_old] -= 1
-        np_l[p_old] -= 1
-        nwp_flat[p_old * W + w] -= 1
-        ent = word_cache.get(w)
-        if ent is None:
-            c_l = [int(x) for x in cand[w]]
-            ent = (
-                c_l,
-                list(zip(
-                    c_l,
-                    [cj * W + w for cj in c_l],
-                    [float(lam[cj, w]) * beta for cj in c_l],
-                    [float(slb[cj]) for cj in c_l],
-                )),
-            )
-            word_cache[w] = ent
-        c_l, rows = ent
-        total = 0.0
-        cdf = []
-        push = cdf.append
-        if a_l is None:
-            for cj, off, lb, sl in rows:
-                total = total + (
-                    (nd[cj] + alpha) / denom
-                    * (item(off) + lb)
-                    / (np_l[cj] + sl)
-                )
-                push(total)
-        else:
-            for cj, off, lb, sl in rows:
-                total = total + (
-                    (nd[cj] + a_l[cj]) / denom
-                    * (item(off) + lb)
-                    / (np_l[cj] + sl)
-                )
-                push(total)
-        u = us[i] * total
-        k = bisect_right(cdf, u)
-        last = len(c_l) - 1
-        if k > last:
-            k = last
-        p_new = c_l[k]
-        zs_l[i] = p_new
-        nd[p_new] += 1
-        np_l[p_new] += 1
-        nwp_flat[p_new * W + w] += 1
-        if p_new != p_old:
-            ch_w.append(w)
-            ch_old.append(p_old)
-            ch_new.append(p_new)
-    return ch_w, ch_old, ch_new
 
 
 def _m3_alphas(blk, P: int, alpha: float, eps: float):
@@ -178,81 +87,62 @@ def _m3_alphas(blk, P: int, alpha: float, eps: float):
     return av_mat, a_sums
 
 
-def _m1_step(lib, kernel, const, nwp, np_, alpha, beta, eps, use_m3):
-    """The M1 batch-sweep callable for ``chain.run_sweeps``.
-
-    ``kernel="reference"`` runs the per-token NumPy arbiter. Otherwise
-    the C kernel runs where ``lib`` loaded, and its interpreted twin
-    ``_sweep_doc_fast`` where it did not. Each variant keeps its own
-    partition-local working copies of (nwp, np_) for the whole pass
-    (AD-LDA); the per-doc variants walk the batch's flat slices."""
+def _m1_step(lib, const, nwp, np_, alpha, eps, use_m3):
+    """The M1 batch-sweep callable for ``chain.run_sweeps``: the C kernel
+    where ``lib`` loaded, else the oracle's per-token kernel
+    ``_sweep_doc_reference`` per doc over the batch's flat slices. Both
+    mutate ONE set of partition-local working copies of (nwp, np_) for
+    the pass (AD-LDA)."""
     P, W = nwp.shape
+    nwp, np_ = nwp.copy(), np_.copy()
+    csr_indptr, csr_data = const["csr_indptr"], const["csr_data"]
+    lam_beta, slb = const["lam_beta"], np.ascontiguousarray(const["slb"])
 
     def alphas(blk):
         return _m3_alphas(blk, P, alpha, eps) if use_m3 else (None, None)
 
-    if kernel == "native" and lib is not None:
-        nwp_flat = nwp.ravel().copy()
-        np_arr = np_.copy()
-        slb = np.ascontiguousarray(const["slb"])
-        nd = np.zeros(P, dtype=np.int64)
-        cdf = np.empty(max(int(const["max_cand"]), 1), dtype=np.float64)
-
-        def native_step(blk, seeds):
-            av_mat, a_sums = alphas(blk)
-            return native_kernel.sweep_batch_native(
-                lib, blk.indptr, blk.ws, blk.state[0], seeds, P, W,
-                nwp_flat, np_arr, const["csr_indptr"], const["csr_data"],
-                const["lam_beta"], slb, alpha, av_mat, a_sums, nd, cdf,
-            )
-
-        return native_step
-
-    cand, lam, slb = const["cand"], const["lam"], const["slb"]
-    m3 = [None, None]  # this batch's (α matrix, α sums) under M3
-
-    def doc_alpha(j):
-        return (m3[0][j], float(m3[1][j])) if use_m3 else (None, P * alpha)
-
-    # the reference kernel keeps the 2-D arrays, the twin a flat int64
-    # array + python int list — the same update sequence either way
-    if kernel == "reference":
-        nwp, np_ = nwp.copy(), np_.copy()
+    if lib is None:
+        cand = {
+            w: csr_data[csr_indptr[w]:csr_indptr[w + 1]] for w in range(W)
+        }
+        # λ·β ships pre-multiplied: lam_beta[c, w] * 1.0 is the same
+        # double as the kernel's lam[c, w] * β
+        lam_beta = lam_beta.reshape(P, W)
+        m3 = [None, None]  # this batch's (α matrix, α sums) under M3
 
         def sweep_doc(blk, j, lo, hi, rng):
-            av, a_sum = doc_alpha(j)
+            if use_m3:
+                av, a_sum = m3[0][j], float(m3[1][j])
+            else:
+                av, a_sum = None, P * alpha
             z = blk.state[0][lo:hi]  # a view: the kernel writes through
             nd = np.bincount(z, minlength=P).astype(np.int64)
             return _sweep_doc_reference(
-                blk.ws[lo:hi], z, nd, nwp, np_, cand, lam, slb, beta, alpha,
-                av, a_sum, rng,
+                blk.ws[lo:hi], z, nd, nwp, np_, cand, lam_beta, slb, 1.0,
+                alpha, av, a_sum, rng,
             )
-    else:
-        nwp_flat = nwp.ravel().copy()
-        np_l = [int(x) for x in np_]
-        word_cache: dict = {}
 
-        def sweep_doc(blk, j, lo, hi, rng):
-            av, a_sum = doc_alpha(j)
-            zs = blk.state[0]
-            z = zs[lo:hi].tolist()
-            nd = [0] * P
-            for p in z:
-                nd[p] += 1
-            ch = _sweep_doc_fast(
-                blk.ws[lo:hi].tolist(), z, nd, nwp_flat, np_l, W,
-                word_cache, cand, lam, slb, beta, alpha, av, a_sum, rng,
-            )
-            zs[lo:hi] = z
-            return ch
+        doc_step = per_doc(sweep_doc, 3)
 
-    doc_step = per_doc(sweep_doc, 3)
+        def per_doc_step(blk, seeds):
+            m3[:] = alphas(blk)
+            return doc_step(blk, seeds)
 
-    def per_doc_step(blk, seeds):
-        m3[:] = alphas(blk)
-        return doc_step(blk, seeds)
+        return per_doc_step
 
-    return per_doc_step
+    nwp_flat = nwp.ravel()  # a view of the working copy
+    nd = np.zeros(P, dtype=np.int64)
+    cdf = np.empty(max(int(const["max_cand"]), 1), dtype=np.float64)
+
+    def native_step(blk, seeds):
+        av_mat, a_sums = alphas(blk)
+        return native_kernel.sweep_batch_native(
+            lib, blk.indptr, blk.ws, blk.state[0], seeds, P, W,
+            nwp_flat, np_, csr_indptr, csr_data, lam_beta, slb, alpha,
+            av_mat, a_sums, nd, cdf,
+        )
+
+    return native_step
 
 
 def _m1_init(cand, rng, ws, out):
@@ -278,11 +168,10 @@ class GibbsConfig:
     # only category-word TF-IDF entries are set
     # (sontoldamodel/SontoLDA.java:524-531, used at :138-139).
     lam_default: float = 1.0
-    # "native" = the runtime-compiled C kernel (default), or its
-    # bit-identical interpreted twin on an executor without a C compiler;
-    # "reference" = the per-token NumPy kernel the oracle parity tests
-    # arbitrate against. Both produce identical z-chains
-    # (test_gibbs_kernels.py).
+    # "native" = the runtime-compiled C kernel (default); "reference" =
+    # the per-token NumPy kernel GibbsOracle runs, which is also what
+    # "native" runs on an executor without a C compiler. Both produce
+    # identical z-chains (test_gibbs_kernels.py).
     kernel: str = "native"
     # >1 fuses that many sweeps into ONE Spark job (mapInArrow pass):
     # each partition carries its locally-updated counts across the
@@ -295,8 +184,8 @@ class GibbsConfig:
     # n_partitions=1; global counts exactly reconstructed from the
     # block's deltas at every block boundary (test_gibbs_fused.py).
     # DEFAULT 1: the bit-parity-to-reference contract holds only
-    # unfused for n_partitions>1. Applies to the native non-M3 path;
-    # other paths sweep per-job regardless.
+    # unfused for n_partitions>1. Applies to either kernel; M3 sweeps
+    # one per job regardless.
     sweeps_per_job: int = 1
 
     def __post_init__(self) -> None:
@@ -380,7 +269,7 @@ class DistributedGibbs(Chain):
         if self.kernel == "native" and not native_kernel.native_available():
             warnings.warn(
                 "kernel='native': no C compiler available — sweeps run the "
-                "interpreted twin (bit-identical, slower)", stacklevel=2,
+                "reference kernel (bit-identical, slower)", stacklevel=2,
             )
         self.corpus = corpus
         self.nwp: np.ndarray | None = None
@@ -402,7 +291,7 @@ class DistributedGibbs(Chain):
         self.np_ = self.nwp.sum(axis=1)
 
     def _can_fuse(self) -> bool:
-        return self.kernel == "native" and self.doc_sr is None
+        return self.doc_sr is None
 
     def _sweeper(self):
         cfg, kernel = self.cfg, self.kernel
@@ -410,20 +299,18 @@ class DistributedGibbs(Chain):
 
         def make(counts, const):
             lib = native_kernel.load_native() if kernel == "native" else None
-            return _m1_step(lib, kernel, const, *counts,
-                            cfg.alpha_eff, cfg.beta, cfg.epsilon, use_m3)
+            return _m1_step(lib, const, *counts,
+                            cfg.alpha_eff, cfg.epsilon, use_m3)
 
         return (self.nwp, self.np_), make
 
     def _sweep_const(self):
-        """Candidates and λ, shipped once per chain."""
+        """CSR candidates, λ·β and Σλβ, shipped once per chain."""
         csr_indptr, csr_data = native_kernel.cand_to_csr(
             self.cand, self.cfg.n_words
         )
         return {
-            "cand": self.cand, "lam": self.lam, "slb": self.sum_lam_beta,
-            # the C kernel's CSR candidates and λ·β ((lam*β) elementwise
-            # equals the twin's per-entry float(lam[c,w])*β bit-for-bit)
+            "slb": self.sum_lam_beta,
             "csr_indptr": csr_indptr, "csr_data": csr_data,
             "lam_beta": np.ascontiguousarray(
                 (self.lam * self.cfg.beta).ravel()

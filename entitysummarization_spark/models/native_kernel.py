@@ -6,9 +6,9 @@ token i's conditional depends on token i-1's update, so it cannot be
 vectorized in NumPy. This module compiles that exact loop to machine
 code at runtime with the system C compiler and calls it once per Arrow
 batch through ctypes, from the shared block runner (models/chain.py).
-Each kernel has one interpreted twin for executors without a compiler:
-gibbs._sweep_doc_fast for ``sweep_batch`` and ontopart._sweep_doc
-for ``onto_sweep_batch``.
+An executor without a compiler runs each kernel's interpreted twin,
+its sampler's oracle kernel: oracle._sweep_doc_reference for
+``sweep_batch`` and ontopart._sweep_doc for ``onto_sweep_batch``.
 
 Bit-identity contract (arbitrated by tests/test_gibbs_kernels.py, which
 asserts z-chain AND count-matrix equality against the reference kernel):
@@ -18,17 +18,16 @@ asserts z-chain AND count-matrix equality against the reference kernel):
     ``RandomState(seed)`` / ``rng.seed(seed)`` for seeds < 2**32) and
     ``random_sample`` ((a>>5)*2**26 + (b>>6)) / 2**53. Seeds come from
     the same ``oracle.seed_for(base_seed, sweep, doc)``; one uniform per
-    token, drawn in token order (MT19937 emits the same double sequence
-    batched or one-at-a-time, so parity with the twin's
-    ``rng.rand(ndoc)`` pre-draw holds).
+    token, drawn in token order, as the twin's ``rng.rand()`` per token.
   - Arithmetic: the candidate probability is evaluated with the same
     IEEE-754 op order as the Python expression
     ``(nd+α)/denom * (nwp+λβ) / (np+Σλβ)`` (C's ``/``/``*`` are
-    left-associative like Python's); the CDF is the same sequential
-    ``total = total + p`` accumulation; compiled with
+    left-associative like Python's); the CDF is ``np.cumsum``'s
+    sequential ``total = total + p`` accumulation; compiled with
     ``-ffp-contract=off`` so no FMA changes the rounding.
-  - Selection: binary search reproducing ``bisect_right`` (first index
-    with cdf[k] > u), clamped to the last candidate.
+  - Selection: binary search reproducing
+    ``np.searchsorted(cdf, u, side="right")`` (first index with
+    cdf[k] > u), clamped to the last candidate.
 
 Candidates are passed CSR-packed (indptr/data over word ids) and
 λ·β pre-multiplied — both sweep-constant, prepared once driver-side by

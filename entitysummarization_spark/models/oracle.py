@@ -89,9 +89,10 @@ def _sweep_doc_reference(
     ws, zs, nd, nwp, np_, cand, lam, slb, beta, alpha, av, a_sum, rng
 ):
     """Per-token NumPy kernel of one doc — the M1 arbiter: GibbsOracle
-    and the "reference" chain kernel run it, and the C kernel and its
-    twin (models/gibbs.py) are held bit-identical to it
-    (EntSumModel.java:133-192 semantics). One rng.rand() per token, CDF
+    runs it, and so does the chain (models/gibbs.py) under
+    ``kernel="reference"`` or on an executor without a C compiler; the
+    C kernel is held bit-identical to it (EntSumModel.java:133-192
+    semantics). One rng.rand() per token, CDF
     over the word's candidate predicates, in-place count updates. Mutates
     zs/nd/nwp/np_; returns the changed-token lists (word, old pred, new
     pred) the sweep's signed count rows come from."""

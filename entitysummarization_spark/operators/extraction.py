@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.automaton import AhoCorasick, tokenize
+from .linking import cached_broadcast
 
 # the surface tiers mention detection uses: title and redirect, the
 # high-confidence tiers of Entity.java:12-18
@@ -42,10 +43,6 @@ _DEF_RE = re.compile(r"^def\s+(\w+)\s*\(")
 _CALL_RE = re.compile(r"([A-Za-z_][\w.]*)\.(\w+)\(")
 
 STOP_IMPORTS = frozenset({"__future__", "sys", "os"})
-
-# (applicationId, patterns, surface→name) → broadcast (automaton, map)
-_EXTRACT_BROADCASTS: dict[tuple, object] = {}
-
 
 def _valid_name(obj: str) -> bool:
     """F6 name-validity analog: length ≥3, not numeric, sane leading char."""
@@ -109,27 +106,18 @@ def extract_triples(
     ``vocab`` (surface, entity_id, attr, entity_name) drives mention
     detection; attr ≤ ``MENTION_MAX_ATTR`` surfaces participate.
     """
+    bc = None
     if vocab is not None:
         sub = vocab[vocab["attr"] <= MENTION_MAX_ATTR]
         patterns = [" ".join(tokenize(s)) for s in sub["surface"]]
         s2n = dict(zip(patterns, sub["entity_name"]))
-        # cached per (SparkContext, lexicon): the vocabulary is a dim —
-        # rebuilding + re-broadcasting the automaton per call charges the
-        # driver-side build to every query invocation (see linking.py)
-        key = (spark.sparkContext.applicationId,
-               tuple(patterns), tuple(sorted(s2n.items())))
-        bc = _EXTRACT_BROADCASTS.get(key)
-        if bc is None:
-            stale = [k for k in _EXTRACT_BROADCASTS if k[0] != key[0]]
-            for k in stale:
-                _EXTRACT_BROADCASTS.pop(k, None)
-            bc = spark.sparkContext.broadcast((AhoCorasick(patterns), s2n))
-            _EXTRACT_BROADCASTS[key] = bc
-    else:
-        bc = spark.sparkContext.broadcast((None, None))
+        # one broadcast per (SparkContext, lexicon), as in linking.py
+        bc = cached_broadcast(
+            spark, ("extract", tuple(patterns), tuple(sorted(s2n.items()))),
+            lambda: (AhoCorasick(patterns), s2n))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        a, m = bc.value
+        a, m = bc.value if bc is not None else (None, None)
         for b in batches:
             yield extract_triples_pdf(b, a, m)
 

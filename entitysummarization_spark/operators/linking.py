@@ -32,26 +32,26 @@ from ..functions.automaton import AhoCorasick, split_sentences, tokenize
 # weights per PatternMatchingMachine.java:2010,2036-2037)
 ATTR_CONF = {1: 1.0, 2: 0.9, 3: 0.8, 4: 0.6, 5: 0.4, 6: 0.3}
 
-# (applicationId, patterns) → broadcast automaton. Rebuilding + re-pickling
-# + re-broadcasting the automaton on EVERY detect_mentions call charges the
-# full driver-side build to each query invocation (and under host load the
-# re-broadcast fans a fresh torrent to all executors); the lexicon is a dim
-# that changes ~never within a session, so cache one broadcast per
-# (SparkContext, pattern set). Keying on applicationId drops entries
-# belonging to stopped contexts (their broadcasts die with the JVM).
-_AC_BROADCASTS: dict[tuple, object] = {}
+# (applicationId, key) → broadcast. Rebuilding + re-pickling +
+# re-broadcasting an automaton on EVERY detect_mentions / extract_triples
+# call charges the full driver-side build to each query invocation (and
+# under host load the re-broadcast fans a fresh torrent to all
+# executors); the lexicon is a dim that changes ~never within a session,
+# so cache one broadcast per (SparkContext, key). Keying on applicationId
+# drops entries belonging to stopped contexts (their broadcasts die with
+# the JVM).
+_BROADCASTS: dict[tuple, object] = {}
 
 
-def broadcast_automaton(spark: SparkSession, patterns: tuple[str, ...]):
-    """One cached ``broadcast(AhoCorasick(patterns))`` per (app, lexicon)."""
-    key = (spark.sparkContext.applicationId, patterns)
-    bc = _AC_BROADCASTS.get(key)
+def cached_broadcast(spark: SparkSession, key: tuple, build):
+    """One cached ``broadcast(build())`` per (app, ``key``)."""
+    app = spark.sparkContext.applicationId
+    bc = _BROADCASTS.get((app, key))
     if bc is None:
-        stale = [k for k in _AC_BROADCASTS if k[0] != key[0]]
-        for k in stale:
-            _AC_BROADCASTS.pop(k, None)
-        bc = spark.sparkContext.broadcast(AhoCorasick(patterns))
-        _AC_BROADCASTS[key] = bc
+        for k in [k for k in _BROADCASTS if k[0] != app]:
+            del _BROADCASTS[k]
+        bc = spark.sparkContext.broadcast(build())
+        _BROADCASTS[(app, key)] = bc
     return bc
 
 
@@ -77,7 +77,8 @@ def detect_mentions(
     line/identifier tokenizer already is the segmentation.
     """
     patterns = tuple(sorted({" ".join(tokenize(s)) for s in surfaces if s.strip()}))
-    bc = broadcast_automaton(spark, patterns)
+    bc = cached_broadcast(spark, ("mentions", patterns),
+                          lambda: AhoCorasick(patterns))
     per_sentence = unit == "sentence"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -45,7 +45,7 @@ def main() -> None:
     ap.add_argument("--kernel", default="native",
                     choices=["native", "reference"],
                     help="Gibbs sweep kernel (bit-identical; native runs "
-                         "its interpreted twin where no C compiler exists)")
+                         "the reference kernel where no C compiler exists)")
     ap.add_argument("--sweeps-per-job", type=int, default=1,
                     help="fuse this many sweeps into one Spark job "
                          "(opt-in late-chain throughput mode; exact "

@@ -207,7 +207,7 @@ def test_lineage_warn_logger_raised_to_error(spark):
 
 @pytest.mark.parametrize("name", sorted(SAMPLERS))
 def test_sweep_constants_broadcast_once(spark, name):
-    """A chain's sweep constants (M1's candidates and λ, M6's class CSR,
+    """A chain's sweep constants (M1's candidates and λ·β, M6's class CSR,
     M7's movie contexts) ship in one broadcast that every sweep reuses
     and close() destroys."""
     m = SAMPLERS[name](spark)
@@ -306,3 +306,13 @@ def test_load_checkpoint_reads_older_meta(spark, tmp_path):
         json.dump({**meta, "m3": True}, f)
     with pytest.raises(ValueError, match="M3"):
         load_checkpoint(spark, ck, *_m1_inputs(spark))
+
+
+def test_save_before_init_refuses(spark, tmp_path):
+    """A chain with no state yet refuses to save, and writes nothing."""
+    ck = tmp_path / "ck"
+    ck.mkdir()
+    m = _m6(spark)
+    with pytest.raises(ValueError, match="no state yet"):
+        m.save(str(ck))
+    assert list(ck.iterdir()) == []

@@ -4,6 +4,7 @@ import numpy as np
 import pandas as pd
 
 from entitysummarization_spark.functions.automaton import AhoCorasick, tokenize
+from entitysummarization_spark.operators import extraction
 from entitysummarization_spark.operators.extraction import (
     extract_triples,
     extract_triples_pdf,
@@ -18,6 +19,35 @@ def test_extraction_matches_golden(spark, fixture_small):
     gs = set(map(tuple, got.toPandas().values))
     es = set(map(tuple, fx.expected_triples[["subj", "pred", "obj"]].values))
     assert gs == es  # P/R = 1.0 on the deterministic stage
+
+
+def test_extraction_shares_one_broadcast(spark, fixture_small, monkeypatch):
+    """Two calls with the same vocab share one automaton broadcast; with
+    no vocab nothing is broadcast."""
+    fx = fixture_small
+    repos = spark.createDataFrame(fx.repos.head(5))
+    ids = []
+    cached = extraction.cached_broadcast
+
+    def spy(*args):
+        bc = cached(*args)
+        ids.append(bc._jbroadcast.id())
+        return bc
+
+    monkeypatch.setattr(extraction, "cached_broadcast", spy)
+    extract_triples(spark, repos, fx.vocab)
+    extract_triples(spark, repos, fx.vocab.copy())
+    assert len(ids) == 2 and ids[0] == ids[1]
+
+    sc = spark.sparkContext
+    made = []
+    broadcast = sc.broadcast
+    monkeypatch.setattr(sc, "broadcast",
+                        lambda v: made.append(v) or broadcast(v))
+    plain = extract_triples(spark, repos)
+    assert made == [] and len(ids) == 2
+    assert plain.count() == len(extract_triples_pdf(fx.repos.head(5), None,
+                                                    None))
 
 
 def test_stop_imports_filtered():

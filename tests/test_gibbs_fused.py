@@ -16,9 +16,12 @@ every approximation in this repo clears:
      exact-sampler seed-noise floor 0.58, unfused 4-partition 0.83).
 """
 
+import warnings
+
 import numpy as np
 import pytest
 
+from entitysummarization_spark.fixtures.samplers import ring_edges
 from entitysummarization_spark.models import native_kernel
 from entitysummarization_spark.models.chain import COUNT, run_sweeps
 from entitysummarization_spark.models.gibbs import (
@@ -47,10 +50,11 @@ def bundle(spark, fixture_small):
     return b, int(P), int(W)
 
 
-def _run(spark, b, P, W, n_partitions, sweeps, sweeps_per_job):
+def _run(spark, b, P, W, n_partitions, sweeps, sweeps_per_job,
+         kernel="native"):
     cfg = GibbsConfig(
         n_preds=P, n_words=W, base_seed=11, n_partitions=n_partitions,
-        kernel="native", sweeps_per_job=sweeps_per_job,
+        kernel=kernel, sweeps_per_job=sweeps_per_job,
     )
     g = DistributedGibbs(spark, b.corpus, b.obj_pred, b.lam, cfg)
     g.run(sweeps)
@@ -106,10 +110,29 @@ def test_fused_remainder_and_sweep_count(spark, bundle):
 
 
 def test_fused_rejects_non_native_and_m3(spark, bundle):
+    """kernel="reference" (the compiler-less fallback) fuses: on one
+    partition its fused ×2 run(4) equals an unfused native run(4). M3
+    refuses a fused sweep and run() degrades to one sweep per job."""
     b, P, W = bundle
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        gr = _run(spark, b, P, W, n_partitions=1, sweeps=4,
+                  sweeps_per_job=2, kernel="reference")
+    assert not [w for w in caught if "sweeps_per_job" in str(w.message)]
+    gn = _run(spark, b, P, W, n_partitions=1, sweeps=4, sweeps_per_job=1)
+    zr, zn = gr.z_state(), gn.z_state()
+    assert set(zr) == set(zn)
+    for d in zn:
+        assert np.array_equal(zr[d], zn[d]), f"doc {d}"
+    assert np.array_equal(gr.nwp, gn.nwp)
+    gr.close()
+    gn.close()
+
+    docs = [r.doc_id for r in b.corpus.select("doc_id").distinct().collect()]
+    sr = spark.createDataFrame(ring_edges(docs), "doc_a long, doc_b long")
     cfg = GibbsConfig(n_preds=P, n_words=W, base_seed=11, n_partitions=1,
-                      kernel="reference", sweeps_per_job=4)
-    g = DistributedGibbs(spark, b.corpus, b.obj_pred, b.lam, cfg)
+                      sweeps_per_job=4)
+    g = DistributedGibbs(spark, b.corpus, b.obj_pred, b.lam, cfg, doc_sr=sr)
     g.init_state()
     with pytest.raises(ValueError, match="fused"):
         g.sweep(n_fused=2)
@@ -131,7 +154,7 @@ def _tiny_problem():
     lam = np.ones((P, W))
     beta = 0.01
     const = {
-        "cand": cand, "lam": lam, "slb": lam.sum(axis=1) * beta,
+        "slb": lam.sum(axis=1) * beta,
         "csr_indptr": csr_indptr, "csr_data": csr_data,
         "lam_beta": np.ascontiguousarray((lam * beta).ravel()),
         "max_cand": P,
@@ -162,13 +185,12 @@ def delta_rows(batches, layout):
     ]
 
 
-def _sweep_block(rb, lib, const, nwp, P, sweep0, k, kernel="native",
-                 use_m3=False):
+def _sweep_block(rb, lib, const, nwp, P, sweep0, k, use_m3=False):
     """One partition's pass through the shared runner: sweeps
     sweep0..sweep0+k-1 of the tiny problem with the M1 batch sweep.
     Returns the swept state batch and the pass's signed count rows."""
-    step = _m1_step(lib, kernel, const, nwp, nwp.sum(axis=1), 50.0 / P,
-                    0.01, 0.9, use_m3)
+    step = _m1_step(lib, const, nwp, nwp.sum(axis=1), 50.0 / P, 0.9,
+                    use_m3)
     out = list(run_sweeps(iter([rb]), step, 11, sweep0, k, LAYOUT))
     assert len(out) in (1, 2)
     return out[0], delta_rows(out, LAYOUT)
@@ -231,9 +253,9 @@ def test_fused_multi_partition_summary_ndcg(spark):
 @needs_cc
 @pytest.mark.parametrize("k", [1, 3])
 def test_fused_interpreted_fallback_matches_native(k):
-    """lib=None (executor without a compiler) runs the interpreted twin
-    inside the SAME runner — identical chain, so heterogeneous clusters
-    agree, unfused and even mid-block."""
+    """lib=None (executor without a compiler) runs the oracle's
+    reference kernel inside the SAME runner — identical chain, so
+    heterogeneous clusters agree, unfused and even mid-block."""
     rb, const, nwp0, P, W = _tiny_problem()
     a, da = _sweep_block(rb, native_kernel.load_native(), const, nwp0, P,
                          0, k)
@@ -244,8 +266,8 @@ def test_fused_interpreted_fallback_matches_native(k):
 
 @needs_cc
 def test_m3_interpreted_twin_matches_native():
-    """M3 per-doc α through the runner: the twin, the C kernel and the
-    reference kernel read the joined ``nbrs`` column into the same α
+    """M3 per-doc α through the runner: the C kernel and the reference
+    kernel (lib=None) read the joined ``nbrs`` column into the same α
     rows (doc 1 has no neighbors — the left-join null) and agree."""
     import pyarrow as pa
 
@@ -263,11 +285,9 @@ def test_m3_interpreted_twin_matches_native():
         list(rb.columns) + [nbrs], names=rb.schema.names + ["nbrs"]
     )
     lib = native_kernel.load_native()
-    runs = [_sweep_block(rb, lib_, const, nwp0, P, 0, 1, kernel=kern,
-                         use_m3=True)
-            for lib_, kern in ((lib, "native"), (None, "native"),
-                               (None, "reference"))]
+    runs = [_sweep_block(rb, lib_, const, nwp0, P, 0, 1, use_m3=True)
+            for lib_ in (lib, None)]
     got = [r.column("zs").to_pylist() for r, _ in runs]
-    assert got[0] == got[1] == got[2]
+    assert got[0] == got[1]
     deltas = [d for _, d in runs]
-    assert deltas[0] == deltas[1] == deltas[2]
+    assert deltas[0] == deltas[1]

@@ -40,8 +40,8 @@ def test_kernels_bit_identical(spark, bundle, kernel, n_partitions):
     """The compiled kernel must reproduce the reference NumPy kernel's
     z-chain EXACTLY (same partitioning, same seeds) — this is what keeps
     every golden oracle valid while a compiled path is the default.
-    Skips only where no C compiler exists; the interpreted twin is held
-    to native at the runner level (test_gibbs_fused.py)."""
+    Skips only where no C compiler exists, where "native" itself runs
+    the reference kernel."""
     if not native_kernel.native_available():
         pytest.skip("no C compiler on this machine")
     b, P, W = bundle
@@ -58,8 +58,8 @@ def test_kernels_bit_identical(spark, bundle, kernel, n_partitions):
 
 @pytest.mark.parametrize("kernel", ["fast", "numba"])
 def test_removed_kernels_rejected(kernel):
-    """Only "native" (with its interpreted twin) and "reference" exist;
-    the retired kernel names fail loudly instead of silently mapping."""
+    """Only "native" and "reference" exist; the retired kernel names
+    fail loudly instead of silently mapping."""
     with pytest.raises(ValueError, match="kernel"):
         GibbsConfig(n_preds=2, n_words=2, kernel=kernel)
 
