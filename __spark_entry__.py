@@ -519,8 +519,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def simhash(spark, sf):
-        # md5-bit variant: bit-for-bit reproducible in DuckDB (the
-        # xxhash64 simhash64 stays as the raw-throughput path, pytest-only)
+        # md5 token bits: bit-for-bit reproducible in DuckDB
         return dedup.simhash_md5(_load(spark, sf, "documents"))
 
     def a10_tfidf(spark, sf):

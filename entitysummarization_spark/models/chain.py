@@ -26,10 +26,10 @@ depend on the model:
   - save / restore and the checkpoint / broadcast lifecycle (below).
 
 A model declares its ``Layout`` (key, items, pass-through and state
-columns) and supplies hooks: its per-doc init draw, its batch-sweep
-step, the counts it broadcasts each sweep and the constants it
-broadcasts once, and the ``np.add.at`` lines that add counted rows to
-its driver store.
+columns) and supplies hooks: its per-doc init draw and its batch-sweep
+step (both read the chain's constants), the counts it broadcasts each
+sweep and the constants it broadcasts once, and the ``np.add.at`` lines
+that add counted rows to its driver store.
 
 The runner. Arrow list columns already hold a flat values buffer plus
 offsets, which is exactly the kernels' input layout, so a batch is
@@ -57,7 +57,7 @@ The lifecycle. Each sweep rewrites the full token state with one map
 pass; without intervention that (a) chains one pass per sweep into an
 O(n)-deep plan, and (b) keeps every sweep's count broadcast referenced
 for task re-serialization, an unbounded leak at the reference's 500 to
-2000 production sweeps. The discipline:
+2000 production sweeps. ``_commit`` is the one end of every pass:
 
   - checkpoint each pass's output lazily; the collect of its count rows
     is the action that materializes it AND truncates its lineage (O(1)
@@ -70,10 +70,11 @@ for task re-serialization, an unbounded leak at the reference's 500 to
     (releasing earlier would destroy live blocks: a checkpointed plan
     cannot recompute). Spark WARNs on every such release; the engine
     raises only that logger (``MapPartitionsRDD``) to ERROR;
-  - the previous sweep's broadcast is destroy()ed once the next state
-    is materialized (deferred one sweep out of caution), and ``close``
-    destroys the last one and the sweep-constant one (M1's candidates
-    and λ·β, M6's class CSR, M7's movie contexts);
+  - a chain makes two kinds of broadcast. Its constants (M1's
+    candidate CSR and λ·β, M6's class CSR, M7's movie contexts) ship
+    once, on first use by init or a sweep, and ``close`` destroys them.
+    A sweep's counts ship in a broadcast of its own, which the sweep
+    destroys right after its ``_commit``;
   - ``restore`` ends in the count-only pass, which rebuilds the counts
     exactly from the saved state. RNG is seeded per (base_seed, sweep,
     doc), so run(4) and run(2) + save + restore + run(2) are one chain.
@@ -102,6 +103,8 @@ from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark import TaskContext
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -153,6 +156,31 @@ def doc_count(col, v) -> Column:
     """How many entries of the array ``col`` equal ``v``: a doc's count
     of one value, computed inside the doc's own row."""
     return F.size(F.filter(col, lambda z: z == v))
+
+
+def partition_totals(df: DataFrame, col: Column, count: str,
+                     total: str) -> DataFrame:
+    """Lineage rows of ``df``: (partition_id int, ``count`` long, ``total``
+    long), per non-empty partition its row count and the sum of ``col``,
+    as ``groupBy(spark_partition_id())`` gives them but in one map-only
+    pass."""
+
+    def totals(batches):
+        n, s = 0, None
+        for rb in batches:
+            n += rb.num_rows
+            v = pc.sum(rb.column(0)).as_py()
+            if v is not None:
+                s = v if s is None else s + v
+        if n:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([TaskContext.get().partitionId()], pa.int32()),
+                 pa.array([n], pa.int64()), pa.array([s], pa.int64())],
+                names=["partition_id", count, total],
+            )
+
+    return df.select(col.cast("long")).mapInArrow(
+        totals, f"partition_id int, {count} long, {total} long")
 
 
 def doc_seeds(base_seed: int, sweep: int, doc_ids: np.ndarray) -> np.ndarray:
@@ -354,9 +382,9 @@ class Chain:
 
       - ``_source()``: the init input, the layout's key, items and carry
         columns;
-      - ``_init_draw()`` → (payload, draw): ``draw(payload, rng, items,
-        out)`` fills one doc's state slices ``out``; ``payload`` is
-        broadcast for it;
+      - ``_init_draw()`` → draw: ``draw(const, rng, items, out)`` fills
+        one doc's state slices ``out``, reading the chain's
+        ``_sweep_const()`` payload ``const``;
       - ``_sweeper()`` → (payload, make): ``make(payload, const)``
         builds the batch step on an executor from this sweep's broadcast
         payload and the chain's ``_sweep_const()`` payload;
@@ -377,9 +405,8 @@ class Chain:
         self.state: DataFrame | None = None
         self.sweeps_done = 0
         self.last_sweep_changes = 0  # tokens the last sweep (block) moved
-        self._const_bc = None  # the sweep-constant broadcast
-        self._state_handles: list = []
-        self._bc_prev = None
+        self._const_bc = None  # the chain-constant broadcast
+        self._state_handle = None  # the persisted RDD behind the state
         quiet_lineage_warn(spark)
 
     # ---- optional model hooks ----
@@ -393,7 +420,7 @@ class Chain:
         """Driver-side work around sweep ``itr`` (M4's burn-in)."""
 
     def _sweep_const(self):
-        """The payload every sweep reads unchanged."""
+        """The payload init and every sweep read unchanged."""
         return None
 
     def _z_record(self, arrs: list[np.ndarray]):
@@ -408,19 +435,17 @@ class Chain:
                 .sortWithinPartitions(key))
 
     def init_state(self) -> None:
-        cfg, layout = self.cfg, self.layout
-        payload, draw = self._init_draw()
-        bc = self.spark.sparkContext.broadcast(payload)
-        seed = cfg.base_seed
+        layout, seed = self.layout, self.cfg.base_seed
+        draw = self._init_draw()
+        const_bc = self._const_broadcast()
 
         def init_fn(batches):
-            yield from run_init(batches, partial(draw, bc.value), seed, layout)
+            yield from run_init(batches, partial(draw, const_bc.value), seed,
+                                layout)
 
         self._reset_counts()
         self._commit(self._partitioned(self._source())
                      .mapInArrow(init_fn, layout.schema()))
-        # the commit's collect truncated the lineage: bc is unreferenced
-        self._destroy_broadcast_now(bc)
         self.sweeps_done = 0
 
     def _refresh_global_counts(self) -> None:
@@ -457,11 +482,11 @@ class Chain:
             .sortWithinPartitions(layout.key)
             .mapInArrow(sweep_fn, layout.schema())
         )
+        # the commit's collect truncated the lineage: bc is unreferenced
+        self._destroy_broadcast(bc)
         self.sweeps_done += n_fused
         # each changed token is one +1 row
         self.last_sweep_changes = int(n[n > 0].sum())
-        # bc is destroyed one sweep later, out of caution
-        self._retire_broadcast(bc)
 
     def run(self, n_sweeps: int) -> None:
         if self.state is None:
@@ -492,9 +517,8 @@ class Chain:
             )
         d = os.path.join(path, f"sweep={self.sweeps_done:05d}")
         self.state.write.mode("overwrite").parquet(os.path.join(d, "state"))
-        self.state.groupBy(F.spark_partition_id().alias("partition_id")).agg(
-            F.count("*").alias("n_docs"),
-            F.sum(F.size(self.layout.items)).alias("n_tokens"),
+        partition_totals(
+            self.state, F.size(self.layout.items), "n_docs", "n_tokens"
         ).write.mode("overwrite").parquet(os.path.join(d, "lineage"))
         if self.driver_state:
             np.savez(os.path.join(d, "driver.npz"),
@@ -537,12 +561,10 @@ class Chain:
         self.sweeps_done = meta["sweeps_done"]
 
     def close(self) -> None:
-        """Destroy the sampler's long-lived broadcasts: the sweep-constant
-        one, if any, and the last sweep's."""
+        """Destroy the chain-constant broadcast, if any."""
         if self._const_bc is not None:
-            self._destroy_broadcast_now(self._const_bc)
+            self._destroy_broadcast(self._const_bc)
             self._const_bc = None
-        self._retire_broadcast(None)
 
     def z_state(self) -> dict:
         """key → the record's state arrays (oracle-comparable, tests)."""
@@ -610,9 +632,8 @@ class Chain:
             out = out.localCheckpoint(eager=False)
         # the raw checkpointed output's handle is the one released after
         # the next pass: the filtered state's plan is not a LogicalRDD
-        handle = self._checkpointed_rdd_handle(out)
-        pending = self._state_handles
-        self._state_handles = [handle] if handle is not None else []
+        pending = self._state_handle
+        self._state_handle = self._checkpointed_rdd_handle(out)
         self.state = (out.where(F.col(COUNT).isNull())
                       .select(*self.layout.columns))
         counted = (self.layout.items, *self.layout.state)
@@ -621,30 +642,23 @@ class Chain:
                .toPandas())
         *cols, n = [pdf[c].to_numpy(np.int64) for c in (*counted, COUNT)]
         self._add_counts(cols, n)
-        for h in pending:
+        if pending is not None:
             try:
-                h.unpersist(False)
+                pending.unpersist(False)
             except Exception:  # noqa: BLE001 — already released is fine
                 pass
         return n
 
     def _const_broadcast(self):
-        """The ``_sweep_const()`` payload, broadcast once per chain;
-        ``close`` destroys it."""
+        """The ``_sweep_const()`` payload, broadcast on first use by init
+        or a sweep; ``close`` destroys it."""
         if self._const_bc is None:
             self._const_bc = self.spark.sparkContext.broadcast(
                 self._sweep_const())
         return self._const_bc
 
-    def _retire_broadcast(self, bc) -> None:
-        """Destroy the PREVIOUS sweep's broadcast and remember ``bc`` as
-        the one to destroy next sweep."""
-        if self._bc_prev is not None:
-            self._destroy_broadcast_now(self._bc_prev)
-        self._bc_prev = bc
-
     @staticmethod
-    def _destroy_broadcast_now(bc) -> None:
+    def _destroy_broadcast(bc) -> None:
         try:
             bc.destroy()
         except Exception:  # noqa: BLE001 — already cleaned is fine

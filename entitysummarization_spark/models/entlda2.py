@@ -459,10 +459,9 @@ def _nbrs_from_df(doc_ent: DataFrame, E: int) -> tuple[list, list]:
     )
 
 
-def _m4_init(payload, rng, ws, out):
+def _m4_init(_const, rng, ws, out, T, E):
     """Seeded init draw of one doc: z ~ U(T) then e ~ U(E) for EVERY
     token, candidate-less docs included (:617-635)."""
-    T, E = payload
     es, zs = out
     for i in range(len(ws)):
         zs[i] = rng.randint(T)
@@ -542,7 +541,7 @@ class DistributedEntLda2(Chain):
         # the θ/α schedule restarts with the chain
         self.alpha_mat, self.sum_alpha = _init_alpha(cfg)
         self.theta = np.zeros((cfg.n_entities, cfg.n_topics))
-        return (cfg.n_topics, cfg.n_entities), _m4_init
+        return partial(_m4_init, T=cfg.n_topics, E=cfg.n_entities)
 
     def _reset_counts(self) -> None:
         cfg = self.cfg

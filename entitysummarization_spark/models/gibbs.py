@@ -42,10 +42,10 @@ chain. tests/test_gibbs_kernels.py holds native to the reference on
 z-chain AND count-matrix equality; test_gibbs_fused.py does the same at
 the runner, unfused and fused.
 
-Broadcast discipline: the sweep-constant inputs (CSR candidates, λ·β,
-Σλβ; λ·β is a dense P×W float64) ship once per chain
-(``_sweep_const``); the per-sweep broadcast carries only the refreshed
-(Nwp, Np) counts.
+Broadcast discipline: the chain constants (CSR candidates, λ·β, Σλβ;
+λ·β is a dense P×W float64) ship once per chain (``_sweep_const``), and
+init draws from the same CSR; the per-sweep broadcast carries only the
+refreshed (Nwp, Np) counts.
 """
 
 from __future__ import annotations
@@ -145,12 +145,13 @@ def _m1_step(lib, const, nwp, np_, alpha, eps, use_m3):
     return native_step
 
 
-def _m1_init(cand, rng, ws, out):
-    """Seeded init draw of one doc: a uniform candidate per token."""
+def _m1_init(const, rng, ws, out):
+    """Seeded init draw of one doc: a uniform candidate per token, read
+    off the chain constants' candidate CSR."""
+    ip, data = const["csr_indptr"], const["csr_data"]
     zs = out[0]
     for i, w in enumerate(ws.tolist()):
-        c = cand[w]
-        zs[i] = c[rng.randint(len(c))]
+        zs[i] = data[ip[w] + rng.randint(ip[w + 1] - ip[w])]
 
 
 @dataclass
@@ -280,7 +281,7 @@ class DistributedGibbs(Chain):
         return tokens_from_corpus(self.corpus)
 
     def _init_draw(self):
-        return self.cand, _m1_init
+        return _m1_init
 
     def _reset_counts(self) -> None:
         self.nwp = np.zeros((self.cfg.n_preds, self.cfg.n_words), dtype=np.int64)

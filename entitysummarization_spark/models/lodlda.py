@@ -389,10 +389,9 @@ class LodLdaOracle(_Counts):
 # distributed sampler
 # ---------------------------------------------------------------------
 
-def _m7_init(payload, rng, ms, out):
+def _m7_init(_const, rng, ms, out, T, FEAT):
     """Seeded init draw of one user: per record z ~ U(T), then the
     nContexts random features, slot by slot (:723-728)."""
-    T, FEAT = payload
     zs, *cs = out
     for i in range(len(ms)):
         zs[i] = rng.randint(T)
@@ -470,7 +469,7 @@ class DistributedLodLda(_Counts, Chain):
         )
 
     def _init_draw(self):
-        return (self.cfg.n_topics, self.cfg.n_features), _m7_init
+        return partial(_m7_init, T=self.cfg.n_topics, FEAT=self.cfg.n_features)
 
     def _reset_counts(self) -> None:
         cfg = self.cfg

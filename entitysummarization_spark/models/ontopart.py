@@ -51,6 +51,7 @@ from __future__ import annotations
 
 import warnings
 from dataclasses import dataclass
+from functools import partial
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -265,15 +266,14 @@ def _onto_step(lib, csr, nct0, nwc0, T, C, W, alpha, beta, zeta, max_cls):
     return native_step
 
 
-def _onto_init(payload, rng, ws, out):
+def _onto_init(csr, rng, ws, out, T):
     """Seeded init draw of one doc: per token a uniform topic, then a
-    uniform allowed class."""
-    T, cand = payload
+    uniform allowed class off the class CSR."""
+    ip, data = csr
     ts, cs = out
     for i, w in enumerate(ws.tolist()):
-        cls = cand[w]
         ts[i] = rng.randint(T)
-        cs[i] = cls[rng.randint(len(cls))]
+        cs[i] = data[ip[w] + rng.randint(ip[w + 1] - ip[w])]
 
 
 class DistributedOntoPart(Chain):
@@ -313,7 +313,7 @@ class DistributedOntoPart(Chain):
         return tokens_from_corpus(self.corpus)
 
     def _init_draw(self):
-        return (self.cfg.n_topics, self.cls_cand), _onto_init
+        return partial(_onto_init, T=self.cfg.n_topics)
 
     def _reset_counts(self) -> None:
         cfg = self.cfg

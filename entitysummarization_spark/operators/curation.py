@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, Window
 
 from .dedup import minhash_lsh_pairs, tokens_col
 from .graph import connected_components_star
-from .textstats import EN_STOPWORDS
+from .textstats import EN_STOPWORDS, quality_columns
 
 
 def neardup_clusters(
@@ -108,7 +108,7 @@ def curation_funnel(
         "double"
     )
     en_ratio = F.round(ns / F.greatest(nt, F.lit(1.0)), 4)
-    quality = F.round(_quality_expr(text_col), 4)
+    quality = F.round(quality_columns(text_col)["quality"], 4)
     flagged = docs.select(
         (en_ratio >= en_threshold).alias("p1"),
         ((en_ratio >= en_threshold) & (quality >= quality_threshold)).alias(
@@ -174,7 +174,7 @@ def token_budget_mix(
         F.col(lang_col).alias("lang"),
         F.col(id_col).alias("doc_id"),
         F.size(tokens_col(text_col)).cast("long").alias("n_tokens"),
-        F.round(_quality_expr(text_col), 4).alias("quality"),
+        F.round(quality_columns(text_col)["quality"], 4).alias("quality"),
     )
     frame = (
         base.repartitionByRange(
@@ -277,21 +277,4 @@ def decontaminate(
                 "is_contaminated"
             ),
         )
-    )
-
-
-def _quality_expr(text_col: str):
-    """The textstats.quality_score scalar, inlined (shared contract with
-    the DuckDB oracle; see quality_score for the formula provenance)."""
-    toks = tokens_col(text_col)
-    stop = F.array(*[F.lit(w) for w in EN_STOPWORDS])
-    nt = F.size(toks).cast("double")
-    nd = F.size(F.array_distinct(toks)).cast("double")
-    ns = F.size(F.filter(toks, lambda t: F.array_contains(stop, t))).cast(
-        "double"
-    )
-    return (
-        0.4 * F.least(nt / 100.0, F.lit(1.0))
-        + 0.4 * (nd / F.greatest(nt, F.lit(1.0)))
-        + 0.2 * F.least((ns / F.greatest(nt, F.lit(1.0))) / 0.05, F.lit(1.0))
     )

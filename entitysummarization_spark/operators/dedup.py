@@ -13,7 +13,7 @@ Four tiers, all shuffle-aware and expressed as DataFrame plans:
   - minhash_lsh_pairs: MinHash signatures banded into LSH buckets; only
     bucket-mates are verified. Hashing is md5-based (not xxhash) so the
     DuckDB oracle can reproduce signatures bit-for-bit.
-  - simhash64: 64-bit SimHash per doc for near-dup blocking.
+  - simhash_md5: 60-bit SimHash per doc for near-dup blocking.
 
 At 100 TB: exact dedup is one shuffle on an 8-byte hash; LSH shuffles
 (n_bands × docs) small keys; verification joins touch only candidate
@@ -225,11 +225,9 @@ def simhash_md5(
 
     Token hash = first 15 hex chars of md5 parsed base-16 (60 bits —
     stays in positive BIGINT range in every engine), per-bit ±1 votes
-    summed over token OCCURRENCES, sign → bit. Same semantics as
-    ``simhash64`` but md5-based so a DuckDB oracle reproduces it
-    bit-for-bit (the same cross-engine trick as MinHash signatures);
-    ``simhash64`` (xxhash64, one JVM hash vs md5's two passes) remains
-    the raw-throughput path.
+    summed over token OCCURRENCES, sign → bit. md5-based, so a DuckDB
+    oracle (``simhash_md5_sql``) reproduces it bit-for-bit (the same
+    cross-engine trick as MinHash signatures).
     """
     toks = docs.select(
         F.col(id_col).alias("id"), F.explode(tokens_col(text_col)).alias("tok")
@@ -274,33 +272,3 @@ def simhash_md5_sql(n_bits: int = 60, table: str = "documents") -> str:
         votes AS (SELECT id, {bits} FROM h GROUP BY id)
         SELECT id, ({recon})::BIGINT AS simhash FROM votes
     """
-
-
-def simhash64(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """64-bit SimHash per doc from token xxhash64 bits: (id, simhash).
-
-    JVM-side only (xxhash64 + bitwise aggs), no Python. Not oracle-SQL
-    verifiable (DuckDB lacks xxhash64) — ``simhash_md5`` is the
-    oracle-checked variant; this one is covered by pytest.
-    """
-    toks = docs.select(
-        F.col(id_col).alias("id"), F.explode(tokens_col(text_col)).alias("tok")
-    )
-    h = toks.select("id", F.xxhash64("tok").alias("h"))
-    bit_cols = [
-        F.sum(
-            F.when(F.col("h").bitwiseAND(F.lit(1 << i) if i < 63 else F.lit(-(2**63))) != 0,
-                   F.lit(1)).otherwise(F.lit(-1))
-        ).alias(f"b{i}")
-        for i in range(64)
-    ]
-    agg = h.groupBy("id").agg(*bit_cols)
-    sim = agg.select(
-        "id",
-        sum(
-            [F.when(F.col(f"b{i}") > 0, F.lit(1 << i if i < 63 else -(2**63)))
-             .otherwise(F.lit(0)).cast("long") for i in range(64)],
-            F.lit(0).cast("long"),
-        ).alias("simhash"),
-    )
-    return sim

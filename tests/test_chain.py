@@ -1,7 +1,8 @@
 """The shared chain engine (models/chain.py): every sweep, every count
 recompute and every per-doc posterior is one Spark job of one stage,
-every sampler reports the tokens its last sweep changed, ships its sweep
-constants once and destroys its broadcasts on close(), every sampler
+every sampler reports the tokens its last sweep changed, ships its
+constants once for init and sweeps, frees each sweep's broadcast at its
+commit and the constants on close(), every sampler
 resumes bit-identically from a checkpoint, and the per-sweep lineage
 WARN is silenced."""
 
@@ -43,7 +44,9 @@ from entitysummarization_spark.models.lodlda import (
 from entitysummarization_spark.models.ontopart import (
     DistributedOntoPart,
     OntoPartConfig,
+    OntoPartOracle,
 )
+from entitysummarization_spark.models.oracle import GibbsOracle
 
 CORPUS = "doc_id long, word_id long, freq int"
 
@@ -186,14 +189,78 @@ def test_last_sweep_changes(spark, name):
 
 
 @pytest.mark.parametrize("name", sorted(SAMPLERS))
-def test_close_destroys_last_broadcast(spark, name):
+def test_broadcast_lifecycle(spark, name, monkeypatch):
+    """Init ships nothing of its own: it reads the chain constants, the
+    one broadcast a chain keeps, which the sweeps reuse and close()
+    destroys. Each sweep destroys its counts broadcast at its commit."""
     m = SAMPLERS[name](spark)
+    sc = spark.sparkContext
+    made, broadcast = [], sc.broadcast
+
+    def recording(value):
+        made.append(broadcast(value))
+        return made[-1]
+
+    monkeypatch.setattr(sc, "broadcast", recording)
+    m.init_state()
+    assert len(made) == 1 and made[0] is m._const_bc
+    const = made[0]
     m.run(2)
-    last = m._bc_prev
-    assert last is not None and last._jbroadcast.isValid()
+    assert m._const_bc is const and const._jbroadcast.isValid()
+    swept = made[1:]
+    assert len(swept) == 2
+    assert not any(bc._jbroadcast.isValid() for bc in swept)
     m.close()
-    assert not last._jbroadcast.isValid()
-    assert m._bc_prev is None and getattr(m, "_const_bc", None) is None
+    assert not const._jbroadcast.isValid() and m._const_bc is None
+
+
+# one doc; word W−1, the candidate CSR's last row, has one candidate
+EDGE_W, EDGE_P, EDGE_DOC = 4, 3, 7
+EDGE_FREQS = [2, 1, 3, 2]
+EDGE_CAND = {0: [0, 1, 2], 1: [1, 2], 2: [0, 2], 3: [1]}
+
+
+@pytest.mark.parametrize("name", ["m1", "m6"])
+def test_last_csr_row_single_candidate(spark, name):
+    """Init draws from the constants' candidate CSR: on a one-doc corpus
+    whose last word has one candidate, init + 2 sweeps at one partition
+    equal the oracle, and that word's tokens all hold its candidate."""
+    corpus = spark.createDataFrame(
+        [(EDGE_DOC, w, f) for w, f in enumerate(EDGE_FREQS)], CORPUS)
+    oracle_corpus = {EDGE_DOC: (np.arange(EDGE_W, dtype=np.int64),
+                                np.array(EDGE_FREQS, dtype=np.int64))}
+    cand = {w: np.asarray(c, dtype=np.int64) for w, c in EDGE_CAND.items()}
+    if name == "m1":
+        m = DistributedGibbs(
+            spark, corpus,
+            spark.createDataFrame(sorted(EDGE_CAND.items()),
+                                  "word_id long, pred_ids array<long>"),
+            None, GibbsConfig(n_preds=EDGE_P, n_words=EDGE_W, n_partitions=1))
+        orc = GibbsOracle(oracle_corpus, cand, EDGE_P, EDGE_W)
+        orc.run(2)
+        want = [orc.state.z[EDGE_DOC]]
+    else:
+        cfg = OntoPartConfig(n_topics=2, n_classes=EDGE_P, n_words=EDGE_W,
+                             n_partitions=1)
+        m = DistributedOntoPart(
+            spark, corpus,
+            spark.createDataFrame(
+                [(c, w) for w, cs in EDGE_CAND.items() for c in cs],
+                "class_id long, word_id long"),
+            cfg)
+        orc = OntoPartOracle(oracle_corpus, cand, cfg)
+        orc.run(2)
+        want = [orc.ts[EDGE_DOC], orc.cs[EDGE_DOC]]
+    m.run(2)
+    got = m.z_state()
+    assert set(got) == {EDGE_DOC}
+    got = got[EDGE_DOC] if name == "m6" else [got[EDGE_DOC]]
+    for g, w in zip(got, want, strict=True):
+        np.testing.assert_array_equal(g, w)
+    # the candidate (M1) or class (M6) of every token of word W−1
+    words = np.repeat(np.arange(EDGE_W), EDGE_FREQS)
+    assert (got[-1][words == EDGE_W - 1] == EDGE_CAND[EDGE_W - 1][0]).all()
+    m.close()
 
 
 def test_lineage_warn_logger_raised_to_error(spark):

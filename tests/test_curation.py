@@ -4,7 +4,7 @@ retention funnel, token-budget training mix (operators/curation.py)."""
 import pandas as pd
 import pyspark.sql.functions as F
 
-from entitysummarization_spark.operators import curation
+from entitysummarization_spark.operators import curation, textstats
 
 
 def _docs(spark, rows):
@@ -116,12 +116,9 @@ def test_token_budget_mix_matches_pandas(spark, sf_dir):
         F.size(F.filter(F.split(F.lower("text"), " "), lambda x: x != ""))
         .cast("long").alias("n_tokens"),
     ).toPandas()
-    q = (
+    q = textstats.quality_score(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", F.round(curation._quality_expr("text"), 4)
-                .alias("quality"))
-        .toPandas()
-    )
+    ).select("doc_id", "quality").toPandas()
     pdf = pdf.merge(q, on="doc_id")
     pdf = pdf.sort_values(
         ["lang", "quality", "doc_id"], ascending=[True, False, True]

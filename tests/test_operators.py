@@ -92,7 +92,7 @@ def test_simhash_similar_docs_close(spark):
         ],
         "doc_id long, text string",
     )
-    out = {r["id"]: r["simhash"] for r in dedup.simhash64(docs).collect()}
+    out = {r["id"]: r["simhash"] for r in dedup.simhash_md5(docs).collect()}
     d12 = bin((out[1] ^ out[2]) & (2**64 - 1)).count("1")
     d13 = bin((out[1] ^ out[3]) & (2**64 - 1)).count("1")
     assert d12 < d13

@@ -1,6 +1,7 @@
 """Round-2 scale fixes: diamond-DAG ancestors dedup, NGD hub cap,
-range-partitioned dense_ids, pred-partitioned materialize pruning, and
-TakeOrderedAndProject plans for the top-k operators."""
+range-partitioned dense_ids, pred-partitioned materialize pruning,
+map-only lineage rows, and TakeOrderedAndProject plans for the top-k
+operators."""
 
 import pyspark.sql.functions as F
 
@@ -141,6 +142,47 @@ def test_materialize_pred_partition_pruning(spark, fixture_small, tmp_path):
     assert pf and re.search(rf"pred#\d+ = {preds[0]}", pf[0])
     # and the data round-trips
     assert one.count() == res.canon.filter(F.col("pred") == preds[0]).count()
+
+
+def _lineage_by_group_by(df, col):
+    return sorted(
+        tuple(r) for r in df.groupBy(F.spark_partition_id()).agg(
+            F.count("*"), F.sum(col)).collect())
+
+
+def test_lineage_rows_are_partition_totals(spark, fixture_small, tmp_path):
+    """materialize's and Chain.save's lineage rows: one per non-empty
+    partition, as groupBy(spark_partition_id()) gives them, summing to
+    canon's row and freq totals and to the state's doc and token
+    totals."""
+    from entitysummarization_spark.models.chain import partition_totals
+    from entitysummarization_spark.plans.pipeline import materialize, run_pipeline
+
+    # 3 ids hashed into 8 partitions: at least 5 are empty
+    ids = spark.range(3).repartition(8, "id")
+    got = sorted(tuple(r) for r in partition_totals(
+        ids, F.col("id"), "n", "s").collect())
+    assert len(got) <= 3 and got == _lineage_by_group_by(ids, "id")
+
+    res = run_pipeline(spark, spark.createDataFrame(fixture_small.repos),
+                       vocab=fixture_small.vocab, n_sweeps=1, k=2,
+                       n_partitions=3)
+    out = str(tmp_path / "kg")
+    materialize(res, out)
+    ck = res.gibbs.save(str(tmp_path / "ck"))
+    state, words = res.gibbs.state, F.size(res.gibbs.layout.items)
+    for df, col, path, names in [
+        (res.canon, F.col("freq"), f"{out}/lineage", ("n_rows", "n_facts")),
+        (state, words, f"{ck}/lineage", ("n_docs", "n_tokens")),
+    ]:
+        lineage = spark.read.parquet(path)
+        assert lineage.dtypes == [("partition_id", "int"),
+                                  (names[0], "bigint"), (names[1], "bigint")]
+        rows = sorted(tuple(r) for r in lineage.collect())
+        assert rows == _lineage_by_group_by(df, col)
+        assert all(n > 0 for _, n, _ in rows)
+        assert sum(n for _, n, _ in rows) == df.count()
+        assert sum(s for _, _, s in rows) == df.select(F.sum(col)).first()[0]
 
 
 def test_topk_plans_use_take_ordered(spark):
