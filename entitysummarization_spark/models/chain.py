@@ -72,23 +72,25 @@ for task re-serialization, an unbounded leak at the reference's 500 to
     raises only that logger (``MapPartitionsRDD``) to ERROR;
   - a chain makes two kinds of broadcast. Its constants (M1's
     candidate CSR and λ·β, M6's class CSR, M7's movie contexts) ship
-    once, on first use by init or a sweep, and ``close`` destroys them.
+    once, on first use by init or a sweep, and ``close`` destroys them;
+    M4 has none and ships none.
     A sweep's counts ship in a broadcast of its own, which the sweep
     destroys right after its ``_commit``;
   - ``restore`` ends in the count-only pass, which rebuilds the counts
     exactly from the saved state. RNG is seeded per (base_seed, sweep,
     doc), so run(4) and run(2) + save + restore + run(2) are one chain.
 
-Fault tolerance: ``localCheckpoint`` stores blocks on the executors that
-computed them. That is cheap, but on a real cluster one executor loss
-mid-chain makes the in-flight state unrecoverable. Two mitigations
-compose: when the session has a checkpoint dir (``setCheckpointDir``),
-every pass uses ``Dataset.checkpoint`` against it instead, the rule
-operators/graph._iter_checkpoint follows (every sweep durable, one
-distributed-FS write per sweep); or ``save`` every k sweeps and
-``restore`` from the latest. The 105-sweep soak in test_gibbs_kernels.py
-asserts flat plan size and flat persisted-block count under this
-discipline.
+Fault tolerance: every pass cuts its lineage through the engine's one
+checkpoint rule, ``session.checkpoint``. Without a checkpoint dir that is
+a ``localCheckpoint``: blocks stay on the executors that computed them,
+which is cheap, but one executor loss mid-chain makes the in-flight state
+unrecoverable. Two mitigations compose: give the session a checkpoint dir
+(``setCheckpointDir``), and every pass writes a reliable checkpoint to it
+(every sweep durable, one distributed-FS write per sweep); or ``save``
+every k sweeps and ``restore`` from the latest. The chain's inputs (the
+corpus and its dictionaries) are cut by the same rule. The 105-sweep soak
+in test_gibbs_kernels.py asserts flat plan size and flat persisted-block
+count under this discipline.
 """
 
 from __future__ import annotations
@@ -107,6 +109,8 @@ import pyarrow.compute as pc
 from pyspark import TaskContext
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import checkpoint
 
 # the logger of the per-sweep "locally checkpointed ... cannot be
 # recomputed after unpersisting" WARN
@@ -376,6 +380,11 @@ def quiet_lineage_warn(spark: SparkSession) -> None:
     )
 
 
+def _value(bc):
+    """A broadcast's value, read on an executor; None for no broadcast."""
+    return None if bc is None else bc.value
+
+
 class Chain:
     """The model-independent driver loop. A model passes its ``Layout``
     and implements:
@@ -440,8 +449,8 @@ class Chain:
         const_bc = self._const_broadcast()
 
         def init_fn(batches):
-            yield from run_init(batches, partial(draw, const_bc.value), seed,
-                                layout)
+            yield from run_init(batches, partial(draw, _value(const_bc)),
+                                seed, layout)
 
         self._reset_counts()
         self._commit(self._partitioned(self._source())
@@ -472,7 +481,7 @@ class Chain:
         const_bc = self._const_broadcast()
 
         def sweep_fn(batches):
-            yield from run_sweeps(batches, make(bc.value, const_bc.value),
+            yield from run_sweeps(batches, make(bc.value, _value(const_bc)),
                                   seed, sweep0, n_fused, layout)
 
         # partitioning by key is already established and mapInArrow
@@ -622,14 +631,9 @@ class Chain:
         since the pass read its blocks. Returns the signed counts.
 
         localCheckpoint persists its blocks during whichever job first
-        computes the RDD and truncates lineage at that job's end. Reliable
-        checkpoints (the session has a checkpoint dir) stay eager: a
-        non-eager ``Dataset.checkpoint`` recomputes the RDD a second time
-        to write it unless it is already persisted."""
-        if self.spark.sparkContext.getCheckpointDir() is not None:
-            out = out.checkpoint(eager=True)
-        else:
-            out = out.localCheckpoint(eager=False)
+        computes the RDD and truncates lineage at that job's end; a
+        reliable checkpoint stays eager (``session.checkpoint``)."""
+        out = checkpoint(out, eager=False)
         # the raw checkpointed output's handle is the one released after
         # the next pass: the filtered state's plan is not a LogicalRDD
         pending = self._state_handle
@@ -651,10 +655,12 @@ class Chain:
 
     def _const_broadcast(self):
         """The ``_sweep_const()`` payload, broadcast on first use by init
-        or a sweep; ``close`` destroys it."""
+        or a sweep; ``close`` destroys it. None, and no broadcast, when
+        the chain has no constants (M4)."""
         if self._const_bc is None:
-            self._const_bc = self.spark.sparkContext.broadcast(
-                self._sweep_const())
+            const = self._sweep_const()
+            if const is not None:
+                self._const_bc = self.spark.sparkContext.broadcast(const)
         return self._const_bc
 
     @staticmethod

@@ -17,6 +17,8 @@ from itertools import accumulate
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import checkpoint
+
 
 def canonical_triples(triples: DataFrame) -> DataFrame:
     """Distinct (subj, pred, obj) with occurrence counts across provenance.
@@ -81,12 +83,12 @@ def dense_ids(df: DataFrame) -> tuple[DataFrame, dict[str, int]]:
     kinds = sorted(sizes)   # Spark's string order: UTF-8 bytes = code points
     part_off = dict(zip(range(n_parts), accumulate(part_rows, initial=0)))
     kind_off = dict(zip(kinds, accumulate((sizes[k] for k in kinds), initial=0)))
-    out = d.select(
+    out = checkpoint(d.select(
         "kind", "name",
         (F.element_at(_lit_map(part_off, "int"), F.col("_pid"))
          - F.element_at(_lit_map(kind_off, "string"), F.col("kind"))
          + F.col("_pos")).alias("id"),
-    ).localCheckpoint(eager=True)
+    ))
     d.unpersist()
     return out, sizes
 

@@ -48,16 +48,17 @@ def build_corpus(
     (ImportData.java:868-895, default wordFrequency=10 in config.properties:85).
     """
     t = canon
-    if category_boost and entity_category is not None:
-        ncat = entity_category.groupBy("entity_name").agg(
-            F.count("*").alias("_ncat")
-        )
+    # categories per object, for the boost and for λ; entity→category
+    # counts scale with the categorized-entity set — no broadcast hint,
+    # AQE picks (auto-broadcasts while tiny)
+    ncat = None if entity_category is None else (
+        entity_category.groupBy(F.col("entity_name").alias("obj"))
+        .agg(F.count("*").alias("ncat")))
+    if category_boost and ncat is not None:
         t = (
-            # entity→category counts scale with the categorized-entity set —
-            # no broadcast hint; AQE picks (auto-broadcasts while tiny)
-            t.join(ncat, t.obj == ncat.entity_name, "left")
-            .withColumn("freq", F.col("freq") * F.greatest(F.lit(1), F.coalesce("_ncat", F.lit(1))))
-            .drop("entity_name", "_ncat")
+            t.join(ncat, "obj", "left")
+            .withColumn("freq", F.col("freq") * F.greatest(F.lit(1), F.coalesce("ncat", F.lit(1))))
+            .drop("ncat")
         )
 
     # F10 vocabulary prune before ID assignment (kept-vocab side is
@@ -106,11 +107,10 @@ def build_corpus(
         F.sort_array(F.collect_set("pred_id")).alias("pred_ids")
     )
 
-    if entity_category is not None:
-        ncat = entity_category.groupBy("entity_name").agg(F.count("*").alias("ncat"))
+    if ncat is not None:
         lam = (
             facts.select("pred_id", "word_id", "obj").distinct()
-            .join(ncat, F.col("obj") == ncat.entity_name, "left")
+            .join(ncat, "obj", "left")
             .select(
                 "pred_id",
                 "word_id",

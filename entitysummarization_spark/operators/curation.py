@@ -30,6 +30,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from ..session import checkpoint
 from .dedup import minhash_lsh_pairs, tokens_col
 from .graph import connected_components_star
 from .textstats import EN_STOPWORDS, quality_columns
@@ -141,7 +142,6 @@ def token_budget_mix(
     id_col: str = "doc_id",
     text_col: str = "text",
     lang_col: str = "lang",
-    materialize: bool = True,
 ) -> DataFrame:
     """Deterministic training-mix selection: per language, take documents
     in (quality DESC, doc_id ASC) order while the cumulative token count
@@ -166,10 +166,27 @@ def token_budget_mix(
 
     The persisted sorted frame pins partition ids consistent between
     phases 2 and 3; the budget-filtered result (bounded by the budgets
-    themselves) is checkpointed executor-side so the cache releases. At
-    production scale the result would stream straight to a table sink —
-    the selection plan is unchanged.
+    themselves) is checkpointed so the cache releases. At production
+    scale the result would stream straight to a table sink — the
+    selection plan (``_token_budget_plan``) is unchanged.
     """
+    mix, frame = _token_budget_plan(
+        docs, budget_per_lang, n_parts, id_col, text_col, lang_col)
+    mix = checkpoint(mix)
+    frame.unpersist()
+    return mix
+
+
+def _token_budget_plan(
+    docs: DataFrame,
+    budget_per_lang: int,
+    n_parts: int,
+    id_col: str,
+    text_col: str,
+    lang_col: str,
+) -> tuple[DataFrame, DataFrame]:
+    """``token_budget_mix``'s lazy selection and the persisted sorted
+    frame it reads."""
     base = docs.select(
         F.col(lang_col).alias("lang"),
         F.col(id_col).alias("doc_id"),
@@ -219,13 +236,7 @@ def token_budget_mix(
         )
         .filter(F.col("cum_tokens") <= budget_per_lang)
     )
-    if materialize:
-        # budget-bounded result: checkpointing releases the sorted-frame
-        # cache; ``materialize=False`` keeps the full lazy plan (tests
-        # inspect it; at production scale the caller writes to a sink)
-        mix = mix.localCheckpoint(eager=True)
-        frame.unpersist()
-    return mix
+    return mix, frame
 
 
 def decontaminate(

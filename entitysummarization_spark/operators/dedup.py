@@ -25,6 +25,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from ..session import checkpoint
+
 
 def tokens_col(text_col: str = "text"):
     """Shared tokenization contract (also used by the DuckDB oracles):
@@ -118,7 +120,7 @@ def ngram_jaccard_pairs(
     top = (
         jac.orderBy(F.desc("jaccard"), F.asc("id_a"), F.asc("id_b"))
         .limit(top_k)
-        .localCheckpoint(eager=True)  # k rows; frees the shingle cache below
+        .transform(checkpoint)  # k rows; frees the shingle cache below
     )
     sh.unpersist()
     w = Window.orderBy(F.desc("jaccard"), F.asc("id_a"), F.asc("id_b"))
@@ -207,9 +209,9 @@ def minhash_lsh_pairs(
         .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(F.count("*").cast("long").alias("n_bands_shared"))
         # candidate-pair table is near-dup-sized (≪ input); materializing it
-        # (executor-local storage, never the driver) lets the bands cache be
+        # (checkpoint storage, never the driver) lets the bands cache be
         # released instead of accumulating across invocations
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     bands.unpersist()
     return pairs

@@ -16,12 +16,13 @@ result is a pure function of (edges, n_iter) — reproducible across engines
 and partitionings, and expressible as an unrolled SQL oracle.
 
 Scale: per iteration one shuffle (groupBy dst). Scores/labels stay
-DataFrames — nothing collects to the driver. Lineage is truncated every
-iteration via ``_iter_checkpoint``: reliable ``checkpoint()`` to the
-session's checkpoint dir when one is configured (survives executor loss —
-set ``spark.sparkContext.setCheckpointDir`` to a DFS path on a real
-cluster), else executor-local ``localCheckpoint`` (fine single-box; a
-lost executor would recompute from the start of the loop).
+DataFrames — nothing collects to the driver. Every round cuts its lineage
+through the engine's one checkpoint rule, ``session.checkpoint``: a
+reliable ``checkpoint()`` when the session has a checkpoint dir (survives
+executor loss — set ``spark.sparkContext.setCheckpointDir`` to a DFS path
+on a real cluster), else an executor-local ``localCheckpoint`` (fine
+single-box; a lost executor's blocks cannot be recomputed, so the job
+fails).
 
 Checkpoint disk growth: each loop round writes a NEW reliable checkpoint;
 Spark only deletes superseded ones when
@@ -39,15 +40,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-
-def _iter_checkpoint(df: DataFrame) -> DataFrame:
-    """Materialize + truncate lineage for one loop iteration: reliable
-    DFS checkpoint when the session has a checkpoint dir (executor-loss
-    safe), else eager localCheckpoint."""
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is not None:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
+from ..session import checkpoint
 
 
 def _symmetric(edges: DataFrame) -> DataFrame:
@@ -64,7 +57,7 @@ def connected_components(edges: DataFrame, n_iter: int = 20) -> DataFrame:
     once n_iter ≥ graph diameter).
 
     One shuffle per round; labels are checkpointed each round
-    (``_iter_checkpoint``) so the lineage and task closure stay bounded
+    (``session.checkpoint``) so the lineage and task closure stay bounded
     on long runs.
     """
     sym = _symmetric(edges).persist()
@@ -87,9 +80,9 @@ def connected_components(edges: DataFrame, n_iter: int = 20) -> DataFrame:
         )
         # labels feeds both the neighbor gather and the reassembly; eager
         # materialization per round keeps the plan linear in n_iter
-        labels = _iter_checkpoint(new_labels)
-    # labels is localCheckpoint-materialized — the cached edge list is no
-    # longer referenced by the returned plan
+        labels = checkpoint(new_labels)
+    # labels is checkpointed — the cached edge list is no longer
+    # referenced by the returned plan
     sym.unpersist()
     return labels
 
@@ -153,7 +146,7 @@ def connected_components_star(
             .filter(F.col("src") != F.col("dst"))
             .distinct()
         )
-        e_s = _iter_checkpoint(e_s)
+        e_s = checkpoint(e_s)
         changed = (
             e_s.exceptAll(e).union(e.exceptAll(e_s)).limit(1).count()
             if rounds > 1
@@ -173,7 +166,7 @@ def connected_components_star(
             "node", F.coalesce("component", F.col("node")).alias("component")
         )
     )
-    labels = labels.localCheckpoint(eager=True)
+    labels = checkpoint(labels)
     sym0.unpersist()
     nodes.unpersist()
     return labels
@@ -220,7 +213,7 @@ def pagerank(
                 "rank"
             ),
         )
-        ranks = _iter_checkpoint(ranks)
+        ranks = checkpoint(ranks)
     # final ranks are checkpoint-materialized; release the loop caches
     for cached in (contrib_e, nodes, e):
         cached.unpersist()
@@ -266,7 +259,7 @@ def hits(
         ).select(
             "node", (F.col("auth_raw") / F.col("_l2")).alias("auth")
         )
-        auth_n = _iter_checkpoint(auth_n)
+        auth_n = checkpoint(auth_n)
         # hub(u) = Σ_{u→v} w·auth(v), then L2 normalize
         hub = (
             e.join(auth_n, e.dst == F.col("node"))
@@ -278,7 +271,7 @@ def hits(
         ).select(
             "node", (F.col("hub_raw") / F.col("_l2")).alias("hub")
         )
-        hub_n = _iter_checkpoint(hub_n)
+        hub_n = checkpoint(hub_n)
         scores = (
             nodes.join(hub_n, "node", "left")
             .join(auth_n, "node", "left")
@@ -290,7 +283,7 @@ def hits(
         )
     # materialize the (node-sized) result so the loop caches can be freed
     # and downstream consumers (top-k legs re-reading it twice) stay cheap
-    out = _iter_checkpoint(scores.select(
+    out = checkpoint(scores.select(
         "node", F.round("hub", round_to).alias("hub"),
         F.round("auth", round_to).alias("auth"),
     ))
@@ -310,13 +303,13 @@ def ancestors(
     Iterative frontier self-join — #rounds = taxonomy depth (the reference
     caps it via `categoryhierarchyLevel`, PatternMatchingMachine.java:2417).
     """
-    base = _iter_checkpoint(
+    base = checkpoint(
         child_parent.select(
             F.col("child").alias("node"), F.col("parent").alias("ancestor")
         ).distinct().withColumn("depth", F.lit(1)))
     closure = base
     frontier = base
-    step = _iter_checkpoint(
+    step = checkpoint(
         child_parent.select(
             F.col("child").alias("_c"), F.col("parent").alias("_p")
         ).distinct())
@@ -338,12 +331,12 @@ def ancestors(
         # eager checkpoint: the frontier feeds BOTH the emptiness probe
         # and two downstream references — lazy persist would re-derive
         # the whole closure chain every round (observed 332 s → ~30 s)
-        nxt = _iter_checkpoint(
+        nxt = checkpoint(
             nxt.join(closure.select("node", "ancestor"), ["node", "ancestor"],
                      "left_anti"))
         if len(nxt.take(1)) == 0:
             break
-        closure = _iter_checkpoint(closure.union(nxt))
+        closure = checkpoint(closure.union(nxt))
         frontier = nxt
     return closure
 

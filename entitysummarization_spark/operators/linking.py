@@ -27,6 +27,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..functions.automaton import AhoCorasick, split_sentences, tokenize
+from ..session import checkpoint
 
 # attr-tier confidence (reference tiers '1'..'6', high→low confidence;
 # weights per PatternMatchingMachine.java:2010,2036-2037)
@@ -187,7 +188,7 @@ def ngd_relatedness(
         j = j.crossJoin(F.broadcast(total_df))
     # NGD is undefined when the smaller set covers the whole universe
     # (ln W − ln min = 0) — drop those degenerate pairs.
-    out = (
+    out = checkpoint(  # pair-count-sized; frees the es cache
         j.filter(F.least("sz_a", "sz_b") < F.col("_w"))
         .select(
             "ent_a",
@@ -200,7 +201,7 @@ def ngd_relatedness(
                 4,
             ).alias("sr"),
         )
-    ).localCheckpoint(eager=True)  # pair-count-sized; frees the es cache
+    )
     es.unpersist()
     return out
 

@@ -208,19 +208,12 @@ def hyperplane_buckets(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Random-hyperplane LSH: (id, bucket). Deterministic planes from seed,
-    shipped as literal arrays (a dim×n_planes dense matrix is tiny)."""
-    planes = plane_matrix(dim, n_planes, seed)
-    v = F.col(vec_col).cast("array<double>")
-    bits = [
-        F.when(
-            _dot(v, F.array(*[F.lit(float(x)) for x in planes[p]])) >= 0, "1"
-        ).otherwise("0")
-        for p in range(n_planes)
-    ]
-    return emb.select(
-        F.col(id_col).alias("id"), F.concat(*bits).alias("bucket")
-    )
+    """Random-hyperplane LSH: (id, bucket), the bucket the
+    ``hyperplane_bits`` sign bits joined into one '0'/'1' string."""
+    bits = hyperplane_bits(emb, dim, n_planes, seed, id_col, vec_col)
+    return bits.select("id", F.concat(*[
+        F.col(f"b{p}").cast("string") for p in range(n_planes)
+    ]).alias("bucket"))
 
 
 def lsh_bucketed_topk(

@@ -20,6 +20,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from ..session import checkpoint
 from .dedup import tokens_col
 
 
@@ -110,7 +111,7 @@ def tfidf_cosine_pairs(
     top = (
         cos.orderBy(F.desc("cosine"), F.asc("id_a"), F.asc("id_b"))
         .limit(top_k)
-        .localCheckpoint(eager=True)  # k rows; frees the capped cache below
+        .transform(checkpoint)  # k rows; frees the capped cache below
     )
     capped.unpersist()
     w = Window.orderBy(F.desc("cosine"), F.asc("id_a"), F.asc("id_b"))

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -43,8 +43,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # iterative operators (pagerank/CC/ancestors/Gibbs) write a reliable
-        # checkpoint() per loop round when a checkpoint dir is configured;
+        # with a checkpoint dir, every lineage cut (``checkpoint`` below)
+        # writes a reliable checkpoint, one per loop round or sweep;
         # without this flag old checkpoint files are never deleted and a
         # long run accumulates O(n_iter × dataset) in the checkpoint dir
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
@@ -60,3 +60,18 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Cut ``df``'s lineage: the one checkpoint rule of the engine.
+
+    With a checkpoint dir (``sparkContext.setCheckpointDir``, a DFS path
+    on a cluster) this is a reliable ``checkpoint()``, which survives
+    executor loss. It is always eager: a lazy reliable checkpoint
+    recomputes the RDD a second time to write it unless it is already
+    persisted. Without a dir it is an executor-local
+    ``localCheckpoint(eager=eager)``: cheap, but a lost executor's blocks
+    cannot be recomputed, so the job that needed them fails."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=eager)

@@ -192,7 +192,8 @@ def test_last_sweep_changes(spark, name):
 def test_broadcast_lifecycle(spark, name, monkeypatch):
     """Init ships nothing of its own: it reads the chain constants, the
     one broadcast a chain keeps, which the sweeps reuse and close()
-    destroys. Each sweep destroys its counts broadcast at its commit."""
+    destroys; M4 has no constants and ships none. Each sweep destroys
+    its counts broadcast at its commit."""
     m = SAMPLERS[name](spark)
     sc = spark.sparkContext
     made, broadcast = [], sc.broadcast
@@ -203,6 +204,13 @@ def test_broadcast_lifecycle(spark, name, monkeypatch):
 
     monkeypatch.setattr(sc, "broadcast", recording)
     m.init_state()
+    if name == "m4":
+        assert made == [] and m._const_bc is None
+        m.run(2)
+        assert len(made) == 2 and m._const_bc is None
+        assert not any(bc._jbroadcast.isValid() for bc in made)
+        m.close()
+        return
     assert len(made) == 1 and made[0] is m._const_bc
     const = made[0]
     m.run(2)
@@ -276,11 +284,15 @@ def test_lineage_warn_logger_raised_to_error(spark):
 def test_sweep_constants_broadcast_once(spark, name):
     """A chain's sweep constants (M1's candidates and λ·β, M6's class CSR,
     M7's movie contexts) ship in one broadcast that every sweep reuses
-    and close() destroys."""
+    and close() destroys. M4 has no constants and ships none."""
     m = SAMPLERS[name](spark)
     m.run(1)
     const = m._const_bc
     m.run(1)
+    if name == "m4":
+        assert const is None and m._const_bc is None
+        m.close()
+        return
     assert m._const_bc is const and const._jbroadcast.isValid()
     m.close()
     assert not const._jbroadcast.isValid()

@@ -143,9 +143,10 @@ def test_token_budget_mix_skew_safe_plan(spark, sf_dir):
     # (pid, lang) — spark_partition_id spreads a dominant language over
     # many partitions. Assert no window spec partitions on `lang` alone.
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    plan = curation.token_budget_mix(
-        docs, budget_per_lang=800, n_parts=8, materialize=False
-    )._jdf.queryExecution().executedPlan().toString()
+    mix, frame = curation._token_budget_plan(
+        docs, 800, 8, "doc_id", "text", "lang")
+    plan = mix._jdf.queryExecution().executedPlan().toString()
+    frame.unpersist()
     # the corpus-sized cumsum must be keyed (pid, lang) …
     assert "windowspecdefinition(pid#" in plan
     # … and the only window keyed on lang alone is the subtotal prefix

@@ -4,6 +4,7 @@ map-only lineage rows, and TakeOrderedAndProject plans for the top-k
 operators."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from entitysummarization_spark.operators import graph
 from entitysummarization_spark.operators.canonicalize import dense_ids
@@ -214,26 +215,72 @@ def test_topk_plans_use_take_ordered(spark):
     assert [r["rnk"] for r in sorted(cos, key=lambda r: r["rnk"])] == [1, 2, 3]
 
 
-def test_reliable_checkpoint_engages_with_checkpoint_dir(spark, tmp_path):
-    """With a checkpoint dir configured (the real-cluster setting),
-    iterative ops truncate lineage via reliable checkpoint() — files land
-    under the dir and results are identical to the local-checkpoint path."""
-    import os
-
-    from entitysummarization_spark.operators.graph import pagerank
-
+def _ck_pagerank(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (3, 4)], "src long, dst long"
     )
-    baseline = {r["node"]: r["rank"] for r in pagerank(edges, n_iter=5).collect()}
+    return {r["node"]: r["rank"]
+            for r in graph.pagerank(edges, n_iter=5).collect()}
+
+
+def _ck_build_corpus(spark):
+    from entitysummarization_spark.operators.corpus import build_corpus
+
+    canon = spark.createDataFrame(
+        [("d1", "calls", "a", 2), ("d1", "uses", "b", 1),
+         ("d2", "calls", "b", 3), ("d3", "extends", "a", 1)],
+        "subj string, pred string, obj string, freq long",
+    )
+    b = build_corpus(canon)
+    return (b.n_preds, b.n_words, {
+        name: sorted(map(tuple, getattr(b, name).collect()))
+        for name in ("docs", "preds", "words", "corpus", "facts", "lam")
+    })
+
+
+def _ck_tfidf_cosine_pairs(spark):
+    from entitysummarization_spark.operators import tfidf
+
+    docs = spark.createDataFrame(
+        [(i, "w%d x y z a b c" % (i % 3)) for i in range(12)],
+        "doc_id long, text string",
+    )
+    return sorted(map(tuple,
+                      tfidf.tfidf_cosine_pairs(docs, top_k=3).collect()))
+
+
+def _ck_connected_components_star(spark):
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (5, 6), (7, 7)], "src long, dst long"
+    )
+    return sorted(map(tuple,
+                      graph.connected_components_star(edges).collect()))
+
+
+CHECKPOINTED = {
+    "pagerank": _ck_pagerank,
+    "build_corpus": _ck_build_corpus,
+    "tfidf_cosine_pairs": _ck_tfidf_cosine_pairs,
+    "connected_components_star": _ck_connected_components_star,
+}
+
+
+@pytest.mark.parametrize("op", list(CHECKPOINTED))
+def test_reliable_checkpoint_engages_with_checkpoint_dir(spark, tmp_path, op):
+    """With a checkpoint dir configured (the real-cluster setting), every
+    lineage cut goes through a reliable checkpoint() — files land under
+    the dir and results are identical to the local-checkpoint path."""
+    import os
+
+    run = CHECKPOINTED[op]
+    baseline = run(spark)
 
     sc = spark.sparkContext
     assert sc.getCheckpointDir() is None
     ckdir = str(tmp_path / "ck")
     sc.setCheckpointDir(ckdir)
     try:
-        got = {r["node"]: r["rank"] for r in pagerank(edges, n_iter=5).collect()}
-        assert got == baseline
+        assert run(spark) == baseline
         written = [
             f for root, _, files in os.walk(ckdir) for f in files
         ]
